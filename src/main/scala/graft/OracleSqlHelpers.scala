@@ -200,9 +200,10 @@ private[graft] trait OracleSqlHelpers {
   protected val sqlIvfPqFlatSearch = sqlIvfPqFlatSearchWhere("")
   // residual IVF-PQ candidate scoring: the query's residual against EACH
   // probed cell's centroid feeds a (query, cell)-keyed LUT, and the exact
-  // q·centroid base term is added once per candidate:
-  // q·(c + r̂) = q·c + q·r̂ — all integer-exact (mirrors ivfPqTopKIndexed's
-  // residual branch)
+  // q·centroid base term is added once per candidate, so the ADC dot is
+  // q·c + (q − c)·r̂ — all integer-exact (mirrors ivfPqTopKIndexed's
+  // residual lookup tables). This is not the inner product q·(c + r̂) =
+  // q·c + q·r̂: it differs by −c·r̂ per candidate.
   protected val sqlIvfPqResidualSearch =
     s"""qn AS (SELECT vec_id AS query_id, nn FROM v WHERE vec_id < 10),
        qres AS (SELECT iq.vec_id AS query_id, iq.cell,

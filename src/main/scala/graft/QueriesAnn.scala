@@ -155,7 +155,6 @@ private[graft] object QueriesAnn extends OracleSqlHelpers {
       ix.release()
       val loaded = Search.loadBm25Index(s, path)
       val out = Search.bm25TopKIndexed(loaded, Seq("spark", "join", "window"), k = 20)
-        .localCheckpoint(true)
       loaded.release()
       out.transform(Ops.sortSmallT(col("rank")))
     }),
@@ -171,14 +170,13 @@ private[graft] object QueriesAnn extends OracleSqlHelpers {
       val ix = Search.bm25Index(corpus, "doc_id", "text")
       val ext = Search.extendBm25Index(ix, delta, "text")
       val out = Search.bm25TopKIndexed(ext, Seq("spark", "join", "window"), k = 20)
-        .localCheckpoint(true)
       ext.release(); ix.release()
       out.transform(Ops.sortSmallT(col("rank")))
     }),
     // filtered ANN ✚ (metadata predicate + top-k — table stakes for a
-    // real vector store): the allowed-id set semi-joins the probed-cell
-    // candidates BEFORE any ADC scoring, so the filter makes the search
-    // cheaper; top-5 among label<8 docs only
+    // real vector store): the allowed-id set semi-joins the scored
+    // probed-cell candidates before the ranking exchange; top-5 among
+    // label<8 docs only
     "q125_ann_filtered" -> ((s, d) => {
       val e = Tables.embeddings(s, d)
       val qs = e.filter(col("vec_id") < 10)

@@ -157,6 +157,21 @@ object GraftFunctions {
       "graft_code_argmin", children => CodeArgminLong(children(0), children(1),
         children(2),
         CellArgminLong.codeMatrixOf(children(3), "graft_code_argmin")), "scala_udf")
+    // IVF-PQ search kernels against the plan-time centroids/codebooks:
+    // probes must be an INT literal; the books (and, for a residual index,
+    // the cents) trail as foldable literal arrays
+    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
+      "graft_ivf_probe", children => IvfProbeLong(children(0), children(1),
+        CellArgminLong.cellMatrixOf(children(2), "graft_ivf_probe"),
+        litInt(children(3), "graft_ivf_probe", "probes")), "scala_udf")
+    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
+      "graft_pq_encode", children => PqEncodeLong(children(0), children(1),
+        PqMatrix.of(children, "graft_pq_encode")), "scala_udf")
+    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
+      "graft_adc_lut", children => AdcLutLong(children(0), children(1),
+        PqMatrix.of(children, "graft_adc_lut")), "scala_udf")
+    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
+      "graft_adc_dot", children => AdcDotLong(children(0), children(1)), "scala_udf")
     spark.sessionState.functionRegistry.createOrReplaceTempFunction(
       "graft_lsh_buckets", children => LshBucketsLong(children(0), children(1),
         LshBucketsLong.planeMatrixOf(children(1), "graft_lsh_buckets")), "scala_udf")

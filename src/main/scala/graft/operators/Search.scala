@@ -188,7 +188,11 @@ object Search {
 
   /** [[bm25TopK]] against a prebuilt [[Bm25Index]] — no tokenization, no
     * corpus pass: only the query terms' postings rows are read and scored
-    * against the stored statistics. Bit-identical output (q123's gate). */
+    * against the stored statistics. Bit-identical output (q123's gate).
+    * Eager: the ≤ k result rows are materialized (checkpointed) before
+    * they are returned, so a caller that both collects the ranking and
+    * fuses it with another list (hybrid search) scores the postings once,
+    * and releasing or extending the index afterwards leaves it intact. */
   def bm25TopKIndexed(
       ix: Bm25Index, queryTerms: Seq[String], k: Int,
       k1: Double = 1.2, b: Double = 0.75): DataFrame = {
@@ -204,6 +208,7 @@ object Search {
       .withColumn("rank",
         row_number().over(Window.orderBy(col("score_micro").desc, col(ix.idCol)))
           .cast(LongType))
+      .localCheckpoint(true)
   }
 
   /** [[bm25PerQuery]] against a prebuilt [[Bm25Index]] — one postings

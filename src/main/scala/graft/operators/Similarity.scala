@@ -228,7 +228,7 @@ object Similarity {
 
   /** The derived IVF probe count (see the rationale at [[ivfTopK]]'s call
     * site): 2·√cells with a floor of min(cells, 32). */
-  private def ivfProbes(cells: Int, nprobe: Int): Int =
+  private[operators] def ivfProbes(cells: Int, nprobe: Int): Int =
     if (nprobe > 0) nprobe
     else math.max(math.min(cells, 32), 2 * math.ceil(math.sqrt(cells.toDouble)).toInt)
 
@@ -265,12 +265,6 @@ object Similarity {
       cents: DataFrame): DataFrame =
     v.withColumn("cell",
       call_function("graft_cell_argmin", col(vec), col(norm), centsAsLit(cents)))
-
-  /** Exact-integer-distance argmin cell assignment (see [[withCell]]) —
-    * shared by [[ivfTopK]] and [[ivfPqTopK]]. */
-  private def assignCells(v: DataFrame, id: String, vec: String, norm: String,
-      cents: DataFrame): DataFrame =
-    withCell(v, vec, norm, cents).select(col(id), col("cell"))
 
   /** Deterministic IVF coarse-quantizer training over a pinned
     * `(nbr_id, nv, vv)` corpus: hash-ordered seeds (the `cells` vectors
@@ -626,7 +620,7 @@ object Similarity {
     val q = queries.select(col(idCol).as("query_id"), quantize(col(vecCol), ix.scale).as("qv"))
       .withColumn("qn", nqdot(col("qv"), col("qv")))
     val qsv = pqSubVectors(q, "query_id", "qv", ix.m, ix.dsub)
-    pqScoreRank(ix.vecs, q, qsv, ix.books, ix.codes, cand = None, k, rerank)
+    pqScoreRank(ix.vecs, q, qsv, ix.books, ix.codes, k, rerank)
       .localCheckpoint(true)
   }
 
@@ -676,18 +670,16 @@ object Similarity {
       p.getAs[Int]("k_cents"), p.getAs[Int]("scale"))
   }
 
-  /** The ADC score + rank/rerank tail shared by [[pqTopK]] (exhaustive —
-    * `cand = None`) and [[ivfPqTopK]] (`cand` = the probed-cell
-    * (query_id, nbr_id) candidate set). ADC cosine divides by the EXACT
-    * stored norm (the norm-augmented PQ variant cosine/inner-product
-    * systems use — one long per vector next to the m codes, so only the
-    * DOT carries quantization distortion; the reconstructed-norm form
-    * measured 0.20 top-5 recall on this suite's uniform vectors where this
-    * form + the rerank stage measures 0.90 — norms vary across the corpus
-    * and their reconstruction error swamped the crowded cosine band). */
+  /** [[pqTopK]]'s exhaustive ADC score + rank/rerank tail. ADC cosine
+    * divides by the EXACT stored norm (the norm-augmented PQ variant
+    * cosine/inner-product systems use — one long per vector next to the m
+    * codes, so only the DOT carries quantization distortion; the
+    * reconstructed-norm form measured 0.20 top-5 recall on this suite's
+    * uniform vectors where this form + the rerank stage measures 0.90 —
+    * norms vary across the corpus and their reconstruction error swamped
+    * the crowded cosine band). */
   private def pqScoreRank(c: DataFrame, q: DataFrame, qsv: DataFrame,
-      books: DataFrame, codes: DataFrame, cand: Option[DataFrame],
-      k: Int, rerank: Int): DataFrame = {
+      books: DataFrame, codes: DataFrame, k: Int, rerank: Int): DataFrame = {
     // The per-query ADC lookup table is m·kCents rows PER QUERY. The
     // explicit broadcast() is right for the intended regime — interactive
     // query batches (≲ a few thousand queries at the m=16/kCents=64
@@ -701,12 +693,7 @@ object Similarity {
     val lut = qsv.join(broadcast(books), Seq("sub"))
       .select(col("query_id"), col("sub"), col("cent_id").as("code"),
         nqdot(col("sv"), col("cv")).as("dot"))
-    val adcBase = cand match {
-      case None => codes.join(maybeBroadcast(lut, lutRows), Seq("sub", "code"))
-      case Some(cs) => cs.join(codes, Seq("nbr_id"))
-        .join(maybeBroadcast(lut, lutRows), Seq("query_id", "sub", "code"))
-    }
-    val adc = adcBase
+    val adc = codes.join(maybeBroadcast(lut, lutRows), Seq("sub", "code"))
       .filter(col("query_id") =!= col("nbr_id"))
       .groupBy(col("query_id"), col("nbr_id"))
       .agg(sum(col("dot")).as("adc_dot"))
@@ -719,7 +706,7 @@ object Similarity {
   private def maybeBroadcast(df: DataFrame, rows: Long): DataFrame =
     if (rows <= 4_000_000L) broadcast(df) else df
 
-  /** The rank/rerank tail shared by every ADC scorer: `adc` is
+  /** The flat-PQ rank/rerank tail: `adc` is
     * (query_id, nbr_id, adc_dot); the ADC cosine divides by the EXACT
     * stored norm, ranks, and (with `rerank > 0`) exactly re-scores the
     * shortlist rows' true vectors. */
@@ -762,14 +749,19 @@ object Similarity {
   /** IVF-PQ: the production 100-TB vector-store layout in one call —
     * [[ivfTopK]]'s coarse quantizer prunes the corpus to each query's
     * `nprobe` nearest cells, and only the probed cells' PQ CODES are
-    * ADC-scored ([[pqTopK]]'s machinery over the candidate set), followed
-    * by the exact rerank of the shortlist. Scanned bytes per query ≈
-    * (probed fraction) × (m codes + 1 norm per row) — the two compressions
-    * compose multiplicatively, which is why IVF-PQ is the standard layout
-    * for billion-vector indexes. Training, assignment, scoring and rerank
-    * all inherit the deterministic integer contracts of the two parents,
-    * so the full chain is SQL-replayable (q119). Output: (query_id,
-    * nbr_id, cosine_micro, rank); with `rerank > 0` the cosine is exact. */
+    * ADC-scored ([[pqTopK]]'s scoring rule, over the packed store of
+    * [[IvfPqIndex]]), followed by the exact rerank of the shortlist.
+    * Scored bytes per query ≈ (probed fraction) × (m codes + 1 norm per
+    * row) — the two compressions compose multiplicatively, which is why
+    * IVF-PQ is the standard layout for billion-vector indexes. (With
+    * `rerank > 0` the one-pass search also reads each probed row's raw
+    * vector for its exact cosine, trading scan bytes for the rerank join
+    * back to the vectors; with `rerank = 0` the cached store's column
+    * pruning skips the vectors.) Training,
+    * assignment, scoring and rerank all inherit the deterministic integer
+    * contracts of the two parents, so the full chain is SQL-replayable
+    * (q119). Output: (query_id, nbr_id, cosine_micro, rank); with
+    * `rerank > 0` the cosine is exact. */
   def ivfPqTopK(
       corpus: DataFrame, queries: DataFrame,
       idCol: String, vecCol: String, k: Int,
@@ -784,47 +776,76 @@ object Similarity {
   }
 
   /** A trained, reusable IVF-PQ store — the production billion-vector
-    * layout as a standing index (VERDICT r7 §next-1): the coarse centroid
-    * set (`cents`, localized), the pinned cell assignment (`cells`), the
-    * localized per-subspace codebooks (`books`) and the pinned compressed
-    * corpus (`codes`), next to the pinned raw vectors + exact norms
-    * (`vecs` — rerank side only). With `residual = true` the books/codes
-    * live in RESIDUAL space (v − cell centroid, Jégou et al. 2011 §IV-A);
-    * searches and ingest assignments must — and do — apply the same
-    * transform. Train once with [[ivfPqIndex]], persist with
-    * [[saveIvfPqIndex]], search with [[ivfPqTopKIndexed]], ingest with
+    * layout as a standing index (VERDICT r7 §next-1), packed ONE ROW PER
+    * VECTOR the way inverted-file PQ stores lay out their lists (Jégou et
+    * al. 2011; FAISS): `store` = (nbr_id, cell, codes: array<int>, nv, vv)
+    * — the vector's coarse cell, its m PQ codes, and its raw quantized
+    * vector + exact norm (the rerank side) — pinned once, next to the
+    * localized coarse centroids (`cents`) and per-subspace codebooks
+    * (`books`). A search reads each candidate's codes, norm and vector
+    * from its one row, so the only join is the probed-cell lookup. With
+    * `residual = true` the books/codes live in RESIDUAL space (v − cell
+    * centroid, Jégou et al. 2011 §IV-A); searches and ingest assignments
+    * must — and do — apply the same transform.
+    *
+    * `cells` (nbr_id, cell), `codes` (nbr_id, sub, code) and `vecs`
+    * (nbr_id, nv, vv) are derived views of the store with the long
+    * m-rows-per-vector schemas — the six-table on-disk format
+    * ([[saveIvfPqIndex]]) and the SQL oracles speak them. Train once with
+    * [[ivfPqIndex]], persist with [[saveIvfPqIndex]], search with
+    * [[ivfPqTopKIndexed]], ingest with
     * [[assignToIvfPqIndex]]/[[extendIvfPqIndex]]. `release()` when done. */
   final case class IvfPqIndex private[operators] (
-      vecs: DataFrame, cents: DataFrame, cells: DataFrame,
-      books: DataFrame, codes: DataFrame,
+      store: DataFrame, cents: DataFrame, books: DataFrame,
       m: Int, dsub: Int, dim: Int, kCents: Int, nCells: Int,
       residual: Boolean, scale: Int) {
-    def release(): Unit = {
-      codes.unpersist(false); cells.unpersist(false); vecs.unpersist(false)
-    }
+    def cells: DataFrame = store.select(col("nbr_id"), col("cell"))
+    def codes: DataFrame = store
+      .select(col("nbr_id"), posexplode(col("codes")).as(Seq("sub", "code")))
+      .select(col("nbr_id"), col("sub"), col("code").cast("long"))
+    def vecs: DataFrame = store.select(col("nbr_id"), col("nv"), col("vv"))
+    def release(): Unit = store.unpersist(false)
   }
 
-  /** The residual frame `(nbr_id, rv)` of a `(id→nbr_id, nv)` vector frame
-    * against its cell assignment: rv = v − centroid(cell), an exact
-    * elementwise integer subtraction (SQL-replayable). Encoding residuals
-    * instead of raw vectors concentrates the code space around zero —
-    * every cell's vectors share one codebook that only has to cover
-    * within-cell variation — which is why the production IVF-PQ layout
-    * (Jégou et al. 2011 §IV-A) is residual-encoded. */
-  private def residualVecs(v: DataFrame, id: String, asg: DataFrame,
-      cents: DataFrame): DataFrame =
-    v.join(asg, Seq(id))
-      .join(broadcast(cents.select(col("cent_id").as("cell"), col("cv"))), Seq("cell"))
+  /** The residual frame `(id, rv)` of an `(id, nv, cell)` vector frame:
+    * rv = v − centroid(cell), an exact elementwise integer subtraction
+    * (SQL-replayable) against the broadcast centroid set — the frame the
+    * residual codebooks train on. Encoding residuals instead of raw
+    * vectors concentrates the code space around zero — every cell's
+    * vectors share one codebook that only has to cover within-cell
+    * variation — which is why the production IVF-PQ layout (Jégou et al.
+    * 2011 §IV-A) is residual-encoded. */
+  private def residualVecs(v: DataFrame, id: String, cents: DataFrame): DataFrame =
+    v.join(broadcast(cents.select(col("cent_id").as("cell"), col("cv"))), Seq("cell"))
       .select(col(id), zip_with(col("nv"), col("cv"), (a, b) => a - b).as("rv"))
+
+  /** The plan-time PQ arguments of the index kernels: the codebooks, plus
+    * the centroids when the codes quantize residuals. */
+  private def pqLits(books: DataFrame, cents: DataFrame, residual: Boolean): Seq[Column] =
+    booksAsLit(books) +: (if (residual) Seq(centsAsLit(cents)) else Nil)
+
+  /** Store rows `(id, cell, codes, nv, vv)` of an `(id, nv, vv)` frame:
+    * the cell argmin ([[withCell]]) and the m-code encoding
+    * ([[graft.expressions.PqEncodeLong]], over the residual when
+    * `residual`) as one projection against the stored centroids and
+    * codebooks — no exchange. Codes are bit-identical to the per-subspace
+    * argmin of [[assignPqCodes]]. */
+  private def storeRows(v: DataFrame, id: String, cents: DataFrame,
+      books: DataFrame, residual: Boolean): DataFrame =
+    withCell(v, "nv", "vv", cents).select(col(id), col("cell"),
+      call_function("graft_pq_encode",
+        col("nv") +: col("cell") +: pqLits(books, cents, residual): _*).as("codes"),
+      col("nv"), col("vv"))
 
   /** Train an [[IvfPqIndex]] over `corpus`: [[trainIvfCents]]'s coarse
     * quantizer + cell assignment (the IVF half), then [[trainPqBooks]]'s
     * per-subspace integer Lloyd over either the raw vectors
     * (`residual = false` — the r7 chain, q119's oracle) or the per-cell
-    * residuals (`residual = true` — Jégou §IV-A, q121's oracle). Every
-    * step keeps the deterministic integer contracts, so the whole trained
-    * state is SQL-replayable. An empty corpus yields an empty index
-    * (dim = 0) whose searches return typed empty results.
+    * residuals (`residual = true` — Jégou §IV-A, q121's oracle), and one
+    * encoding pass that pins the packed store. Every step keeps the
+    * deterministic integer contracts, so the whole trained state is
+    * SQL-replayable. An empty corpus yields an empty index (dim = 0)
+    * whose searches return typed empty results.
     *
     * Measured tradeoff (r8, sf0.1, same 96-bit budget + shortlist-50
     * rerank): flat 0.96 top-5 recall, residual 0.90 — on this suite's
@@ -849,44 +870,66 @@ object Similarity {
     if (n == 0L) { // empty corpus: typed empty index, no dim probe to throw
       val cents = localized(c.select(lit(0L).as("cent_id"), col("nv").as("cv"),
         lit(0L).as("cc")).limit(0))
-      val cells = pin(c.select(col("nbr_id"), lit(0L).as("cell")).limit(0))
       val books = localized(c.select(lit(0).as("sub"), lit(0L).as("cent_id"),
         col("nv").as("cv"), lit(0L).as("cc")).limit(0))
-      val codes = pin(c.select(col("nbr_id"), lit(0).as("sub"), lit(0L).as("code")).limit(0))
-      return IvfPqIndex(c, cents, cells, books, codes,
+      val store = pin(c.select(col("nbr_id"), lit(0L).as("cell"),
+        array().cast("array<int>").as("codes"), col("nv"), col("vv")).limit(0))
+      c.unpersist(false)
+      return IvfPqIndex(store, cents, books,
         m, dsub = 0, dim = 0, kCents, nCells = 0, residual, scale)
     }
     val dim = c.select(size(col("nv")).as("d")).head().getInt(0)
     require(dim % m == 0, s"dim $dim must be divisible by m=$m subspaces")
     val dsub = dim / m
     val cells = if (nCells > 0) nCells else math.max(4, math.ceil(math.sqrt(n.toDouble)).toInt)
-    // coarse quantizer + cell assignment (the IVF half)
+    // coarse quantizer (the IVF half)
     val cents = trainIvfCents(c, cells, ivfLloydIters)
-    val cAsg = pin(assignCells(c, "nbr_id", "nv", "vv", cents))
-    // codebooks + codes (the PQ half), over raw vectors or residuals
-    val enc = if (residual) residualVecs(c, "nbr_id", cAsg, cents) else c
-    val encCol = if (residual) "rv" else "nv"
-    val sv = pin(pqSubVectors(enc, "nbr_id", encCol, m, dsub))
+    // codebooks (the PQ half), trained over raw vectors or residuals
+    val enc = if (residual) residualVecs(withCell(c, "nv", "vv", cents), "nbr_id", cents) else c
+    val sv = pin(pqSubVectors(enc, "nbr_id", if (residual) "rv" else "nv", m, dsub))
     val books = trainPqBooks(c, sv, kCents, pqLloydIters)
-    val codes = pin(assignPqCodes(sv, "nbr_id", books))
     sv.unpersist(false)
-    IvfPqIndex(c, cents, cAsg, books, codes,
-      m, dsub, dim, kCents, cells, residual, scale)
+    // the stored representation: one row per vector, pinned once
+    val store = pin(storeRows(c, "nbr_id", cents, books, residual))
+    c.unpersist(false)
+    IvfPqIndex(store, cents, books, m, dsub, dim, kCents, cells, residual, scale)
   }
 
-  /** [[ivfPqTopK]]'s search half over a prebuilt [[IvfPqIndex]] — probe
-    * cells against the STORED centroid set, ADC-score only the probed
-    * cells' STORED codes, exactly rerank the shortlist; nothing is
-    * retrained (this is what converts q119's training-dominated benchmark
-    * shape into the stored-index query a real vector store runs — q120).
+  /** [[ivfPqTopK]]'s search half over a prebuilt [[IvfPqIndex]]: probe
+    * cells against the STORED centroid set, ADC-score the probed cells'
+    * STORED codes, exactly rerank the shortlist; nothing is retrained (this
+    * is what converts q119's training-dominated benchmark shape into the
+    * stored-index query a real vector store runs — q120). Eager: the
+    * result is materialized (checkpointed) before it is returned, so
+    * collecting it, joining it or releasing the index afterwards never
+    * re-runs the search.
     *
-    * Non-residual ADC is [[pqScoreRank]]'s: one m·kCents lookup table per
-    * query. Residual ADC keys the LUT by (query, PROBED CELL) — the
-    * query's residual against each probed cell's centroid — and adds the
-    * exact q·centroid base term once per candidate:
-    * q·(c + r̂) = q·c + q·r̂ (all integer-exact, q121's oracle). LUT volume
-    * is probes× the non-residual case; the same [[maybeBroadcast]] guard
-    * applies (documented regime: interactive batches). */
+    * One pass over the packed store ([[ivfPqSearch]]): each query carries
+    * its probed cells ([[graft.expressions.IvfProbeLong]]) and one ADC
+    * lookup table per probed cell ([[graft.expressions.AdcLutLong]]) —
+    * m·(kCents+1)+1 longs — into a broadcast join on `cell` alone; one
+    * projection then scores every candidate's ADC cosine (its code array
+    * read against the table in place, [[graft.expressions.AdcDotLong]])
+    * and its exact cosine from the in-row vector, and one window stage
+    * (one exchange, keyed by query) keeps the ADC top-`rerank`, then the
+    * exact top-`k`. The broadcast side holds probes tables per query
+    * (~270 KB a query at the defaults: 32 probes × 1,041 longs), so the
+    * path serves interactive batches of up to a few hundred queries.
+    *
+    * Residual ADC keys the table by (query, PROBED CELL): entries are dots
+    * of the query's residual q − c against the codebook entries, and the
+    * table's base term is q·c, so a candidate's ADC dot is
+    * q·c + (q − c)·r̂ — integer-exact, and what q121's oracle computes.
+    * (The inner product q·(c + r̂) = q·c + q·r̂ would differ by −c·r̂ per
+    * candidate.)
+    *
+    * Filtered (pre-rank) search: `allowed` is a one-column frame of
+    * permitted corpus ids (the caller's metadata predicate, already
+    * evaluated — e.g. meta.filter($"label" < 8).select("id")). The
+    * semi-join drops disallowed candidates right after scoring, before
+    * the exchange and ranking. Probing is unchanged: top-k is taken among
+    * allowed members of the probed cells, so a highly selective filter
+    * may warrant a higher `nprobe` (caller's dial). */
   def ivfPqTopKIndexed(
       ix: IvfPqIndex, queries: DataFrame,
       idCol: String, vecCol: String, k: Int,
@@ -894,69 +937,61 @@ object Similarity {
       allowed: Option[DataFrame] = None): DataFrame = {
     graft.expressions.GraftFunctions.register(queries.sparkSession)
     require(rerank == 0 || rerank >= k, s"rerank ($rerank) must be 0 or >= k ($k)")
-    // Filtered (pre-ADC) search: `allowed` is a one-column frame of
-    // permitted corpus ids (the caller's metadata predicate, already
-    // evaluated — e.g. meta.filter($"label" < 8).select("id")). The
-    // semi-join prunes candidates BEFORE any code is scored, so a
-    // selective filter makes the search CHEAPER, not slower — the
-    // standard IVF filtered-search shape. Probing is unchanged: top-k is
-    // taken among allowed members of the probed cells, so a highly
-    // selective filter may warrant a higher `nprobe` (caller's dial).
-    def gate(cand: DataFrame): DataFrame = allowed match {
-      case None => cand
-      // no broadcast hint: the allowed set can be any fraction of the
-      // corpus — AQE picks broadcast vs shuffled semi-join by its size
-      case Some(a) => cand.join(
-        a.select(col(a.columns.head).as("nbr_id")), Seq("nbr_id"), "left_semi")
-    }
     if (ix.dim == 0) { // empty index: typed empty result
       return ix.vecs.select(col("nbr_id").as("query_id"), col("nbr_id"),
         lit(0L).as("cosine_micro"), lit(0L).as("rank")).limit(0).localCheckpoint(true)
     }
+    ivfPqSearch(ix, queries, idCol, vecCol, k, nprobe, rerank, allowed)
+      .localCheckpoint(true)
+  }
+
+  /** The lazy plan of [[ivfPqTopKIndexed]] over a non-empty index. */
+  private[operators] def ivfPqSearch(
+      ix: IvfPqIndex, queries: DataFrame,
+      idCol: String, vecCol: String, k: Int,
+      nprobe: Int, rerank: Int, allowed: Option[DataFrame]): DataFrame = {
     val probes = ivfProbes(ix.nCells, nprobe)
     val q = queries.select(col(idCol).as("query_id"), quantize(col(vecCol), ix.scale).as("qv"))
       .withColumn("qn", nqdot(col("qv"), col("qv")))
-    val nQ = q.count()
-    // queries probe their nprobe nearest stored cells (full ranking only
-    // over the tiny localized centroid set)
-    val qw = Window.partitionBy(col("query_id")).orderBy(col("d2"), col("cent_id"))
-    val qProbe = q.join(broadcast(ix.cents))
-      .withColumn("d2", col("qn") - lit(2) * nqdot(col("qv"), col("cv")) + col("cc"))
-      .withColumn("__cr", row_number().over(qw))
-      .filter(col("__cr") <= probes)
-    if (!ix.residual) {
-      val qCells = qProbe.select(col("query_id"), col("cent_id").as("cell"))
-      val cand = gate(ix.cells.join(broadcast(qCells), Seq("cell"))
-        .select(col("query_id"), col("nbr_id")))
-      val qsv = pqSubVectors(q, "query_id", "qv", ix.m, ix.dsub)
-      pqScoreRank(ix.vecs, q, qsv, ix.books, ix.codes, cand = Some(cand), k, rerank)
-        .localCheckpoint(true)
-    } else {
-      // residual ADC: the query's residual against EACH probed cell's
-      // centroid, plus the exact q·centroid base term
-      val qr = qProbe.select(col("query_id"), col("cent_id").as("cell"),
-        zip_with(col("qv"), col("cv"), (a, b) => a - b).as("qrv"),
-        nqdot(col("qv"), col("cv")).as("qc"))
-      val qsv = qr.select(col("query_id"), col("cell"), col("qc"),
-        posexplode(array(
-          (0 until ix.m).map(s => slice(col("qrv"), s * ix.dsub + 1, ix.dsub)): _*))
-          .as(Seq("sub", "sv")))
-      val lut = qsv.join(broadcast(ix.books), Seq("sub"))
-        .select(col("query_id"), col("cell"), col("sub"), col("cent_id").as("code"),
-          col("qc"), nqdot(col("sv"), col("cv")).as("dot"))
-      val lutRows = nQ * probes * ix.books.count()
-      val cand = gate(ix.cells.join(
-          broadcast(qr.select(col("query_id"), col("cell"))), Seq("cell"))
-        .filter(col("query_id") =!= col("nbr_id"))
-        .select(col("query_id"), col("nbr_id"), col("cell")))
-      val adc = cand.join(ix.codes, Seq("nbr_id"))
-        .join(maybeBroadcast(lut, lutRows), Seq("query_id", "cell", "sub", "code"))
-        .groupBy(col("query_id"), col("nbr_id"))
-        // qc is constant within the group (one cell per candidate); max()
-        // re-reads it as an aggregate so the base term lands exactly once
-        .agg((sum(col("dot")) + max(col("qc"))).as("adc_dot"))
-      adcRank(ix.vecs, q, adc, k, rerank).localCheckpoint(true)
+      .withColumn("cell", explode(call_function("graft_ivf_probe",
+        col("qv"), col("qn"), centsAsLit(ix.cents), lit(probes))))
+      .withColumn("lut", call_function("graft_adc_lut",
+        col("qv") +: col("cell") +: pqLits(ix.books, ix.cents, ix.residual): _*))
+    val scored = ix.store.join(broadcast(q), Seq("cell"))
+      .filter(col("query_id") =!= col("nbr_id"))
+      .select(col("query_id"), col("nbr_id"),
+        cosineOf(call_function("graft_adc_dot", col("codes"), col("lut")),
+          col("qn"), col("vv")).as("adc_cos"),
+        cosineOf(nqdot(col("qv"), col("nv")), col("qn"), col("vv")).as("cosine"))
+    val cand = allowed match {
+      case None => scored
+      // no broadcast hint: the allowed set can be any fraction of the
+      // corpus — AQE picks broadcast vs shuffled semi-join by its size
+      case Some(a) => scored.join(
+        a.select(col(a.columns.head).as("nbr_id")), Seq("nbr_id"), "left_semi")
     }
+    val byAdc = Window.partitionBy(col("query_id"))
+      .orderBy(col("adc_cos").desc, col("nbr_id"))
+    val ranked =
+      if (rerank == 0) {
+        // pure ADC: the approximate cosine IS the output
+        cand.withColumn("rank", row_number().over(byAdc).cast("long"))
+          .filter(col("rank") <= k)
+          .select(col("query_id"), col("nbr_id"), col("adc_cos").as("cosine"), col("rank"))
+      } else {
+        // two-stage: ADC shortlist → final top-k by the exact cosine
+        // (both windows share the query-keyed exchange)
+        val byExact = Window.partitionBy(col("query_id"))
+          .orderBy(col("cosine").desc, col("nbr_id"))
+        cand.withColumn("__sr", row_number().over(byAdc))
+          .filter(col("__sr") <= rerank)
+          .withColumn("rank", row_number().over(byExact).cast("long"))
+          .filter(col("rank") <= k)
+          .select(col("query_id"), col("nbr_id"), col("cosine"), col("rank"))
+      }
+    ranked.select(col("query_id"), col("nbr_id"),
+      round(col("cosine") * 1e6).cast(org.apache.spark.sql.types.LongType)
+        .as("cosine_micro"), col("rank"))
   }
 
   /** Assign an ingest batch to an [[IvfPqIndex]]'s STORED centroids and
@@ -972,66 +1007,66 @@ object Similarity {
     require(ix.dim > 0, "cannot assign into an empty IvfPqIndex (dim = 0)")
     val v = batch.select(col(idCol).as("id"), quantize(col(vecCol), ix.scale).as("nv"))
       .withColumn("vv", nqdot(col("nv"), col("nv")))
-    val asg = assignCells(v, "id", "nv", "vv", ix.cents)
-    val enc = if (ix.residual) residualVecs(v, "id", asg, ix.cents) else v
-    val encCol = if (ix.residual) "rv" else "nv"
-    val sv = pqSubVectors(enc, "id", encCol, ix.m, ix.dsub)
-    assignPqCodes(sv, "id", ix.books)
-      .join(asg, Seq("id"))
-      .select(col("id"), col("cell"), col("sub"), col("code"))
+    storeRows(v, "id", ix.cents, ix.books, ix.residual)
+      .select(col("id"), col("cell"), posexplode(col("codes")).as(Seq("sub", "code")))
+      .select(col("id"), col("cell"), col("sub"), col("code").cast("long"))
   }
 
-  /** Fold an ingest batch INTO the index: [[assignToIvfPqIndex]]'s
-    * assignments appended to the stored frames (vecs/cells/codes grow;
+  /** Fold an ingest batch INTO the index: the batch's store rows (cell +
+    * codes against the stored centroids/codebooks, as
+    * [[assignToIvfPqIndex]] assigns them) appended to the store;
     * cents/books — the trained state — are untouched, exactly like the
-    * standing LSH indexes never re-bucket their corpus). Returns a NEW
-    * pinned index; the new frames are materialized, so the caller may
-    * `release()` the old one afterwards. Batch ids must be disjoint from
-    * corpus ids (the usual ingest contract). */
+    * standing LSH indexes never re-bucket their corpus. Returns a NEW
+    * index whose store is pinned once, so the caller may `release()` the
+    * old one afterwards. Batch ids must be disjoint from corpus ids (the
+    * usual ingest contract). */
   def extendIvfPqIndex(
       ix: IvfPqIndex, batch: DataFrame, idCol: String, vecCol: String): IvfPqIndex = {
+    graft.expressions.GraftFunctions.register(batch.sparkSession)
     require(ix.dim > 0, "cannot extend an empty IvfPqIndex (dim = 0)")
     val v = batch.select(col(idCol).as("nbr_id"), quantize(col(vecCol), ix.scale).as("nv"))
       .withColumn("vv", nqdot(col("nv"), col("nv")))
-    val a = assignToIvfPqIndex(batch, ix, idCol, vecCol)
-    val newVecs = pin(ix.vecs.unionByName(v))
-    val newCells = pin(ix.cells.unionByName(
-      a.select(col("id").as("nbr_id"), col("cell")).distinct()))
-    val newCodes = pin(ix.codes.unionByName(
-      a.select(col("id").as("nbr_id"), col("sub"), col("code"))))
-    IvfPqIndex(newVecs, ix.cents, newCells, ix.books, newCodes,
-      ix.m, ix.dsub, ix.dim, ix.kCents, ix.nCells, ix.residual, ix.scale)
+    val store = pin(ix.store.unionByName(
+      storeRows(v, "nbr_id", ix.cents, ix.books, ix.residual)))
+    ix.copy(store = store)
   }
 
-  /** Persist an [[IvfPqIndex]] as six parquet tables; `params` is written
-    * LAST as the commit marker (the [[savePqIndex]] contract). */
+  /** Persist an [[IvfPqIndex]] as six parquet tables — the store's
+    * `vecs`/`cells`/`codes` views next to `cents`/`books`; `params` is
+    * written LAST as the commit marker (the [[savePqIndex]] contract). */
   def saveIvfPqIndex(ix: IvfPqIndex, path: String): Unit = {
     ix.vecs.write.mode("overwrite").parquet(s"$path/vecs")
     ix.cents.write.mode("overwrite").parquet(s"$path/cents")
     ix.cells.write.mode("overwrite").parquet(s"$path/cells")
     ix.books.write.mode("overwrite").parquet(s"$path/books")
     ix.codes.write.mode("overwrite").parquet(s"$path/codes")
-    val spark = ix.vecs.sparkSession
+    val spark = ix.store.sparkSession
     import spark.implicits._
     Seq((ix.m, ix.dsub, ix.dim, ix.kCents, ix.nCells, ix.residual, ix.scale))
       .toDF("m", "dsub", "dim", "k_cents", "n_cells", "residual", "scale")
       .write.mode("overwrite").parquet(s"$path/params")
   }
 
-  /** Load a stored [[IvfPqIndex]] (vecs/cells/codes pinned, cents/books
-    * re-localized — the [[ivfPqIndex]] contract). All trained state is
-    * stored bytes, so a loaded index answers queries bit-identically to
-    * the one saved (q120's gate). Fails fast on a partial save. */
+  /** Load a stored [[IvfPqIndex]]: the three per-vector tables are packed
+    * back into the one-row-per-vector store (codes ordered by subspace)
+    * and pinned once; cents/books are re-localized — the [[ivfPqIndex]]
+    * contract. All trained state is stored bytes, so a loaded index
+    * answers queries bit-identically to the one saved (q120's gate).
+    * Fails fast on a partial save. */
   def loadIvfPqIndex(spark: SparkSession, path: String): IvfPqIndex = {
     Dedup.requireIndexParts(spark, path,
       Seq("params", "vecs", "cents", "cells", "books", "codes"), "IvfPqIndex")
     val p = spark.read.parquet(s"$path/params").head()
-    IvfPqIndex(
-      pin(spark.read.parquet(s"$path/vecs")),
+    val packed = spark.read.parquet(s"$path/codes").groupBy(col("nbr_id"))
+      .agg(transform(array_sort(collect_list(struct(col("sub"), col("code")))),
+        e => e.getField("code").cast("int")).as("codes"))
+    val store = pin(spark.read.parquet(s"$path/vecs")
+      .join(spark.read.parquet(s"$path/cells"), Seq("nbr_id"))
+      .join(packed, Seq("nbr_id"))
+      .select(col("nbr_id"), col("cell"), col("codes"), col("nv"), col("vv")))
+    IvfPqIndex(store,
       localized(spark.read.parquet(s"$path/cents")),
-      pin(spark.read.parquet(s"$path/cells")),
       localized(spark.read.parquet(s"$path/books")),
-      pin(spark.read.parquet(s"$path/codes")),
       p.getAs[Int]("m"), p.getAs[Int]("dsub"), p.getAs[Int]("dim"),
       p.getAs[Int]("k_cents"), p.getAs[Int]("n_cells"),
       p.getAs[Boolean]("residual"), p.getAs[Int]("scale"))

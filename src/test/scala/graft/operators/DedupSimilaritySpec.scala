@@ -1,5 +1,7 @@
 package graft.operators
 
+import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.SparkTestBase
 
@@ -860,6 +862,295 @@ class DedupSimilaritySpec extends SparkTestBase {
       .collect().map(r => r.getString(0) ->
         (if (r.isNullAt(3)) None else Some(r.getLong(3)))).toMap
     assert(rep == got.view.mapValues(_._3).toMap)
+  }
+
+  // ---- packed IVF-PQ store: one-pass search vs the join-based formulation
+
+  /** 400 seeded vectors (dim 8) with planted ties: ids 0..19 copy ids
+    * 20..39, ids 40..44 are one vector, id 399 is the zero vector. */
+  private def seededVecs = {
+    val rnd = new scala.util.Random(11)
+    val base = Array.fill(400)(Array.fill(8)((math.round(rnd.nextGaussian() * 100) / 100.0).toFloat))
+    val v = Array.tabulate(400) { i =>
+      if (i < 20) base(i + 20) else if (i >= 40 && i <= 44) base(40)
+      else if (i == 399) Array.fill(8)(0.0f) else base(i)
+    }
+    v.indices.map(i => (i.toLong, v(i))).toDF("vec_id", "embedding")
+  }
+
+  /** The join-based IVF-PQ search the packed store replaced, verbatim in
+    * shape, over the index's `cents`/`books` and `cells`/`codes`/`vecs`
+    * views: windowed probe ranking, per-query (per-cell when residual) LUT
+    * rows joined on (query, [cell,] sub, code), a grouped ADC sum, and a
+    * shortlist window + join back to the vectors for the exact rerank. */
+  private def joinBasedIvfPq(ix: Similarity.IvfPqIndex, queries: DataFrame,
+      k: Int, nprobe: Int, rerank: Int, allowed: Option[DataFrame]): Set[Seq[Any]] = {
+    def qdot(a: Column, b: Column) = call_function("graft_qdot", a, b)
+    def gate(cand: DataFrame) = allowed.fold(cand)(a =>
+      cand.join(a.select(col(a.columns.head).as("nbr_id")), Seq("nbr_id"), "left_semi"))
+    def slices(v: Column) = posexplode(array(
+      (0 until ix.m).map(s => slice(v, s * ix.dsub + 1, ix.dsub)): _*)).as(Seq("sub", "sv"))
+    val probes = Similarity.ivfProbes(ix.nCells, nprobe)
+    val q = queries.select(col("vec_id").as("query_id"),
+        Similarity.quantize(col("embedding"), ix.scale).as("qv"))
+      .withColumn("qn", qdot(col("qv"), col("qv")))
+    val qProbe = q.join(broadcast(ix.cents))
+      .withColumn("d2", col("qn") - lit(2) * qdot(col("qv"), col("cv")) + col("cc"))
+      .withColumn("__cr", row_number().over(
+        Window.partitionBy(col("query_id")).orderBy(col("d2"), col("cent_id"))))
+      .filter(col("__cr") <= probes)
+    val adc = if (!ix.residual) {
+      val cand = gate(ix.cells.join(
+          broadcast(qProbe.select(col("query_id"), col("cent_id").as("cell"))), Seq("cell"))
+        .select(col("query_id"), col("nbr_id")))
+      val lut = q.select(col("query_id"), slices(col("qv")))
+        .join(broadcast(ix.books), Seq("sub"))
+        .select(col("query_id"), col("sub"), col("cent_id").as("code"),
+          qdot(col("sv"), col("cv")).as("dot"))
+      cand.join(ix.codes, Seq("nbr_id")).join(lut, Seq("query_id", "sub", "code"))
+        .filter(col("query_id") =!= col("nbr_id"))
+        .groupBy(col("query_id"), col("nbr_id")).agg(sum(col("dot")).as("adc_dot"))
+    } else {
+      val qr = qProbe.select(col("query_id"), col("cent_id").as("cell"),
+        zip_with(col("qv"), col("cv"), (a, b) => a - b).as("qrv"),
+        qdot(col("qv"), col("cv")).as("qc"))
+      val lut = qr.select(col("query_id"), col("cell"), col("qc"), slices(col("qrv")))
+        .join(broadcast(ix.books), Seq("sub"))
+        .select(col("query_id"), col("cell"), col("sub"), col("cent_id").as("code"),
+          col("qc"), qdot(col("sv"), col("cv")).as("dot"))
+      val cand = gate(ix.cells.join(
+          broadcast(qr.select(col("query_id"), col("cell"))), Seq("cell"))
+        .filter(col("query_id") =!= col("nbr_id"))
+        .select(col("query_id"), col("nbr_id"), col("cell")))
+      cand.join(ix.codes, Seq("nbr_id")).join(lut, Seq("query_id", "cell", "sub", "code"))
+        .groupBy(col("query_id"), col("nbr_id"))
+        .agg((sum(col("dot")) + max(col("qc"))).as("adc_dot"))
+    }
+    val scored = adc.join(ix.vecs.select(col("nbr_id"), col("vv")), Seq("nbr_id"))
+      .join(broadcast(q.select(col("query_id"), col("qn"))), Seq("query_id"))
+      .withColumn("adc_cos", Similarity.cosineOf(col("adc_dot"), col("qn"), col("vv")))
+    val w = Window.partitionBy(col("query_id")).orderBy(col("adc_cos").desc, col("nbr_id"))
+    val ranked = if (rerank == 0) {
+      scored.withColumn("rank", row_number().over(w).cast("long"))
+        .filter(col("rank") <= k)
+        .select(col("query_id"), col("nbr_id"), col("adc_cos").as("cosine"), col("rank"))
+    } else {
+      val shortlist = scored.withColumn("__sr", row_number().over(w))
+        .filter(col("__sr") <= rerank).select(col("query_id"), col("nbr_id"))
+      shortlist.join(ix.vecs, Seq("nbr_id")).join(broadcast(q), Seq("query_id"))
+        .withColumn("cosine",
+          Similarity.cosineOf(qdot(col("qv"), col("nv")), col("qn"), col("vv")))
+        .withColumn("rank", row_number().over(Window.partitionBy(col("query_id"))
+          .orderBy(col("cosine").desc, col("nbr_id"))).cast("long"))
+        .filter(col("rank") <= k)
+        .select(col("query_id"), col("nbr_id"), col("cosine"), col("rank"))
+    }
+    rowSet(ranked.select(col("query_id"), col("nbr_id"),
+      round(col("cosine") * 1e6).cast("long").as("cosine_micro"), col("rank")))
+  }
+
+  test("packed IVF-PQ search equals the join-based ADC formulation (residual, allowed, nprobe, rerank)") {
+    val corpus = seededVecs
+    // self-matches (corpus ids), a duplicate pair (20 ~ 0), a five-way tie
+    // (40..44), the zero vector (399) and a query outside the corpus
+    val qs = corpus.filter(col("vec_id").isin(0L, 20L, 40L, 150L, 399L))
+      .union(Seq((1000L, Array.fill(8)(0.5f))).toDF("vec_id", "embedding"))
+    val allowed = corpus.filter(col("vec_id") % 3 =!= 0).select("vec_id")
+    val k = 5
+    for (residual <- Seq(false, true)) {
+      val ix = Similarity.ivfPqIndex(corpus, "vec_id", "embedding",
+        nCells = 40, m = 4, kCents = 8, residual = residual)
+      // nprobe = 0 derives 32 probes of the 40 cells
+      assert(Similarity.ivfProbes(ix.nCells, 0) == 32)
+      val cases = (for (np <- Seq(1, 0, 40); rr <- Seq(0, 3 * k)) yield (np, rr, false)) ++
+        Seq((0, 3 * k, true), (40, 0, true))
+      for ((np, rr, gated) <- cases) {
+        val a = if (gated) Some(allowed) else None
+        val got = rowSet(Similarity.ivfPqTopKIndexed(ix, qs, "vec_id", "embedding",
+          k, nprobe = np, rerank = rr, allowed = a))
+        val ref = joinBasedIvfPq(ix, qs, k, np, rr, a)
+        assert(got == ref, s"residual=$residual nprobe=$np rerank=$rr gated=$gated")
+        assert(got.nonEmpty && got.forall(r => r(0) != r(1)), "self-matches excluded")
+        if (gated) assert(got.forall(r => r(1).asInstanceOf[Long] % 3 != 0))
+        // ties rank by neighbour id: the zero query scores NULL against
+        // every candidate, so its top-k is its k smallest candidate ids
+        val zero = got.filter(_(0) == 399L).toSeq.sortBy(_(3).asInstanceOf[Long])
+        assert(zero.size == k && zero.forall(_(2) == null))
+        assert(zero.map(_(1).asInstanceOf[Long]) == zero.map(_(1).asInstanceOf[Long]).sorted)
+        // the exact rerank finds the planted duplicate at cosine 1.0
+        if (rr > 0 && !gated) assert(got.contains(Seq(20L, 0L, 1000000L, 1L)))
+      }
+      ix.release()
+    }
+  }
+
+  test("IVF-PQ kernels: interpreted equals codegen and the relational formulation; dims are checked") {
+    import graft.expressions.GraftFunctions
+    GraftFunctions.register(spark)
+    def qdot(a: Column, b: Column) = call_function("graft_qdot", a, b)
+    // repartition keeps the projections out of local-relation folding, so
+    // the default run really goes through codegen
+    val vecs = Seq.tabulate(12) { i =>
+      (i.toLong, Array.tabulate(4)(j => ((i * 7 + j * 3) % 11 - 5).toLong))
+    }.toDF("id", "v").repartition(2)
+      .withColumn("vv", qdot(col("v"), col("v")))
+    // cents 2 and 5 are identical (ties to the lower id); sub 1 of the
+    // books repeats an entry (codes 1 and 3) and sub 0 skips id 3
+    val cents = Seq((1L, Seq(1L, 2L, -1L, 0L)), (2L, Seq(-3L, 0L, 2L, 2L)),
+        (3L, Seq(0L, 0L, 0L, 4L)), (5L, Seq(-3L, 0L, 2L, 2L)))
+      .toDF("cent_id", "cv").withColumn("cc", qdot(col("cv"), col("cv")))
+    val books = Seq((0, 1L, Seq(0L, 1L)), (0, 2L, Seq(-2L, 3L)),
+        (1, 1L, Seq(1L, -1L)), (1, 2L, Seq(4L, 0L)), (1, 3L, Seq(1L, -1L)))
+      .toDF("sub", "cent_id", "cv").withColumn("cc", qdot(col("cv"), col("cv")))
+    val centsLit = typedLit(cents.collect().toSeq
+      .map(r => (r.getLong(0), r.getSeq[Long](1), r.getLong(2))))
+    val booksLit = typedLit(books.collect().toSeq
+      .map(r => (r.getInt(0), r.getLong(1), r.getSeq[Long](2), r.getLong(3))))
+    def bothModes(df: => DataFrame): Set[Seq[Any]] = {
+      val gen = rowSet(df)
+      var interp = Set.empty[Seq[Any]]
+      withSQLConf("spark.sql.codegen.wholeStage" -> "false",
+          "spark.sql.codegen.factoryMode" -> "NO_CODEGEN") { interp = rowSet(df) }
+      assert(gen == interp, "codegen and interpreted evaluation differ")
+      gen
+    }
+    def seqs(rows: Set[Seq[Any]]) = rows.map(r => r.head -> r(1).asInstanceOf[scala.collection.Seq[Any]].toSeq)
+
+    // probe lists: (d2, cent_id) window over the centroid join
+    val probe = bothModes(vecs.select(col("id"),
+      call_function("graft_ivf_probe", col("v"), col("vv"), centsLit, lit(3))))
+    val probeRef = vecs.join(broadcast(cents))
+      .withColumn("d2", col("vv") - lit(2) * qdot(col("v"), col("cv")) + col("cc"))
+      .withColumn("r", row_number().over(
+        Window.partitionBy(col("id")).orderBy(col("d2"), col("cent_id"))))
+      .filter(col("r") <= 3)
+      .groupBy(col("id")).agg(transform(array_sort(collect_list(struct(col("r"), col("cent_id")))),
+        e => e.getField("cent_id")).as("cells"))
+    assert(seqs(probe) == seqs(rowSet(probeRef)))
+    // the duplicate centroid 5 is only ever probed right after its twin 2
+    assert(probe.forall { r =>
+      val cells = r(1).asInstanceOf[scala.collection.Seq[Long]]
+      !cells.contains(5L) || cells.indexOf(2L) == cells.indexOf(5L) - 1
+    })
+
+    // codes: per-slice graft_code_argmin over v (non-residual) and over
+    // v − c(cell) (residual, the cell being the argmin cell)
+    val withCell = vecs.withColumn("cell",
+      call_function("graft_cell_argmin", col("v"), col("vv"), centsLit))
+      .join(broadcast(cents.select(col("cent_id").as("cell"), col("cv"))), Seq("cell"))
+      .withColumn("rv", zip_with(col("v"), col("cv"), (a, b) => a - b))
+    def codesRef(vec: String) = withCell.select(col("id"),
+        posexplode(array(slice(col(vec), 1, 2), slice(col(vec), 3, 2))).as(Seq("sub", "sv")))
+      .withColumn("code", call_function("graft_code_argmin", col("sub"), col("sv"),
+        qdot(col("sv"), col("sv")), booksLit))
+      .groupBy(col("id")).agg(transform(array_sort(collect_list(struct(col("sub"), col("code")))),
+        e => e.getField("code").cast("int")).as("codes"))
+    for ((extra, vec) <- Seq((Nil, "v"), (Seq(centsLit), "rv"))) {
+      val enc = bothModes(withCell.select(col("id"),
+        call_function("graft_pq_encode", col("v") +: col("cell") +: booksLit +: extra: _*)))
+      assert(seqs(enc) == seqs(rowSet(codesRef(vec))), s"encode over $vec")
+    }
+
+    // LUT entries + ADC dot: every vector's codes scored against every
+    // other vector's table equal the relational Σ_s qdot(slice, book) (+ q·c)
+    for ((extra, vec) <- Seq((Nil, "v"), (Seq(centsLit), "rv"))) {
+      val lits = booksLit +: extra
+      val tables = withCell.select(col("id").as("qid"), col("cell"), col(vec).as("qx"), col("v").as("qv"),
+        call_function("graft_adc_lut", col("v") +: col("cell") +: lits: _*).as("lut"),
+        (if (extra.isEmpty) lit(0L) else qdot(col("v"), col("cv"))).as("base"))
+      val codes = withCell.select(col("id"),
+        call_function("graft_pq_encode", col("v") +: col("cell") +: lits: _*).as("codes"))
+      val adc = bothModes(tables.crossJoin(codes).select(col("qid"), col("id"),
+        call_function("graft_adc_dot", col("codes"), col("lut"))))
+      val ref = tables.crossJoin(codes.select(col("id"), posexplode(col("codes")).as(Seq("sub", "code"))))
+        .join(broadcast(books.select(col("sub").as("bsub"), col("cent_id"), col("cv").as("bv"))),
+          col("sub") === col("bsub") && col("code") === col("cent_id"))
+        .select(col("qid"), col("id"), col("base"),
+          qdot(slice(col("qx"), col("sub") * 2 + 1, lit(2)), col("bv")).as("dot"))
+        .groupBy(col("qid"), col("id")).agg((sum(col("dot")) + max(col("base"))).as("adc"))
+      assert(adc == rowSet(ref), s"adc over $vec")
+      // width = max id + 1 = 4 per subspace, plus the base slot
+      assert(tables.select(size(col("lut"))).distinct().collect().map(_.getInt(0)).toSeq == Seq(9))
+    }
+
+    // dimension mismatches raise on both paths
+    val short = vecs.select(slice(col("v"), 1, 3).as("v"), col("vv"), lit(1L).as("cell"))
+    val bad = Seq(
+      call_function("graft_ivf_probe", col("v"), col("vv"), centsLit, lit(2)),
+      call_function("graft_pq_encode", col("v"), col("cell"), booksLit),
+      call_function("graft_adc_lut", col("v"), col("cell"), booksLit, centsLit),
+      call_function("graft_adc_dot", array(Seq.fill(3)(col("cell").cast("int")): _*),
+        array(Seq.fill(3)(col("vv")): _*)))
+    for (e <- bad) {
+      val errGen = intercept[Exception](short.select(e).collect())
+      assert(exceptionChain(errGen).exists(_.getMessage.contains("dimensions differ")), s"$e")
+      withSQLConf("spark.sql.codegen.wholeStage" -> "false",
+          "spark.sql.codegen.factoryMode" -> "NO_CODEGEN") {
+        val errInt = intercept[Exception](short.select(e).collect())
+        assert(exceptionChain(errInt).exists(_.getMessage.contains("dimensions differ")), s"$e")
+      }
+    }
+  }
+
+  test("IVF-PQ search plan: one shuffle exchange, one join keyed on cell, none on sub/code") {
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
+    import org.apache.spark.sql.execution.joins.BaseJoinExec
+    val helper = new AdaptiveSparkPlanHelper {}
+    val qs = clustered.filter(col("vec_id") < 3)
+    for (residual <- Seq(false, true)) {
+      val ix = Similarity.ivfPqIndex(clustered, "vec_id", "embedding",
+        nCells = 2, m = 3, kCents = 4, residual = residual)
+      for (rerank <- Seq(0, 9)) {
+        val plan = Similarity.ivfPqSearch(ix, qs, "vec_id", "embedding", 4, 2, rerank, None)
+        assert(plan.collect().nonEmpty)
+        val exec = plan.queryExecution.executedPlan
+        val shuffles = helper.collectWithSubqueries(exec) { case e: ShuffleExchangeLike => e }
+        val joinKeys = helper.collectWithSubqueries(exec) {
+          case j: BaseJoinExec => (j.leftKeys ++ j.rightKeys).flatMap(_.references.map(_.name))
+        }
+        assert(shuffles.size == 1, s"residual=$residual rerank=$rerank:\n$exec")
+        assert(joinKeys == Seq(Seq("cell", "cell")), s"residual=$residual rerank=$rerank:\n$exec")
+      }
+      ix.release()
+    }
+  }
+
+  test("IvfPqIndex views keep the long schemas; extend + save/load round-trips to identical search") {
+    def schemaOf(df: DataFrame) = df.schema.fields.map(f => f.name -> f.dataType.simpleString).toSeq
+    val longSchemas = Seq(
+      Seq("nbr_id" -> "bigint", "cell" -> "bigint"),
+      Seq("nbr_id" -> "bigint", "sub" -> "int", "code" -> "bigint"),
+      Seq("nbr_id" -> "bigint", "nv" -> "array<bigint>", "vv" -> "bigint"))
+    val qs = clustered.filter(col("vec_id") < 2)
+    val batch = Seq((100L, Array(1.0f, 0.02f, 0.0f)), (101L, Array(0.03f, 1.0f, 0.0f)))
+      .toDF("vec_id", "embedding")
+    for (residual <- Seq(false, true)) {
+      val dir = java.nio.file.Files.createTempDirectory("graft_pqext").toString
+      val ix = Similarity.ivfPqIndex(clustered, "vec_id", "embedding",
+        nCells = 2, m = 3, kCents = 4, residual = residual)
+      val ext = Similarity.extendIvfPqIndex(ix, batch, "vec_id", "embedding")
+      ix.release()
+      def views(x: Similarity.IvfPqIndex) = Seq(x.cells, x.codes, x.vecs)
+      assert(views(ext).map(schemaOf) == longSchemas)
+      assert(ext.cells.count() == 12 && ext.codes.count() == 36 && ext.vecs.count() == 12)
+      // the ingested rows carry exactly what the assignment path assigns
+      val asg = rowSet(Similarity.assignToIvfPqIndex(batch, ext, "vec_id", "embedding"))
+      assert(asg == rowSet(ext.cells.join(ext.codes, Seq("nbr_id"))
+        .filter(col("nbr_id") >= 100L).select("nbr_id", "cell", "sub", "code")))
+      def search(x: Similarity.IvfPqIndex) = rowSet(Similarity.ivfPqTopKIndexed(
+        x, qs, "vec_id", "embedding", k = 5, nprobe = 2, rerank = 10))
+      val before = search(ext)
+      val stored = views(ext).map(rowSet)
+      Similarity.saveIvfPqIndex(ext, s"$dir/ix")
+      ext.release()
+      val loaded = Similarity.loadIvfPqIndex(spark, s"$dir/ix")
+      assert(views(loaded).map(schemaOf) == longSchemas)
+      assert(views(loaded).map(rowSet) == stored)
+      val after = search(loaded)
+      loaded.release()
+      assert(after == before && before.exists(_(1) == 100L), s"residual=$residual")
+    }
   }
 
   private def exceptionChain(e: Throwable): Seq[Throwable] =
