@@ -175,6 +175,12 @@ object GraftFunctions {
     spark.sessionState.functionRegistry.createOrReplaceTempFunction(
       "graft_lsh_buckets", children => LshBucketsLong(children(0), children(1),
         LshBucketsLong.planeMatrixOf(children(1), "graft_lsh_buckets")), "scala_udf")
+    // one document's shingle-hash set and MinHash signature; the shingle
+    // width and the signature length must be INT literals
+    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
+      "graft_minhash", children => MinhashLong(children(0),
+        litInt(children(1), "graft_minhash", "n"),
+        litInt(children(2), "graft_minhash", "numHashes")), "scala_udf")
     // KLL aggregates: the analyzer wraps a returned AggregateFunction in
     // its AggregateExpression automatically; k must be a literal int
     spark.sessionState.functionRegistry.createOrReplaceTempFunction(

@@ -26,11 +26,14 @@ import graft.functions.Text
   * All hashing is md5-based (codegen'd, no UDF) so the DuckDB oracle
   * reproduces results exactly.
   *
-  * Cache discipline: the pair operators persist their intermediates
-  * (shingle sets, banded signatures), EAGERLY materialize the small pair
-  * result via `localCheckpoint(true)`, then unpersist every intermediate
-  * before returning — no INTERMEDIATE storage outlives the call. The
-  * checkpointed result itself does hold its (small, final-output-sized)
+  * Cache discipline: a [[MinhashIndex]] is ONE pinned frame, one row per
+  * document (id, sh, nsh, band_keys), built by a single projection of the
+  * [[graft.expressions.MinhashLong]] kernel; its shingle-set and band-key
+  * views derive from it, so the index holds one cache, not one per view.
+  * The pair operators persist their intermediates, EAGERLY materialize the
+  * small pair result via `localCheckpoint(true)`, then unpersist every
+  * intermediate before returning — no INTERMEDIATE storage outlives the
+  * call. The checkpointed result itself does hold its (small, final-output-sized)
   * blocks until the returned DataFrame is unpersisted or GC'd — a
   * long-lived session that calls these in a loop should release results
   * it is done with. Eager evaluation is a deliberate semantic: a
@@ -61,36 +64,42 @@ object Dedup {
       .agg(min(col(idCol)).as("keep_id"), count(lit(1)).as("n_copies"))
   }
 
-  /** doc → sorted distinct 60-bit shingle hashes (one row per doc).
-    * Shingles are hashed to longs immediately (md5 → first 15 hex chars →
-    * long): join keys and verify arrays are then 8-byte fixed-width instead
-    * of ~50-char strings, cutting shuffle volume and comparison cost ~8×.
-    * A within-pair collision would alter a Jaccard count, but at 2^60 the
-    * probability is ~10^-13 per corpus — and the DuckDB oracle applies the
-    * SAME hash, so results always agree bit-for-bit.
-    * Callers `pin` this frame (index build, both sides of the candidate
-    * self-join, both verify joins re-read the materialized sets instead of
-    * re-deriving shingles from text) and unpersist it before returning —
-    * at 100 TB this would be a DISK_ONLY cache or a staging table. */
   /** (id, h) rows: one 60-bit hash per distinct shingle STRING of each doc
     * ([[Text.wordShingles]] array_distincts inside the row, before any
-    * shuffle). Distinctness at the HASH level is NOT guaranteed here — two
-    * shingles colliding in 60 bits yield two equal h rows (~1e-13; callers
-    * that promise the oracle hash-set semantics dedup hashes downstream:
-    * collect_set in [[shingled]], countDistinct in [[contaminationPairs]]).
-    * Hashing happens OUTSIDE any array lambda so md5/conv run in
-    * WholeStageCodegen. */
+    * shuffle), the per-shingle stream the inverted-index operators join on.
+    * Shingles are hashed to longs immediately (md5 → first 15 hex chars →
+    * long): join keys are then 8-byte fixed-width instead of ~50-char
+    * strings. A within-pair collision would alter a count, but at 2^60 the
+    * probability is ~10^-13 per corpus — and the DuckDB oracle applies the
+    * SAME hash, so results always agree bit-for-bit. Distinctness at the
+    * HASH level is NOT guaranteed here — two shingles colliding in 60 bits
+    * yield two equal h rows (callers that promise the oracle hash-set
+    * semantics dedup hashes downstream: countDistinct in
+    * [[contaminationPairs]]). Hashing happens OUTSIDE any array lambda so
+    * md5/conv run in WholeStageCodegen. */
   private def shingleHashed(df: DataFrame, idCol: String, textCol: String, n: Int): DataFrame =
     Par.spread(df)
       .select(col(idCol).as("id"), explode(Text.wordShingles(col(textCol), n)).as("s"))
       .select(col("id"), conv(substring(md5(col("s")), 1, 15), 16, 10).cast("long").as("h"))
 
-  private def shingled(df: DataFrame, idCol: String, textCol: String, n: Int): DataFrame =
-    shingleHashed(df, idCol, textCol, n)
-      // one tiny shuffle of (id, long) rebuilds the per-doc sorted set
-      // (collect_set dedups like array_distinct)
-      .groupBy(col("id")).agg(sort_array(collect_set(col("h"))).as("sh"))
-      .withColumn("nsh", size(col("sh")))
+  /** (id, sh, nsh, mh): one row per input row — its sorted distinct 60-bit
+    * shingle hashes (the same hash as [[shingleHashed]], deduped per doc),
+    * their count, and `numHashes` Kirsch–Mitzenmacher MinHash minima. One
+    * projection of the [[graft.expressions.MinhashLong]] kernel at scan
+    * parallelism: no explode, no shuffle. Rows sharing an id are NOT
+    * merged: each row is indexed on its own text. Docs with no shingle (nsh = 0, or null text)
+    * are NOT filtered here: a filter above this projection is pushed below
+    * it (and below [[Par.spread]]'s exchange) with the kernel inlined, so
+    * the kernel would run twice a row, the first time unspread. Callers
+    * pin this frame and filter the cached rows. */
+  private def minhashed(df: DataFrame, idCol: String, textCol: String, n: Int,
+      numHashes: Int): DataFrame = {
+    graft.expressions.GraftFunctions.register(df.sparkSession)
+    Par.spread(df)
+      .select(col(idCol).as("id"),
+        call_function("graft_minhash", col(textCol), lit(n), lit(numHashes)).as("k"))
+      .select(col("id"), col("k.sh").as("sh"), size(col("k.sh")).as("nsh"), col("k.mh").as("mh"))
+  }
 
   /** Exact near-dup pairs with PPJoin-style prefix filtering (lossless):
     * with each doc's shingles in a fixed total order (lexicographic), any
@@ -98,11 +107,17 @@ object Dedup {
     * |d| − ceil(t·|d|) + 1 shingles of each side — so only the PREFIX is
     * exploded into the inverted index (~(1−t)·|d| entries per doc instead
     * of |d|, cutting index self-join volume ~(1−t)² at scale). Candidates
-    * are then verified with the exact Jaccard over the full sets. */
+    * are then verified with the exact Jaccard over the full sets.
+    *
+    * Ids are expected unique per row. Each row is matched on its own text
+    * (rows sharing an id are not merged into one shingle set), so a
+    * repeated id can report the same (id_a, id_b) once per matching row. */
   def ngramJaccardPairs(
       df: DataFrame, idCol: String, textCol: String,
       n: Int = 3, threshold: Double = 0.8): DataFrame = {
-    val s = pin(shingled(df, idCol, textCol, n).filter(col("nsh") > 0)) // already sorted
+    // already sorted; a doc without shingles (nsh 0 or null) has an empty
+    // prefix, so it never reaches the candidate or verify joins
+    val s = pin(minhashed(df, idCol, textCol, n, numHashes = 0).drop("mh"))
     // epsilon guards float rounding UP only (a longer prefix is still lossless)
     val prefLen = (col("nsh") - ceil(col("nsh") * (threshold - 1e-9)) + 1).cast("int")
     val ex = s.select(col("id"), col("nsh"), explode(slice(col("sh"), lit(1), prefLen)).as("shingle"))
@@ -371,80 +386,45 @@ object Dedup {
       .drop("__bid")
   }
 
-  /** MinHash signatures via Kirsch–Mitzenmacher double hashing: per shingle
-    * ONE md5 supplies two independent 32-bit words (w0, w1); hash i is
-    * (w0 + i·w1) mod (2^31−1). Computed relationally — explode shingles,
-    * hash each ONCE with codegen'd expressions, then `numHashes` min()
-    * aggregates in a single hash-agg (map-side partial combine, one shuffle
-    * on the doc id). Output: (id, mh0..mh{k-1}). This formulation keeps the
-    * whole hot path inside WholeStageCodegen, unlike higher-order array
-    * lambdas which Spark interprets row-by-row. */
-  def minhashSignatures(s: DataFrame, numHashes: Int): DataFrame = {
-    val p = 2147483647L
-    // shingles arrive as 60-bit longs; KM words hash their decimal strings
-    val ex = s.select(col("id"), explode(col("sh")).as("xl"))
-      .select(col("id"),
-        Text.md5Word32(col("xl").cast("string"), 1).as("w0"),
-        Text.md5Word32(col("xl").cast("string"), 9).as("w1"))
-    val mins = (0 until numHashes).map(i =>
-      min(pmod(col("w0") + col("w1") * i, lit(p))).as(s"mh$i"))
-    ex.groupBy(col("id")).agg(mins.head, mins.tail: _*)
+  /** A reusable MinHash-LSH index over one corpus: THIS is the state a
+    * standing-corpus pipeline stores — signatures depend only on each doc's
+    * text, so an index built once serves the corpus self-join, every
+    * delta's band-join against it, and the incremental-components fold,
+    * without re-shingling the big side.
+    *
+    * One pinned frame, `packed` = (id, sh, nsh, band_keys), one row per
+    * document: the sorted shingle-hash set (exact-verify side) and the
+    * `bands` band keys (candidate-generation side) side by side.
+    * [[shingles]] and [[bandedKeys]] are derived views of it with the
+    * stored two-table layout's schemas — (id, sh, nsh) and (id, band,
+    * band_key) — so the index holds one cache (in a real deployment: two
+    * tables keyed by id / (band, band_key)). `release()` when done. */
+  final case class MinhashIndex private[operators] (packed: DataFrame) {
+    // docs without a shingle stay in the pinned frame (see [[minhashed]]);
+    // the views drop them: they would all share the empty signature's keys
+    private def indexed = packed.filter(col("nsh") > 0)
+    def shingles: DataFrame = indexed.select(col("id"), col("sh"), col("nsh"))
+    def bandedKeys: DataFrame = indexed.select(col("id"),
+      posexplode(col("band_keys")).as(Seq("band", "band_key")))
+    def release(): Unit = packed.unpersist(false)
   }
 
-  /** A reusable MinHash-LSH index over one corpus: the pinned shingle sets
-    * (exact-verify side) and the pinned banded signature keys (candidate-
-    * generation side). THIS is the state a standing-corpus pipeline stores —
-    * signatures depend only on each doc's text, so an index built once
-    * serves the corpus self-join, every delta's band-join against it, and
-    * the incremental-components fold, without re-shingling the big side
-    * (in a real deployment both frames are tables keyed by id / (band,
-    * band_key); here they are pinned caches). `release()` when done. */
-  final case class MinhashIndex private[operators] (
-      shingles: DataFrame, bandedKeys: DataFrame) {
-    def release(): Unit = {
-      bandedKeys.unpersist(false); shingles.unpersist(false)
-    }
-  }
-
-  /** Build a [[MinhashIndex]]: one shingle pass, one signature hash-agg
-    * (the expensive job — map-side combined, one shuffle on the doc id),
-    * bands exploded to (id, band, band_key) rows. Both frames pinned. */
+  /** Build a [[MinhashIndex]] in one pass over the docs: one projection of
+    * the [[graft.expressions.MinhashLong]] kernel (shingle-hash set and
+    * `bands · rowsPerBand` Kirsch–Mitzenmacher minima per doc), band keys
+    * md5(concat_ws("|", band slice)) in the same projection, pinned once.
+    * No explode and no shuffle beyond [[Par.spread]]'s; the values are
+    * bit-identical to the former explode → hash → two-aggregate pipeline
+    * (the kernel's parity test keeps that pipeline as its reference).
+    * Ids are expected unique per row: a repeated id is indexed once per
+    * row, on that row's text (see [[ngramJaccardPairs]]). */
   def minhashIndex(
       df: DataFrame, idCol: String, textCol: String,
       n: Int = 3, bands: Int = 4, rowsPerBand: Int = 3): MinhashIndex = {
-    val numHashes = bands * rowsPerBand
-    // ONE shingle+hash pass pinned as (id, h) rows at scan parallelism;
-    // both the sorted-set frame (verify side) and the signatures aggregate
-    // from it. Signatures take their min() over the raw rows DIRECTLY —
-    // min over the multiset equals min over collect_set's set, so the
-    // values are bit-identical to the former explode-the-array spelling —
-    // which (a) map-side-combines 12 longs per doc per partition instead
-    // of shuffling shingle arrays into a second explode, and (b) keeps the
-    // KM md5 kernel on the spread scan partitions instead of the handful
-    // of post-AQE cache partitions (guide §2.3 "aggregate before you
-    // shuffle"; measured: the signature stage was a single-task 6.9 s
-    // serial stage at sf0.1 before this).
-    val rows = pin(shingleHashed(df, idCol, textCol, n))
-    val s = pin(rows
-      .groupBy(col("id")).agg(sort_array(collect_set(col("h"))).as("sh"))
-      .withColumn("nsh", size(col("sh")))
-      .filter(col("nsh") > 0))
-    val p = 2147483647L
-    val ex = rows.select(col("id"),
-      Text.md5Word32(col("h").cast("string"), 1).as("w0"),
-      Text.md5Word32(col("h").cast("string"), 9).as("w1"))
-    val mins = (0 until numHashes).map(i =>
-      min(pmod(col("w0") + col("w1") * i, lit(p))).as(s"mh$i"))
-    val sig = ex.groupBy(col("id")).agg(mins.head, mins.tail: _*)
     val bandKeys = (0 until bands).map(bi =>
-      md5(concat_ws("|",
-        (0 until rowsPerBand).map(j => col(s"mh${bi * rowsPerBand + j}").cast("string")): _*)))
-    // pinned: without it the candidate self-join executes the signature
-    // pipeline on BOTH sides (this alone halved q29's wall time)
-    val banded = pin(
-      sig.select(col("id"), posexplode(array(bandKeys: _*)).as(Seq("band", "band_key"))))
-    rows.unpersist(blocking = false) // s + banded carry all consumers need
-    MinhashIndex(s, banded)
+      md5(concat_ws("|", slice(col("mh"), bi * rowsPerBand + 1, rowsPerBand).cast("array<string>"))))
+    MinhashIndex(pin(minhashed(df, idCol, textCol, n, bands * rowsPerBand)
+      .select(col("id"), col("sh"), col("nsh"), array(bandKeys: _*).as("band_keys"))))
   }
 
   /** MinHash + LSH near-dup pairs.
@@ -452,7 +432,10 @@ object Dedup {
     * some band agree (band key = md5 of the joined band slice). Candidates
     * are verified with exact Jaccard over the shingle sets. The only
     * shuffles are the band-bucket self-join and the verify joins — never a
-    * cross join, so this is the scale path for corpus dedup. */
+    * cross join, so this is the scale path for corpus dedup. Ids are
+    * expected unique per row; a repeated id is matched once per row and
+    * can report the same (id_a, id_b) more than once (see
+    * [[ngramJaccardPairs]]). */
   def minhashLshPairs(
       df: DataFrame, idCol: String, textCol: String,
       n: Int = 3, bands: Int = 4, rowsPerBand: Int = 3,
@@ -496,16 +479,20 @@ object Dedup {
         "Was the save interrupted? Re-run the save.")
   }
 
-  /** Load a stored [[MinhashIndex]] (both frames pinned, [[minhashIndex]]
-    * contract). Signatures are a pure function of each doc's text, so a
-    * loaded index is interchangeable with a freshly built one. Fails fast
+  /** Load a stored [[MinhashIndex]] ([[minhashIndex]] contract: the two
+    * tables are re-packed by id into the one pinned frame, band keys back
+    * in band order). Signatures are a pure function of each doc's text, so
+    * a loaded index is interchangeable with a freshly built one. Fails fast
     * with a clear message on a partial save. */
   def loadMinhashIndex(spark: org.apache.spark.sql.SparkSession,
       path: String): MinhashIndex = {
     requireIndexParts(spark, path, Seq("banded", "shingles"), "MinhashIndex")
-    MinhashIndex(
-      pin(spark.read.parquet(s"$path/shingles")),
-      pin(spark.read.parquet(s"$path/banded")))
+    val keys = spark.read.parquet(s"$path/banded")
+      .groupBy(col("id"))
+      .agg(sort_array(collect_list(struct(col("band"), col("band_key")))).as("bk"))
+      .select(col("id"), col("bk.band_key").as("band_keys"))
+    MinhashIndex(pin(spark.read.parquet(s"$path/shingles").join(keys, "id")
+      .select(col("id"), col("sh"), col("nsh"), col("band_keys"))))
   }
 
   /** Persist dedup component labels (r14 ✚, VERDICT r13 "what's wrong"
@@ -647,10 +634,24 @@ object Dedup {
     out
   }
 
-  /** Near-dup pairs → dedup groups: connected components via alternating
-    * large-star / small-star contraction (Kiveris et al., "Connected
-    * Components in MapReduce and Beyond", ACM SoCC 2014). Each round over
-    * the current edge set (every edge kept oriented u > v, no self-loops):
+  /** Near-dup pairs → dedup groups: alternating large-star / small-star
+    * contraction (Kiveris et al., "Connected Components in MapReduce and
+    * Beyond", ACM SoCC 2014), short-cut by a local union-find pass when
+    * the graph fits one partition.
+    *
+    * Local pass: after the oriented edges (u > v, no self-loops) are made
+    * distinct, a graph whose edges sit in ONE partition — always the case
+    * for a batch-sized graph once AQE has coalesced the distinct — goes
+    * through one `mapPartitions` union-find ([[StarForest]]) that emits its
+    * star forest, a (member, component min) row per non-root node. That
+    * forest IS the contraction's fixed point, so the round loop runs zero
+    * rounds. The pass holds primitive arrays proportional to the edges
+    * (~48 bytes an edge for integral ids). A graph over several partitions,
+    * or with an id type other than int, long or string, runs the round
+    * loop over the distinct edges.
+    *
+    * Each contraction round over the current edge set (every edge kept
+    * oriented u > v, no self-loops):
     *
     *   - large-star: each node u links every LARGER neighbor to
     *     m = min(Γ(u) ∪ {u}) — collapses downhill chains from above;
@@ -693,9 +694,10 @@ object Dedup {
     * (labels-as-edges ∪ delta pairs) reaches the same fixed point as
     * re-running over (all historical pairs ∪ delta pairs): the label edges
     * connect exactly the same components the historical pairs did.
-    * Convergence needs only the rounds to fold the DELTA in — O(log of the
-    * largest newly-merged chain), independent of corpus history; a batch
-    * touching nothing converges in one confirmation round. Output contract
+    * The same local union-find pass runs over (labels ∪ delta) edges, so
+    * a one-partition fold needs no round at all; a larger one runs only
+    * the rounds to fold the DELTA in — O(log of the largest newly-merged
+    * chain), independent of corpus history. Output contract
     * is identical to [[connectedComponents]] over the union
     * ([[graft.operators]] ComponentsSpec asserts equality with the full
     * recompute; q109's oracle checks it against a recursive-CTE closure).
@@ -761,7 +763,19 @@ object Dedup {
         greatest(col("u"), col("v")).as("u"),
         least(col("u"), col("v")).as("v"))
       .filter(col("u") =!= col("v")).distinct()
-    var cur = init.rdd.persist(StorageLevel.MEMORY_AND_DISK)
+    // under AQE this runs the distinct's shuffle and fixes the (coalesced)
+    // partition count
+    val initRdd = init.rdd
+    StarForest.pass(init.schema("u").dataType) match {
+      case Some(localPass) if initRdd.getNumPartitions <= 1 =>
+        // one partition holds every edge: its star forest IS the fixed point
+        val forest = spark.createDataFrame(initRdd.mapPartitions(localPass), init.schema)
+        return withSingletons(
+          forest.select(col("u").as("id"), col("v").as("component")).localCheckpoint(true),
+          nodes, idCol)
+      case _ =>
+    }
+    var cur = initRdd.persist(StorageLevel.MEMORY_AND_DISK)
     var edges = spark.createDataFrame(cur, init.schema)
     var (cnt, chk) = checksum(edges)
     var converged = cnt == 0L
@@ -797,10 +811,15 @@ object Dedup {
     val finalLabels = edges.select(col("u").as("id"), col("v").as("component"))
       .localCheckpoint(true)
     cur.unpersist(blocking = false)
-    // roots have no outgoing edge and singletons never appear: both keep
-    // themselves via the coalesce
+    withSingletons(finalLabels, nodes, idCol)
+  }
+
+  /** (id, component) over every node: roots have no outgoing edge and
+    * singletons never appear in `labels`, so both keep themselves via the
+    * coalesce. */
+  private def withSingletons(labels: DataFrame, nodes: DataFrame, idCol: String): DataFrame = {
     val allNodes = nodes.select(col(idCol).as("id"))
-    allNodes.join(finalLabels.withColumnRenamed("id", "__lid"),
+    allNodes.join(labels.withColumnRenamed("id", "__lid"),
         allNodes("id") === col("__lid"), "left")
       .select(col("id"), coalesce(col("component"), col("id")).as("component"))
   }
@@ -817,7 +836,11 @@ object Dedup {
     * BEST member, not its accidental first), each cluster keeps its first
     * row under that ordering; append a unique tie-breaker for deterministic
     * output. Cost: one extra keyed window over the component label — the
-    * same single-shuffle shape as the anti-join it replaces. */
+    * same single-shuffle shape as the anti-join it replaces.
+    *
+    * Ids are expected unique per row. Rows sharing an id are matched on
+    * their own texts (see [[ngramJaccardPairs]]) but share one component
+    * label; with `keepBy` empty they are kept or dropped together. */
   def dedupedCorpus(
       df: DataFrame, idCol: String, textCol: String,
       n: Int = 3, bands: Int = 4, rowsPerBand: Int = 3,

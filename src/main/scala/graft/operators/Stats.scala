@@ -186,7 +186,7 @@ object Stats {
     * engines' libm need not agree). Draws ≥ 7 are capped (P ≈ 8·10⁻⁵,
     * and the cap is part of the deterministic definition). The modulus is
     * 2³¹−1 because the per-replicate uniform comes from Kirsch–
-    * Mitzenmacher double hashing (the [[Dedup.minhashSignatures]]
+    * Mitzenmacher double hashing (the [[graft.expressions.MinhashKernel]]
     * idiom). */
   private val poissonCdf31 = Seq(790015083L, 1580030167L, 1975037709L,
     2106706890L, 2139624185L, 2146207644L, 2147304887L)
@@ -197,7 +197,7 @@ object Stats {
     * no resampled copies of the data, no driver loop). Weights are
     * DETERMINISTIC: each row is md5-hashed ONCE into two 32-bit words
     * (w0, w1) and replicate r's uniform is (w0 + r·w1) mod (2³¹−1) — the
-    * [[Dedup.minhashSignatures]] Kirsch–Mitzenmacher idiom, one md5 per
+    * [[graft.expressions.MinhashKernel]] Kirsch–Mitzenmacher idiom, one md5 per
     * ROW instead of one per row×replicate (the naive form put 38M md5s
     * on q190's clock at sf0.1: 14.3 s → this shape) — pushed through the
     * Poisson(1) inverse CDF ([[poissonCdf31]]). The whole CI is a pure

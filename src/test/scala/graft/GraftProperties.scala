@@ -212,8 +212,13 @@ object GraftProperties extends Properties("graft") {
       import spark.implicits._
       val pairs = edges.toDF("id_a", "id_b")
       val nodes = (0L to 9L).toDF("id")
-      val got = Dedup.connectedComponents(pairs, nodes, "id")
+      def got = Dedup.connectedComponents(pairs, nodes, "id")
         .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+      // one partition (the local union-find pass alone) and, with AQE
+      // coalescing off, 4 partitions (the large-star/small-star loop)
+      val single = got
+      val multi = SparkTestBase.withSQLConf(
+        "spark.sql.adaptive.coalescePartitions.enabled" -> "false")(got)
       // reference union-find
       val parent = scala.collection.mutable.Map((0L to 9L).map(x => x -> x): _*)
       def find(x: Long): Long = if (parent(x) == x) x else { val r = find(parent(x)); parent(x) = r; r }
@@ -221,7 +226,7 @@ object GraftProperties extends Properties("graft") {
         val (ra, rb) = (find(a), find(b))
         if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
       }
-      (0L to 9L).forall(x => got(x) == find(x))
+      (0L to 9L).forall(x => single(x) == find(x) && multi(x) == find(x))
     }
 
   private def longDf(name: String, xs: List[Long]) = {

@@ -105,4 +105,86 @@ class ComponentsSpec extends SparkTestBase {
     }
     assert(err.getMessage.contains("incomplete"))
   }
+
+  /** Union-find oracle: node → min id of its component. */
+  private def unionFind(edges: Seq[(Long, Long)], nodes: Seq[Long]): Map[Long, Long] = {
+    val parent = scala.collection.mutable.Map(nodes.map(x => x -> x): _*)
+    def find(x: Long): Long = if (parent(x) == x) x else { val r = find(parent(x)); parent(x) = r; r }
+    edges.foreach { case (a, b) =>
+      val (ra, rb) = (find(a), find(b))
+      if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
+    }
+    nodes.map(x => x -> find(x)).toMap
+  }
+
+  private def labels(df: org.apache.spark.sql.DataFrame): Map[Long, Long] =
+    df.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+
+  // without AQE coalescing the distinct edge set keeps all 4 shuffle
+  // partitions, so the one-partition local pass does not apply and the
+  // large-star/small-star loop runs
+  private def multiPartition(f: => Unit): Unit =
+    withSQLConf("spark.sql.adaptive.coalescePartitions.enabled" -> "false")(f)
+
+  test("connectedComponents over >= 4 partitions: long chain and two joined stars equal union-find") {
+    multiPartition {
+      // a 300-node chain over a seeded permutation of the ids, so consecutive
+      // chain links land in different partitions
+      val perm = new scala.util.Random(11L).shuffle((1L to 300L).toList)
+      val chain = perm.sliding(2).map { case Seq(a, b) => (a, b) }.toSeq
+      // two 20-leaf stars (centers 1000, 2000) joined leaf to leaf
+      val stars = (1001L to 1020L).map(1000L -> _) ++ (2001L to 2020L).map(2000L -> _) :+
+        (1020L -> 2001L)
+      val edges = chain ++ stars
+      val nodes = (1L to 300L) ++ (1000L to 1020L) ++ (2000L to 2020L) :+ 5000L
+      val pairs = edges.toDF("id_a", "id_b")
+      assert(spark.conf.get("spark.sql.shuffle.partitions").toInt >= 4)
+      var got = Map.empty[Long, Long]
+      val jobs = jobsRun {
+        got = labels(Dedup.connectedComponents(pairs, nodes.toDF("doc_id"), "doc_id"))
+      }
+      assert(got == unionFind(edges, nodes))
+      assert(got(2020L) == 1000L && got(5000L) == 5000L && got.values.toSet.size == 3)
+      assert(jobs > 6, s"expected the round loop to run, saw only $jobs jobs")
+    }
+  }
+
+  test("connectedComponentsIncremental over >= 4 partitions equals union-find over all pairs") {
+    multiPartition {
+      val old = (1L until 40L).map(i => (i, i + 1)) ++ (100L until 130L).map(i => (i, i + 1))
+      val delta = Seq((40L, 130L), (200L, 201L), (7L, 115L))
+      val oldNodes = (1L to 40L) ++ (100L to 130L)
+      val allNodes = oldNodes ++ Seq(200L, 201L, 300L)
+      val prior = Dedup.connectedComponents(old.toDF("id_a", "id_b"), oldNodes.toDF("doc_id"), "doc_id")
+      val inc = labels(Dedup.connectedComponentsIncremental(prior, delta.toDF("id_a", "id_b"),
+        allNodes.toDF("doc_id"), "doc_id"))
+      assert(inc == unionFind(old ++ delta, allNodes))
+      assert(inc(130L) == 1L && inc(201L) == 200L && inc(300L) == 300L)
+    }
+  }
+
+  test("connectedComponents on a one-partition graph: the local pass alone, <= 6 jobs") {
+    val edges = Seq((1L, 2L), (2L, 3L), (3L, 4L), (10L, 11L), (12L, 11L), (4L, 1L))
+    val nodes = (1L to 12L)
+    val pairs = edges.toDF("id_a", "id_b").localCheckpoint(true)
+    val docs = nodes.toDF("doc_id").localCheckpoint(true)
+    var got = Map.empty[Long, Long]
+    val jobs = jobsRun { got = labels(Dedup.connectedComponents(pairs, docs, "doc_id")) }
+    assert(got == unionFind(edges, nodes))
+    assert(jobs <= 6, s"one-partition components ran $jobs jobs")
+  }
+
+  test("connectedComponents: string ids take the local pass with Spark's string order") {
+    // "Z" < "a" < "é" in UTF-8 byte order; the root must be the byte-order min
+    val pairs = Seq(("a", "é"), ("é", "Z"), ("x", "y")).toDF("id_a", "id_b")
+    val nodes = Seq("a", "é", "Z", "x", "y", "solo").toDF("name")
+    val single = Dedup.connectedComponents(pairs, nodes, "name")
+      .collect().map(r => r.getString(0) -> r.getString(1)).toMap
+    assert(single == Map("a" -> "Z", "é" -> "Z", "Z" -> "Z", "x" -> "x", "y" -> "x", "solo" -> "solo"))
+    multiPartition {
+      val multi = Dedup.connectedComponents(pairs, nodes, "name")
+        .collect().map(r => r.getString(0) -> r.getString(1)).toMap
+      assert(multi == single)
+    }
+  }
 }
