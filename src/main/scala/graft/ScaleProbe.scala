@@ -281,11 +281,11 @@ object ScaleProbe {
       // (ADVICE r9 §5): its blocks otherwise accumulate across factors
       cmCells.unpersist(blocking = false)
 
-      // standing-store fold axis (r10 §next-7b): BM25. Extend unions the
-      // fixed batch's postings into a store that grows with factor and
-      // re-pins — the extend cost may track the STORE size (one narrow
-      // union write) but must never re-derive history contributions; the
-      // build/extend ratio across factors is the measured claim.
+      // standing-store fold axis (r10 §next-7b): BM25. Extend pins the
+      // fixed batch as one new segment beside the store's segments, which
+      // it shares uncopied, so its cost tracks the BATCH size, not the
+      // store's; the build/extend ratio across factors is the measured
+      // claim (a flat extend time as the store grows).
       val bmt0 = System.nanoTime()
       val bmIx = graft.operators.Search.bm25Index(docs, "doc_id", "text")
       val nBmPostings = bmIx.postings.count()

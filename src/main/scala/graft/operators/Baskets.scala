@@ -4,7 +4,8 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.LongType
-import org.apache.spark.storage.StorageLevel
+
+import graft.operators.Pinned.pin
 
 /** Market-basket association mining (Agrawal & Srikant 1994's support /
   * confidence framing; lift per Brin et al. 1997) over a (basket, item)
@@ -46,14 +47,6 @@ import org.apache.spark.storage.StorageLevel
   * basket- or item-keyed equi-joins and map-side-combined counts: no
   * cartesian, no driver state. */
 object Baskets {
-
-  /** Persist + force-materialize (the [[Dedup]]/[[Similarity]] pin
-    * discipline). */
-  private def pin(df: DataFrame): DataFrame = {
-    df.persist(StorageLevel.MEMORY_AND_DISK)
-    df.count()
-    df
-  }
 
   def pairLift(rel: DataFrame, basketCol: String, itemCol: String,
       minPairCount: Long = 2L, maxBasketItems: Int = 256): DataFrame = {

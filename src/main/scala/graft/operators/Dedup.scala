@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
 import graft.functions.Text
+import graft.operators.Pinned.pin
 
 /** Deduplication for large-scale text corpora (north-star extension,
   * SURVEY §2.1 ✚): exact, n-gram Jaccard, MinHash+LSH banding, SimHash,
@@ -44,16 +45,6 @@ import graft.functions.Text
   * blocks are not fault-tolerant); single-JVM here.
   */
 object Dedup {
-
-  /** Persist + force-materialize: after this, every later consumer —
-    * including both sides of a self-join — reads the cached blocks instead
-    * of recomputing the plan (lazy persist alone would let the self-join's
-    * two concurrently-scheduled map stages each compute the pipeline). */
-  private def pin(df: DataFrame): DataFrame = {
-    df.persist(StorageLevel.MEMORY_AND_DISK)
-    df.count()
-    df
-  }
 
   /** Exact dedup on a fingerprint of normalized text — one hash-agg shuffle
     * (map-side combine), the 100-TB-safe baseline. */
@@ -950,10 +941,9 @@ object Dedup {
       scale: Int = 1000, seed: Long = 42L): EmbeddingIndex = {
     val tables = if (nTables > 0) nTables else if (threshold >= 0.4) 16 else 24
     graft.expressions.GraftFunctions.register(df.sparkSession)
-    val v = pin(Par.spread(df).select(col(idCol).as("id"),
+    val (v, n) = Pinned.pinRows(Par.spread(df).select(col(idCol).as("id"),
         Similarity.quantize(col(vecCol), scale).as("v"))
       .withColumn("nn", call_function("graft_qdot", col("v"), col("v"))))
-    val n = v.count() // reads the pinned cache
     if (n == 0L) { // empty corpus: typed empty buckets, no dim probe to throw
       val b = v.select(col("id"), lit(0L).as("t"), lit(0L).as("bucket")).limit(0)
       return EmbeddingIndex(v, b, tables, bits = 4, dim = 0, scale = scale, seed = seed)
@@ -1032,10 +1022,9 @@ object Dedup {
       idCol: String, vecCol: String, threshold: Double = 0.4,
       multiProbe: Boolean = true): DataFrame = {
     graft.expressions.GraftFunctions.register(delta.sparkSession)
-    val dv = pin(Par.spread(delta).select(col(idCol).as("id"),
+    val (dv, n) = Pinned.pinRows(Par.spread(delta).select(col(idCol).as("id"),
         Similarity.quantize(col(vecCol), corpus.scale).as("v"))
       .withColumn("nn", call_function("graft_qdot", col("v"), col("v"))))
-    val n = dv.count() // reads the pinned cache
     if (n == 0L || corpus.dim == 0) { // nothing to match: typed empty result
       val out = dv.select(col("id").as("id_a"), col("id").as("id_b"),
         lit(0.0).as("cosine")).limit(0).localCheckpoint(true)

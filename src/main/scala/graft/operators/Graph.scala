@@ -2,8 +2,9 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 import org.apache.spark.sql.types.{DecimalType, LongType}
+
+import graft.operators.Pinned.pin
 
 /** Graph analytics over relational edge lists. [[Dedup.connectedComponents]]
   * covers the clustering half; this adds the importance-scoring half —
@@ -39,12 +40,6 @@ import org.apache.spark.sql.types.{DecimalType, LongType}
   * only their base rank — callers wanting mass conservation should
   * symmetrize edges first (an undirected graph has no dangling nodes). */
 object Graph {
-
-  private def pin(df: DataFrame): DataFrame = {
-    df.persist(StorageLevel.MEMORY_AND_DISK)
-    df.count()
-    df
-  }
 
   /** k-iteration fixed-point PageRank over `edges` (srcCol, dstCol longs).
     * Damping = dampNum/dampDen (default 85/100). Ranks start at

@@ -5,6 +5,8 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{StructType, TimestampType}
 
+import graft.operators.Pinned.pin
+
 /** Join surface. Reference: inner equi-join only (`pyarrow_ops/join.py:15-47`,
   * "currently performs inner join" README.md:46), with left-wins resolution of
   * duplicate non-key columns (`join.py:7-13`, verified SURVEY §2.2.7). The
@@ -366,12 +368,6 @@ object Joins {
       .distinct()
       .withColumn("dist", levenshtein(col("str_l"), col("str_r")))
       .filter(col("dist") <= lit(maxDist))
-  }
-
-  private def pin(df: DataFrame): DataFrame = {
-    df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    df.count()
-    df
   }
 
   /** A standing FastSS fuzzy-match dictionary (r9 — the approximate-key

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 
 /** Scan-parallelism guard shared by the CPU-heavy narrow stages (guide
   * §1.2 step 1 / §2.5 "input skew": one huge unsplittable input leaves the
@@ -23,8 +23,16 @@ import org.apache.spark.sql.DataFrame
   * exact-integer discipline), and Spark's sort-before-repartition keeps
   * the row→partition assignment deterministic under task retry. */
 private[graft] object Par {
-  def spread(df: DataFrame): DataFrame = {
+  def spread(df: DataFrame): DataFrame = spreadOr(df)(df.repartition(_))
+
+  /** [[spread]] by hash of `keys` instead of round-robin: rows sharing the
+    * keys land in one partition, so an aggregation grouped by them (or by
+    * a superset of them) right after it needs no exchange of its own. */
+  def spreadBy(df: DataFrame, keys: Column*): DataFrame =
+    spreadOr(df)(df.repartition(_, keys: _*))
+
+  private def spreadOr(df: DataFrame)(repartition: Int => DataFrame): DataFrame = {
     val slots = df.sparkSession.sparkContext.defaultParallelism
-    if (df.rdd.getNumPartitions < slots) df.repartition(slots) else df
+    if (df.rdd.getNumPartitions < slots) repartition(slots) else df
   }
 }

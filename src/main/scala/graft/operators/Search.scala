@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.LongType
+import org.apache.spark.sql.types.{LongType, StringType}
 import org.apache.spark.storage.StorageLevel
 
 import graft.functions.Text
@@ -116,79 +116,127 @@ object Search {
       .filter(col("rank") <= k)
   }
 
-  /** Persist + force-materialize (the [[Dedup]]/[[Similarity]] pin
-    * discipline). */
-  private def pin(df: DataFrame): DataFrame = {
-    df.persist(StorageLevel.MEMORY_AND_DISK)
-    df.count()
-    df
-  }
-
   /** A standing BM25 search index (r8 — the lexical sibling of
     * [[Similarity.IvfPqIndex]], completing the stored-index story for the
     * search path: [[bm25TopK]]/[[bm25PerQuery]] re-tokenize the corpus on
-    * every call, which is the benchmark shape, not the deployed one):
-    * the full token-keyed inverted index (`postings` — (id, token, tf)),
-    * per-doc lengths (`docLens`), per-term document frequencies
-    * (`termDf`), and the two exact corpus scalars (`nDocs`,
-    * `totalTokens`). Build once with [[bm25Index]], persist with
-    * [[saveBm25Index]], answer queries with [[bm25TopKIndexed]]/
-    * [[bm25PerQueryIndexed]] (each reads only the query terms' postings —
-    * in a deployment the postings table is stored bucketed by token, so
-    * the scan prunes to the terms' buckets), and fold ingest batches in
-    * with [[extendBm25Index]]. Every statistic is an exact long
-    * aggregate, so an extended index scores BIT-IDENTICALLY to one
-    * rebuilt from scratch on the union (the q124 gate — stronger than the
-    * approximate-index stories, which only promise same-bucket-space).
-    * `release()` when done. */
+    * every call, which is the benchmark shape, not the deployed one).
+    * Build once with [[bm25Index]], persist with [[saveBm25Index]], answer
+    * queries with [[bm25TopKIndexed]]/[[bm25PerQueryIndexed]] (each reads
+    * only the query terms' rows), and fold ingest batches in with
+    * [[extendBm25Index]]. `release()` when done.
+    *
+    * Layout: an append-only list of immutable, pinned, reference-counted
+    * [[Segment]]s (the LSM-tree layout, O'Neil et al. 1996). A segment's
+    * frame holds one (id, token, tf, dl) row per distinct token of each of
+    * its documents — the posting carries its document's length, so
+    * scoring needs no length join — plus one document row
+    * (id, token = null, tf = dl, dl) per document. Beside it sits the
+    * segment's pinned (token, df, cf) frame, whose null-token row holds
+    * the segment's document count and token total. [[bm25Index]] and
+    * [[loadBm25Index]] pin one segment; [[extendBm25Index]] pins one for
+    * the batch and shares the rest ([[Segment.append]]'s binary-counter
+    * compaction keeps O(log N) segments). A query scans the union of the
+    * segments' rows ([[Segment.union]]) for its terms and sums their df
+    * across segments on the driver. `postings` (id, token, tf),
+    * `docLens` (id, dl) and `termDf` (token, df) are derived views with
+    * the four-table on-disk schemas; `nDocs`/`totalTokens` are the exact
+    * corpus scalars. Every statistic is an exact long, so an extended
+    * index scores BIT-IDENTICALLY to one rebuilt from scratch on the
+    * union (the q124 gate). Ids are expected unique per row: a repeated
+    * id indexes each row as its own document.
+    *
+    * `release()` drops this index's reference to each segment, so an
+    * index and the one extended from it may be released in either
+    * order. */
   final case class Bm25Index private[operators] (
-      idCol: String, postings: DataFrame, docLens: DataFrame, termDf: DataFrame,
-      nDocs: Long, totalTokens: Long) {
-    def release(): Unit = {
-      termDf.unpersist(false); docLens.unpersist(false); postings.unpersist(false)
+      idCol: String, segments: Vector[Segment], nDocs: Long, totalTokens: Long) {
+    private val released = new java.util.concurrent.atomic.AtomicBoolean(false)
+    /** Every segment's rows, document rows included. */
+    private[operators] def rows: DataFrame = Segment.union(segments)
+    def postings: DataFrame =
+      rows.filter(col("token").isNotNull).select(col(idCol), col("token"), col("tf"))
+    def docLens: DataFrame = rows.filter(col("token").isNull).select(col(idCol), col("dl"))
+    def termDf: DataFrame = {
+      val per = segments.map(_.side.head.filter(col("token").isNotNull))
+      if (per.size == 1) per.head.select(col("token"), col("df"))
+      else per.reduce(_ unionByName _).groupBy("token").agg(sum(col("df")).as("df"))
     }
+    /** token → df of the query terms `prune` keeps (a prune drops the
+      * null document-row key), as a plan-time map literal: the few matching
+      * rows of each segment's frame are collected and summed on the driver,
+      * so a query needs no df join and no aggregation exchange. */
+    private[operators] def queryDf(prune: DataFrame => DataFrame): Column =
+      typedLit(segments.map(s => prune(s.side.head).select(col("token"), col("df")))
+        .reduce(_ unionByName _).collect().toSeq
+        .groupMapReduce(_.getString(0))(_.getLong(1))(_ + _))
+    def release(): Unit =
+      if (released.compareAndSet(false, true)) segments.foreach(_.release())
   }
 
-  /** Build a [[Bm25Index]]: one tokenize pass feeds one (doc, token)
-    * hash-agg; lengths and document frequencies are one further hash-agg
-    * each over the pinned postings (never a second corpus pass). Docs with
-    * no tokens (null/empty text) contribute no postings and do not count
-    * toward N — identical to [[bm25TopK]]'s semantics. */
+  /** The segment rows of a document frame: one tokenize feeding one
+    * (id, dl, token) hash-agg, with dl = the document's token count and a
+    * null token appended to each document's tokens — its document row
+    * (tf = dl). Docs with null text contribute no rows and do not count
+    * toward N — identical to [[bm25TopK]]'s semantics. A narrow input is
+    * spread by id, which the hash-agg then reuses: one exchange either
+    * way. */
+  private def segmentRows(df: DataFrame, idCol: String, textCol: String): DataFrame =
+    Par.spreadBy(df, col(idCol))
+      .select(col(idCol), Text.tokens(Text.normalize(col(textCol))).as("toks"))
+      .select(col(idCol), size(col("toks")).cast(LongType).as("dl"),
+        explode(concat(col("toks"), array(lit(null).cast(StringType)))).as("token"))
+      .groupBy(col(idCol), col("dl"), col("token")).agg(count(lit(1)).as("tf"))
+      .select(col(idCol), col("token"),
+        when(col("token").isNull, col("dl")).otherwise(col("tf")).as("tf"), col("dl"))
+
+  /** Pin segment rows and their (token, df, cf) frame as one [[Segment]].
+    * ONE fold over the (token, df, cf) rows materializes both caches
+    * (computing them reads every segment row) and reads the segment's row
+    * count (Σ df), document count N and token total TT — the latter two
+    * from the document rows' null-token group. Returns (segment, N, TT). */
+  private def seal(segRows: DataFrame): (Segment, Long, Long) = {
+    segRows.persist(StorageLevel.MEMORY_AND_DISK)
+    val dfs = segRows.groupBy("token")
+      .agg(count(lit(1)).as("df"), sum(col("tf")).as("cf"))
+      .persist(StorageLevel.MEMORY_AND_DISK)
+    val (rows, n, tt) = Pinned.cachedRows(dfs)
+      .map(r => if (r.isNullAt(0)) (r.getLong(1), r.getLong(1), r.getLong(2)) else (r.getLong(1), 0L, 0L))
+      .fold((0L, 0L, 0L)) { case ((a, b, c), (x, y, z)) => (a + x, b + y, c + z) }
+    (new Segment(segRows, rows, Pinned.cachedRows(segRows).getNumPartitions, Seq(dfs)), n, tt)
+  }
+
+  /** Build a [[Bm25Index]] of one segment: one tokenize pass feeds one
+    * hash-agg; one further hash-agg over the pinned rows gives the term
+    * frequencies and the corpus scalars (never a second corpus pass). */
   def bm25Index(df: DataFrame, idCol: String, textCol: String): Bm25Index = {
-    val tf = pin(bm25Postings(df, idCol, textCol))
-    val dl = pin(tf.groupBy(idCol).agg(sum(col("tf")).as("dl")))
-    val dfreq = pin(tf.groupBy("token").agg(count(lit(1)).as("df")))
-    val stats = dl.agg(count(lit(1)).as("N"), coalesce(sum(col("dl")), lit(0L)).as("TT")).head()
-    Bm25Index(idCol, tf, dl, dfreq, stats.getLong(0), stats.getLong(1))
+    val (seg, n, tt) = seal(segmentRows(df, idCol, textCol))
+    Bm25Index(idCol, Vector(seg), n, tt)
   }
 
-  /** The (doc, token, c_micro) contributions for the given pruned postings
-    * slice of an index — the [[contribs]] tail over STORED statistics.
-    * The corpus scalars enter as literals; the expression tree is
-    * [[contribMicro]], so scores are bit-identical to the from-scratch
-    * path. */
-  private def indexContribs(ix: Bm25Index, pruned: DataFrame, prunedDf: DataFrame,
-      k1: Double, b: Double): DataFrame =
-    pruned.join(broadcast(prunedDf), Seq("token"))
-      .join(ix.docLens, Seq(ix.idCol))
-      .select(col(ix.idCol), col("token"),
-        contribMicro(col("tf"), col("df"), col("dl"),
-          lit(ix.nDocs), lit(ix.totalTokens), k1, b).as("c_micro"))
+  /** The (doc, token, c_micro) contributions of an index's rows pruned to
+    * the query terms (`prune`), against the terms' summed df — the
+    * [[contribs]] tail over STORED statistics. Each row carries its
+    * document's length and the df and corpus scalars enter as literals;
+    * the expression tree is [[contribMicro]], so scores are bit-identical
+    * to the from-scratch path. */
+  private def indexContribs(ix: Bm25Index, prune: DataFrame => DataFrame,
+      k1: Double, b: Double): DataFrame = {
+    val dfs = ix.queryDf(prune)
+    prune(ix.rows).select(col(ix.idCol), col("token"),
+      contribMicro(col("tf"), element_at(dfs, col("token")), col("dl"),
+        lit(ix.nDocs), lit(ix.totalTokens), k1, b).as("c_micro"))
+  }
 
-  /** The (id, token, tf) postings rows of a document frame — the unit
-    * every standing-index operation is built from ([[bm25Index]] pins
-    * them, [[extendBm25Index]] folds them in, and the streaming ingest
-    * twin ships each micro-batch's rows to the store's postings table;
-    * doc lengths, term dfs and the corpus scalars all derive from these
-    * rows by exact aggregation). */
+  /** The (id, token, tf) postings rows of a document frame — the rows a
+    * standing index's `postings` view holds for those documents (the
+    * streaming ingest twin ships them to a store's postings table). */
   def bm25Postings(df: DataFrame, idCol: String, textCol: String): DataFrame =
-    Par.spread(df)
-      .select(col(idCol), explode(Text.tokens(Text.normalize(col(textCol)))).as("token"))
-      .groupBy(col(idCol), col("token")).agg(count(lit(1)).as("tf"))
+    segmentRows(df, idCol, textCol)
+      .filter(col("token").isNotNull).select(col(idCol), col("token"), col("tf"))
 
   /** [[bm25TopK]] against a prebuilt [[Bm25Index]] — no tokenization, no
-    * corpus pass: only the query terms' postings rows are read and scored
-    * against the stored statistics. Bit-identical output (q123's gate).
+    * corpus pass: only the query terms' rows are read and scored against
+    * the stored statistics. Bit-identical output (q123's gate).
     * Eager: the ≤ k result rows are materialized (checkpointed) before
     * they are returned, so a caller that both collects the ranking and
     * fuses it with another list (hybrid search) scores the postings once,
@@ -198,9 +246,7 @@ object Search {
       k1: Double = 1.2, b: Double = 0.75): DataFrame = {
     require(queryTerms.nonEmpty, "queryTerms must be non-empty")
     require(k > 0, "k must be positive")
-    indexContribs(ix,
-        ix.postings.filter(col("token").isin(queryTerms: _*)),
-        ix.termDf.filter(col("token").isin(queryTerms: _*)), k1, b)
+    indexContribs(ix, _.filter(col("token").isin(queryTerms: _*)), k1, b)
       .groupBy(ix.idCol)
       .agg(count(lit(1)).as("n_hit_terms"), sum(col("c_micro")).as("score_micro"))
       .orderBy(col("score_micro").desc, col(ix.idCol))
@@ -223,9 +269,7 @@ object Search {
     val terms = qterms.select("token").distinct()
     val w = Window.partitionBy(queryIdCol)
       .orderBy(col("score_micro").desc, col(ix.idCol))
-    indexContribs(ix,
-        ix.postings.join(broadcast(terms), Seq("token"), "left_semi"),
-        ix.termDf.join(broadcast(terms), Seq("token"), "left_semi"), k1, b)
+    indexContribs(ix, _.join(broadcast(terms), Seq("token"), "left_semi"), k1, b)
       .join(broadcast(qterms), Seq("token"))
       .groupBy(col(queryIdCol), col(ix.idCol))
       .agg(count(lit(1)).as("n_hit_terms"), sum(col("c_micro")).as("score_micro"))
@@ -233,52 +277,57 @@ object Search {
       .filter(col("rank") <= k)
   }
 
-  /** Fold an ingest batch INTO the index: the batch's postings/lengths
-    * union in, per-term document frequencies add, and the corpus scalars
-    * add — all EXACT integer arithmetic, so the extended index is
+  /** Fold an ingest batch INTO the index: the batch is tokenized into ONE
+    * new segment (its rows and (token, df, cf) frame, pinned by one
+    * fold) appended to the old segments, which the new index shares;
+    * document count and token total add. Nothing else is copied unless
+    * the append triggers a compaction ([[Segment.append]]: the newest two
+    * segments merge while the newest is at least as large as its older
+    * neighbour), so an ingest costs O(batch) amortized, not O(corpus).
+    * Every statistic is EXACT integer arithmetic, so the extended index is
     * bit-indistinguishable from one rebuilt on the union (the q124 gate
     * asserts exactly this through the oracle). Batch ids must be disjoint
-    * from indexed ids (the usual ingest contract). Returns a NEW pinned
-    * index; the caller may `release()` the old one afterwards. */
+    * from indexed ids (the usual ingest contract). Returns a NEW index;
+    * the caller may `release()` the old one afterwards, before or after
+    * the new one. */
   def extendBm25Index(ix: Bm25Index, batch: DataFrame, textCol: String): Bm25Index = {
-    val dtf = pin(bm25Postings(batch, ix.idCol, textCol))
-    val ddl = dtf.groupBy(ix.idCol).agg(sum(col("tf")).as("dl"))
-    val dStats = ddl.agg(count(lit(1)).as("n"), coalesce(sum(col("dl")), lit(0L)).as("tt")).head()
-    val newPostings = pin(ix.postings.unionByName(dtf))
-    val newDl = pin(ix.docLens.unionByName(ddl))
-    val newDf = pin(ix.termDf.unionByName(
-        dtf.groupBy("token").agg(count(lit(1)).as("df")))
-      .groupBy("token").agg(sum(col("df")).as("df")))
-    dtf.unpersist(false)
-    Bm25Index(ix.idCol, newPostings, newDl, newDf,
-      ix.nDocs + dStats.getLong(0), ix.totalTokens + dStats.getLong(1))
+    val (seg, n, tt) = seal(segmentRows(batch, ix.idCol, textCol))
+    val segs = Segment.append(ix.segments, seg)(
+      (older, newest) => seal(Segment.union(Seq(older, newest)))._1)
+    Bm25Index(ix.idCol, segs, ix.nDocs + n, ix.totalTokens + tt)
   }
 
-  /** Persist a [[Bm25Index]] as four parquet tables; `params` (which also
-    * carries the corpus scalars) is written LAST as the commit marker —
-    * the shared [[Dedup.saveEmbeddingIndex]] contract. */
+  /** Persist a [[Bm25Index]] as four parquet tables — its `postings`,
+    * `docLens` and `termDf` views; `params` (which also carries the corpus
+    * scalars) is written LAST as the commit marker — the shared
+    * [[Dedup.saveEmbeddingIndex]] contract. */
   def saveBm25Index(ix: Bm25Index, path: String): Unit = {
     ix.postings.write.mode("overwrite").parquet(s"$path/postings")
     ix.docLens.write.mode("overwrite").parquet(s"$path/doclens")
     ix.termDf.write.mode("overwrite").parquet(s"$path/termdf")
-    val spark = ix.postings.sparkSession
+    val spark = ix.rows.sparkSession
     import spark.implicits._
     Seq((ix.idCol, ix.nDocs, ix.totalTokens))
       .toDF("id_col", "n_docs", "total_tokens")
       .write.mode("overwrite").parquet(s"$path/params")
   }
 
-  /** Load a stored [[Bm25Index]] (frames pinned). Postings and statistics
-    * are stored bytes, so a loaded index scores bit-identically to the one
-    * saved. Fails fast with a clear message on a partial save. */
+  /** Load a stored [[Bm25Index]] as one segment: postings ⋈ doclens packs
+    * each posting with its document's length, and doclens gives the
+    * document rows. Postings and statistics are stored bytes, so a loaded
+    * index scores bit-identically to the one saved. Fails fast with a
+    * clear message on a partial save. */
   def loadBm25Index(spark: SparkSession, path: String): Bm25Index = {
     Dedup.requireIndexParts(spark, path,
       Seq("params", "postings", "doclens", "termdf"), "Bm25Index")
     val p = spark.read.parquet(s"$path/params").head()
-    Bm25Index(p.getAs[String]("id_col"),
-      pin(spark.read.parquet(s"$path/postings")),
-      pin(spark.read.parquet(s"$path/doclens")),
-      pin(spark.read.parquet(s"$path/termdf")),
+    val idCol = p.getAs[String]("id_col")
+    val lens = spark.read.parquet(s"$path/doclens")
+    val segRows = spark.read.parquet(s"$path/postings").join(lens, Seq(idCol))
+      .select(col(idCol), col("token"), col("tf"), col("dl"))
+      .unionByName(lens.select(col(idCol), lit(null).cast(StringType).as("token"),
+        col("dl").as("tf"), col("dl")))
+    Bm25Index(idCol, Vector(seal(segRows)._1),
       p.getAs[Long]("n_docs"), p.getAs[Long]("total_tokens"))
   }
 

@@ -3,7 +3,8 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
+
+import graft.operators.Pinned.pin
 
 /** Approximate-nearest-neighbor similarity search over embedding columns
   * (north-star extension, SURVEY §2.1 ✚).
@@ -80,13 +81,6 @@ object Similarity {
       dot(a, b) / (sqrt(dot(a, a)) * sqrt(dot(b, b))))
   }
 
-  /** Persist + force-materialize (see Dedup.pin — same discipline). */
-  private def pin(df: DataFrame): DataFrame = {
-    df.persist(StorageLevel.MEMORY_AND_DISK)
-    df.count()
-    df
-  }
-
   /** Smallest b in [minBits, maxBits] with 2^b · targetOccupancy ≥ n:
     * bucket count grows WITH the corpus so per-bucket occupancy — and with
     * it per-bucket candidate-pair volume — stays ~constant at any scale.
@@ -101,17 +95,19 @@ object Similarity {
     * (table `t`, bit `j`, dimension `pos`): w = +1 iff the first md5 nibble
     * of "seed|t|j|pos" is even. Rademacher (±1) entries are a standard
     * random-projection basis (Achlioptas 2001) and keep the projection an
-    * exact integer sum. Tiny (nTables·bits·dim rows) — broadcast. */
+    * exact integer sum. Tiny (nTables·bits·dim rows), so the planes are
+    * computed on the driver and returned as a local relation: collecting
+    * or broadcasting them runs no Spark job. The first hex nibble of the
+    * md5 is the high half of its first byte, so the weights are
+    * bit-identical to SQL's `md5(concat_ws('|', …))` spelling. */
   def hyperplanes(spark: SparkSession, nTables: Int, bits: Int, dim: Int, seed: Long): DataFrame = {
-    val t = spark.range(nTables).select(col("id").as("t"))
-    val j = spark.range(bits).select(col("id").as("j"))
-    val p = spark.range(dim).select(col("id").as("pos"))
-    t.crossJoin(j).crossJoin(p)
-      .select(col("t"), col("j"), col("pos"),
-        when(pmod(conv(substring(md5(
-            concat_ws("|", lit(seed), col("t"), col("j"), col("pos"))), 1, 1), 16, 10)
-            .cast("long"), lit(2)) === 0, lit(1L))
-          .otherwise(lit(-1L)).as("w"))
+    import spark.implicits._
+    val md5 = java.security.MessageDigest.getInstance("MD5")
+    val planes = for (t <- 0L until nTables; j <- 0L until bits; pos <- 0L until dim) yield {
+      val first = md5.digest(s"$seed|$t|$j|$pos".getBytes(java.nio.charset.StandardCharsets.UTF_8))(0)
+      (t, j, pos, if ((first & 0x10) == 0) 1L else -1L)
+    }
+    planes.toDF("t", "j", "pos", "w")
   }
 
   /** (id, t, bucket) for each row of `v` (id + quantized vector): bit j of
@@ -192,9 +188,8 @@ object Similarity {
       nTables: Int = 16, signBits: Int = 0,
       scale: Int = 1000, seed: Long = 42L): DataFrame = {
     graft.expressions.GraftFunctions.register(corpus.sparkSession)
-    val c = pin(Par.spread(corpus).select(col(idCol).as("nbr_id"), quantize(col(vecCol), scale).as("nv"))
+    val (c, n) = Pinned.pinRows(Par.spread(corpus).select(col(idCol).as("nbr_id"), quantize(col(vecCol), scale).as("nv"))
       .withColumn("nn", nqdot(col("nv"), col("nv"))))
-    val n = c.count() // reads the pinned cache
     if (n == 0L) { // empty corpus: typed empty result, no dim probe to throw
       val out = c.select(col("nbr_id").as("query_id"), col("nbr_id"),
         lit(0.0).as("cosine"), lit(0L).as("rank")).limit(0).localCheckpoint(true)
@@ -316,9 +311,8 @@ object Similarity {
       scale: Int = 1000): DataFrame = {
     val spark = corpus.sparkSession
     graft.expressions.GraftFunctions.register(spark)
-    val c = pin(Par.spread(corpus).select(col(idCol).as("nbr_id"), quantize(col(vecCol), scale).as("nv"))
+    val (c, n) = Pinned.pinRows(Par.spread(corpus).select(col(idCol).as("nbr_id"), quantize(col(vecCol), scale).as("nv"))
       .withColumn("vv", nqdot(col("nv"), col("nv"))))
-    val n = c.count() // reads the pinned cache
     if (n == 0L) { // empty corpus: typed empty result, no dim probe to throw
       val out = c.select(col("nbr_id").as("query_id"), col("nbr_id"),
         lit(0.0).as("cosine"), lit(0L).as("rank")).limit(0).localCheckpoint(true)
@@ -395,10 +389,9 @@ object Similarity {
       nCells: Int = 0, lloydIters: Int = 4, scale: Int = 1000): DataFrame = {
     val spark = corpus.sparkSession
     graft.expressions.GraftFunctions.register(spark)
-    val c = pin(Par.spread(corpus)
+    val (c, n) = Pinned.pinRows(Par.spread(corpus)
       .select(col(idCol).as("nbr_id"), quantize(col(vecCol), scale).as("nv"))
       .withColumn("vv", nqdot(col("nv"), col("nv"))))
-    val n = c.count() // reads the pinned cache
     if (n == 0L) {
       val out = c.select(col("nbr_id").as(idCol), lit(0L).as("cell"),
         lit(0L).as("proto_micro"), lit(0L).as("cell_rank"),
@@ -582,9 +575,8 @@ object Similarity {
     val spark = corpus.sparkSession
     graft.expressions.GraftFunctions.register(spark)
     require(m > 0 && kCents > 1, s"need m > 0 subspaces and kCents > 1, got m=$m kCents=$kCents")
-    val c = pin(Par.spread(corpus).select(col(idCol).as("nbr_id"), quantize(col(vecCol), scale).as("nv"))
+    val (c, n) = Pinned.pinRows(Par.spread(corpus).select(col(idCol).as("nbr_id"), quantize(col(vecCol), scale).as("nv"))
       .withColumn("vv", nqdot(col("nv"), col("nv"))))
-    val n = c.count() // reads the pinned cache
     if (n == 0L) { // empty corpus: typed empty index, no dim probe to throw
       val books = localized(c.select(lit(0).as("sub"), lit(0L).as("cent_id"),
         col("nv").as("cv"), lit(0L).as("cc")).limit(0))
@@ -780,10 +772,18 @@ object Similarity {
     * VECTOR the way inverted-file PQ stores lay out their lists (Jégou et
     * al. 2011; FAISS): `store` = (nbr_id, cell, codes: array<int>, nv, vv)
     * — the vector's coarse cell, its m PQ codes, and its raw quantized
-    * vector + exact norm (the rerank side) — pinned once, next to the
-    * localized coarse centroids (`cents`) and per-subspace codebooks
-    * (`books`). A search reads each candidate's codes, norm and vector
-    * from its one row, so the only join is the probed-cell lookup. With
+    * vector + exact norm (the rerank side) — next to the localized coarse
+    * centroids (`cents`) and per-subspace codebooks (`books`). A search
+    * reads each candidate's codes, norm and vector from its one row, so
+    * the only join is the probed-cell lookup.
+    *
+    * The store is append-only and log-structured (the LSM-tree layout,
+    * O'Neil et al. 1996): `store` is the union of immutable, pinned,
+    * reference-counted [[Segment]]s. [[ivfPqIndex]] and [[loadIvfPqIndex]]
+    * pin one segment; [[extendIvfPqIndex]] pins one more holding only the
+    * batch's rows and shares the older ones, merging the newest two while
+    * the newest is at least as large as its older neighbour
+    * ([[Segment.append]]'s binary-counter rule — O(log N) segments). With
     * `residual = true` the books/codes live in RESIDUAL space (v − cell
     * centroid, Jégou et al. 2011 §IV-A); searches and ingest assignments
     * must — and do — apply the same transform.
@@ -794,17 +794,22 @@ object Similarity {
     * ([[saveIvfPqIndex]]) and the SQL oracles speak them. Train once with
     * [[ivfPqIndex]], persist with [[saveIvfPqIndex]], search with
     * [[ivfPqTopKIndexed]], ingest with
-    * [[assignToIvfPqIndex]]/[[extendIvfPqIndex]]. `release()` when done. */
+    * [[assignToIvfPqIndex]]/[[extendIvfPqIndex]]. `release()` when done:
+    * it drops this index's reference to each segment, so an index and the
+    * one extended from it may be released in either order. */
   final case class IvfPqIndex private[operators] (
-      store: DataFrame, cents: DataFrame, books: DataFrame,
+      segments: Vector[Segment], cents: DataFrame, books: DataFrame,
       m: Int, dsub: Int, dim: Int, kCents: Int, nCells: Int,
       residual: Boolean, scale: Int) {
+    private val released = new java.util.concurrent.atomic.AtomicBoolean(false)
+    def store: DataFrame = Segment.union(segments)
     def cells: DataFrame = store.select(col("nbr_id"), col("cell"))
     def codes: DataFrame = store
       .select(col("nbr_id"), posexplode(col("codes")).as(Seq("sub", "code")))
       .select(col("nbr_id"), col("sub"), col("code").cast("long"))
     def vecs: DataFrame = store.select(col("nbr_id"), col("nv"), col("vv"))
-    def release(): Unit = store.unpersist(false)
+    def release(): Unit =
+      if (released.compareAndSet(false, true)) segments.foreach(_.release())
   }
 
   /** The residual frame `(id, rv)` of an `(id, nv, cell)` vector frame:
@@ -864,18 +869,17 @@ object Similarity {
     val spark = corpus.sparkSession
     graft.expressions.GraftFunctions.register(spark)
     require(m > 0 && kCents > 1, s"need m > 0 subspaces and kCents > 1, got m=$m kCents=$kCents")
-    val c = pin(Par.spread(corpus).select(col(idCol).as("nbr_id"), quantize(col(vecCol), scale).as("nv"))
+    val (c, n) = Pinned.pinRows(Par.spread(corpus).select(col(idCol).as("nbr_id"), quantize(col(vecCol), scale).as("nv"))
       .withColumn("vv", nqdot(col("nv"), col("nv"))))
-    val n = c.count() // reads the pinned cache
     if (n == 0L) { // empty corpus: typed empty index, no dim probe to throw
       val cents = localized(c.select(lit(0L).as("cent_id"), col("nv").as("cv"),
         lit(0L).as("cc")).limit(0))
       val books = localized(c.select(lit(0).as("sub"), lit(0L).as("cent_id"),
         col("nv").as("cv"), lit(0L).as("cc")).limit(0))
-      val store = pin(c.select(col("nbr_id"), lit(0L).as("cell"),
+      val store = Segment.pin(c.select(col("nbr_id"), lit(0L).as("cell"),
         array().cast("array<int>").as("codes"), col("nv"), col("vv")).limit(0))
       c.unpersist(false)
-      return IvfPqIndex(store, cents, books,
+      return IvfPqIndex(Vector(store), cents, books,
         m, dsub = 0, dim = 0, kCents, nCells = 0, residual, scale)
     }
     val dim = c.select(size(col("nv")).as("d")).head().getInt(0)
@@ -890,9 +894,9 @@ object Similarity {
     val books = trainPqBooks(c, sv, kCents, pqLloydIters)
     sv.unpersist(false)
     // the stored representation: one row per vector, pinned once
-    val store = pin(storeRows(c, "nbr_id", cents, books, residual))
+    val store = Segment.pin(storeRows(c, "nbr_id", cents, books, residual))
     c.unpersist(false)
-    IvfPqIndex(store, cents, books, m, dsub, dim, kCents, cells, residual, scale)
+    IvfPqIndex(Vector(store), cents, books, m, dsub, dim, kCents, cells, residual, scale)
   }
 
   /** [[ivfPqTopK]]'s search half over a prebuilt [[IvfPqIndex]]: probe
@@ -1014,21 +1018,25 @@ object Similarity {
 
   /** Fold an ingest batch INTO the index: the batch's store rows (cell +
     * codes against the stored centroids/codebooks, as
-    * [[assignToIvfPqIndex]] assigns them) appended to the store;
-    * cents/books — the trained state — are untouched, exactly like the
-    * standing LSH indexes never re-bucket their corpus. Returns a NEW
-    * index whose store is pinned once, so the caller may `release()` the
-    * old one afterwards. Batch ids must be disjoint from corpus ids (the
-    * usual ingest contract). */
+    * [[assignToIvfPqIndex]] assigns them) are pinned as ONE new segment
+    * and appended to the store; cents/books — the trained state — are
+    * untouched, exactly like the standing LSH indexes never re-bucket
+    * their corpus. Nothing else is copied unless the append triggers a
+    * compaction ([[Segment.append]]: the newest two segments merge while
+    * the newest is at least as large as its older neighbour), so an
+    * ingest costs O(batch) amortized, not O(store). Returns a NEW index
+    * sharing the old segments; the caller may `release()` the old one
+    * afterwards, before or after the new one. Batch ids must be disjoint
+    * from corpus ids (the usual ingest contract). */
   def extendIvfPqIndex(
       ix: IvfPqIndex, batch: DataFrame, idCol: String, vecCol: String): IvfPqIndex = {
     graft.expressions.GraftFunctions.register(batch.sparkSession)
     require(ix.dim > 0, "cannot extend an empty IvfPqIndex (dim = 0)")
     val v = batch.select(col(idCol).as("nbr_id"), quantize(col(vecCol), ix.scale).as("nv"))
       .withColumn("vv", nqdot(col("nv"), col("nv")))
-    val store = pin(ix.store.unionByName(
-      storeRows(v, "nbr_id", ix.cents, ix.books, ix.residual)))
-    ix.copy(store = store)
+    val batchSeg = Segment.pin(storeRows(v, "nbr_id", ix.cents, ix.books, ix.residual))
+    ix.copy(segments = Segment.append(ix.segments, batchSeg)(
+      (older, newest) => Segment.pin(Segment.union(Seq(older, newest)))))
   }
 
   /** Persist an [[IvfPqIndex]] as six parquet tables — the store's
@@ -1049,8 +1057,8 @@ object Similarity {
 
   /** Load a stored [[IvfPqIndex]]: the three per-vector tables are packed
     * back into the one-row-per-vector store (codes ordered by subspace)
-    * and pinned once; cents/books are re-localized — the [[ivfPqIndex]]
-    * contract. All trained state is stored bytes, so a loaded index
+    * and pinned as one segment; cents/books are re-localized — the
+    * [[ivfPqIndex]] contract. All trained state is stored bytes, so a loaded index
     * answers queries bit-identically to the one saved (q120's gate).
     * Fails fast on a partial save. */
   def loadIvfPqIndex(spark: SparkSession, path: String): IvfPqIndex = {
@@ -1060,11 +1068,11 @@ object Similarity {
     val packed = spark.read.parquet(s"$path/codes").groupBy(col("nbr_id"))
       .agg(transform(array_sort(collect_list(struct(col("sub"), col("code")))),
         e => e.getField("code").cast("int")).as("codes"))
-    val store = pin(spark.read.parquet(s"$path/vecs")
+    val store = Segment.pin(spark.read.parquet(s"$path/vecs")
       .join(spark.read.parquet(s"$path/cells"), Seq("nbr_id"))
       .join(packed, Seq("nbr_id"))
       .select(col("nbr_id"), col("cell"), col("codes"), col("nv"), col("vv")))
-    IvfPqIndex(store,
+    IvfPqIndex(Vector(store),
       localized(spark.read.parquet(s"$path/cents")),
       localized(spark.read.parquet(s"$path/books")),
       p.getAs[Int]("m"), p.getAs[Int]("dsub"), p.getAs[Int]("dim"),

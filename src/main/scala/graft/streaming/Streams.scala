@@ -584,11 +584,11 @@ object Streams {
   /** Lexical-store ingest: a `foreachBatch` writer shipping each
     * micro-batch's (id, token, tf) postings rows
     * ([[graft.operators.Search.bm25Postings]]) to `sink` — the rows a
-    * standing [[graft.operators.Search.Bm25Index]]'s postings table
-    * appends, with lengths/dfs/corpus scalars re-derived downstream by
-    * exact aggregation (the batch fold is
-    * [[graft.operators.Search.extendBm25Index]]). Stateless across
-    * batches. */
+    * standing [[graft.operators.Search.Bm25Index]]'s `postings` view
+    * gains when the same batch is folded in. The in-memory fold is
+    * [[graft.operators.Search.extendBm25Index]], which appends the batch
+    * as one new segment and leaves the indexed segments untouched.
+    * Stateless across batches. */
   def bm25PostingsStreamBulk(stream: DataFrame, idCol: String, textCol: String)(
       sink: DataFrame => Unit): org.apache.spark.sql.streaming.DataStreamWriter[Row] =
     stream.writeStream.foreachBatch { (batch: Dataset[Row], _: Long) =>

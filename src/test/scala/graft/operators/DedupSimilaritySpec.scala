@@ -1254,6 +1254,111 @@ class DedupSimilaritySpec extends SparkTestBase {
     }
   }
 
+  private def vecRows(ids: Seq[Long]) = ids.map { i =>
+    (i, Array.tabulate(6)(j => (((i * 31 + j * 17) % 23) - 11).toFloat / 10f))
+  }.toDF("vec_id", "embedding")
+
+  test("IvfPqIndex extend chain: every extend ≡ one fold of the union; segments stay O(log)") {
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
+    val helper = new AdaptiveSparkPlanHelper {}
+    val qs = vecRows(Seq(0L, 5L, 17L, 30L, 99L))
+    for (residual <- Seq(false, true)) {
+      val trained = Similarity.ivfPqIndex(vecRows(0L until 16L), "vec_id", "embedding",
+        nCells = 4, m = 3, kCents = 4, residual = residual)
+      var ix = trained
+      for (step <- 1 to 11) {
+        val next = Similarity.extendIvfPqIndex(ix,
+          vecRows((12L + 4 * step) until (16L + 4 * step)), "vec_id", "embedding")
+        if (ix ne trained) ix.release()
+        ix = next
+        // the reference: the same trained state, every batch folded at once
+        val ref = Similarity.extendIvfPqIndex(trained,
+          vecRows(16L until (16L + 4 * step)), "vec_id", "embedding")
+        val ctx = s"residual=$residual step $step"
+        assert(rowSet(ix.store) == rowSet(ref.store), ctx)
+        for (rerank <- Seq(0, 10)) assert(
+          rowSet(Similarity.ivfPqTopKIndexed(ix, qs, "vec_id", "embedding", 5, 2, rerank)) ==
+            rowSet(Similarity.ivfPqTopKIndexed(ref, qs, "vec_id", "embedding", 5, 2, rerank)), ctx)
+        ref.release()
+        val rows = ix.segments.map(_.rows)
+        assert(rows.sum == 16L + 4 * step)
+        assert(rows.zip(rows.tail).forall { case (a, b) => a > b }, s"$ctx: $rows")
+        val bound = (math.log(rows.sum / 4.0) / math.log(2)).floor.toInt + 2
+        assert(ix.segments.size <= bound, s"$ctx: $rows > $bound segments")
+      }
+      // 11 batches on a base of 4: 15 batch sizes = binary 8+4+2+1
+      assert(ix.segments.map(_.rows) == Vector(32L, 16L, 8L, 4L))
+      // the search over four segments still takes one shuffle exchange
+      val plan = Similarity.ivfPqSearch(ix, qs, "vec_id", "embedding", 4, 2, 9, None)
+      assert(plan.collect().nonEmpty)
+      val exec = plan.queryExecution.executedPlan
+      assert(helper.collectWithSubqueries(exec) { case e: ShuffleExchangeLike => e }.size == 1,
+        s"residual=$residual:\n$exec")
+      ix.release(); trained.release()
+    }
+  }
+
+  test("IvfPqIndex release: an index and its extensions free every pin in either order") {
+    def pinned = spark.sparkContext.getPersistentRDDs.keySet.toSet
+    val qs = vecRows(Seq(3L))
+    for (newestFirst <- Seq(false, true)) {
+      val start = pinned
+      val base = Similarity.ivfPqIndex(vecRows(0L until 8L), "vec_id", "embedding",
+        nCells = 2, m = 3, kCents = 4)
+      val ixs = (1 to 4).scanLeft(base) { (ix, step) =>
+        Similarity.extendIvfPqIndex(ix, vecRows((4L + 4 * step) until (8L + 4 * step)),
+          "vec_id", "embedding")
+      }
+      // an empty batch adds no segment
+      val same = Similarity.extendIvfPqIndex(ixs.last, vecRows(Nil), "vec_id", "embedding")
+      assert(same.segments == ixs.last.segments)
+      val order = (if (newestFirst) ixs.reverse else ixs) :+ same
+      order.init.foreach(_.release())
+      val last = order.last
+      val before = pinned
+      assert(Similarity.ivfPqTopKIndexed(last, qs, "vec_id", "embedding", 3).count() > 0)
+      val checkpoint = pinned -- before // the result's own blocks
+      last.release()
+      last.release() // idempotent
+      assert((pinned -- start -- checkpoint).isEmpty, s"newestFirst=$newestFirst")
+    }
+  }
+
+  test("job budgets: a non-compacting IVF-PQ extend ≤ 2 jobs; hyperplanes 0") {
+    val ix = Similarity.ivfPqIndex(vecRows(0L until 40L), "vec_id", "embedding",
+      nCells = 4, m = 3, kCents = 4)
+    val batch = vecRows(40L until 44L).localCheckpoint(true)
+    var ext: Similarity.IvfPqIndex = null
+    val extendJobs = jobsRun { ext = Similarity.extendIvfPqIndex(ix, batch, "vec_id", "embedding") }
+    assert(ext.segments.size == 2)
+    assert(extendJobs <= 2, s"$extendJobs jobs")
+    ext.release(); ix.release()
+    val planeJobs = jobsRun {
+      Similarity.hyperplanes(spark, nTables = 16, bits = 8, dim = 64, seed = 42L).collect()
+    }
+    assert(planeJobs == 0, s"$planeJobs jobs")
+  }
+
+  test("hyperplanes: driver-side planes ≡ the SQL md5 spelling the oracles use") {
+    for (seed <- Seq(42L, 7L, -3L)) {
+      val t = spark.range(3).select(col("id").as("t"))
+      val j = spark.range(5).select(col("id").as("j"))
+      val p = spark.range(11).select(col("id").as("pos"))
+      val viaSql = t.crossJoin(j).crossJoin(p)
+        .select(col("t"), col("j"), col("pos"),
+          when(pmod(conv(substring(md5(
+              concat_ws("|", lit(seed), col("t"), col("j"), col("pos"))), 1, 1), 16, 10)
+              .cast("long"), lit(2)) === 0, lit(1L))
+            .otherwise(lit(-1L)).as("w"))
+      val planes = Similarity.hyperplanes(spark, nTables = 3, bits = 5, dim = 11, seed = seed)
+      assert(planes.columns.toSeq == Seq("t", "j", "pos", "w"))
+      val got = rowSet(planes)
+      assert(got.size == 165 && got == rowSet(viaSql), s"seed $seed")
+      assert(got.map(_(3)) == Set(1L, -1L))
+    }
+  }
+
   private def exceptionChain(e: Throwable): Seq[Throwable] =
     Iterator.iterate(e)(_.getCause).takeWhile(_ != null).take(10).toSeq
 }

@@ -199,6 +199,82 @@ class LmSearchGraphSpec extends SparkTestBase {
     assert(e.getMessage.contains("termdf"))
   }
 
+  // docs with exactly 4 distinct tokens each (5 segment rows: 4 postings
+  // + the document row), so every 3-doc batch pins the same row count
+  private val vocab = Seq("spark", "join", "window", "rows", "engine", "fast",
+    "data", "plan", "scan", "sort", "hash", "cache")
+  private def segDocs(ids: Seq[Long]) = ids.map { i =>
+    val words = (0 until 4).map(j => vocab(((i + 3 * j) % 12).toInt))
+    (i, (Seq.fill((i % 3).toInt)(words.head) ++ words).mkString(" "))
+  }.toDF("doc_id", "text")
+
+  test("Bm25Index extend chain: every extend ≡ a rebuild on the union; segments stay O(log)") {
+    val terms = Seq("spark", "window", "cache")
+    val qs = Seq(("a", "spark"), ("a", "sort"), ("b", "hash"), ("c", "zzz")).toDF("qid", "term")
+    val base = segDocs(0L until 12L)
+    var ix = Search.bm25Index(base, "doc_id", "text")
+    val batchRows = 15L
+    for (step <- 1 to 11) {
+      val batch = segDocs((9L + 3 * step) until (12L + 3 * step))
+      val next = Search.extendBm25Index(ix, batch, "text")
+      ix.release()
+      ix = next
+      val union = segDocs(0L until (12L + 3 * step))
+      val ref = Search.bm25Index(union, "doc_id", "text")
+      assert((ix.nDocs, ix.totalTokens) == ((ref.nDocs, ref.totalTokens)), s"step $step")
+      assert(rowSet(Search.bm25TopKIndexed(ix, terms, 7)) ==
+        rowSet(Search.bm25TopKIndexed(ref, terms, 7)), s"step $step")
+      assert(rowSet(Search.bm25PerQueryIndexed(ix, qs, "qid", "term", 5)) ==
+        rowSet(Search.bm25PerQueryIndexed(ref, qs, "qid", "term", 5)), s"step $step")
+      assert(Seq(ix.postings, ix.docLens, ix.termDf).map(rowSet) ==
+        Seq(ref.postings, ref.docLens, ref.termDf).map(rowSet), s"step $step")
+      ref.release()
+      // binary-counter compaction: sizes strictly fall from oldest to newest
+      val rows = ix.segments.map(_.rows)
+      val total = rows.sum
+      assert(total == 5L * (12 + 3 * step))
+      assert(rows.zip(rows.tail).forall { case (a, b) => a > b }, s"step $step: $rows")
+      val bound = (math.log(total.toDouble / batchRows) / math.log(2)).floor.toInt + 2
+      assert(ix.segments.size <= bound, s"step $step: $rows > $bound segments")
+    }
+    // 11 batches on a base of 4: 15 batch sizes = binary 8+4+2+1
+    assert(ix.segments.map(_.rows) == Vector(120L, 60L, 30L, 15L))
+    // and the from-scratch path agrees with the extended index
+    val all = segDocs(0L until 45L)
+    assert(rowSet(Search.bm25TopKIndexed(ix, terms, 7)) ==
+      rowSet(Search.bm25TopK(all, "doc_id", "text", terms, 7)))
+    ix.release()
+  }
+
+  test("Bm25Index release: an index and its extensions free every pin in either order") {
+    def pinned = spark.sparkContext.getPersistentRDDs.keySet.toSet
+    for (newestFirst <- Seq(false, true)) {
+      val start = pinned
+      val ixs = (1 to 4).scanLeft(Search.bm25Index(segDocs(0L until 6L), "doc_id", "text")) {
+        (ix, step) => Search.extendBm25Index(ix, segDocs((3L + 3 * step) until (6L + 3 * step)), "text")
+      }
+      // the generation released last still answers after the others
+      val order = if (newestFirst) ixs.reverse else ixs
+      order.init.foreach(_.release())
+      val last = order.last
+      val before = pinned
+      assert(Search.bm25TopKIndexed(last, Seq("spark"), 3).count() > 0)
+      val checkpoint = pinned -- before // the result's own blocks
+      last.release()
+      last.release() // idempotent
+      assert((pinned -- start -- checkpoint).isEmpty, s"newestFirst=$newestFirst")
+    }
+  }
+
+  test("Bm25Index job budget: a non-compacting extend runs at most 5 Spark jobs") {
+    val ix = Search.bm25Index(segDocs(0L until 60L), "doc_id", "text")
+    var ext: Search.Bm25Index = null
+    val jobs = jobsRun { ext = Search.extendBm25Index(ix, segDocs(60L until 63L), "text") }
+    assert(ext.segments.size == 2)
+    assert(jobs <= 5, s"$jobs jobs")
+    ext.release(); ix.release()
+  }
+
   test("fuseRrf: exact nano sums, rank-based fusion, docs in both lists rise") {
     // list 1 ranks docs 1,2,3; list 2 ranks docs 3,4 — doc 3 is in both
     val l1 = Seq(("q", 1L, 1L), ("q", 2L, 2L), ("q", 3L, 3L))
