@@ -412,6 +412,8 @@ object Dedup {
   def minhashIndex(
       df: DataFrame, idCol: String, textCol: String,
       n: Int = 3, bands: Int = 4, rowsPerBand: Int = 3): MinhashIndex = {
+    require(n > 0 && bands > 0 && rowsPerBand > 0,
+      s"need n, bands and rowsPerBand > 0, got n=$n bands=$bands rowsPerBand=$rowsPerBand")
     val bandKeys = (0 until bands).map(bi =>
       md5(concat_ws("|", slice(col("mh"), bi * rowsPerBand + 1, rowsPerBand).cast("array<string>"))))
     MinhashIndex(pin(minhashed(df, idCol, textCol, n, bands * rowsPerBand)
@@ -441,34 +443,10 @@ object Dedup {
     * `banded`) — the literal standing-corpus layout the index scaladoc
     * describes: build the signatures once, store them, and band every
     * later delta against the stored table instead of re-shingling the
-    * corpus. Pair with [[loadMinhashIndex]]. */
-  def saveMinhashIndex(ix: MinhashIndex, path: String): Unit = {
-    ix.shingles.write.mode("overwrite").parquet(s"$path/shingles")
-    // banded is written LAST and doubles as the commit marker the loader
-    // checks first (ADVICE r7): a save interrupted mid-way leaves no banded
-    // dir and the load names the problem instead of failing downstream
-    ix.bandedKeys.write.mode("overwrite").parquet(s"$path/banded")
-  }
-
-  /** True iff every named component dir of a stored index exists — the
-    * loaders' fail-fast gate (ADVICE r7): a partially-written index (save
-    * interrupted between component writes) produces a clear "incomplete
-    * index" error naming the missing part, not an AnalysisException deep in
-    * some later join. Shared with [[graft.operators.Similarity]]'s PQ-index
-    * loaders. */
-  private[operators] def requireIndexParts(
-      spark: org.apache.spark.sql.SparkSession, path: String,
-      parts: Seq[String], kind: String): Unit = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    val missing = parts.filterNot { p =>
-      val hp = new org.apache.hadoop.fs.Path(s"$path/$p")
-      hp.getFileSystem(conf).exists(hp)
-    }
-    require(missing.isEmpty,
-      s"$kind at $path is incomplete - missing component(s): " +
-        s"${missing.mkString(", ")} (expected ${parts.mkString(", ")}). " +
-        "Was the save interrupted? Re-run the save.")
-  }
+    * corpus. `banded` is the commit marker ([[IndexFiles.save]]). Pair
+    * with [[loadMinhashIndex]]. */
+  def saveMinhashIndex(ix: MinhashIndex, path: String): Unit =
+    IndexFiles.save(path, Seq("shingles" -> ix.shingles, "banded" -> ix.bandedKeys))
 
   /** Load a stored [[MinhashIndex]] ([[minhashIndex]] contract: the two
     * tables are re-packed by id into the one pinned frame, band keys back
@@ -477,12 +455,12 @@ object Dedup {
     * with a clear message on a partial save. */
   def loadMinhashIndex(spark: org.apache.spark.sql.SparkSession,
       path: String): MinhashIndex = {
-    requireIndexParts(spark, path, Seq("banded", "shingles"), "MinhashIndex")
-    val keys = spark.read.parquet(s"$path/banded")
+    val part = IndexFiles.open(spark, path, "MinhashIndex", Seq("shingles", "banded"))
+    val keys = part("banded")
       .groupBy(col("id"))
       .agg(sort_array(collect_list(struct(col("band"), col("band_key")))).as("bk"))
       .select(col("id"), col("bk.band_key").as("band_keys"))
-    MinhashIndex(pin(spark.read.parquet(s"$path/shingles").join(keys, "id")
+    MinhashIndex(pin(part("shingles").join(keys, "id")
       .select(col("id"), col("sh"), col("nsh"), col("band_keys"))))
   }
 
@@ -499,17 +477,14 @@ object Dedup {
     * with [[connectedComponentsIncremental]] and re-save. Pair with
     * [[loadComponentLabels]]. */
   def saveComponentLabels(labels: DataFrame, path: String): Unit =
-    labels.select(col("id"), col("component"))
-      .write.mode("overwrite").parquet(s"$path/labels")
+    IndexFiles.save(path, Seq("labels" -> labels.select(col("id"), col("component"))))
 
   /** Load a stored component-label table (pinned — split/audit/fold
     * consumers typically read it several times). Fails fast with a clear
     * message when the store dir is missing. */
   def loadComponentLabels(spark: org.apache.spark.sql.SparkSession,
-      path: String): DataFrame = {
-    requireIndexParts(spark, path, Seq("labels"), "ComponentLabels")
-    pin(spark.read.parquet(s"$path/labels"))
-  }
+      path: String): DataFrame =
+    pin(IndexFiles.open(spark, path, "ComponentLabels", Seq("labels"))("labels"))
 
   /** [[minhashLshPairs]] over a prebuilt [[MinhashIndex]] — the index is
     * NOT released (the caller owns it and may reuse it, q109-style). */
@@ -960,18 +935,14 @@ object Dedup {
     * quantize + bucket the corpus once, store, and every later ingest
     * batch ([[embeddingNearDupPairsBetween]], the streaming bulk gate)
     * joins against the stored tables. `params` carries the hyperplane
-    * parameters a delta must share to land in the same bucket space. */
+    * parameters a delta must share to land in the same bucket space, and
+    * is the commit marker ([[IndexFiles.save]]). */
   def saveEmbeddingIndex(ix: EmbeddingIndex, path: String): Unit = {
-    ix.vecs.write.mode("overwrite").parquet(s"$path/vecs")
-    ix.buckets.write.mode("overwrite").parquet(s"$path/buckets")
     val spark = ix.vecs.sparkSession
     import spark.implicits._
-    // params is written LAST as the commit marker (ADVICE r7): its presence
-    // implies every data component landed, so the loader's fail-fast check
-    // catches any interrupted save
-    Seq((ix.nTables, ix.bits, ix.dim, ix.scale, ix.seed))
-      .toDF("n_tables", "bits", "dim", "scale", "seed")
-      .write.mode("overwrite").parquet(s"$path/params")
+    IndexFiles.save(path, Seq("vecs" -> ix.vecs, "buckets" -> ix.buckets,
+      "params" -> Seq((ix.nTables, ix.bits, ix.dim, ix.scale, ix.seed))
+        .toDF("n_tables", "bits", "dim", "scale", "seed")))
   }
 
   /** Load a stored [[EmbeddingIndex]] (frames pinned, [[embeddingIndex]]
@@ -981,11 +952,11 @@ object Dedup {
     * with a clear message on a partial save. */
   def loadEmbeddingIndex(spark: org.apache.spark.sql.SparkSession,
       path: String): EmbeddingIndex = {
-    requireIndexParts(spark, path, Seq("params", "vecs", "buckets"), "EmbeddingIndex")
-    val p = spark.read.parquet(s"$path/params").head()
+    val part = IndexFiles.open(spark, path, "EmbeddingIndex", Seq("vecs", "buckets", "params"))
+    val p = part("params").head()
     EmbeddingIndex(
-      pin(spark.read.parquet(s"$path/vecs")),
-      pin(spark.read.parquet(s"$path/buckets")),
+      pin(part("vecs")),
+      pin(part("buckets")),
       p.getAs[Int]("n_tables"), p.getAs[Int]("bits"), p.getAs[Int]("dim"),
       p.getAs[Int]("scale"), p.getAs[Long]("seed"))
   }

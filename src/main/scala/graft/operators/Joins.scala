@@ -429,17 +429,15 @@ object Joins {
       pin(ix.signatures.unionByName(add)))
   }
 
-  /** Persist a [[FuzzyIndex]]: the signature table, then `params` LAST as
-    * the commit marker (the shared [[Dedup.saveEmbeddingIndex]] contract —
-    * a save interrupted between the writes leaves no `params`, and
-    * [[loadFuzzyIndex]] fails fast instead of probing a torn table). */
+  /** Persist a [[FuzzyIndex]]: the signature table, then `params` as the
+    * commit marker ([[IndexFiles.save]] — a save interrupted between the
+    * writes leaves no `params`, and [[loadFuzzyIndex]] fails fast instead
+    * of probing a torn table). */
   def saveFuzzyIndex(ix: FuzzyIndex, path: String): Unit = {
-    ix.signatures.write.mode("overwrite").parquet(s"$path/signatures")
     val spark = ix.signatures.sparkSession
     import spark.implicits._
-    Seq((ix.idCol, ix.strCol, ix.maxDist))
-      .toDF("id_col", "str_col", "max_dist")
-      .write.mode("overwrite").parquet(s"$path/params")
+    IndexFiles.save(path, Seq("signatures" -> ix.signatures,
+      "params" -> Seq((ix.idCol, ix.strCol, ix.maxDist)).toDF("id_col", "str_col", "max_dist")))
   }
 
   /** Load a stored [[FuzzyIndex]] (signatures pinned). Signatures are
@@ -447,10 +445,10 @@ object Joins {
     * saved. Fails fast with a clear message on a partial save. */
   def loadFuzzyIndex(spark: org.apache.spark.sql.SparkSession,
       path: String): FuzzyIndex = {
-    Dedup.requireIndexParts(spark, path, Seq("params", "signatures"), "FuzzyIndex")
-    val p = spark.read.parquet(s"$path/params").head()
+    val part = IndexFiles.open(spark, path, "FuzzyIndex", Seq("signatures", "params"))
+    val p = part("params").head()
     FuzzyIndex(p.getAs[String]("id_col"), p.getAs[String]("str_col"),
-      p.getAs[Int]("max_dist"), pin(spark.read.parquet(s"$path/signatures")))
+      p.getAs[Int]("max_dist"), pin(part("signatures")))
   }
 
   /** Sorted-neighborhood blocking (Hernández & Stolfo 1995) — the OTHER

@@ -299,17 +299,14 @@ object Search {
 
   /** Persist a [[Bm25Index]] as four parquet tables — its `postings`,
     * `docLens` and `termDf` views; `params` (which also carries the corpus
-    * scalars) is written LAST as the commit marker — the shared
-    * [[Dedup.saveEmbeddingIndex]] contract. */
+    * scalars) is the commit marker ([[IndexFiles.save]]). */
   def saveBm25Index(ix: Bm25Index, path: String): Unit = {
-    ix.postings.write.mode("overwrite").parquet(s"$path/postings")
-    ix.docLens.write.mode("overwrite").parquet(s"$path/doclens")
-    ix.termDf.write.mode("overwrite").parquet(s"$path/termdf")
     val spark = ix.rows.sparkSession
     import spark.implicits._
-    Seq((ix.idCol, ix.nDocs, ix.totalTokens))
-      .toDF("id_col", "n_docs", "total_tokens")
-      .write.mode("overwrite").parquet(s"$path/params")
+    IndexFiles.save(path, Seq("postings" -> ix.postings, "doclens" -> ix.docLens,
+      "termdf" -> ix.termDf,
+      "params" -> Seq((ix.idCol, ix.nDocs, ix.totalTokens))
+        .toDF("id_col", "n_docs", "total_tokens")))
   }
 
   /** Load a stored [[Bm25Index]] as one segment: postings ⋈ doclens packs
@@ -318,12 +315,12 @@ object Search {
     * index scores bit-identically to the one saved. Fails fast with a
     * clear message on a partial save. */
   def loadBm25Index(spark: SparkSession, path: String): Bm25Index = {
-    Dedup.requireIndexParts(spark, path,
-      Seq("params", "postings", "doclens", "termdf"), "Bm25Index")
-    val p = spark.read.parquet(s"$path/params").head()
+    val part = IndexFiles.open(spark, path, "Bm25Index",
+      Seq("postings", "doclens", "termdf", "params"))
+    val p = part("params").head()
     val idCol = p.getAs[String]("id_col")
-    val lens = spark.read.parquet(s"$path/doclens")
-    val segRows = spark.read.parquet(s"$path/postings").join(lens, Seq(idCol))
+    val lens = part("doclens")
+    val segRows = part("postings").join(lens, Seq(idCol))
       .select(col(idCol), col("token"), col("tf"), col("dl"))
       .unionByName(lens.select(col(idCol), lit(null).cast(StringType).as("token"),
         col("dl").as("tf"), col("dl")))

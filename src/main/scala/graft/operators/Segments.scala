@@ -2,9 +2,11 @@ package graft.operators
 
 import java.util.concurrent.atomic.AtomicInteger
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 import org.apache.spark.storage.StorageLevel
 
 /** The one pin discipline every operator shares. */
@@ -99,4 +101,48 @@ private[operators] object Segment {
   def union(segs: Seq[Segment]): DataFrame =
     segs.map(_.frame).reduce(_ unionByName _)
       .coalesce(math.max(1, segs.map(_.partitions).max)) // an empty segment has none
+}
+
+/** The one file protocol of every stored index: a directory of named
+  * parquet parts whose LAST part is the commit marker. */
+private[operators] object IndexFiles {
+
+  /** Write `parts` (name → frame) under `path`, in order. The last part is
+    * the commit marker: it is deleted before any other part is written and
+    * written after all of them, so its presence implies every part of ONE
+    * save landed — a save (or re-save over an older index) interrupted at
+    * any point leaves no marker, and [[open]] rejects the directory instead
+    * of reading a torn or mixed-generation index. A save whose parts read
+    * from `path` itself is refused before anything is deleted (Spark would
+    * refuse the overwrite only after the marker is gone). */
+  def save(path: String, parts: Seq[(String, DataFrame)]): Unit = {
+    val conf = parts.last._2.sparkSession.sparkContext.hadoopConfiguration
+    val dir = new Path(path)
+    val fs = dir.getFileSystem(conf)
+    val root = fs.makeQualified(dir).toString
+    val reads = parts.flatMap(_._2.queryExecution.analyzed.collect {
+      case LogicalRelation(h: HadoopFsRelation, _, _, _, _) => h.location.rootPaths.map(_.toString)
+    }.flatten)
+    require(!reads.exists(r => r == root || r.startsWith(root + "/")),
+      s"cannot save an index over $path: it is read from there - save it elsewhere")
+    fs.delete(new Path(s"$path/${parts.last._1}"), true)
+    parts.foreach { case (name, df) => df.write.mode("overwrite").parquet(s"$path/$name") }
+  }
+
+  /** The fail-fast gate of every loader: `path` must hold every named
+    * part, else a clear "incomplete" error names the missing ones — not an
+    * AnalysisException deep in some later join. Returns the part reader. */
+  def open(spark: SparkSession, path: String, kind: String,
+      parts: Seq[String]): String => DataFrame = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    val missing = parts.filterNot { p =>
+      val hp = new Path(s"$path/$p")
+      hp.getFileSystem(conf).exists(hp)
+    }
+    require(missing.isEmpty,
+      s"$kind at $path is incomplete - missing component(s): " +
+        s"${missing.mkString(", ")} (expected ${parts.mkString(", ")}). " +
+        "Was the save interrupted? Re-run the save.")
+    part => spark.read.parquet(s"$path/$part")
+  }
 }

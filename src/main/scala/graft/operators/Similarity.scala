@@ -422,8 +422,8 @@ object Similarity {
 
   /** Sub-vectors: one row per (row, subspace) via static slices — a pure
     * codegen'd projection + explode, NO shuffle (a posexplode→groupBy
-    * reassembly would cost a dim·N-row exchange for nothing). Shared by
-    * [[pqTopK]] and [[ivfPqTopK]]. */
+    * reassembly would cost a dim·N-row exchange for nothing) — the frame
+    * [[ivfPqIndex]]'s codebooks train on. */
   private def pqSubVectors(v: DataFrame, id: String, vec: String,
       m: Int, dsub: Int): DataFrame =
     v.select(col(id), posexplode(array(
@@ -450,10 +450,6 @@ object Similarity {
     s.withColumn("code",
       call_function("graft_code_argmin", col("sub"), col("sv"), col("svv"),
         booksAsLit(books)))
-
-  /** Per-subspace exact-integer argmin code assignment (see [[withCode]]). */
-  private def assignPqCodes(s: DataFrame, id: String, cents: DataFrame): DataFrame =
-    withCode(s, cents).select(col(id), col("sub"), col("code"))
 
   /** Deterministic per-subspace codebook training over a pinned corpus
     * `(nbr_id, nv, vv)` and its sub-vector table: ONE hash-ordered
@@ -495,12 +491,17 @@ object Similarity {
     * + an 8-byte norm at the defaults, ~13× compression — and queries
     * score candidates with Asymmetric Distance Computation: per-subspace
     * lookup tables of exact integer dots against each query, summed per
-    * candidate. At full deployment this composes
-    * with [[ivfTopK]]'s cell pruning (IVF-PQ: probe cells, then ADC-score
-    * only the probed cells' codes); this operator is the PQ half, scored
-    * exhaustively — the candidate-set dial stays [[ivfTopK]]'s.
+    * candidate. The search is exhaustive: it is the ONE-CELL IVF-PQ
+    * search, [[ivfPqTopK]] with `nCells = 1`, `nprobe = 1`,
+    * `ivfLloydIters = 0` and raw (non-residual) codes — exhaustive ADC is
+    * IVFADC with a single inverted list (Jégou et al. 2011), so the flat
+    * store has no index type or search path of its own. A flat standing
+    * index is `ivfPqIndex(nCells = 1, ivfLloydIters = 0)`; a flat index
+    * saved in the old four-table layout (`vecs`/`codes`/`books`/`params`,
+    * no `cents`/`cells`) no longer loads — [[loadIvfPqIndex]] names the
+    * missing parts.
     *
-    * Training mirrors [[ivfTopK]]'s deterministic integer Lloyd per
+    * Training is [[ivfPqIndex]]'s deterministic integer Lloyd per
     * SUBSPACE: the same hash-ordered seed documents provide every
     * subspace's initial centroids, assignment is an exact-integer d²
     * argmin (ties to the lowest centroid id), updates are per-dimension
@@ -513,230 +514,31 @@ object Similarity {
     *
     * `rerank > 0` enables the standard two-stage search every production
     * PQ system runs (Jégou et al. §V): ADC ranks a SHORTLIST of `rerank`
-    * candidates per query from codes alone, then only those rows'
-    * TRUE vectors are fetched and exactly re-scored — the compressed scan
-    * prunes the corpus, the exact pass touches `rerank` rows per query.
-    * This matters because ADC ordering degrades on unstructured
-    * embeddings (quantization distortion reorders a crowded cosine band —
-    * measured on this suite's deliberately-uniform test vectors at sf0.1:
-    * coarse 32-bit codes rank the exact top-5 at only 0.20 recall, while
-    * the default 96-bit codes + a shortlist-50 rerank measure **0.90**,
-    * echoed by `Bench` every round as `pq_top5`; the same uniform-data
-    * caveat [[ivfTopK]] documents — clustered real embeddings are the
-    * favorable case). With rerank the output cosine is EXACT (micro-
-    * rounded); with `rerank = 0` it is the pure-ADC approximation.
+    * candidates per query from codes alone, then only those rows' TRUE
+    * vectors are exactly re-scored. This matters because ADC ordering
+    * degrades on unstructured embeddings (quantization distortion
+    * reorders a crowded cosine band — measured on this suite's
+    * deliberately-uniform test vectors at sf0.1: coarse 32-bit codes rank
+    * the exact top-5 at only 0.20 recall, while the default 96-bit codes +
+    * a shortlist-50 rerank measure **0.90**, echoed by `Bench` as
+    * `pq_top5`; clustered real embeddings are the favorable case). With
+    * rerank the output cosine is EXACT (micro-rounded); with `rerank = 0`
+    * it is the pure-ADC approximation.
     *
-    * Scale shape: codebook training shuffles (sub, centroid)-keyed
-    * sub-vector sums (the codebook itself is m·kCents rows — broadcast);
-    * scoring joins the per-query lookup table (m·kCents rows per query,
-    * broadcast) against the code table on (sub, code) and hash-aggregates
-    * per (query, doc) — keyed equi-joins end to end, never a cross join
-    * of raw vectors; the rerank join fetches `rerank` rows per query by
-    * id. Output: (query_id, nbr_id, cosine_micro, rank), self-matches
-    * excluded, ties by neighbor id. */
+    * Scale shape: [[ivfPqTopKIndexed]]'s — the query side carries one
+    * lookup table per query (m·(kCents+1)+1 longs) into a broadcast join,
+    * so the path serves interactive batches of up to a few hundred
+    * queries; bulk batches of 10⁴+ queries need a store-shuffling path
+    * that does not exist yet. Output: (query_id, nbr_id, cosine_micro,
+    * rank), self-matches excluded, ties by neighbor id. */
   def pqTopK(
       corpus: DataFrame, queries: DataFrame,
       idCol: String, vecCol: String, k: Int,
       m: Int = 16, kCents: Int = 64, lloydIters: Int = 2,
-      rerank: Int = 0, scale: Int = 1000): DataFrame = {
-    val ix = pqIndex(corpus, idCol, vecCol, m, kCents, lloydIters, scale)
-    val out = pqTopKIndexed(ix, queries, idCol, vecCol, k, rerank)
-    ix.release()
-    out
-  }
-
-  /** A trained, reusable flat-PQ store (VERDICT r7 §next-1 — the PQ
-    * sibling of [[graft.operators.Dedup.EmbeddingIndex]]): the pinned raw
-    * quantized vectors + exact norms (`vecs` — the rerank side), the
-    * localized per-subspace codebooks (`books`, m·kCents rows — every
-    * executor receives them as a broadcast), and the pinned compressed
-    * corpus (`codes`, m small integers per vector). Train ONCE with
-    * [[pqIndex]], persist with [[savePqIndex]], then answer query batches
-    * with [[pqTopKIndexed]] and assign ingest batches with
-    * [[assignToPqIndex]] — codebooks are never retrained on the query or
-    * ingest path. `release()` when done. */
-  final case class PqIndex private[operators] (
-      vecs: DataFrame, books: DataFrame, codes: DataFrame,
-      m: Int, dsub: Int, dim: Int, kCents: Int, scale: Int) {
-    def release(): Unit = {
-      codes.unpersist(false); vecs.unpersist(false)
-    }
-  }
-
-  /** Train a [[PqIndex]] over `corpus`: one quantize+norm pass (pinned),
-    * deterministic per-subspace integer Lloyd ([[trainPqBooks]] — the
-    * [[pqTopK]] training chain, unchanged), and the code assignment
-    * materialized as the stored representation. An empty corpus yields an
-    * empty index (dim = 0) whose searches return typed empty results. */
-  def pqIndex(
-      corpus: DataFrame, idCol: String, vecCol: String,
-      m: Int = 16, kCents: Int = 64, lloydIters: Int = 2,
-      scale: Int = 1000): PqIndex = {
-    val spark = corpus.sparkSession
-    graft.expressions.GraftFunctions.register(spark)
-    require(m > 0 && kCents > 1, s"need m > 0 subspaces and kCents > 1, got m=$m kCents=$kCents")
-    val (c, n) = Pinned.pinRows(Par.spread(corpus).select(col(idCol).as("nbr_id"), quantize(col(vecCol), scale).as("nv"))
-      .withColumn("vv", nqdot(col("nv"), col("nv"))))
-    if (n == 0L) { // empty corpus: typed empty index, no dim probe to throw
-      val books = localized(c.select(lit(0).as("sub"), lit(0L).as("cent_id"),
-        col("nv").as("cv"), lit(0L).as("cc")).limit(0))
-      val codes = pin(c.select(col("nbr_id"), lit(0).as("sub"), lit(0L).as("code")).limit(0))
-      return PqIndex(c, books, codes, m, dsub = 0, dim = 0, kCents, scale)
-    }
-    val dim = c.select(size(col("nv")).as("d")).head().getInt(0)
-    require(dim % m == 0, s"dim $dim must be divisible by m=$m subspaces")
-    val dsub = dim / m
-    val sv = pin(pqSubVectors(c, "nbr_id", "nv", m, dsub))
-    val books = trainPqBooks(c, sv, kCents, lloydIters)
-    // the stored representation: m codes per corpus vector, pinned so
-    // every later query/ingest batch reads codes, not raw vectors
-    val codes = pin(assignPqCodes(sv, "nbr_id", books))
-    sv.unpersist(false)
-    PqIndex(c, books, codes, m, dsub, dim, kCents, scale)
-  }
-
-  /** [[pqTopK]]'s search half over a prebuilt [[PqIndex]] — ADC scoring
-    * against STORED codes and codebooks, no retraining; the index is NOT
-    * released (the caller owns it and may reuse it across query batches).
-    * Bit-identical to [[pqTopK]] with the same parameters (q120's gate for
-    * the IVF variant). */
-  def pqTopKIndexed(
-      ix: PqIndex, queries: DataFrame,
-      idCol: String, vecCol: String, k: Int, rerank: Int = 0): DataFrame = {
-    graft.expressions.GraftFunctions.register(queries.sparkSession)
-    require(rerank == 0 || rerank >= k, s"rerank ($rerank) must be 0 or >= k ($k)")
-    if (ix.dim == 0) { // empty index: typed empty result
-      return ix.vecs.select(col("nbr_id").as("query_id"), col("nbr_id"),
-        lit(0L).as("cosine_micro"), lit(0L).as("rank")).limit(0).localCheckpoint(true)
-    }
-    val q = queries.select(col(idCol).as("query_id"), quantize(col(vecCol), ix.scale).as("qv"))
-      .withColumn("qn", nqdot(col("qv"), col("qv")))
-    val qsv = pqSubVectors(q, "query_id", "qv", ix.m, ix.dsub)
-    pqScoreRank(ix.vecs, q, qsv, ix.books, ix.codes, k, rerank)
-      .localCheckpoint(true)
-  }
-
-  /** Assign an ingest batch to a [[PqIndex]]'s STORED codebooks — the
-    * no-retrain write path of the PQ store (VERDICT r7 §next-1): each batch
-    * vector gets its m codes by exact-integer argmin against the stored
-    * books, exactly as the corpus did at train time. Output: (id, sub,
-    * code), m rows per vector. Pure function of (batch, stored books) —
-    * the q122 oracle replays it in SQL. */
-  def assignToPqIndex(
-      batch: DataFrame, ix: PqIndex, idCol: String, vecCol: String): DataFrame = {
-    graft.expressions.GraftFunctions.register(batch.sparkSession)
-    require(ix.dim > 0, "cannot assign into an empty PqIndex (dim = 0)")
-    val v = batch.select(col(idCol).as("id"), quantize(col(vecCol), ix.scale).as("nv"))
-    val sv = pqSubVectors(v, "id", "nv", ix.m, ix.dsub)
-    assignPqCodes(sv, "id", ix.books)
-  }
-
-  /** Persist a [[PqIndex]] as four parquet tables. `params` is written
-    * LAST as the commit marker (ADVICE r7 contract shared with
-    * [[graft.operators.Dedup.saveEmbeddingIndex]]): its presence implies
-    * every data component landed. */
-  def savePqIndex(ix: PqIndex, path: String): Unit = {
-    ix.vecs.write.mode("overwrite").parquet(s"$path/vecs")
-    ix.codes.write.mode("overwrite").parquet(s"$path/codes")
-    ix.books.write.mode("overwrite").parquet(s"$path/books")
-    val spark = ix.vecs.sparkSession
-    import spark.implicits._
-    Seq((ix.m, ix.dsub, ix.dim, ix.kCents, ix.scale))
-      .toDF("m", "dsub", "dim", "k_cents", "scale")
-      .write.mode("overwrite").parquet(s"$path/params")
-  }
-
-  /** Load a stored [[PqIndex]] (vecs/codes pinned, books re-localized —
-    * the [[pqIndex]] contract). Codebooks and codes are stored bytes, so a
-    * loaded index answers queries bit-identically to the one saved. Fails
-    * fast with a clear message on a partial save. */
-  def loadPqIndex(spark: SparkSession, path: String): PqIndex = {
-    Dedup.requireIndexParts(spark, path,
-      Seq("params", "vecs", "books", "codes"), "PqIndex")
-    val p = spark.read.parquet(s"$path/params").head()
-    PqIndex(
-      pin(spark.read.parquet(s"$path/vecs")),
-      localized(spark.read.parquet(s"$path/books")),
-      pin(spark.read.parquet(s"$path/codes")),
-      p.getAs[Int]("m"), p.getAs[Int]("dsub"), p.getAs[Int]("dim"),
-      p.getAs[Int]("k_cents"), p.getAs[Int]("scale"))
-  }
-
-  /** [[pqTopK]]'s exhaustive ADC score + rank/rerank tail. ADC cosine
-    * divides by the EXACT stored norm (the norm-augmented PQ variant
-    * cosine/inner-product systems use — one long per vector next to the m
-    * codes, so only the DOT carries quantization distortion; the
-    * reconstructed-norm form measured 0.20 top-5 recall on this suite's
-    * uniform vectors where this form + the rerank stage measures 0.90 —
-    * norms vary across the corpus and their reconstruction error swamped
-    * the crowded cosine band). */
-  private def pqScoreRank(c: DataFrame, q: DataFrame, qsv: DataFrame,
-      books: DataFrame, codes: DataFrame, k: Int, rerank: Int): DataFrame = {
-    // The per-query ADC lookup table is m·kCents rows PER QUERY. The
-    // explicit broadcast() is right for the intended regime — interactive
-    // query batches (≲ a few thousand queries at the m=16/kCents=64
-    // defaults) — but a bulk batch of 10⁵–10⁶ queries would push a
-    // multi-GB broadcast through the driver (VERDICT r7 §wrong-1), so the
-    // hint is DROPPED above ~4M LUT rows and AQE picks the join strategy
-    // (a shuffled hash join on (sub, code) — still keyed, never a cross
-    // join). `books` is a localized m·kCents-row relation, so both counts
-    // are driver-cheap.
-    val lutRows = q.count() * books.count()
-    val lut = qsv.join(broadcast(books), Seq("sub"))
-      .select(col("query_id"), col("sub"), col("cent_id").as("code"),
-        nqdot(col("sv"), col("cv")).as("dot"))
-    val adc = codes.join(maybeBroadcast(lut, lutRows), Seq("sub", "code"))
-      .filter(col("query_id") =!= col("nbr_id"))
-      .groupBy(col("query_id"), col("nbr_id"))
-      .agg(sum(col("dot")).as("adc_dot"))
-    adcRank(c, q, adc, k, rerank)
-  }
-
-  /** Broadcast `df` only when its row count stays inside the interactive-
-    * batch regime (see the LUT note in [[pqScoreRank]]); above it, AQE
-    * picks the strategy for the keyed equi-join. */
-  private def maybeBroadcast(df: DataFrame, rows: Long): DataFrame =
-    if (rows <= 4_000_000L) broadcast(df) else df
-
-  /** The flat-PQ rank/rerank tail: `adc` is
-    * (query_id, nbr_id, adc_dot); the ADC cosine divides by the EXACT
-    * stored norm, ranks, and (with `rerank > 0`) exactly re-scores the
-    * shortlist rows' true vectors. */
-  private def adcRank(c: DataFrame, q: DataFrame, adc: DataFrame,
-      k: Int, rerank: Int): DataFrame = {
-    val scored = adc
-      .join(c.select(col("nbr_id"), col("vv")), Seq("nbr_id"))
-      .join(broadcast(q.select(col("query_id"), col("qn"))), Seq("query_id"))
-      .withColumn("adc_cos",
-        cosineOf(col("adc_dot"), col("qn"), col("vv")))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("adc_cos").desc, col("nbr_id"))
-    val ranked =
-      if (rerank == 0) {
-        // pure ADC: the approximate cosine IS the output
-        scored.withColumn("rank", row_number().over(w).cast("long"))
-          .filter(col("rank") <= k)
-          .select(col("query_id"), col("nbr_id"), col("adc_cos").as("cosine"), col("rank"))
-      } else {
-        // two-stage: ADC shortlist (codes only) → exact re-score of the
-        // shortlist rows' true vectors → final top-k by exact cosine
-        val shortlist = scored.withColumn("__sr", row_number().over(w))
-          .filter(col("__sr") <= rerank)
-          .select(col("query_id"), col("nbr_id"))
-        val rw = Window.partitionBy(col("query_id"))
-          .orderBy(col("cosine").desc, col("nbr_id"))
-        shortlist.join(c, Seq("nbr_id"))
-          .join(broadcast(q), Seq("query_id"))
-          .withColumn("cosine",
-            cosineOf(nqdot(col("qv"), col("nv")), col("qn"), col("vv")))
-          .withColumn("rank", row_number().over(rw).cast("long"))
-          .filter(col("rank") <= k)
-          .select(col("query_id"), col("nbr_id"), col("cosine"), col("rank"))
-      }
-    ranked.select(col("query_id"), col("nbr_id"),
-      round(col("cosine") * 1e6).cast(org.apache.spark.sql.types.LongType)
-        .as("cosine_micro"), col("rank"))
-  }
+      rerank: Int = 0, scale: Int = 1000): DataFrame =
+    ivfPqTopK(corpus, queries, idCol, vecCol, k, nCells = 1, nprobe = 1,
+      ivfLloydIters = 0, m = m, kCents = kCents, pqLloydIters = lloydIters,
+      rerank = rerank, scale = scale)
 
   /** IVF-PQ: the production 100-TB vector-store layout in one call —
     * [[ivfTopK]]'s coarse quantizer prunes the corpus to each query's
@@ -762,9 +564,8 @@ object Similarity {
       rerank: Int = 0, scale: Int = 1000, residual: Boolean = false): DataFrame = {
     val ix = ivfPqIndex(corpus, idCol, vecCol, nCells, ivfLloydIters,
       m, kCents, pqLloydIters, residual, scale)
-    val out = ivfPqTopKIndexed(ix, queries, idCol, vecCol, k, nprobe, rerank)
-    ix.release()
-    out
+    try ivfPqTopKIndexed(ix, queries, idCol, vecCol, k, nprobe, rerank)
+    finally ix.release()
   }
 
   /** A trained, reusable IVF-PQ store — the production billion-vector
@@ -834,7 +635,7 @@ object Similarity {
     * ([[graft.expressions.PqEncodeLong]], over the residual when
     * `residual`) as one projection against the stored centroids and
     * codebooks — no exchange. Codes are bit-identical to the per-subspace
-    * argmin of [[assignPqCodes]]. */
+    * argmin of [[withCode]] that training assigns. */
   private def storeRows(v: DataFrame, id: String, cents: DataFrame,
       books: DataFrame, residual: Boolean): DataFrame =
     withCell(v, "nv", "vv", cents).select(col(id), col("cell"),
@@ -883,6 +684,7 @@ object Similarity {
         m, dsub = 0, dim = 0, kCents, nCells = 0, residual, scale)
     }
     val dim = c.select(size(col("nv")).as("d")).head().getInt(0)
+    if (dim % m != 0) c.unpersist(false) // the require below must not leak the pin
     require(dim % m == 0, s"dim $dim must be divisible by m=$m subspaces")
     val dsub = dim / m
     val cells = if (nCells > 0) nCells else math.max(4, math.ceil(math.sqrt(n.toDouble)).toInt)
@@ -1040,19 +842,15 @@ object Similarity {
   }
 
   /** Persist an [[IvfPqIndex]] as six parquet tables — the store's
-    * `vecs`/`cells`/`codes` views next to `cents`/`books`; `params` is
-    * written LAST as the commit marker (the [[savePqIndex]] contract). */
+    * `vecs`/`cells`/`codes` views next to `cents`/`books`; `params` is the
+    * commit marker ([[IndexFiles.save]]). */
   def saveIvfPqIndex(ix: IvfPqIndex, path: String): Unit = {
-    ix.vecs.write.mode("overwrite").parquet(s"$path/vecs")
-    ix.cents.write.mode("overwrite").parquet(s"$path/cents")
-    ix.cells.write.mode("overwrite").parquet(s"$path/cells")
-    ix.books.write.mode("overwrite").parquet(s"$path/books")
-    ix.codes.write.mode("overwrite").parquet(s"$path/codes")
-    val spark = ix.store.sparkSession
+    val spark = ix.cents.sparkSession
     import spark.implicits._
-    Seq((ix.m, ix.dsub, ix.dim, ix.kCents, ix.nCells, ix.residual, ix.scale))
-      .toDF("m", "dsub", "dim", "k_cents", "n_cells", "residual", "scale")
-      .write.mode("overwrite").parquet(s"$path/params")
+    IndexFiles.save(path, Seq("vecs" -> ix.vecs, "cents" -> ix.cents,
+      "cells" -> ix.cells, "books" -> ix.books, "codes" -> ix.codes,
+      "params" -> Seq((ix.m, ix.dsub, ix.dim, ix.kCents, ix.nCells, ix.residual, ix.scale))
+        .toDF("m", "dsub", "dim", "k_cents", "n_cells", "residual", "scale")))
   }
 
   /** Load a stored [[IvfPqIndex]]: the three per-vector tables are packed
@@ -1062,19 +860,19 @@ object Similarity {
     * answers queries bit-identically to the one saved (q120's gate).
     * Fails fast on a partial save. */
   def loadIvfPqIndex(spark: SparkSession, path: String): IvfPqIndex = {
-    Dedup.requireIndexParts(spark, path,
-      Seq("params", "vecs", "cents", "cells", "books", "codes"), "IvfPqIndex")
-    val p = spark.read.parquet(s"$path/params").head()
-    val packed = spark.read.parquet(s"$path/codes").groupBy(col("nbr_id"))
+    val part = IndexFiles.open(spark, path, "IvfPqIndex",
+      Seq("vecs", "cents", "cells", "books", "codes", "params"))
+    val p = part("params").head()
+    val packed = part("codes").groupBy(col("nbr_id"))
       .agg(transform(array_sort(collect_list(struct(col("sub"), col("code")))),
         e => e.getField("code").cast("int")).as("codes"))
-    val store = Segment.pin(spark.read.parquet(s"$path/vecs")
-      .join(spark.read.parquet(s"$path/cells"), Seq("nbr_id"))
+    val store = Segment.pin(part("vecs")
+      .join(part("cells"), Seq("nbr_id"))
       .join(packed, Seq("nbr_id"))
       .select(col("nbr_id"), col("cell"), col("codes"), col("nv"), col("vv")))
     IvfPqIndex(Vector(store),
-      localized(spark.read.parquet(s"$path/cents")),
-      localized(spark.read.parquet(s"$path/books")),
+      localized(part("cents")),
+      localized(part("books")),
       p.getAs[Int]("m"), p.getAs[Int]("dsub"), p.getAs[Int]("dim"),
       p.getAs[Int]("k_cents"), p.getAs[Int]("n_cells"),
       p.getAs[Boolean]("residual"), p.getAs[Int]("scale"))

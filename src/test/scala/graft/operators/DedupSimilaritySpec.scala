@@ -424,24 +424,39 @@ class DedupSimilaritySpec extends SparkTestBase {
     assert(one == Set(2L, 4L, 6L, 8L)) // cluster A members only, no self
   }
 
-  test("IvfPqIndex parquet round-trip: loaded index answers identically; partial save fails fast") {
+  // save/load round-trip of an IVF-PQ index with `cells` cells; the one-cell
+  // index (nprobe = 1, no Lloyd passes) is the flat PQ store behind pqTopK
+  private def pqIndexRoundTrip(cells: Int, probes: Int, lloyd: Int): Unit = {
     val qs = clustered.filter(col("vec_id") === 0)
     val dir = java.nio.file.Files.createTempDirectory("graft_pqix").toString
     val ix = Similarity.ivfPqIndex(clustered, "vec_id", "embedding",
-      nCells = 2, m = 3, kCents = 4)
+      nCells = cells, ivfLloydIters = lloyd, m = 3, kCents = 4)
     val fresh = Similarity.ivfPqTopKIndexed(ix, qs, "vec_id", "embedding",
-        k = 4, nprobe = 2, rerank = 9)
+        k = 4, nprobe = probes, rerank = 9)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))).toSet
+    if (cells == 1) {
+      val flat = Similarity.pqTopK(clustered, qs, "vec_id", "embedding",
+          k = 4, m = 3, kCents = 4, rerank = 9)
+        .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))).toSet
+      assert(flat == fresh)
+    }
+    val corpusCodes = ix.codes.filter(col("nbr_id") === 0L)
+      .collect().map(r => (r.getInt(1), r.getLong(2))).toSet
     Similarity.saveIvfPqIndex(ix, s"$dir/ix")
     ix.release()
     val loaded = Similarity.loadIvfPqIndex(spark, s"$dir/ix")
-    assert(loaded.m == 3 && loaded.kCents == 4 && loaded.nCells == 2 &&
+    assert(loaded.m == 3 && loaded.kCents == 4 && loaded.nCells == cells &&
       loaded.dim == 3 && !loaded.residual)
     val via = Similarity.ivfPqTopKIndexed(loaded, qs, "vec_id", "embedding",
-        k = 4, nprobe = 2, rerank = 9)
+        k = 4, nprobe = probes, rerank = 9)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))).toSet
+    assert(via == fresh && fresh.nonEmpty, s"nCells=$cells")
+    // ingest: an identical vector reproduces the corpus codes
+    val batch = Seq((100L, Array(1.0f, 0.0f, 0.0f))).toDF("vec_id", "embedding")
+    val asg = Similarity.assignToIvfPqIndex(batch, loaded, "vec_id", "embedding")
+      .collect().map(r => (r.getInt(2), r.getLong(3))).toSet
     loaded.release()
-    assert(via == fresh && fresh.nonEmpty)
+    assert(asg == corpusCodes, s"nCells=$cells")
     // a partially-written index names the missing component up front
     // (ADVICE r7), not an AnalysisException deep in a later join
     val p = new org.apache.hadoop.fs.Path(s"$dir/ix/params")
@@ -450,27 +465,65 @@ class DedupSimilaritySpec extends SparkTestBase {
     assert(e.getMessage.contains("params"))
   }
 
+  test("IvfPqIndex parquet round-trip: loaded index answers identically; partial save fails fast") {
+    pqIndexRoundTrip(cells = 2, probes = 2, lloyd = 4)
+  }
+
   test("PqIndex (flat) parquet round-trip: loaded index answers identically; assignment matches corpus codes") {
-    val qs = clustered.filter(col("vec_id") === 0)
-    val dir = java.nio.file.Files.createTempDirectory("graft_fpqix").toString
-    val ix = Similarity.pqIndex(clustered, "vec_id", "embedding", m = 3, kCents = 4)
-    val fresh = Similarity.pqTopKIndexed(ix, qs, "vec_id", "embedding", k = 4, rerank = 9)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))).toSet
-    Similarity.savePqIndex(ix, s"$dir/ix")
-    val corpusCodes = ix.codes.filter(col("nbr_id") === 0L)
-      .collect().map(r => (r.getInt(1), r.getLong(2))).toSet
-    ix.release()
-    val loaded = Similarity.loadPqIndex(spark, s"$dir/ix")
-    assert(loaded.m == 3 && loaded.kCents == 4 && loaded.dim == 3)
-    val via = Similarity.pqTopKIndexed(loaded, qs, "vec_id", "embedding", k = 4, rerank = 9)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))).toSet
-    assert(via == fresh && fresh.nonEmpty)
-    // flat-store ingest: an identical vector reproduces the corpus codes
-    val batch = Seq((100L, Array(1.0f, 0.0f, 0.0f))).toDF("vec_id", "embedding")
-    val asg = Similarity.assignToPqIndex(batch, loaded, "vec_id", "embedding")
-      .collect().map(r => (r.getInt(1), r.getLong(2))).toSet
+    pqIndexRoundTrip(cells = 1, probes = 1, lloyd = 0)
+  }
+
+  test("an index re-save that fails mid-way leaves no commit marker: the load names it") {
+    val boom = raise_error(lit("injected write failure"))
+    def failsToLoad(load: => Any): Unit = {
+      val e = intercept[IllegalArgumentException](load)
+      assert(e.getMessage.contains("missing component(s): params"), e.getMessage)
+    }
+    val dir = java.nio.file.Files.createTempDirectory("graft_resave").toString
+    // embedding: vecs, then buckets (fails), then the params marker
+    val emb = Dedup.embeddingIndex(vecs, "vec_id", "embedding", signBits = 3)
+    Dedup.saveEmbeddingIndex(emb, s"$dir/emb")
+    val badBuckets = emb.buckets.withColumn("bucket",
+      when(col("id") === 2L, boom).otherwise(col("bucket")))
+    intercept[Exception](Dedup.saveEmbeddingIndex(emb.copy(buckets = badBuckets), s"$dir/emb"))
+    failsToLoad(Dedup.loadEmbeddingIndex(spark, s"$dir/emb"))
+    // a clean re-save restores it; saving over the directory an index was
+    // loaded from is refused before the marker is touched
+    Dedup.saveEmbeddingIndex(emb, s"$dir/emb")
+    emb.release()
+    val loaded = Dedup.loadEmbeddingIndex(spark, s"$dir/emb")
+    intercept[IllegalArgumentException](Dedup.saveEmbeddingIndex(loaded, s"$dir/emb"))
     loaded.release()
-    assert(asg == corpusCodes)
+    Dedup.loadEmbeddingIndex(spark, s"$dir/emb").release()
+    // IVF-PQ: the codes view (the fifth of six parts) fails at write time
+    val ix = Similarity.ivfPqIndex(clustered, "vec_id", "embedding",
+      nCells = 2, m = 3, kCents = 4)
+    Similarity.saveIvfPqIndex(ix, s"$dir/ivf")
+    val seg = ix.segments.head
+    val badStore = seg.frame.withColumn("codes",
+      when(col("nbr_id") === 3L, boom).otherwise(col("codes")))
+    val bad = ix.copy(segments = Vector(new Segment(badStore, seg.rows, seg.partitions, Nil)))
+    intercept[Exception](Similarity.saveIvfPqIndex(bad, s"$dir/ivf"))
+    ix.release()
+    failsToLoad(Similarity.loadIvfPqIndex(spark, s"$dir/ivf"))
+  }
+
+  test("failing index builds check arguments before pinning and leak no pin") {
+    def pinned = spark.sparkContext.getPersistentRDDs.keySet.toSet
+    val tenDim = Seq.tabulate(4)(i => (i.toLong, Array.tabulate(10)(j => (i + j).toFloat)))
+      .toDF("vec_id", "embedding")
+    def leaksNothing(build: => Any): Unit = {
+      val before = pinned
+      intercept[IllegalArgumentException](build)
+      assert(pinned == before)
+    }
+    leaksNothing(Similarity.ivfPqIndex(tenDim, "vec_id", "embedding", m = 3))
+    leaksNothing(Similarity.pqTopK(tenDim, tenDim, "vec_id", "embedding", k = 2, m = 3))
+    // an invalid search argument releases the index built for the call
+    leaksNothing(Similarity.pqTopK(clustered, clustered, "vec_id", "embedding",
+      k = 4, m = 3, kCents = 4, rerank = 2))
+    for ((n, bands, rows) <- Seq((0, 4, 3), (3, 0, 3), (3, 4, 0)))
+      leaksNothing(Dedup.minhashIndex(docs, "doc_id", "text", n, bands, rows))
   }
 
   test("residual IVF-PQ: full probes + full rerank equal brute force; ingest assignment is a pure function") {
