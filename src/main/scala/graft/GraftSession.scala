@@ -21,7 +21,11 @@ import org.apache.spark.sql.SparkSession
   *    skew-join splitting, partition coalescing) — the operators here are
   *    written to let it work: equi-joins with broadcastable dims, partial
   *    aggregation everywhere, no driver-side loops except the documented
-  *    O(log N)-round component fold.
+  *    O(log N)-round component fold and the model trainers, which collect
+  *    a bounded input once and loop over it on the driver: the IVF/PQ
+  *    Lloyd rounds (a hash-prefix sample of 256 vectors per centroid,
+  *    `Similarity`) and the BPE merge loop (the word-count vocabulary,
+  *    `Bpe.train`).
   *  - `spark.sql.files.maxPartitionBytes` (default 128 MB) governs scan
   *    parallelism against the 100 TB input; raise only with fat executors.
   */

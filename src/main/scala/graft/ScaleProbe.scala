@@ -565,10 +565,10 @@ object ScaleProbe {
         "g", "p", "y").count()
       val cgt1 = System.nanoTime()
 
-      // BPE jobs axis (r9): Spark jobs for the same 24 merges, batched
-      // rounds vs the strictly sequential loop — the scheduler-round-trip
-      // curve selectBatch exists to flatten (the vocab is replication-
-      // invariant, so this axis measures the loop, not the corpus).
+      // BPE jobs axis: Spark jobs for 24 merges — the one word-count
+      // collect, the merge loop runs on the driver (the vocab is
+      // replication-invariant, so this axis measures the loop, not the
+      // corpus).
       val jobCount = new java.util.concurrent.atomic.AtomicInteger
       val listener = new org.apache.spark.scheduler.SparkListener {
         override def onJobStart(
@@ -585,10 +585,8 @@ object ScaleProbe {
         jobCount.get()
       }
       val bpt0 = System.nanoTime()
-      val bpeJobsBatched = countJobs(Bpe.train(docs, "text", 24).count())
+      val bpeJobs = countJobs(Bpe.train(docs, "text", 24).count())
       val bpt1 = System.nanoTime()
-      val bpeJobsSeq = countJobs(Bpe.train(docs, "text", 24, maxBatch = 1).count())
-      val bpt2 = System.nanoTime()
 
       // explicit ROOT locale (ADVICE r6): f"" formats with the default JVM
       // locale; comma-decimal locales would emit invalid JSON
@@ -612,8 +610,7 @@ object ScaleProbe {
         s""""fz_dict":$nFdict,"fz_sigs":$nSigs,"fz_matches":$nFzMatches,""" +
         s""""fz_build_sec":${sec(fzt0, fzt1)},"fz_probe_sec":${sec(fzt1, fzt2)},""" +
         s""""jw_high":$nJwHigh,"jw_sec":${sec(fzt2, fzt3)},""" +
-        s""""bpe_jobs_batched":$bpeJobsBatched,"bpe_jobs_seq":$bpeJobsSeq,""" +
-        s""""bpe_batched_sec":${sec(bpt0, bpt1)},"bpe_seq_sec":${sec(bpt1, bpt2)},""" +
+        s""""bpe_jobs":$bpeJobs,"bpe_sec":${sec(bpt0, bpt1)},""" +
         s""""winnow_pairs":$nWinnowPairs,"winnow_sec":${sec(wnt0, wnt1)},""" +
         s""""cm_cells":$nCmCells,"cm_probed":$nCmProbed,""" +
         s""""cm_build_sec":${sec(cmt0, cmt1)},"cm_probe_sec":${sec(cmt1, cmt2)},""" +

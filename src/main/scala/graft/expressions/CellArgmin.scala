@@ -1,6 +1,6 @@
 package graft.expressions
 
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, TernaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
 import org.apache.spark.sql.catalyst.util.ArrayData
@@ -20,7 +20,9 @@ import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, LongType}
   * projection: zero shuffle, tight primitive-long loops inside
   * WholeStageCodegen (guide §2.4 — remove shuffles outright; §4 — codegen
   * expressions in the hot path). The matrix is ≤ √N rows · dim longs (IVF)
-  * or m·kCents·dsub longs (PQ) — the SAME frame the join broadcast anyway. */
+  * or m·kCents·dsub longs (PQ) — the SAME frame the join broadcast anyway.
+  * The driver-side Lloyd rounds that train the centroids assign with the
+  * same [[argminAt]] ([[graft.operators.Lloyd]]). */
 final class CellMatrix(
     val ids: Array[Long], val flat: Array[Long], val ccs: Array[Long],
     val dim: Int) extends Serializable {
@@ -82,16 +84,11 @@ final class CellMatrix(
   }
 }
 
-/** Per-subspace codebook matrices for [[CodeArgminLong]]: one [[CellMatrix]]
+/** Per-subspace codebook matrices for [[PqMatrix]]: one [[CellMatrix]]
   * per PQ subspace index (0..m−1, dense). */
 final class CodeMatrix(val subs: Array[CellMatrix]) extends Serializable {
   require(subs.nonEmpty && subs.forall(_ != null),
     "codebook matrix must cover every subspace 0..m-1 densely")
-  def argmin(sub: Int, v: ArrayData, vv: Long): Long = {
-    if (sub < 0 || sub >= subs.length)
-      throw CellArgminLong.subOutOfRange(sub, subs.length)
-    subs(sub).argmin(v, vv)
-  }
 }
 
 /** Native Catalyst expression: exact-integer argmin cell assignment of a
@@ -120,11 +117,6 @@ case class CellArgminLong(left: Expression, right: Expression,
 }
 
 object CellArgminLong {
-  def subOutOfRange(sub: Int, m: Int): IllegalArgumentException =
-    new IllegalArgumentException(
-      s"graft_code_argmin: subspace index $sub outside the trained books " +
-        s"(m=$m) - batch vectors must share the index's dimensionality")
-
   /** Build a [[CellMatrix]] from a FOLDABLE `array<struct<cent_id bigint,
     * cv array<bigint>, cc bigint>>` expression (the registry path: the
     * caller passes the localized centroid set as a typedLit). Evaluated
@@ -151,8 +143,8 @@ object CellArgminLong {
 
   /** Build a [[CodeMatrix]] from a FOLDABLE `array<struct<sub int, cent_id
     * bigint, cv array<bigint>, cc bigint>>` expression; subspace indexes
-    * must cover 0..m−1 densely (they do by construction — posexplode of the
-    * static slice array). */
+    * must cover 0..m−1 densely (they do by construction — one trained
+    * codebook per subspace). */
   def codeMatrixOf(e: Expression, fn: String): CodeMatrix = {
     require(e.foldable, s"$fn: the codebook matrix must be a foldable " +
       s"literal array, got: $e")
@@ -180,30 +172,6 @@ object CellArgminLong {
     }.toArray
     new CodeMatrix(subs)
   }
-}
-
-/** [[CellArgminLong]]'s per-subspace sibling: argmin code of a sub-vector
-  * against ITS subspace's codebook — children (sub int, sv array<bigint>,
-  * svv bigint), the PQ code-assignment loop as one codegen'd projection. */
-case class CodeArgminLong(first: Expression, second: Expression,
-    third: Expression, matrix: CodeMatrix) extends TernaryExpression {
-  override def dataType: DataType = LongType
-  override def prettyName: String = "graft_code_argmin"
-
-  override def nullSafeEval(sub: Any, v: Any, vv: Any): Any =
-    matrix.argmin(sub.asInstanceOf[Int], v.asInstanceOf[ArrayData],
-      vv.asInstanceOf[Long])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val m = ctx.addReferenceObj("codeMatrix", matrix, classOf[CodeMatrix].getName)
-    nullSafeCodeGen(ctx, ev, (sub, v, vv) =>
-      s"${ev.value} = $m.argmin($sub, $v, $vv);")
-  }
-
-  override protected def withNewChildrenInternal(
-      newFirst: Expression, newSecond: Expression,
-      newThird: Expression): CodeArgminLong =
-    copy(first = newFirst, second = newSecond, third = newThird)
 }
 
 /** Plan-time PQ state of an IVF-PQ index for [[PqEncodeLong]] and

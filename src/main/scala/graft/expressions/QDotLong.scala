@@ -147,16 +147,12 @@ object GraftFunctions {
       "graft_normalize", UnicodeNormalize.fromChildren, "scala_udf")
     spark.sessionState.functionRegistry.createOrReplaceTempFunction(
       "graft_sdot", children => SparseDotLong(children(0), children(1)), "scala_udf")
-    // argmin assignment against a plan-time-constant centroid/codebook
-    // matrix (r15): the trailing child must be a foldable literal array —
+    // argmin assignment against a plan-time-constant centroid matrix
+    // (r15): the trailing child must be a foldable literal array —
     // it is evaluated ONCE here and embedded as primitive arrays
     spark.sessionState.functionRegistry.createOrReplaceTempFunction(
       "graft_cell_argmin", children => CellArgminLong(children(0), children(1),
         CellArgminLong.cellMatrixOf(children(2), "graft_cell_argmin")), "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_code_argmin", children => CodeArgminLong(children(0), children(1),
-        children(2),
-        CellArgminLong.codeMatrixOf(children(3), "graft_code_argmin")), "scala_udf")
     // IVF-PQ search kernels against the plan-time centroids/codebooks:
     // probes must be an INT literal; the books (and, for a residual index,
     // the cents) trail as foldable literal arrays

@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.unsafe.types.UTF8String
 
 import graft.functions.Text
 
@@ -14,17 +15,15 @@ import graft.functions.Text
   * Scale shape — the textbook trick that makes BPE training a Spark
   * problem: ALL pair statistics live on the unique-word-frequency table
   * ([[wordCounts]] — ONE corpus-wide hash-agg shuffle, map-side combined),
-  * weighted by word count. The merge loop then iterates over that pinned
-  * vocab-sized frame (≪ corpus: bounded by the language's vocabulary, not
-  * the token count), so 100 TB of text costs one shuffle plus roughly
-  * `numMerges / maxBatch` cheap jobs over millions of rows at most: each
-  * round's adjacent-pair explode → hash-agg → top-`topM` collect (the only
-  * driver traffic — a few hundred rows per round, the model itself) feeds
-  * [[selectBatch]], which proves a PREFIX of the sorted pairs independent
-  * and applies them all as one lazily-chained codegen'd fold. Sequential
-  * equivalence is exact (see [[selectBatch]]), so batching is purely a
-  * scheduler-round-trip optimization. Nothing else ever leaves the
-  * executors; encoding never shuffles at all.
+  * weighted by word count. That table is bounded by the language's
+  * vocabulary, not the token count, so it is collected ONCE — with each
+  * word's initial symbols from [[charSymbols]], still computed in Spark so
+  * the regex semantics stay Spark's — and the whole merge loop runs on
+  * the driver ([[learnMerges]]): 100 TB of text costs one shuffle and one
+  * collect, whatever `numMerges` is. Pair counts are kept incrementally,
+  * as in Sennrich et al.'s reference trainer: a merge re-counts only the
+  * words that contain the merged pair, so a 30k-merge vocabulary never
+  * rescans the whole vocabulary per merge. Encoding never shuffles at all.
   *
   * Greedy merge application is the sequential-looking step that kept r4
   * from attempting real BPE — but it is exactly a left fold, and Spark's
@@ -41,7 +40,9 @@ import graft.functions.Text
   * the oracle. Zero UDFs.
   *
   * Determinism: pair counts are exact long sums; the argmax tie-breaks by
-  * (count DESC, left ASC, right ASC) — bit-identical on any engine.
+  * (count DESC, left ASC, right ASC), strings compared as UTF-8 bytes
+  * (Spark's and DuckDB's order — `String.compareTo`'s UTF-16 order differs
+  * above the BMP) — bit-identical on any engine.
   * Applying the learned merges in order to a training word reproduces that
   * word's final training segmentation (each encode step performs the same
   * transformation training performed), which q128 exploits as a
@@ -95,94 +96,107 @@ object Bpe {
     * (one row per merge), so it is a driver-safe model artifact: persist
     * it with a plain parquet write, reload and `.collect()` it for
     * [[encodePieces]]. Stops early (fewer rows) when no adjacent pair
-    * remains. */
-  /** How many of the sorted pair-count rows can be merged in ONE round
-    * while replaying sequential greedy BPE bit-for-bit (r9 — the merge-loop
-    * scale regime: one Spark job per merge is fine at numMerges ≈ 10² but a
-    * 30k-merge production vocab would be 30k sequential scheduler
-    * round-trips). Walk the (pc DESC, a, b)-sorted rows, accepting while:
-    *
-    *  - the pair shares no symbol with any accepted pair ("dirty" symbols);
-    *    the first dirty-toucher ends the batch — its own count is stale;
-    *  - no row ANYWHERE with the same count touches a dirty symbol: a merge
-    *    of (a,b) only (1) zeroes (a,b) itself (greedy fuses every
-    *    occurrence; self-pair runs leave no residual adjacency), (2)
-    *    decreases dirty-adjacent pairs, and (3) creates new pairs whose
-    *    counts are ≤ some old dirty-adjacent pair's count — so as long as
-    *    every dirty-adjacent count is STRICTLY below the candidate's, no
-    *    updated or new pair can reach the candidate's count, and the
-    *    candidate is exactly the sequential argmax (clean pairs keep their
-    *    counts and the candidate is the first unprocessed clean row). The
-    *    strictness matters for ties: a new pair's name ("ab") can sort
-    *    anywhere, so an equal count could steal the argmax;
-    *  - the list was truncated at `topM` and the candidate's count has
-    *    reached the last visible count (the equal-count band may continue
-    *    past the horizon, hiding a dirty-adjacent tie).
-    *
-    * The first row (the global argmax) is always accepted. */
-  private def selectBatch(top: Array[(String, String, Long)], topM: Int,
-      maxN: Int): Seq[(String, String, Long)] = {
-    val dirty = scala.collection.mutable.Set.empty[String]
-    val out = scala.collection.mutable.ArrayBuffer.empty[(String, String, Long)]
-    val truncated = top.length == topM
-    val pcLast = top.last._3
-    var i = 0
-    var stop = false
-    while (i < top.length && !stop && out.size < maxN) {
-      val (a, b, pc) = top(i)
-      if (out.isEmpty) { out += top(i); dirty += a; dirty += b }
-      else if (dirty(a) || dirty(b)) stop = true
-      else if (truncated && pc <= pcLast) stop = true
-      else if (top.indices.exists(j => j > i && top(j)._3 == pc &&
-          (dirty(top(j)._1) || dirty(top(j)._2)))) stop = true
-      else { out += top(i); dirty += a; dirty += b }
-      i += 1
-    }
-    out.toSeq
-  }
-
-  def train(docs: DataFrame, textCol: String, numMerges: Int,
-      maxBatch: Int = 16): DataFrame = {
+    * remains. Jobs: the one collect of the word-count table. */
+  def train(docs: DataFrame, textCol: String, numMerges: Int): DataFrame = {
     require(numMerges >= 1, "numMerges must be >= 1")
-    require(maxBatch >= 1, "maxBatch must be >= 1")
     val spark = docs.sparkSession
     import spark.implicits._
-    // Eager localCheckpoint per round — the [[Similarity.mmrRerank]]
-    // iteration discipline. Two jobs per ROUND (materialize + argmax), but
-    // the round's plan is CONSTANT-size: a fold stack over the previous
-    // round's LogicalRDD. The earlier lazy-persist variant kept the full
-    // logical lineage, and every job's SQL-execution event re-stringifies
-    // the accumulated plan — by round ~20 the driver spent minutes in
-    // treeString, dwarfing the work. A round applies up to `maxBatch`
-    // provably-independent merges ([[selectBatch]]) as one select-per-merge
-    // stack (one SELECT per merge, NOT one folded expression: applyMerge
-    // references its input ~3×, so inlining k merges builds a 3^k-node
-    // expression tree; separate projections share the alias and codegen
-    // fuses them), so a 30k-merge vocab costs ~2·30k/batch scheduler
-    // round-trips, not 2·30k. Checkpoint blocks are reclaimed by the
-    // ContextCleaner as references drop; they are not fault-tolerant — on
-    // a multi-node cluster swap for reliable checkpoints or table writes.
-    val topM = 256
-    var words = wordCounts(docs, textCol)
-      .select(col("word"), col("cnt"), charSymbols(col("word")).as("syms"))
-      .localCheckpoint(true)
-    val merges = scala.collection.mutable.ArrayBuffer.empty[(Int, String, String, Long)]
-    var done = false
-    while (merges.size < numMerges && !done) {
-      val top = pairCounts(words)
-        .orderBy(col("pc").desc, col("a"), col("b")).limit(topM).collect()
-        .map(r => (r.getString(0), r.getString(1), r.getLong(2)))
-      if (top.isEmpty) done = true
-      else {
-        val batch = selectBatch(top, topM, math.min(maxBatch, numMerges - merges.size))
-        batch.foreach { case (a, b, pc) => merges += ((merges.size + 1, a, b, pc)) }
-        words = batch.foldLeft(words) { case (df, (a, b, _)) =>
-          df.select(col("word"), col("cnt"),
-            applyMerge(col("syms"), lit(a), lit(b)).as("syms")) }
-          .localCheckpoint(true)
+    val vocab = wordCounts(docs, textCol)
+      .select(charSymbols(col("word")), col("cnt")).collect()
+      .map(r => (r.getString(0), r.getLong(1)))
+    learnMerges(vocab, numMerges).zipWithIndex
+      .map { case ((a, b, pc), i) => (i + 1, a, b, pc) }
+      .toDF("rank", "sym_a", "sym_b", "pair_count")
+  }
+
+  /** Sequential greedy BPE over a (space-joined symbols, count) vocabulary:
+    * up to `numMerges` merges (a, b, pair_count), in order. Each merge is
+    * the argmax of the count-weighted adjacent-pair counts by (count DESC,
+    * a ASC, b ASC) — strings compared as UTF-8 bytes, Spark's order — and
+    * is applied to every word with [[applyMerge]]'s exact fold: left to
+    * right, `b` fuses onto a preceding symbol equal to `a`, so a fused
+    * "ab" never re-merges ("a a a" under (a, a) becomes "aa a").
+    *
+    * Pair counts are maintained incrementally (Sennrich et al.'s
+    * `update_pair_statistics`): an index from each pair to the words that
+    * may contain it names the only words a merge can change, and only
+    * their pairs are re-counted. The argmax is a priority queue whose stale
+    * entries are skipped when they surface. */
+  private[operators] def learnMerges(vocab: Seq[(String, Long)],
+      numMerges: Int): Seq[(String, String, Long)] = {
+    import scala.collection.mutable
+    val symIds = mutable.HashMap.empty[String, Int]
+    val names = mutable.ArrayBuffer.empty[String]
+    val keys = mutable.ArrayBuffer.empty[UTF8String] // the UTF-8 sort keys
+    def intern(s: String): Int = symIds.getOrElseUpdate(s, {
+      names += s; keys += UTF8String.fromString(s); names.size - 1 })
+    def pairOf(a: Int, b: Int): Long = (a.toLong << 32) | (b & 0xffffffffL)
+    val words = vocab.map(_._1.split(" ", -1).map(intern)).toArray
+    val cnts = vocab.map(_._2).toArray
+    val counts = mutable.HashMap.empty[Long, Long].withDefaultValue(0L)
+    val holders = mutable.HashMap.empty[Long, mutable.Set[Int]]
+    // (count, a, b), best first; an entry is stale once `counts` moved on
+    val queue = new java.util.PriorityQueue[(Long, Int, Int)](
+      (x: (Long, Int, Int), y: (Long, Int, Int)) => {
+        val byCount = java.lang.Long.compare(y._1, x._1)
+        if (byCount != 0) byCount
+        else {
+          val byA = keys(x._2).compareTo(keys(y._2))
+          if (byA != 0) byA else keys(x._3).compareTo(keys(y._3))
+        }
+      })
+    def count(w: Int, sign: Long, touched: mutable.Set[Long]): Unit = {
+      val sy = words(w)
+      var i = 0
+      while (i + 1 < sy.length) {
+        val p = pairOf(sy(i), sy(i + 1))
+        counts(p) += sign * cnts(w)
+        if (sign > 0) holders.getOrElseUpdate(p, mutable.Set.empty[Int]) += w
+        touched += p
+        i += 1
       }
     }
-    merges.toSeq.toDF("rank", "sym_a", "sym_b", "pair_count")
+    def requeue(touched: Iterable[Long]): Unit = touched.foreach { p =>
+      val c = counts(p)
+      if (c > 0) queue.add((c, (p >>> 32).toInt, p.toInt)) else counts.remove(p)
+    }
+    val all = mutable.Set.empty[Long]
+    words.indices.foreach(count(_, 1L, all))
+    requeue(all)
+    val merges = mutable.ArrayBuffer.empty[(String, String, Long)]
+    while (merges.size < numMerges && !queue.isEmpty) {
+      val (c, a, b) = queue.poll()
+      if (counts.get(pairOf(a, b)).contains(c)) {
+        merges += ((names(a), names(b), c))
+        val ab = intern(names(a) + names(b))
+        val touched = mutable.Set.empty[Long]
+        for (w <- holders.remove(pairOf(a, b)).getOrElse(Nil)) {
+          val merged = fuse(words(w), a, b, ab)
+          if (merged.length != words(w).length) {
+            count(w, -1L, touched)
+            words(w) = merged
+            count(w, 1L, touched)
+          }
+        }
+        requeue(touched)
+      }
+    }
+    merges.toSeq
+  }
+
+  /** [[applyMerge]]'s fold over symbol ids: `b` fuses into `ab` when the
+    * symbol emitted last is exactly `a`, else it is emitted as is. */
+  private def fuse(sy: Array[Int], a: Int, b: Int, ab: Int): Array[Int] = {
+    val out = new Array[Int](sy.length)
+    out(0) = sy(0)
+    var n = 1
+    var i = 1
+    while (i < sy.length) {
+      if (sy(i) == b && out(n - 1) == a) out(n - 1) = ab
+      else { out(n) = sy(i); n += 1 }
+      i += 1
+    }
+    java.util.Arrays.copyOf(out, n)
   }
 
   /** Persist a trained merge table ([[train]]'s output) as parquet — the

@@ -145,37 +145,18 @@ object Classify {
   }
 
   /** Parquet persistence for the standing-classifier shape (train once,
-    * classify every ingest batch): two tables + the [[NbModel]] layout
-    * contract. Both tables are written to a `_staging` subdirectory first,
-    * then swapped in with filesystem renames — the write-stats-last commit
-    * marker alone only protects FRESH saves (overwriting an existing model
-    * rewrites token_lik before class_stats, so a crash between the two
-    * leaves new likelihoods silently paired with stale stats, advisor r8).
-    * With the staged swap every crash window leaves a MISSING component,
-    * which [[loadNbModel]] rejects fail-fast, never a mixed-epoch model. */
-  def saveNbModel(m: NbModel, path: String): Unit = {
-    val staging = s"$path/_staging"
-    m.tokenLik.write.mode("overwrite").parquet(s"$staging/token_lik")
-    m.classStats.write.mode("overwrite").parquet(s"$staging/class_stats")
-    val spark = m.tokenLik.sparkSession
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    for (sub <- Seq("token_lik", "class_stats")) {
-      val live = new org.apache.hadoop.fs.Path(s"$path/$sub")
-      fs.delete(live, true)
-      require(fs.rename(new org.apache.hadoop.fs.Path(s"$staging/$sub"), live),
-        s"nb model save: rename of staged '$sub' into place failed at $path")
-    }
-    fs.delete(new org.apache.hadoop.fs.Path(staging), true)
-  }
+    * classify every ingest batch): two tables, `token_lik` and
+    * `class_stats`, under `path` — the [[IndexFiles]] protocol every stored
+    * index uses, with `class_stats` as the commit marker. The marker is
+    * deleted before `token_lik` is written and written last, so a save or
+    * re-save interrupted anywhere leaves no `class_stats`, which
+    * [[loadNbModel]] rejects fail-fast — never new likelihoods beside
+    * stale stats. */
+  def saveNbModel(m: NbModel, path: String): Unit =
+    IndexFiles.save(path, Seq("token_lik" -> m.tokenLik, "class_stats" -> m.classStats))
 
   def loadNbModel(spark: SparkSession, path: String): NbModel = {
-    def must(sub: String): DataFrame =
-      try spark.read.parquet(s"$path/$sub")
-      catch { case e: Exception => throw new IllegalArgumentException(
-        s"nb model at $path is missing component '$sub' — partial save? " +
-          s"(${e.getMessage})") }
-    val stats = must("class_stats")
-    NbModel(stats, must("token_lik"))
+    val part = IndexFiles.open(spark, path, "NbModel", Seq("token_lik", "class_stats"))
+    NbModel(part("class_stats"), part("token_lik"))
   }
 }

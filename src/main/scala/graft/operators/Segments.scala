@@ -21,10 +21,21 @@ private[graft] object Pinned {
   /** [[pin]], also returning the row count of the count that
     * materialized it — callers that need the size read it from here
     * instead of paying a second count over the cache. The count reads no
-    * column of the cache (an empty projection), only its row counts. */
+    * column of the cache (an empty projection), only its row counts. A
+    * count that fails releases the cache it started. */
   def pinRows(df: DataFrame): (DataFrame, Long) = {
     df.persist(StorageLevel.MEMORY_AND_DISK)
-    (df, cachedRows(df.select()).count())
+    try (df, cachedRows(df.select()).count())
+    catch { case e: Throwable => df.unpersist(false); throw e }
+  }
+
+  /** [[pinRows]] for the span of `body`: the pin is released when `body`
+    * returns or throws, so no failure after the pin can leak it. `body`'s
+    * result must not read the pinned frame lazily — materialize it first
+    * (a checkpoint, or a segment pinned from it). */
+  def scoped[T](df: DataFrame)(body: (DataFrame, Long) => T): T = {
+    val (pinned, rows) = pinRows(df)
+    try body(pinned, rows) finally pinned.unpersist(false)
   }
 
   /** The rows of (a projection of) a persisted frame as an RDD, read

@@ -1,8 +1,9 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, IntegerType, LongType, StructField, StructType}
 
 import graft.operators.Pinned.pin
 
@@ -23,6 +24,12 @@ import graft.operators.Pinned.pin
   *  - IVF top-k (`ivfTopK`): coarse k-means quantizer (fixed-count Lloyd
   *    rounds, deterministic hash-sampled init), search the query's `nprobe`
   *    nearest cells.
+  *
+  * Training (IVF centroids, PQ codebooks): the models are tiny, so they
+  * train on the driver. One TakeOrdered job collects a hash-prefix sample
+  * of the pinned, quantized corpus (256 vectors per centroid), and every
+  * integer Lloyd round runs over it as plain Scala ([[Lloyd]]); only the
+  * final assignment/encoding pass touches the whole corpus.
   *
   * Scale-parameterization (VERDICT r1): `signBits` defaults to the smallest
   * b with 2^b · 8 ≥ |corpus| (bucket occupancy ≈ 8 at ANY corpus size, so
@@ -227,16 +234,33 @@ object Similarity {
     if (nprobe > 0) nprobe
     else math.max(math.min(cells, 32), 2 * math.ceil(math.sqrt(cells.toDouble)).toInt)
 
-  /** Per-round centroid sets materialized as driver-local relations:
-    * ≤ `cells` ≈ √N rows — the SAME frame every executor receives as a
-    * broadcast anyway — so collecting them costs what the broadcast costs,
-    * truncates the per-round plan, and (unlike localCheckpoint) leaves no
-    * persisted blocks behind after the call (ADVICE r2). At 100 TB
-    * √N ~ 3·10⁴ rows · dim longs — still a few MB. */
+  /** A stored frame (an [[IvfPqIndex]]'s `cents` or `books` read back from
+    * parquet) materialized as a driver-local relation: ≤ `cells` ≈ √N rows
+    * or m·kCents rows — the SAME frame every executor receives as a
+    * plan-time literal anyway — so collecting it once costs what shipping
+    * it costs, and (unlike localCheckpoint) it leaves no persisted blocks
+    * behind (ADVICE r2). */
   private def localized(df: DataFrame): DataFrame = {
     val rows = java.util.Arrays.asList(df.collect(): _*)
     df.sparkSession.createDataFrame(rows, df.schema)
   }
+
+  private val centsSchema = StructType(Seq(StructField("cent_id", LongType),
+    StructField("cv", ArrayType(LongType)), StructField("cc", LongType)))
+
+  /** Driver-trained centroid sets as the driver-local `(cent_id, cv, cc)`
+    * frame of an [[IvfPqIndex]] — or, keyed by subspace, its `(sub,
+    * cent_id, cv, cc)` codebooks. Building them runs no Spark job. */
+  private def centsFrame(spark: SparkSession, cents: Lloyd.Cents): DataFrame =
+    spark.createDataFrame(java.util.Arrays.asList(cents.ids.indices.map(k =>
+      Row(cents.ids(k), cents.cvs(k).toSeq, cents.ccs(k))): _*), centsSchema)
+
+  private def booksFrame(spark: SparkSession, books: Seq[Lloyd.Cents]): DataFrame =
+    spark.createDataFrame(java.util.Arrays.asList((for {
+      (b, sub) <- books.zipWithIndex
+      k <- b.ids.indices
+    } yield Row(sub, b.ids(k), b.cvs(k).toSeq, b.ccs(k))): _*),
+      StructType(StructField("sub", IntegerType) +: centsSchema.fields))
 
   /** The localized `(cent_id, cv, cc)` centroid frame as a plan-time
     * literal for the argmin expression — collected (it was built from
@@ -252,44 +276,43 @@ object Similarity {
     * projection against the plan-time centroid matrix
     * ([[graft.expressions.CellArgminLong]]). r15: this replaces a
     * broadcast join + corpus-wide hash-agg EXCHANGE per assignment pass
-    * (and per Lloyd round) with zero shuffle — and it carries `v`'s other
-    * columns along, so the join back to the corpus frame the agg forced
-    * is gone too (guide §2.4). Bit-identical to the min(struct) form
-    * (SimilaritySpec asserts it, ties included). */
+    * with zero shuffle — and it carries `v`'s other columns along, so the
+    * join back to the corpus frame the agg forced is gone too (guide
+    * §2.4). Bit-identical to the min(struct) form (SimilaritySpec asserts
+    * it, ties included). */
   private def withCell(v: DataFrame, vec: String, norm: String,
       cents: DataFrame): DataFrame =
     v.withColumn("cell",
       call_function("graft_cell_argmin", col(vec), col(norm), centsAsLit(cents)))
 
-  /** Deterministic IVF coarse-quantizer training over a pinned
-    * `(nbr_id, nv, vv)` corpus: hash-ordered seeds (the `cells` vectors
-    * with the smallest md5(id) — TakeOrdered, no global sort), then
-    * `lloydIters` rounds of integer-exact assignment + per-dim rounded
-    * means; empty cells vanish (identically on the oracle side). Returns
-    * the localized `(cent_id, cv, cc)` centroid set. */
-  private def trainIvfCents(c: DataFrame, cells: Int, lloydIters: Int): DataFrame = {
-    var cents = localized(c.orderBy(md5(col("nbr_id").cast("string"))).limit(cells)
-      .select(
-        row_number().over(Window.orderBy(md5(col("nbr_id").cast("string")))).cast("long")
-          .as("cent_id"),
-        col("nv").as("cv"), col("vv").as("cc")))
-    for (_ <- 1 to lloydIters) {
-      // argmin projection carries nv along — no join back, no exchange
-      // anywhere before the tiny (cell, pos) agg (r15, guide §2.4)
-      val asg = withCell(c, "nv", "vv", cents)
-      val sums = asg.select(col("cell"), posexplode(col("nv")).as(Seq("pos", "x")))
-        .groupBy(col("cell"), col("pos"))
-        .agg(sum(col("x")).as("s"), count(lit(1)).as("cnt"))
-      cents = localized(sums
-        .withColumn("m", round(col("s").cast("double") / col("cnt").cast("double")).cast("long"))
-        .groupBy(col("cell"))
-        .agg(transform(array_sort(collect_list(struct(col("pos"), col("m")))),
-          e => e.getField("m")).as("cv"))
-        .select(col("cell").as("cent_id"), col("cv"))
-        .withColumn("cc", nqdot(col("cv"), col("cv"))))
-    }
-    cents
+  /** The training set of the IVF and PQ models over a pinned `(nbr_id, nv,
+    * vv)` corpus: its first 256·`k` non-null vectors in md5(id) order, `k`
+    * the largest centroid count trained on it, collected by ONE
+    * TakeOrdered job (no global sort). 256 points per centroid is FAISS's
+    * training rule — the hash-prefix sample Jégou et al. 2011 train on —
+    * and at ⌈√N⌉ cells it covers the whole corpus up to N = 65,536, so
+    * every oracle-checked query trains on the full corpus. Being a prefix
+    * of the md5 order, its first `cells` rows are the IVF seeds and its
+    * first `kCents` rows the PQ seed documents, exactly the hash-ordered
+    * seeds the SQL oracles pick. Every vector must share one dimension. */
+  private def trainingSet(c: DataFrame, k: Int): Array[Array[Long]] = {
+    val xs = c.filter(col("nv").isNotNull)
+      .orderBy(md5(col("nbr_id").cast("string")))
+      .limit(math.min(256L * k, Int.MaxValue).toInt)
+      .select(col("nv")).collect().map(_.getSeq[Long](0).toArray)
+    require(xs.nonEmpty, "no non-null vector to train on")
+    val dim = xs.head.length
+    xs.find(_.length != dim).foreach(x => throw new IllegalArgumentException(
+      s"vector dimensions differ in the training set: ${x.length} vs $dim"))
+    xs
   }
+
+  /** The deterministic IVF coarse quantizer of a [[trainingSet]]: the
+    * `cells` hash-ordered seeds, refined by `lloydIters` integer-exact
+    * Lloyd rounds on the driver ([[Lloyd.train]]); empty cells vanish
+    * (identically on the oracle side). */
+  private def trainIvfCents(xs: Array[Array[Long]], cells: Int, lloydIters: Int): Lloyd.Cents =
+    Lloyd.train(xs, 0, xs.head.length, cells, lloydIters)
 
   /** IVF-structured approximate top-k: a coarse k-means quantizer splits the
     * corpus into `nCells` Voronoi cells; each query searches its `nprobe`
@@ -298,12 +321,15 @@ object Similarity {
     * SQL), refined by a FIXED number of Lloyd rounds with integer-exact
     * arithmetic (per-dim mean = round(sum/count) of quantized components) so
     * every engine replays the identical centroids. Cell assignment is an
-    * exact integer distance argmin (d² = v·v − 2·v·c + c·c), computed as a
-    * map-side-combinable min(struct(d2, cent_id)) aggregate against a
-    * BROADCAST centroid set — ties break to the lowest cell id. `nCells = 0`
-    * derives ⌈√N⌉. At 100 TB you'd train Lloyd on a hash-prefix sample and
-    * keep the full-corpus pass for the final assignment only; the search
-    * path is unchanged. Eager (result checkpointed, caches released). */
+    * exact integer distance argmin (d² = v·v − 2·v·c + c·c) against the
+    * plan-time centroid matrix — ties break to the lowest cell id.
+    * `nCells = 0` derives ⌈√N⌉.
+    *
+    * Scale shape: one pin of the quantized corpus, one TakeOrdered collect
+    * of the hash-prefix training set (256 vectors per cell, see
+    * [[trainingSet]]) whose Lloyd rounds run on the driver, then the
+    * full-corpus pass for the final assignment and the search. Eager
+    * (result checkpointed, caches released — also when a step throws). */
   def ivfTopK(
       corpus: DataFrame, queries: DataFrame,
       idCol: String, vecCol: String, k: Int,
@@ -311,54 +337,52 @@ object Similarity {
       scale: Int = 1000): DataFrame = {
     val spark = corpus.sparkSession
     graft.expressions.GraftFunctions.register(spark)
-    val (c, n) = Pinned.pinRows(Par.spread(corpus).select(col(idCol).as("nbr_id"), quantize(col(vecCol), scale).as("nv"))
-      .withColumn("vv", nqdot(col("nv"), col("nv"))))
-    if (n == 0L) { // empty corpus: typed empty result, no dim probe to throw
-      val out = c.select(col("nbr_id").as("query_id"), col("nbr_id"),
-        lit(0.0).as("cosine"), lit(0L).as("rank")).limit(0).localCheckpoint(true)
-      c.unpersist(false)
-      return out
+    Pinned.scoped(Par.spread(corpus).select(col(idCol).as("nbr_id"), quantize(col(vecCol), scale).as("nv"))
+        .withColumn("vv", nqdot(col("nv"), col("nv")))) { (c, n) =>
+      if (n == 0L) { // empty corpus: typed empty result, no dim probe to throw
+        c.select(col("nbr_id").as("query_id"), col("nbr_id"),
+          lit(0.0).as("cosine"), lit(0L).as("rank")).limit(0).localCheckpoint(true)
+      } else {
+        val cells = if (nCells > 0) nCells else math.max(4, math.ceil(math.sqrt(n.toDouble)).toInt)
+        // probes scale with the index: 2·√cells = 2·N^(1/4) keeps the scanned
+        // corpus FRACTION shrinking as N grows (2/√cells ≈ 1% at N = 10⁹), and
+        // a floor of min(cells, 32) keeps small indexes (cells ≲ 256) from
+        // probing too thin a slice to rank k neighbors. Recall is data-dependent
+        // — uniform random embeddings (no cluster structure, the IVF worst case)
+        // necessarily track the scanned fraction, so any sublinear probe count
+        // caps recall there; real clustered embeddings are what IVF's cell
+        // locality is FOR. The old min(cells, 16) floor measured 0.76 of the
+        // exact top-5 at sf0.1 (2000 uniform vecs, 45 cells → 36% scanned) —
+        // VERDICT r4 §wrong-3; 32 probes (71% scanned at that toy size) measure
+        // ≥ 0.98, while at any serious index size the 2·√cells term dominates
+        // and the floor is irrelevant. Bench emits the recall at the bench SF
+        // every round; `nprobe` stays the caller's dial.
+        val probes = ivfProbes(cells, nprobe)
+        val cents = centsFrame(spark, trainIvfCents(trainingSet(c, cells), cells, lloydIters))
+        val q = queries.select(col(idCol).as("query_id"), quantize(col(vecCol), scale).as("qv"))
+          .withColumn("qn", nqdot(col("qv"), col("qv")))
+        // queries probe their nprobe nearest cells (full ranking only over the
+        // tiny broadcast centroid set)
+        val qw = Window.partitionBy(col("query_id")).orderBy(col("d2"), col("cent_id"))
+        val qAsg = q.join(broadcast(cents))
+          .withColumn("d2", col("qn") - lit(2) * nqdot(col("qv"), col("cv")) + col("cc"))
+          .withColumn("__cr", row_number().over(qw))
+          .filter(col("__cr") <= probes)
+          .select(col("query_id"), col("qv"), col("qn"), col("cent_id").as("cell"))
+        // corpus-side assignment is the argmin projection over the pinned
+        // cache — the old agg-exchange + join-back pair is gone (r15)
+        val scored = withCell(c, "nv", "vv", cents).join(broadcast(qAsg), Seq("cell"))
+          .filter(col("query_id") =!= col("nbr_id"))
+          .withColumn("cosine",
+            cosineOf(nqdot(col("qv"), col("nv")), col("qn"), col("vv")))
+        val w = Window.partitionBy(col("query_id"))
+          .orderBy(col("cosine").desc, col("nbr_id"))
+        scored.withColumn("rank", row_number().over(w).cast("long"))
+          .filter(col("rank") <= k)
+          .select("query_id", "nbr_id", "cosine", "rank")
+          .localCheckpoint(true)
+      }
     }
-    val cells = if (nCells > 0) nCells else math.max(4, math.ceil(math.sqrt(n.toDouble)).toInt)
-    // probes scale with the index: 2·√cells = 2·N^(1/4) keeps the scanned
-    // corpus FRACTION shrinking as N grows (2/√cells ≈ 1% at N = 10⁹), and
-    // a floor of min(cells, 32) keeps small indexes (cells ≲ 256) from
-    // probing too thin a slice to rank k neighbors. Recall is data-dependent
-    // — uniform random embeddings (no cluster structure, the IVF worst case)
-    // necessarily track the scanned fraction, so any sublinear probe count
-    // caps recall there; real clustered embeddings are what IVF's cell
-    // locality is FOR. The old min(cells, 16) floor measured 0.76 of the
-    // exact top-5 at sf0.1 (2000 uniform vecs, 45 cells → 36% scanned) —
-    // VERDICT r4 §wrong-3; 32 probes (71% scanned at that toy size) measure
-    // ≥ 0.98, while at any serious index size the 2·√cells term dominates
-    // and the floor is irrelevant. Bench emits the recall at the bench SF
-    // every round; `nprobe` stays the caller's dial.
-    val probes = ivfProbes(cells, nprobe)
-    val cents = trainIvfCents(c, cells, lloydIters)
-    val q = queries.select(col(idCol).as("query_id"), quantize(col(vecCol), scale).as("qv"))
-      .withColumn("qn", nqdot(col("qv"), col("qv")))
-    // queries probe their nprobe nearest cells (full ranking only over the
-    // tiny broadcast centroid set)
-    val qw = Window.partitionBy(col("query_id")).orderBy(col("d2"), col("cent_id"))
-    val qAsg = q.join(broadcast(cents))
-      .withColumn("d2", col("qn") - lit(2) * nqdot(col("qv"), col("cv")) + col("cc"))
-      .withColumn("__cr", row_number().over(qw))
-      .filter(col("__cr") <= probes)
-      .select(col("query_id"), col("qv"), col("qn"), col("cent_id").as("cell"))
-    // corpus-side assignment is the argmin projection over the pinned
-    // cache — the old agg-exchange + join-back pair is gone (r15)
-    val scored = withCell(c, "nv", "vv", cents).join(broadcast(qAsg), Seq("cell"))
-      .filter(col("query_id") =!= col("nbr_id"))
-      .withColumn("cosine",
-        cosineOf(nqdot(col("qv"), col("nv")), col("qn"), col("vv")))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cosine").desc, col("nbr_id"))
-    val out = scored.withColumn("rank", row_number().over(w).cast("long"))
-      .filter(col("rank") <= k)
-      .select("query_id", "nbr_id", "cosine", "rank")
-      .localCheckpoint(true)
-    c.unpersist(false)
-    out
   }
 
   /** Prototypicality scores — the cluster-centroid data-pruning metric
@@ -378,58 +402,44 @@ object Similarity {
     * integer dots, micro-quantized; ranks tie-break by id. Zero vectors
     * have no direction: null score, ranked last in their cell.
     *
-    * Scale shape: Lloyd on the pinned corpus (√N-row centroid collects,
-    * documented at [[localized]]), then ONE broadcast-join assignment
-    * pass and ONE cell-partitioned window (cells ≈ √N ⟹ ~√N rows per
-    * cell — parallel across cells, spillable within; never a global
-    * sort). At 100 TB: train on a hash-prefix sample, keep the full pass
-    * for assignment only — identical to the [[ivfTopK]] note. Output:
-    * (id, `cell`, `proto_micro`, `cell_rank`, `cell_n`). */
+    * Scale shape: [[ivfTopK]]'s training — one pin, one TakeOrdered
+    * collect of the hash-prefix training set, Lloyd on the driver — then
+    * ONE assignment pass over the pinned corpus and ONE cell-partitioned
+    * window (cells ≈ √N ⟹ ~√N rows per cell — parallel across cells,
+    * spillable within; never a global sort). Output: (id, `cell`,
+    * `proto_micro`, `cell_rank`, `cell_n`). */
   def prototypicality(corpus: DataFrame, idCol: String, vecCol: String,
       nCells: Int = 0, lloydIters: Int = 4, scale: Int = 1000): DataFrame = {
     val spark = corpus.sparkSession
     graft.expressions.GraftFunctions.register(spark)
-    val (c, n) = Pinned.pinRows(Par.spread(corpus)
-      .select(col(idCol).as("nbr_id"), quantize(col(vecCol), scale).as("nv"))
-      .withColumn("vv", nqdot(col("nv"), col("nv"))))
-    if (n == 0L) {
-      val out = c.select(col("nbr_id").as(idCol), lit(0L).as("cell"),
-        lit(0L).as("proto_micro"), lit(0L).as("cell_rank"),
-        lit(0L).as("cell_n")).limit(0).localCheckpoint(true)
-      c.unpersist(false)
-      return out
+    Pinned.scoped(Par.spread(corpus)
+        .select(col(idCol).as("nbr_id"), quantize(col(vecCol), scale).as("nv"))
+        .withColumn("vv", nqdot(col("nv"), col("nv")))) { (c, n) =>
+      if (n == 0L) {
+        c.select(col("nbr_id").as(idCol), lit(0L).as("cell"),
+          lit(0L).as("proto_micro"), lit(0L).as("cell_rank"),
+          lit(0L).as("cell_n")).limit(0).localCheckpoint(true)
+      } else {
+        val cells = if (nCells > 0) nCells
+          else math.max(4, math.ceil(math.sqrt(n.toDouble)).toInt)
+        val cents = centsFrame(spark, trainIvfCents(trainingSet(c, cells), cells, lloydIters))
+        val scored = withCell(c, "nv", "vv", cents)
+          .join(broadcast(cents), col("cell") === col("cent_id"))
+          .withColumn("proto_micro",
+            round(cosineOf(nqdot(col("nv"), col("cv")), col("vv"), col("cc"))
+              * 1e6).cast("long"))
+        val w = Window.partitionBy(col("cell"))
+          .orderBy(col("proto_micro").desc, col("nbr_id"))
+        scored
+          .withColumn("cell_rank", row_number().over(w).cast("long"))
+          .withColumn("cell_n",
+            count(lit(1)).over(Window.partitionBy(col("cell"))).cast("long"))
+          .select(col("nbr_id").as(idCol), col("cell"), col("proto_micro"),
+            col("cell_rank"), col("cell_n"))
+          .localCheckpoint(true)
+      }
     }
-    val cells = if (nCells > 0) nCells
-      else math.max(4, math.ceil(math.sqrt(n.toDouble)).toInt)
-    val cents = trainIvfCents(c, cells, lloydIters)
-    val scored = withCell(c, "nv", "vv", cents)
-      .join(broadcast(cents), col("cell") === col("cent_id"))
-      .withColumn("proto_micro",
-        round(cosineOf(nqdot(col("nv"), col("cv")), col("vv"), col("cc"))
-          * 1e6).cast("long"))
-    val w = Window.partitionBy(col("cell"))
-      .orderBy(col("proto_micro").desc, col("nbr_id"))
-    val out = scored
-      .withColumn("cell_rank", row_number().over(w).cast("long"))
-      .withColumn("cell_n",
-        count(lit(1)).over(Window.partitionBy(col("cell"))).cast("long"))
-      .select(col("nbr_id").as(idCol), col("cell"), col("proto_micro"),
-        col("cell_rank"), col("cell_n"))
-      .localCheckpoint(true)
-    c.unpersist(false)
-    out
   }
-
-  /** Sub-vectors: one row per (row, subspace) via static slices — a pure
-    * codegen'd projection + explode, NO shuffle (a posexplode→groupBy
-    * reassembly would cost a dim·N-row exchange for nothing) — the frame
-    * [[ivfPqIndex]]'s codebooks train on. */
-  private def pqSubVectors(v: DataFrame, id: String, vec: String,
-      m: Int, dsub: Int): DataFrame =
-    v.select(col(id), posexplode(array(
-        (0 until m).map(s => slice(col(vec), s * dsub + 1, dsub)): _*))
-      .as(Seq("sub", "sv")))
-      .withColumn("svv", nqdot(col("sv"), col("sv")))
 
   /** The localized `(sub, cent_id, cv, cc)` codebook frame as a plan-time
     * literal (the [[centsAsLit]] contract, keyed by subspace). */
@@ -439,48 +449,24 @@ object Similarity {
       (r.getInt(0), r.getLong(1), r.getSeq[Long](2), r.getLong(3))))
   }
 
-  /** `s` + a `code` column: per-subspace exact-integer argmin code
-    * assignment as one codegen'd projection against the plan-time codebook
-    * matrices ([[graft.expressions.CodeArgminLong]]; ties to the lowest
-    * centroid id) — r15, replacing the broadcast join + (id, sub)-keyed
-    * hash-agg EXCHANGE of the old formulation, and carrying `s`'s other
-    * columns so the training loop's join back to the sub-vector frame is
-    * gone (guide §2.4). */
-  private def withCode(s: DataFrame, books: DataFrame): DataFrame =
-    s.withColumn("code",
-      call_function("graft_code_argmin", col("sub"), col("sv"), col("svv"),
-        booksAsLit(books)))
-
-  /** Deterministic per-subspace codebook training over a pinned corpus
-    * `(nbr_id, nv, vv)` and its sub-vector table: ONE hash-ordered
-    * seed-document set supplies every subspace's initial centroids (same
-    * md5 ordering as [[trainIvfCents]] — SQL-replayable), then
-    * `lloydIters` rounds of integer-exact assignment + per-dim rounded
-    * means. Returns the localized `(sub, cent_id, cv, cc)` codebooks. */
-  private def trainPqBooks(c: DataFrame, sv: DataFrame, kCents: Int,
-      lloydIters: Int): DataFrame = {
-    val seedW = Window.orderBy(md5(col("nbr_id").cast("string")))
-    val seeds = localized(c.orderBy(md5(col("nbr_id").cast("string"))).limit(kCents)
-      .select(row_number().over(seedW).cast("long").as("cent_id"), col("nbr_id")))
-    var books = localized(sv.join(broadcast(seeds), Seq("nbr_id"))
-      .select(col("sub"), col("cent_id"), col("sv").as("cv"))
-      .withColumn("cc", nqdot(col("cv"), col("cv"))))
-    for (_ <- 1 to lloydIters) {
-      // argmin projection carries sv along — no join back, no exchange
-      // before the tiny (sub, code, spos) agg (r15, guide §2.4)
-      val asg = withCode(sv, books)
-      val sums = asg.select(col("sub"), col("code"), posexplode(col("sv")).as(Seq("spos", "x")))
-        .groupBy(col("sub"), col("code"), col("spos"))
-        .agg(sum(col("x")).as("s"), count(lit(1)).as("cnt"))
-      books = localized(sums
-        .withColumn("mv", round(col("s").cast("double") / col("cnt").cast("double")).cast("long"))
-        .groupBy(col("sub"), col("code"))
-        .agg(transform(array_sort(collect_list(struct(col("spos"), col("mv")))),
-          e => e.getField("mv")).as("cv"))
-        .select(col("sub"), col("code").as("cent_id"), col("cv"))
-        .withColumn("cc", nqdot(col("cv"), col("cv"))))
+  /** Deterministic per-subspace codebooks of a [[trainingSet]]: over the
+    * raw vectors, or over their residuals v − cent(cell) against the
+    * trained coarse centroids (exact elementwise subtraction, the cell
+    * being the argmin cell). Subspace `s` slices dimensions s·dsub ..
+    * (s+1)·dsub − 1; ONE hash-ordered seed-document set — the first
+    * `kCents` rows, same md5 ordering as the IVF seeds — supplies every
+    * subspace's initial centroids 1..kCents, then `lloydIters` integer
+    * Lloyd rounds per subspace on the driver ([[Lloyd.train]]). */
+  private def trainPqBooks(xs: Array[Array[Long]], cents: Lloyd.Cents, residual: Boolean,
+      m: Int, dsub: Int, kCents: Int, lloydIters: Int): Seq[Lloyd.Cents] = {
+    val enc = if (!residual) xs else {
+      val mat = cents.matrix
+      xs.map { x =>
+        val c = cents.cvs(mat.indexOf(mat.argminAt(x, 0, Lloyd.dot(x, 0, x.length))))
+        Array.tabulate(x.length)(i => Math.subtractExact(x(i), c(i)))
+      }
     }
-    books
+    (0 until m).map(s => Lloyd.train(enc, s * dsub, dsub, kCents, lloydIters))
   }
 
   /** Product-quantization ADC top-k (Jégou, Douze & Schmid, "Product
@@ -613,18 +599,6 @@ object Similarity {
       if (released.compareAndSet(false, true)) segments.foreach(_.release())
   }
 
-  /** The residual frame `(id, rv)` of an `(id, nv, cell)` vector frame:
-    * rv = v − centroid(cell), an exact elementwise integer subtraction
-    * (SQL-replayable) against the broadcast centroid set — the frame the
-    * residual codebooks train on. Encoding residuals instead of raw
-    * vectors concentrates the code space around zero — every cell's
-    * vectors share one codebook that only has to cover within-cell
-    * variation — which is why the production IVF-PQ layout (Jégou et al.
-    * 2011 §IV-A) is residual-encoded. */
-  private def residualVecs(v: DataFrame, id: String, cents: DataFrame): DataFrame =
-    v.join(broadcast(cents.select(col("cent_id").as("cell"), col("cv"))), Seq("cell"))
-      .select(col(id), zip_with(col("nv"), col("cv"), (a, b) => a - b).as("rv"))
-
   /** The plan-time PQ arguments of the index kernels: the codebooks, plus
     * the centroids when the codes quantize residuals. */
   private def pqLits(books: DataFrame, cents: DataFrame, residual: Boolean): Seq[Column] =
@@ -634,8 +608,9 @@ object Similarity {
     * the cell argmin ([[withCell]]) and the m-code encoding
     * ([[graft.expressions.PqEncodeLong]], over the residual when
     * `residual`) as one projection against the stored centroids and
-    * codebooks — no exchange. Codes are bit-identical to the per-subspace
-    * argmin of [[withCode]] that training assigns. */
+    * codebooks — no exchange. Codes are the per-subspace argmin that
+    * training assigns ([[Lloyd.train]] runs the same [[graft.expressions
+    * .CellMatrix]] code). */
   private def storeRows(v: DataFrame, id: String, cents: DataFrame,
       books: DataFrame, residual: Boolean): DataFrame =
     withCell(v, "nv", "vv", cents).select(col(id), col("cell"),
@@ -644,14 +619,20 @@ object Similarity {
       col("nv"), col("vv"))
 
   /** Train an [[IvfPqIndex]] over `corpus`: [[trainIvfCents]]'s coarse
-    * quantizer + cell assignment (the IVF half), then [[trainPqBooks]]'s
-    * per-subspace integer Lloyd over either the raw vectors
-    * (`residual = false` — the r7 chain, q119's oracle) or the per-cell
-    * residuals (`residual = true` — Jégou §IV-A, q121's oracle), and one
-    * encoding pass that pins the packed store. Every step keeps the
-    * deterministic integer contracts, so the whole trained state is
-    * SQL-replayable. An empty corpus yields an empty index (dim = 0)
-    * whose searches return typed empty results.
+    * quantizer (the IVF half), then [[trainPqBooks]]'s per-subspace
+    * integer Lloyd over either the raw vectors (`residual = false` — the
+    * r7 chain, q119's oracle) or the per-cell residuals (`residual = true`
+    * — Jégou §IV-A, q121's oracle), and one encoding pass that pins the
+    * packed store. Every step keeps the deterministic integer contracts,
+    * so the whole trained state is SQL-replayable. An empty corpus yields
+    * an empty index (dim = 0) whose searches return typed empty results.
+    *
+    * Jobs: the corpus pin, ONE TakeOrdered collect of the hash-prefix
+    * [[trainingSet]] (256 vectors per centroid of the larger of the two
+    * models), whose Lloyd rounds all run on the driver, and the store
+    * pin. The corpus pin is released however the call ends; a vector of
+    * the wrong dimension fails the training set on the driver, or — past
+    * the training prefix — the store pin.
     *
     * Measured tradeoff (r8, sf0.1, same 96-bit budget + shortlist-50
     * rerank): flat 0.96 top-5 recall, residual 0.90 — on this suite's
@@ -670,35 +651,30 @@ object Similarity {
     val spark = corpus.sparkSession
     graft.expressions.GraftFunctions.register(spark)
     require(m > 0 && kCents > 1, s"need m > 0 subspaces and kCents > 1, got m=$m kCents=$kCents")
-    val (c, n) = Pinned.pinRows(Par.spread(corpus).select(col(idCol).as("nbr_id"), quantize(col(vecCol), scale).as("nv"))
-      .withColumn("vv", nqdot(col("nv"), col("nv"))))
-    if (n == 0L) { // empty corpus: typed empty index, no dim probe to throw
-      val cents = localized(c.select(lit(0L).as("cent_id"), col("nv").as("cv"),
-        lit(0L).as("cc")).limit(0))
-      val books = localized(c.select(lit(0).as("sub"), lit(0L).as("cent_id"),
-        col("nv").as("cv"), lit(0L).as("cc")).limit(0))
-      val store = Segment.pin(c.select(col("nbr_id"), lit(0L).as("cell"),
-        array().cast("array<int>").as("codes"), col("nv"), col("vv")).limit(0))
-      c.unpersist(false)
-      return IvfPqIndex(Vector(store), cents, books,
-        m, dsub = 0, dim = 0, kCents, nCells = 0, residual, scale)
+    Pinned.scoped(Par.spread(corpus).select(col(idCol).as("nbr_id"), quantize(col(vecCol), scale).as("nv"))
+        .withColumn("vv", nqdot(col("nv"), col("nv")))) { (c, n) =>
+      if (n == 0L) { // empty corpus: typed empty index, no dim probe to throw
+        val empty = new Lloyd.Cents(Array.empty, Array.empty, 0)
+        val store = Segment.pin(c.select(col("nbr_id"), lit(0L).as("cell"),
+          array().cast("array<int>").as("codes"), col("nv"), col("vv")).limit(0))
+        IvfPqIndex(Vector(store), centsFrame(spark, empty), booksFrame(spark, Nil),
+          m, dsub = 0, dim = 0, kCents, nCells = 0, residual, scale)
+      } else {
+        val cells = if (nCells > 0) nCells else math.max(4, math.ceil(math.sqrt(n.toDouble)).toInt)
+        val xs = trainingSet(c, math.max(cells, kCents))
+        val dim = xs.head.length
+        require(dim % m == 0, s"dim $dim must be divisible by m=$m subspaces")
+        val dsub = dim / m
+        // coarse quantizer (the IVF half), then the codebooks (the PQ half)
+        val ivf = trainIvfCents(xs, cells, ivfLloydIters)
+        val cents = centsFrame(spark, ivf)
+        val books = booksFrame(spark,
+          trainPqBooks(xs, ivf, residual, m, dsub, kCents, pqLloydIters))
+        // the stored representation: one row per vector, pinned once
+        val store = Segment.pin(storeRows(c, "nbr_id", cents, books, residual))
+        IvfPqIndex(Vector(store), cents, books, m, dsub, dim, kCents, cells, residual, scale)
+      }
     }
-    val dim = c.select(size(col("nv")).as("d")).head().getInt(0)
-    if (dim % m != 0) c.unpersist(false) // the require below must not leak the pin
-    require(dim % m == 0, s"dim $dim must be divisible by m=$m subspaces")
-    val dsub = dim / m
-    val cells = if (nCells > 0) nCells else math.max(4, math.ceil(math.sqrt(n.toDouble)).toInt)
-    // coarse quantizer (the IVF half)
-    val cents = trainIvfCents(c, cells, ivfLloydIters)
-    // codebooks (the PQ half), trained over raw vectors or residuals
-    val enc = if (residual) residualVecs(withCell(c, "nv", "vv", cents), "nbr_id", cents) else c
-    val sv = pin(pqSubVectors(enc, "nbr_id", if (residual) "rv" else "nv", m, dsub))
-    val books = trainPqBooks(c, sv, kCents, pqLloydIters)
-    sv.unpersist(false)
-    // the stored representation: one row per vector, pinned once
-    val store = Segment.pin(storeRows(c, "nbr_id", cents, books, residual))
-    c.unpersist(false)
-    IvfPqIndex(Vector(store), cents, books, m, dsub, dim, kCents, cells, residual, scale)
   }
 
   /** [[ivfPqTopK]]'s search half over a prebuilt [[IvfPqIndex]]: probe

@@ -221,8 +221,8 @@ object Unigram {
     * cost_micro) IS the whole model, so the single atomic-enough table
     * write needs no multi-table commit marker (a crash mid-write leaves a
     * directory [[loadVocab]] rejects fail-fast, never a mixed model —
-    * the single-table degenerate of the [[Classify.saveNbModel]]
-    * staged-swap contract). Train once, [[encodeCounts]] every ingest
+    * the single-table degenerate of the [[IndexFiles]] commit-marker
+    * contract). Train once, [[encodeCounts]] every ingest
     * batch forever. */
   def saveVocab(vocab: DataFrame, path: String): Unit =
     vocab.select(col("piece"), col("cnt"), col("cost_micro"))

@@ -17,17 +17,16 @@ import graft.functions.Text
   * prefix ("lower" → `l ##o ##w ##e ##r`), which [[Text.normalize]]'s
   * `[a-z0-9]` alphabet can never collide with.
   *
-  * Scale shape — identical to [[Bpe]]: all statistics live on the
-  * unique-word-frequency table ([[Bpe.wordCounts]], ONE corpus-wide
-  * hash-agg), each merge round is a couple of vocab-sized jobs, and
-  * encoding is a join-free codegen'd expression over DISTINCT words.
-  * Unlike BPE's count-based merges, score-based merges cannot be batched
-  * by [[Bpe]]'s `selectBatch` argument: merging (a, b) SHRINKS the
-  * remaining counts of a and b, which can RAISE the score of every other
-  * pair touching them above any still-unmerged candidate — so rounds are
-  * genuinely sequential (one merge per round, exactly how reference
-  * WordPiece trainers iterate) and `numMerges` should stay in the 10²–10⁴
-  * regime a scheduler round-trip per merge can afford.
+  * Scale shape: all statistics live on the unique-word-frequency table
+  * ([[Bpe.wordCounts]], ONE corpus-wide hash-agg), each merge round is a
+  * couple of vocab-sized jobs, and encoding is a join-free codegen'd
+  * expression over DISTINCT words. Score-based merges are sequential:
+  * merging (a, b) SHRINKS the remaining counts of a and b, which can
+  * RAISE the score of every other pair touching them above any
+  * still-unmerged candidate — so one merge per round, exactly how
+  * reference WordPiece trainers iterate, and `numMerges` should stay in
+  * the 10²–10⁴ regime a scheduler round-trip per merge can afford
+  * ([[Bpe.train]] runs its merge loop on the driver instead).
   *
   * Determinism: pair and symbol counts are exact long sums; the argmax
   * score is ONE double division of two exactly-representable integers

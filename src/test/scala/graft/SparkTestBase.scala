@@ -1,6 +1,8 @@
 package graft
 
-import java.util.concurrent.atomic.AtomicInteger
+import java.util.concurrent.ConcurrentLinkedQueue
+
+import scala.jdk.CollectionConverters._
 
 import org.apache.spark.ListenerBusAccess
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
@@ -42,15 +44,22 @@ trait SparkTestBase extends AnyFunSuite {
     SparkTestBase.withSQLConf(pairs: _*)(f)
 
   /** The number of Spark jobs started while `f` ran. */
-  def jobsRun(f: => Unit): Int = {
+  def jobsRun(f: => Unit): Int = jobExecutions(f).size
+
+  /** The SQL execution id of each Spark job started while `f` ran, in start
+    * order — None for a job outside any SQL execution (an RDD action). */
+  def jobExecutions(f: => Unit): Seq[Option[String]] = {
     val sc = spark.sparkContext
-    val jobs = new AtomicInteger
+    val jobs = new ConcurrentLinkedQueue[Option[String]]
     val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = { jobs.incrementAndGet(); () }
+      override def onJobStart(e: SparkListenerJobStart): Unit = {
+        jobs.add(Option(e.properties).flatMap(p => Option(p.getProperty("spark.sql.execution.id"))))
+        ()
+      }
     }
     ListenerBusAccess.drain(sc) // earlier jobs' events must not reach it
     sc.addSparkListener(listener)
     try { f; ListenerBusAccess.drain(sc) } finally sc.removeSparkListener(listener)
-    jobs.get
+    jobs.asScala.toSeq
   }
 }

@@ -1,5 +1,6 @@
 package graft.operators
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.prop.TableDrivenPropertyChecks._
 import graft.SparkTestBase
@@ -110,16 +111,57 @@ class BpeSpec extends SparkTestBase {
     assert(merges.length == 1)
   }
 
-  test("batched train ≡ strictly sequential train (maxBatch=1), ranks and counts") {
-    // a corpus with count ties, self-pairs, and overlapping-symbol pairs —
-    // the cases selectBatch's guards exist for
+  /** The relational round loop `train` ran before its merge loop moved to
+    * the driver, at one merge a round: per round, the (pc DESC, a, b)
+    * argmax of the Spark pair counts, then one `applyMerge` projection. */
+  private def sparkRounds(words: DataFrame, numMerges: Int): Seq[(Int, String, String, Long)] = {
+    var state = words.localCheckpoint(true)
+    val merges = scala.collection.mutable.ArrayBuffer.empty[(Int, String, String, Long)]
+    var done = false
+    while (merges.size < numMerges && !done) {
+      val top = Bpe.pairCounts(state).orderBy(col("pc").desc, col("a"), col("b")).limit(1).collect()
+      if (top.isEmpty) done = true
+      else {
+        val (a, b, pc) = (top(0).getString(0), top(0).getString(1), top(0).getLong(2))
+        merges += ((merges.size + 1, a, b, pc))
+        state = state.select(col("word"), col("cnt"),
+          Bpe.applyMerge(col("syms"), lit(a), lit(b)).as("syms")).localCheckpoint(true)
+      }
+    }
+    merges.toSeq
+  }
+
+  test("driver merge loop ≡ the Spark round loop (maxBatch=1), ranks and counts") {
+    // a corpus with count ties, self-pairs, and overlapping-symbol pairs
     val tricky = corpus.unionByName(Seq(
       (5L, "aaaa aaaa banana banana banana"),
       (6L, "abcabc abcabc xyxyxy")).toDF("doc_id", "text"))
-    val seqMerges = Bpe.train(tricky, "text", 12, maxBatch = 1)
+    val words = Bpe.wordCounts(tricky, "text")
+      .select(col("word"), col("cnt"), Bpe.charSymbols(col("word")).as("syms"))
+    val driver = Bpe.train(tricky, "text", 12)
       .collect().map(r => (r.getInt(0), r.getString(1), r.getString(2), r.getLong(3))).toSeq
-    val batMerges = Bpe.train(tricky, "text", 12, maxBatch = 16)
-      .collect().map(r => (r.getInt(0), r.getString(1), r.getString(2), r.getLong(3))).toSeq
-    assert(batMerges == seqMerges)
+    assert(driver == sparkRounds(words, 12))
+    // Text.normalize keeps train's alphabet to [a-z0-9], so the UTF-8 tie
+    // order is checked on the merge loop itself: a seeded vocabulary over
+    // BMP and supplementary-plane symbols with many count ties, plus a
+    // planted top tie — (U+FF41, x) and (U+1F600, x) at count 1000, where
+    // UTF-8 byte order puts U+FF41 first and UTF-16 order the other way
+    val alphabet = Seq("a", "b", "\u00e9", "\uff41", "\ud83d\ude00", "\ud801\udc00")
+    val rnd = new scala.util.Random(11)
+    val seeded = Seq(("\uff41x", 1000L), ("\ud83d\ude00x", 1000L)) ++ Seq.fill(40) {
+      (Seq.fill(2 + rnd.nextInt(5))(alphabet(rnd.nextInt(alphabet.size))).mkString, 1L + rnd.nextInt(3))
+    }.distinctBy(_._1)
+    val seededWords = seeded.toDF("word", "cnt")
+      .select(col("word"), col("cnt"), Bpe.charSymbols(col("word")).as("syms"))
+    val vocab = seededWords.collect().map(r => (r.getString(2), r.getLong(1))).toSeq
+    val learned = Bpe.learnMerges(vocab, 30).zipWithIndex
+      .map { case ((a, b, pc), i) => (i + 1, a, b, pc) }
+    assert(learned.take(2).map(_._2) == Seq("\uff41", "\ud83d\ude00"))
+    assert(learned == sparkRounds(seededWords, 30))
+  }
+
+  test("job budget: train runs the one word-count collect (≤ 3 jobs)") {
+    val jobs = jobsRun { Bpe.train(corpus, "text", 8) }
+    assert(jobs <= 3, s"$jobs jobs")
   }
 }

@@ -475,9 +475,9 @@ class DedupSimilaritySpec extends SparkTestBase {
 
   test("an index re-save that fails mid-way leaves no commit marker: the load names it") {
     val boom = raise_error(lit("injected write failure"))
-    def failsToLoad(load: => Any): Unit = {
+    def failsToLoad(load: => Any, marker: String = "params"): Unit = {
       val e = intercept[IllegalArgumentException](load)
-      assert(e.getMessage.contains("missing component(s): params"), e.getMessage)
+      assert(e.getMessage.contains(s"missing component(s): $marker"), e.getMessage)
     }
     val dir = java.nio.file.Files.createTempDirectory("graft_resave").toString
     // embedding: vecs, then buckets (fails), then the params marker
@@ -506,6 +506,16 @@ class DedupSimilaritySpec extends SparkTestBase {
     intercept[Exception](Similarity.saveIvfPqIndex(bad, s"$dir/ivf"))
     ix.release()
     failsToLoad(Similarity.loadIvfPqIndex(spark, s"$dir/ivf"))
+    // Naive Bayes: token_lik fails at write time; class_stats is the marker
+    val nb = Classify.nbTrain(Seq(("spam", "cheap pills now"), ("ham", "lunch at noon"))
+      .toDF("label", "text"), "label", "text")
+    Classify.saveNbModel(nb, s"$dir/nb")
+    val badLik = nb.tokenLik.withColumn("lik_micro",
+      when(col("token") === "pills", boom).otherwise(col("lik_micro")))
+    intercept[Exception](Classify.saveNbModel(nb.copy(tokenLik = badLik), s"$dir/nb"))
+    failsToLoad(Classify.loadNbModel(spark, s"$dir/nb"), "class_stats")
+    Classify.saveNbModel(nb, s"$dir/nb")
+    assert(rowSet(Classify.loadNbModel(spark, s"$dir/nb").classStats) == rowSet(nb.classStats))
   }
 
   test("failing index builds check arguments before pinning and leak no pin") {
@@ -742,8 +752,9 @@ class DedupSimilaritySpec extends SparkTestBase {
     assert(viaExpr.filter(col("cell") === 5L).isEmpty)
     assert(!viaExpr.filter(col("cell") === 2L).isEmpty)
 
-    // per-subspace code argmin vs the same reference formulation, with a
-    // duplicated codebook entry inside sub 1 (codes 1 and 3 identical)
+    // per-subspace code argmin (graft_pq_encode's m argmins) vs the same
+    // reference formulation, with a duplicated codebook entry inside sub 1
+    // (codes 1 and 3 identical)
     val sv = vecs.select(col("id"), posexplode(array(
         slice(col("v"), 1, 2), slice(col("v"), 3, 2))).as(Seq("sub", "sv")))
       .withColumn("svv", call_function("graft_qdot", col("sv"), col("sv")))
@@ -754,9 +765,9 @@ class DedupSimilaritySpec extends SparkTestBase {
       .withColumn("cc", call_function("graft_qdot", col("cv"), col("cv")))
     val booksLit = typedLit(books.collect().toSeq
       .map(r => (r.getInt(0), r.getLong(1), r.getSeq[Long](2), r.getLong(3))))
-    val codeExpr = sv.select(col("id"), col("sub"),
-      call_function("graft_code_argmin", col("sub"), col("sv"), col("svv"),
-        booksLit).as("code"))
+    val codeExpr = vecs.select(col("id"), posexplode(
+        call_function("graft_pq_encode", col("v"), lit(0L), booksLit)).as(Seq("sub", "code")))
+      .select(col("id"), col("sub"), col("code").cast("long"))
     val codeJoin = sv.join(broadcast(books), Seq("sub"))
       .withColumn("d2", col("svv")
         - lit(2) * call_function("graft_qdot", col("sv"), col("cv")) + col("cc"))
@@ -1187,18 +1198,20 @@ class DedupSimilaritySpec extends SparkTestBase {
       !cells.contains(5L) || cells.indexOf(2L) == cells.indexOf(5L) - 1
     })
 
-    // codes: per-slice graft_code_argmin over v (non-residual) and over
-    // v − c(cell) (residual, the cell being the argmin cell)
+    // codes: per-slice join+min(struct) argmin over v (non-residual) and
+    // over v − c(cell) (residual, the cell being the argmin cell)
     val withCell = vecs.withColumn("cell",
       call_function("graft_cell_argmin", col("v"), col("vv"), centsLit))
       .join(broadcast(cents.select(col("cent_id").as("cell"), col("cv"))), Seq("cell"))
       .withColumn("rv", zip_with(col("v"), col("cv"), (a, b) => a - b))
     def codesRef(vec: String) = withCell.select(col("id"),
         posexplode(array(slice(col(vec), 1, 2), slice(col(vec), 3, 2))).as(Seq("sub", "sv")))
-      .withColumn("code", call_function("graft_code_argmin", col("sub"), col("sv"),
-        qdot(col("sv"), col("sv")), booksLit))
-      .groupBy(col("id")).agg(transform(array_sort(collect_list(struct(col("sub"), col("code")))),
-        e => e.getField("code").cast("int")).as("codes"))
+      .join(broadcast(books.select(col("sub"), col("cent_id"), col("cv").as("bv"), col("cc"))),
+        Seq("sub"))
+      .withColumn("d2", qdot(col("sv"), col("sv")) - lit(2) * qdot(col("sv"), col("bv")) + col("cc"))
+      .groupBy(col("id"), col("sub")).agg(min(struct(col("d2"), col("cent_id"))).as("m"))
+      .groupBy(col("id")).agg(transform(array_sort(collect_list(struct(col("sub"), col("m.cent_id")))),
+        e => e.getField("cent_id").cast("int")).as("codes"))
     for ((extra, vec) <- Seq((Nil, "v"), (Seq(centsLit), "rv"))) {
       val enc = bothModes(withCell.select(col("id"),
         call_function("graft_pq_encode", col("v") +: col("cell") +: booksLit +: extra: _*)))
@@ -1393,6 +1406,29 @@ class DedupSimilaritySpec extends SparkTestBase {
     assert(planeJobs == 0, s"$planeJobs jobs")
   }
 
+  test("job budgets: ivfPqIndex ≤ 4 jobs; ivfTopK and prototypicality train in ≤ 4") {
+    val corpus = vecRows(0L until 64L).localCheckpoint(true)
+    for (residual <- Seq(false, true)) {
+      var ix: Similarity.IvfPqIndex = null
+      val jobs = jobsRun {
+        ix = Similarity.ivfPqIndex(corpus, "vec_id", "embedding",
+          nCells = 4, m = 3, kCents = 4, residual = residual)
+      }
+      ix.release()
+      assert(jobs <= 4, s"residual=$residual: $jobs jobs")
+    }
+    // the jobs before the search/score stage, which is the call's last SQL
+    // execution (its checkpoint)
+    def beforeLast(f: => Unit): Int = {
+      val ex = jobExecutions(f)
+      ex.takeWhile(_ != ex.last).size
+    }
+    val ivf = beforeLast(Similarity.ivfTopK(corpus, vecRows(Seq(0L, 5L)), "vec_id", "embedding",
+      k = 3, nCells = 4))
+    val proto = beforeLast(Similarity.prototypicality(corpus, "vec_id", "embedding", nCells = 4))
+    assert(ivf <= 4 && proto <= 4, s"ivfTopK $ivf, prototypicality $proto jobs")
+  }
+
   test("hyperplanes: driver-side planes ≡ the SQL md5 spelling the oracles use") {
     for (seed <- Seq(42L, 7L, -3L)) {
       val t = spark.range(3).select(col("id").as("t"))
@@ -1410,6 +1446,149 @@ class DedupSimilaritySpec extends SparkTestBase {
       assert(got.size == 165 && got == rowSet(viaSql), s"seed $seed")
       assert(got.map(_(3)) == Set(1L, -1L))
     }
+  }
+
+  private def md5hex(s: String): String =
+    java.security.MessageDigest.getInstance("MD5")
+      .digest(s.getBytes(java.nio.charset.StandardCharsets.UTF_8)).map("%02x".format(_)).mkString
+
+  /** The relational IVF and PQ trainers the index used before training
+    * moved to the driver — one Spark aggregate plus one collect per Lloyd
+    * round — with the per-subspace code argmin spelled as the
+    * (d2, cent_id)-ordered window over a codebook join. */
+  private object RelationalTraining {
+    private def qdot(a: Column, b: Column) = call_function("graft_qdot", a, b)
+    private def localized(df: DataFrame): DataFrame =
+      spark.createDataFrame(java.util.Arrays.asList(df.collect(): _*), df.schema)
+    private def byMd5 = md5(col("nbr_id").cast("string"))
+    def withCell(c: DataFrame, cents: DataFrame): DataFrame =
+      c.withColumn("cell", call_function("graft_cell_argmin", col("nv"), col("vv"),
+        typedLit(cents.select("cent_id", "cv", "cc").collect().toSeq
+          .map(r => (r.getLong(0), r.getSeq[Long](1), r.getLong(2))))))
+
+    def cents(c: DataFrame, cells: Int, lloydIters: Int): DataFrame = {
+      var cents = localized(c.orderBy(byMd5).limit(cells)
+        .select(row_number().over(Window.orderBy(byMd5)).cast("long").as("cent_id"),
+          col("nv").as("cv"), col("vv").as("cc")))
+      for (_ <- 1 to lloydIters) {
+        val sums = withCell(c, cents).select(col("cell"), posexplode(col("nv")).as(Seq("pos", "x")))
+          .groupBy(col("cell"), col("pos"))
+          .agg(sum(col("x")).as("s"), count(lit(1)).as("cnt"))
+        cents = localized(sums
+          .withColumn("m", round(col("s").cast("double") / col("cnt").cast("double")).cast("long"))
+          .groupBy(col("cell"))
+          .agg(transform(array_sort(collect_list(struct(col("pos"), col("m")))),
+            e => e.getField("m")).as("cv"))
+          .select(col("cell").as("cent_id"), col("cv"))
+          .withColumn("cc", qdot(col("cv"), col("cv"))))
+      }
+      cents
+    }
+
+    def books(c: DataFrame, cents: DataFrame, residual: Boolean,
+        m: Int, dsub: Int, kCents: Int, lloydIters: Int): DataFrame = {
+      val enc = if (!residual) c.select(col("nbr_id"), col("nv").as("ev"))
+        else withCell(c, cents)
+          .join(broadcast(cents.select(col("cent_id").as("cell"), col("cv"))), Seq("cell"))
+          .select(col("nbr_id"), zip_with(col("nv"), col("cv"), (a, b) => a - b).as("ev"))
+      val sv = enc.select(col("nbr_id"), posexplode(array(
+          (0 until m).map(s => slice(col("ev"), s * dsub + 1, dsub)): _*)).as(Seq("sub", "sv")))
+        .withColumn("svv", qdot(col("sv"), col("sv"))).localCheckpoint(true)
+      val seeds = localized(c.orderBy(byMd5).limit(kCents)
+        .select(row_number().over(Window.orderBy(byMd5)).cast("long").as("cent_id"), col("nbr_id")))
+      var books = localized(sv.join(broadcast(seeds), Seq("nbr_id"))
+        .select(col("sub"), col("cent_id"), col("sv").as("cv"))
+        .withColumn("cc", qdot(col("cv"), col("cv"))))
+      for (_ <- 1 to lloydIters) {
+        val nearest = Window.partitionBy(col("nbr_id"), col("sub")).orderBy(col("d2"), col("cent_id"))
+        val asg = sv.join(broadcast(books.select(col("sub"), col("cent_id"), col("cv"), col("cc"))), Seq("sub"))
+          .withColumn("d2", col("svv") - lit(2) * qdot(col("sv"), col("cv")) + col("cc"))
+          .withColumn("r", row_number().over(nearest))
+          .filter(col("r") === 1)
+          .select(col("sub"), col("cent_id").as("code"), col("sv"))
+        val sums = asg.select(col("sub"), col("code"), posexplode(col("sv")).as(Seq("spos", "x")))
+          .groupBy(col("sub"), col("code"), col("spos"))
+          .agg(sum(col("x")).as("s"), count(lit(1)).as("cnt"))
+        books = localized(sums
+          .withColumn("mv", round(col("s").cast("double") / col("cnt").cast("double")).cast("long"))
+          .groupBy(col("sub"), col("code"))
+          .agg(transform(array_sort(collect_list(struct(col("spos"), col("mv")))),
+            e => e.getField("mv")).as("cv"))
+          .select(col("sub"), col("code").as("cent_id"), col("cv"))
+          .withColumn("cc", qdot(col("cv"), col("cv"))))
+      }
+      books
+    }
+  }
+
+  test("driver-trained IVF centroids and PQ codebooks ≡ the relational Lloyd chain, bit for bit") {
+    graft.expressions.GraftFunctions.register(spark)
+    // small-integer milli-unit vectors, so per-dim means often land on .5;
+    // the md5-second vector copies the md5-first one, so seed 2 ties seed 1
+    // on every vector and its cell (and PQ code 2) empties in round one
+    def seeded(seed: Int, n: Int): DataFrame = {
+      val rnd = new scala.util.Random(seed)
+      val v = Array.fill(n)(Array.fill(4)((rnd.nextInt(13) - 6) / 1000.0f))
+      val order = (0 until n).sortBy(i => md5hex(i.toString))
+      v(order(1)) = v(order(0))
+      v.indices.map(i => (i.toLong, v(i))).toDF("vec_id", "embedding")
+    }
+    // one cell, one round: dims 0 and 1 average exactly −2.5 and +2.5
+    val halves = Seq((0L, Seq(-1, 1, 0, -5)), (1L, Seq(-2, 2, 0, 0)),
+        (2L, Seq(-3, 3, 0, 0)), (3L, Seq(-4, 4, 1, 0)))
+      .map { case (i, x) => (i, x.map(_ / 1000.0f).toArray) }.toDF("vec_id", "embedding")
+    for ((name, corpus) <- Seq("seeded-40" -> seeded(5, 40), "seeded-64" -> seeded(6, 64),
+        "halves" -> halves)) {
+      val c = corpus.select(col("vec_id").as("nbr_id"), Similarity.quantize(col("embedding")).as("nv"))
+        .withColumn("vv", call_function("graft_qdot", col("nv"), col("nv"))).localCheckpoint(true)
+      val n = c.count()
+      for (cells <- Seq(1, 4, math.ceil(math.sqrt(n.toDouble)).toInt).distinct; rounds <- Seq(0, 1, 4)) {
+        val refCents = RelationalTraining.cents(c, cells, rounds)
+        if (name != "halves" && cells > 1 && rounds > 0)
+          assert(refCents.count() < cells, s"$name cells=$cells: no cell emptied")
+        for (residual <- Seq(false, true)) {
+          val ctx = s"$name cells=$cells rounds=$rounds residual=$residual"
+          val ix = Similarity.ivfPqIndex(corpus, "vec_id", "embedding", nCells = cells,
+            ivfLloydIters = rounds, m = 2, kCents = 4, pqLloydIters = rounds, residual = residual)
+          try {
+            assert(rowSet(ix.cents) == rowSet(refCents), ctx)
+            assert(rowSet(ix.books) ==
+              rowSet(RelationalTraining.books(c, refCents, residual, 2, 2, 4, rounds)), ctx)
+          } finally ix.release()
+        }
+      }
+    }
+    // Spark's round is HALF_UP away from zero: −2.5 → −3 (Math.round: −2)
+    val one = Similarity.ivfPqIndex(halves, "vec_id", "embedding", nCells = 1,
+      ivfLloydIters = 1, m = 2, kCents = 4)
+    try assert(one.cents.collect().map(_.getSeq[Long](1)).toSeq == Seq(Seq(-3L, 3L, 0L, -1L)))
+    finally one.release()
+  }
+
+  test("a training set of mixed dimensions fails on the driver and leaks no pin") {
+    def pinned = spark.sparkContext.getPersistentRDDs.keySet.toSet
+    val mixed = vecRows(0L until 8L)
+      .union(Seq((8L, Array(0.1f, 0.2f, 0.3f))).toDF("vec_id", "embedding"))
+    val builds = Seq[(String, () => Any)](
+      "ivfPqIndex" -> (() => Similarity.ivfPqIndex(mixed, "vec_id", "embedding", nCells = 2, m = 3)),
+      "ivfTopK" -> (() => Similarity.ivfTopK(mixed, mixed, "vec_id", "embedding", k = 2, nCells = 2)),
+      "prototypicality" -> (() => Similarity.prototypicality(mixed, "vec_id", "embedding", nCells = 2)))
+    for ((name, build) <- builds) {
+      val before = pinned
+      val e = intercept[IllegalArgumentException](build())
+      assert(e.getMessage.contains("dimensions differ"), s"$name: ${e.getMessage}")
+      assert(pinned == before, name)
+    }
+    // past the 256·max(nCells, kCents) = 512-vector training prefix the
+    // three-dim vector fails the store pin instead; both pins are released
+    val ids = 0L until 600L
+    val last = ids.maxBy(i => md5hex(i.toString))
+    val wide = ids.map(i => (i,
+      if (i == last) Array(0.1f, 0.2f, 0.3f) else Array.tabulate(6)(j => ((i * 7 + j) % 11).toFloat)))
+    val before = pinned
+    intercept[Exception](Similarity.ivfPqIndex(wide.toDF("vec_id", "embedding"), "vec_id", "embedding",
+      nCells = 2, m = 3, kCents = 2))
+    assert(pinned == before)
   }
 
   private def exceptionChain(e: Throwable): Seq[Throwable] =
