@@ -10,23 +10,28 @@ object Tables {
   val all = Seq("region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings")
 
-  /** Parquet schema memo, keyed on the table path (guide §1/§6: plan the
-    * scan once). A bare `spark.read.parquet(path)` runs a 1-task
-    * schema-inference JOB on every call — r16 profiling showed every query
-    * paying one ~30–50 ms footer-read job PER TABLE READ (two-table joins
-    * pay two), pure fixed overhead across all 260 bench queries. The memo
-    * holds the file's own inferred schema (first read per path pays the
+  /** Parquet schema memo, keyed on the table path plus the length and
+    * modification time of what is there (guide §1/§6: plan the scan once).
+    * A bare `spark.read.parquet(path)` runs a 1-task schema-inference JOB
+    * on every call — r16 profiling showed every query paying one ~30–50 ms
+    * footer-read job PER TABLE READ (two-table joins pay two), pure fixed
+    * overhead across all 260 bench queries. The memo holds the file's own
+    * inferred schema (the first read of a path's current contents pays the
     * inference), so later reads plan with `.schema(...)` and skip the job.
-    * METADATA only — never rows or results: every query still computes
-    * from the parquet input on every run. The testdata tables are
-    * immutable per path; a rewritten path with a NEW schema would need a
-    * process restart (not a shape any graft main produces). */
-  private val schemaCache =
-    new java.util.concurrent.ConcurrentHashMap[String, org.apache.spark.sql.types.StructType]()
+    * The key costs one file-status call on the driver, not a Spark job, and
+    * a path rewritten since — say with another schema — no longer matches
+    * its old entry, so it is inferred again instead of being read with
+    * stale columns. METADATA only — never rows or results: every query
+    * still computes from the parquet input on every run. */
+  private val schemaCache = new java.util.concurrent.ConcurrentHashMap[
+    (String, Long, Long), org.apache.spark.sql.types.StructType]()
 
   def table(spark: SparkSession, sfDir: String, name: String): DataFrame = {
     val path = s"$sfDir/$name.parquet"
-    val schema = schemaCache.computeIfAbsent(path, p => spark.read.parquet(p).schema)
+    val hp = new org.apache.hadoop.fs.Path(path)
+    val st = hp.getFileSystem(spark.sparkContext.hadoopConfiguration).getFileStatus(hp)
+    val schema = schemaCache.computeIfAbsent((path, st.getLen, st.getModificationTime),
+      _ => spark.read.parquet(path).schema)
     spark.read.schema(schema).parquet(path)
   }
 

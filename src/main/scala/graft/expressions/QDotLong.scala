@@ -169,7 +169,7 @@ object GraftFunctions {
     spark.sessionState.functionRegistry.createOrReplaceTempFunction(
       "graft_adc_dot", children => AdcDotLong(children(0), children(1)), "scala_udf")
     spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_lsh_buckets", children => LshBucketsLong(children(0), children(1),
+      "graft_lsh_buckets", children => LshBucketsLong(children(0),
         LshBucketsLong.planeMatrixOf(children(1), "graft_lsh_buckets")), "scala_udf")
     // one document's shingle-hash set and MinHash signature; the shingle
     // width and the signature length must be INT literals

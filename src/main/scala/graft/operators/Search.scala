@@ -1,9 +1,9 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{LongType, StringType}
+import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 import org.apache.spark.storage.StorageLevel
 
 import graft.functions.Text
@@ -189,20 +189,31 @@ object Search {
       .select(col(idCol), col("token"),
         when(col("token").isNull, col("dl")).otherwise(col("tf")).as("tf"), col("dl"))
 
+  private val termDfSchema = StructType(Seq(StructField("token", StringType),
+    StructField("df", LongType, nullable = false), StructField("cf", LongType)))
+
   /** Pin segment rows and their (token, df, cf) frame as one [[Segment]].
-    * ONE fold over the (token, df, cf) rows materializes both caches
-    * (computing them reads every segment row) and reads the segment's row
-    * count (Σ df), document count N and token total TT — the latter two
-    * from the document rows' null-token group. Returns (segment, N, TT). */
+    * The (token, df, cf) rows are aggregated from the segment rows' cached
+    * batches, so ONE job builds both caches — the segment rows' on its map
+    * side, the frame's on its reduce side — and its fold reads the
+    * segment's row count (Σ df), document count N and token total TT (the
+    * latter two from the document rows' null-token group). Returns
+    * (segment, N, TT). */
   private def seal(segRows: DataFrame): (Segment, Long, Long) = {
     segRows.persist(StorageLevel.MEMORY_AND_DISK)
-    val dfs = segRows.groupBy("token")
-      .agg(count(lit(1)).as("df"), sum(col("tf")).as("cf"))
+    val (tok, tf) = (segRows.schema.fieldIndex("token"), segRows.schema.fieldIndex("tf"))
+    val perToken = Pinned.cachedRows(segRows)
+      .map(r => (if (r.isNullAt(tok)) null else r.getUTF8String(tok).toString, (1L, r.getLong(tf))))
+      .reduceByKey((a, b) => (a._1 + b._1, a._2 + b._2))
+      .map { case (t, (df, cf)) => Row(t, df, cf) }
+    val dfs = segRows.sparkSession.createDataFrame(perToken, termDfSchema)
       .persist(StorageLevel.MEMORY_AND_DISK)
-    val (rows, n, tt) = Pinned.cachedRows(dfs)
-      .map(r => if (r.isNullAt(0)) (r.getLong(1), r.getLong(1), r.getLong(2)) else (r.getLong(1), 0L, 0L))
-      .fold((0L, 0L, 0L)) { case ((a, b, c), (x, y, z)) => (a + x, b + y, c + z) }
-    (new Segment(segRows, rows, Pinned.cachedRows(segRows).getNumPartitions, Seq(dfs)), n, tt)
+    try {
+      val (rows, n, tt) = Pinned.cachedRows(dfs)
+        .map(r => if (r.isNullAt(0)) (r.getLong(1), r.getLong(1), r.getLong(2)) else (r.getLong(1), 0L, 0L))
+        .fold((0L, 0L, 0L)) { case ((a, b, c), (x, y, z)) => (a + x, b + y, c + z) }
+      (new Segment(segRows, rows, Pinned.batches(segRows).getNumPartitions, Seq(dfs)), n, tt)
+    } catch { case e: Throwable => dfs.unpersist(false); segRows.unpersist(false); throw e }
   }
 
   /** Build a [[Bm25Index]] of one segment: one tokenize pass feeds one

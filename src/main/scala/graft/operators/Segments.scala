@@ -6,7 +6,11 @@ import org.apache.hadoop.fs.Path
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.classic.ClassicConversions.castToImpl
+import org.apache.spark.sql.columnar.CachedBatch
+import org.apache.spark.sql.execution.columnar.InMemoryRelation
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
+import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.storage.StorageLevel
 
 /** The one pin discipline every operator shares. */
@@ -20,12 +24,13 @@ private[graft] object Pinned {
 
   /** [[pin]], also returning the row count of the count that
     * materialized it — callers that need the size read it from here
-    * instead of paying a second count over the cache. The count reads no
-    * column of the cache (an empty projection), only its row counts. A
-    * count that fails releases the cache it started. */
+    * instead of paying a second count over the cache. The count sums the
+    * row counts of the cache's own batches, so it is ONE job after the
+    * frame's exchanges: it builds the batches as it counts them, and reads
+    * no column. A count that fails releases the cache it started. */
   def pinRows(df: DataFrame): (DataFrame, Long) = {
     df.persist(StorageLevel.MEMORY_AND_DISK)
-    try (df, cachedRows(df.select()).count())
+    try (df, batches(df).map(_.numRows.toLong).fold(0L)(_ + _))
     catch { case e: Throwable => df.unpersist(false); throw e }
   }
 
@@ -38,12 +43,25 @@ private[graft] object Pinned {
     try body(pinned, rows) finally pinned.unpersist(false)
   }
 
-  /** The rows of (a projection of) a persisted frame as an RDD, read
-    * through its cache: a fresh plan over it, so the cache is used however
-    * `df` was planned before. An RDD action over it runs ONE job after the
-    * frame's own exchanges; a DataFrame aggregate would add an exchange,
-    * and under adaptive execution a separate cache-materialization job. */
-  def cachedRows(df: DataFrame): RDD[InternalRow] = df.select("*").queryExecution.toRdd
+  /** The rows of a persisted frame as an RDD over its cached batches. An
+    * RDD action over it builds the batches it reads: ONE job after the
+    * frame's own exchanges. A fresh query over the cache would plan it as
+    * an adaptive-execution stage of its own and pay a separate job to
+    * materialize it first; a DataFrame aggregate would add an exchange. */
+  def cachedRows(df: DataFrame): RDD[InternalRow] = {
+    val rel = relation(df)
+    rel.cacheBuilder.serializer.convertCachedBatchToInternalRow(
+      rel.cacheBuilder.cachedColumnBuffers, rel.output, rel.output, SQLConf.get)
+  }
+
+  /** The cached batches of a persisted frame. Reaching them runs the
+    * frame's exchanges (their stages), not the batches themselves. */
+  def batches(df: DataFrame): RDD[CachedBatch] = relation(df).cacheBuilder.cachedColumnBuffers
+
+  private def relation(df: DataFrame): InMemoryRelation =
+    df.sparkSession.sharedState.cacheManager.lookupCachedData(castToImpl(df))
+      .getOrElse(throw new IllegalStateException("the frame is not persisted"))
+      .cachedRepresentation
 }
 
 /** One immutable, pinned part of a standing index: its frame, the row
@@ -73,7 +91,7 @@ private[operators] object Segment {
   /** Pin `df` as one segment with no side frames. */
   def pin(df: DataFrame): Segment = {
     val (frame, rows) = Pinned.pinRows(df)
-    new Segment(frame, rows, Pinned.cachedRows(frame).getNumPartitions, Nil)
+    new Segment(frame, rows, Pinned.batches(frame).getNumPartitions, Nil)
   }
 
   /** The segment list of an index extended by `seg`: the old list (each

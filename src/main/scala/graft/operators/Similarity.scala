@@ -1,10 +1,12 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, GraftColumns, Row, SparkSession}
+import org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{ArrayType, IntegerType, LongType, StructField, StructType}
 
+import graft.expressions.{LshBucketsLong, PlaneMatrix}
 import graft.operators.Pinned.pin
 
 /** Approximate-nearest-neighbor similarity search over embedding columns
@@ -88,11 +90,15 @@ object Similarity {
       dot(a, b) / (sqrt(dot(a, a)) * sqrt(dot(b, b))))
   }
 
+  /** The widest sized signature: [[sizedSignBits]]' default cap. */
+  private[operators] val maxSignBits = 24
+
   /** Smallest b in [minBits, maxBits] with 2^b · targetOccupancy ≥ n:
     * bucket count grows WITH the corpus so per-bucket occupancy — and with
     * it per-bucket candidate-pair volume — stays ~constant at any scale.
     * Integer-exact (no float log2) so the SQL oracle derives the same b. */
-  def sizedSignBits(n: Long, targetOccupancy: Int = 8, minBits: Int = 4, maxBits: Int = 24): Int = {
+  def sizedSignBits(n: Long, targetOccupancy: Int = 8, minBits: Int = 4,
+      maxBits: Int = maxSignBits): Int = {
     var b = minBits
     while (b < maxBits && (1L << b) * targetOccupancy < n) b += 1
     b
@@ -100,44 +106,37 @@ object Similarity {
 
   /** Deterministic seeded ±1 random hyperplanes, one row per
     * (table `t`, bit `j`, dimension `pos`): w = +1 iff the first md5 nibble
-    * of "seed|t|j|pos" is even. Rademacher (±1) entries are a standard
-    * random-projection basis (Achlioptas 2001) and keep the projection an
-    * exact integer sum. Tiny (nTables·bits·dim rows), so the planes are
-    * computed on the driver and returned as a local relation: collecting
-    * or broadcasting them runs no Spark job. The first hex nibble of the
-    * md5 is the high half of its first byte, so the weights are
-    * bit-identical to SQL's `md5(concat_ws('|', …))` spelling. */
+    * of "seed|t|j|pos" is even ([[graft.expressions.PlaneMatrix.seeded]],
+    * bit-identical to SQL's `md5(concat_ws('|', …))` spelling). Tiny
+    * (nTables·bits·dim rows), so the planes are computed on the driver and
+    * returned as a local relation: collecting or broadcasting them runs no
+    * Spark job. */
   def hyperplanes(spark: SparkSession, nTables: Int, bits: Int, dim: Int, seed: Long): DataFrame = {
     import spark.implicits._
-    val md5 = java.security.MessageDigest.getInstance("MD5")
-    val planes = for (t <- 0L until nTables; j <- 0L until bits; pos <- 0L until dim) yield {
-      val first = md5.digest(s"$seed|$t|$j|$pos".getBytes(java.nio.charset.StandardCharsets.UTF_8))(0)
-      (t, j, pos, if ((first & 0x10) == 0) 1L else -1L)
-    }
-    planes.toDF("t", "j", "pos", "w")
+    val m = PlaneMatrix.seeded(nTables, bits, dim, seed)
+    (for (t <- 0L until nTables; j <- 0L until bits; pos <- 0L until dim)
+      yield (t, j, pos, m.flat((((t * bits) + j) * dim + pos).toInt))).toDF("t", "j", "pos", "w")
   }
 
+  /** Each table's sign-LSH bucket of the quantized vector column `vecCol`
+    * against the plane matrix `planes`, as `array<bigint>` indexed by
+    * table: ONE codegen'd projection ([[graft.expressions.LshBucketsLong]] — r15: this
+    * replaces a dim-explode + broadcast plane join whose ×nTables·bits
+    * fan-out dominated every index build, plus its two hash-agg exchanges;
+    * guide §2.4). The matrix travels in the plan as primitive longs. A
+    * vector of another dimension fails the query with `graft_qdot`'s
+    * dimension error. */
+  private[operators] def lshBucketsOf(vecCol: String, planes: PlaneMatrix): Column =
+    GraftColumns.of(LshBucketsLong(UnresolvedAttribute.quoted(vecCol), planes))
+
   /** (id, t, bucket) for each row of `v` (id + quantized vector): bit j of
-    * table t's bucket = [v · r_tj ≥ 0]. ONE codegen'd projection against
-    * the plan-time plane matrix ([[graft.expressions.LshBucketsLong]] —
-    * r15: this replaces a dim-explode + broadcast plane join whose
-    * ×nTables·bits fan-out dominated every index build, plus its two
-    * hash-agg exchanges; guide §2.4). The plane table is localized the way
-    * [[graft.expressions.CellArgminLong]]'s centroids are — nTables·bits·
-    * dim rows, the same frame the join broadcast anyway. Bucket values are
-    * the identical exact-integer signs (SimilaritySpec asserts equality
-    * with the relational spelling). */
+    * table t's bucket = [v · r_tj ≥ 0] ([[lshBucketsOf]], exploded by
+    * table). Bucket values are the identical exact-integer signs
+    * (SimilaritySpec asserts equality with the relational spelling). */
   private[operators] def lshBuckets(
-      v: DataFrame, idCol: String, vecCol: String, planes: DataFrame): DataFrame = {
-    graft.expressions.GraftFunctions.register(v.sparkSession)
-    val rows = planes.select(col("t"), col("j"), col("pos"), col("w")).collect()
-    val planesLit = typedLit(rows.toSeq.map(r =>
-      (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))))
-    v.select(col(idCol), posexplode(
-        call_function("graft_lsh_buckets", col(vecCol), planesLit))
-      .as(Seq("t", "bucket")))
+      v: DataFrame, idCol: String, vecCol: String, planes: PlaneMatrix): DataFrame =
+    v.select(col(idCol), posexplode(lshBucketsOf(vecCol, planes)).as(Seq("t", "bucket")))
       .select(col(idCol), col("t").cast("long").as("t"), col("bucket"))
-  }
 
   /** Multi-probe expansion (Lv et al., "Multi-Probe LSH", VLDB 2007): each
     * (id, t, bucket) row fans out to the bucket itself plus its `bits`
@@ -205,7 +204,7 @@ object Similarity {
     } else {
       val bits = if (signBits > 0) signBits else sizedSignBits(n)
       val dim = c.select(size(col("nv")).as("d")).head().getInt(0)
-      val planes = hyperplanes(corpus.sparkSession, nTables, bits, dim, seed)
+      val planes = PlaneMatrix.seeded(nTables, bits, dim, seed)
       val q = pin(queries.select(col(idCol).as("query_id"), quantize(col(vecCol), scale).as("qv"))
         .withColumn("qn", nqdot(col("qv"), col("qv"))))
       val cb = lshBuckets(c, "nbr_id", "nv", planes)

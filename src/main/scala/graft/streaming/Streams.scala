@@ -527,29 +527,32 @@ object Streams {
 
   /** EMBEDDING dedup-at-ingest for ONE micro-batch (a plain DataFrame): drop
     * rows whose vector near-duplicates the standing corpus's
-    * [[graft.operators.Dedup.EmbeddingIndex]] — the batch is bucketed with
-    * the CORPUS's own hyperplane parameters and band-joined against its
-    * pinned buckets ([[graft.operators.Dedup.embeddingNearDupPairsBetween]]),
-    * exact-verified, then matched ids anti-join away. The vector sibling of
-    * [[dropNearDupsBatch]]: stateless across batches (matched against the
-    * static index only — build the index once per corpus snapshot), all
-    * keyed equi-joins, never all-pairs. */
+    * [[graft.operators.Dedup.EmbeddingIndex]]. The batch is bucketed with
+    * the CORPUS's own hyperplane parameters and collected as the broadcast
+    * probe side; one scan of the index's pinned frame finds and
+    * exact-verifies its near-dups
+    * ([[graft.operators.Dedup.embeddingNearDupPairsBetween]]), and the
+    * matched ids are filtered out — left-anti semantics: every row of a
+    * matched id is dropped, and rows with a null id or a null vector are
+    * kept. The vector sibling of [[dropNearDupsBatch]]: stateless across
+    * batches (matched against the static index only — build the index once
+    * per corpus snapshot), never all-pairs. Two Spark jobs before the
+    * result is read (the batch collect and the corpus scan); the result is
+    * the batch behind a filter. */
   def dropEmbeddingNearDupsBatch(batch: DataFrame, idCol: String, vecCol: String,
       corpusIndex: graft.operators.Dedup.EmbeddingIndex,
       threshold: Double = 0.4): DataFrame = {
-    require(!batch.columns.contains("__edid"),
-      "embedding ingest dedup reserves internal column name __edid; rename the input column")
-    val dup = graft.operators.Dedup.embeddingNearDupPairsBetween(
-        batch, corpusIndex, idCol, vecCol, threshold)
-      .select(col("id_a").as("__edid")).distinct()
-    batch.join(dup, batch(idCol) === col("__edid"), "left_anti")
+    val dup = graft.operators.Dedup.nearDupPairsBetween(
+      batch, corpusIndex, idCol, vecCol, threshold)._2.map(_.get(0)).distinct
+    if (dup.isEmpty) batch else batch.filter(col(idCol).isNull || !col(idCol).isin(dup: _*))
   }
 
   /** [[dropEmbeddingNearDupsBatch]] as a `foreachBatch` streaming writer —
     * the ingest face of the standing vector store (q115's shape run
     * continuously): every micro-batch of embeddings is matched against the
-    * pinned corpus index and only novel vectors reach `sink`. Caller sets
-    * trigger/options and `.start()`s the returned writer. */
+    * pinned corpus index by one scan of it, and only novel vectors reach
+    * `sink`. Caller sets trigger/options and `.start()`s the returned
+    * writer. */
   def dropEmbeddingNearDupsStreamBulk(stream: DataFrame, idCol: String, vecCol: String,
       corpusIndex: graft.operators.Dedup.EmbeddingIndex, threshold: Double = 0.4)(
       sink: DataFrame => Unit): org.apache.spark.sql.streaming.DataStreamWriter[Row] =

@@ -483,9 +483,9 @@ class DedupSimilaritySpec extends SparkTestBase {
     // embedding: vecs, then buckets (fails), then the params marker
     val emb = Dedup.embeddingIndex(vecs, "vec_id", "embedding", signBits = 3)
     Dedup.saveEmbeddingIndex(emb, s"$dir/emb")
-    val badBuckets = emb.buckets.withColumn("bucket",
-      when(col("id") === 2L, boom).otherwise(col("bucket")))
-    intercept[Exception](Dedup.saveEmbeddingIndex(emb.copy(buckets = badBuckets), s"$dir/emb"))
+    val badPacked = emb.packed.withColumn("bk",
+      when(col("id") === 2L, boom).otherwise(col("bk")))
+    intercept[Exception](Dedup.saveEmbeddingIndex(emb.copy(packed = badPacked), s"$dir/emb"))
     failsToLoad(Dedup.loadEmbeddingIndex(spark, s"$dir/emb"))
     // a clean re-save restores it; saving over the directory an index was
     // loaded from is refused before the marker is touched
@@ -796,6 +796,7 @@ class DedupSimilaritySpec extends SparkTestBase {
       (i.toLong, Array.tabulate(6)(j => ((i * 13 + j * 5) % 17 - 8).toLong))
     }.toDF("id", "v")
     val planes = Similarity.hyperplanes(spark, nTables = 3, bits = 4, dim = 6, seed = 42L)
+    val matrix = graft.expressions.PlaneMatrix.seeded(nTables = 3, bits = 4, dim = 6, seed = 42L)
     // the former relational formulation, verbatim
     val viaJoin = vecs.select(col("id"), posexplode(col("v")).as(Seq("pos", "x")))
       .join(broadcast(planes), Seq("pos"))
@@ -805,14 +806,14 @@ class DedupSimilaritySpec extends SparkTestBase {
       .agg(sum(when(col("s") >= 0,
         call_function("shiftleft", lit(1L), col("j").cast("int"))).otherwise(lit(0L)))
         .as("bucket"))
-    val viaExpr = Similarity.lshBuckets(vecs, "id", "v", planes)
+    val viaExpr = Similarity.lshBuckets(vecs, "id", "v", matrix)
     assert(rowSet(viaExpr) == rowSet(viaJoin))
     // schema parity with the stored-index layout: t stays a BIGINT
     assert(viaExpr.schema("t").dataType.typeName == "long")
     // dimension mismatch raises (the graft_qdot contract)
     val err = intercept[Exception] {
       Similarity.lshBuckets(
-        vecs.select(col("id"), slice(col("v"), 1, 3).as("v")), "id", "v", planes)
+        vecs.select(col("id"), slice(col("v"), 1, 3).as("v")), "id", "v", matrix)
         .collect()
     }
     assert(exceptionChain(err).exists(_.getMessage.contains("dimensions differ")))
@@ -1589,6 +1590,140 @@ class DedupSimilaritySpec extends SparkTestBase {
     intercept[Exception](Similarity.ivfPqIndex(wide.toDF("vec_id", "embedding"), "vec_id", "embedding",
       nCells = 2, m = 3, kCents = 2))
     assert(pinned == before)
+  }
+
+  /** The delta path the packed index replaced, kept as its reference:
+    * pinned delta → relational bucketing (dim-explode ⋈ hyperplanes, two
+    * aggregates) → multi-probe → (t, bucket) band join against the corpus
+    * buckets → distinct → exact-cosine verify against the corpus vectors. */
+  private def relationalBetween(delta: DataFrame, ix: Dedup.EmbeddingIndex,
+      threshold: Double, multiProbe: Boolean): Set[Seq[Any]] = {
+    import graft.expressions.GraftFunctions
+    GraftFunctions.register(spark)
+    val dv = delta.select(col("vec_id").as("id"), Similarity.quantize(col("embedding"), ix.scale).as("v"))
+      .withColumn("nn", call_function("graft_qdot", col("v"), col("v"))).persist()
+    val planes = Similarity.hyperplanes(spark, ix.nTables, ix.bits, ix.dim, ix.seed)
+    val db = dv.filter(col("v").isNotNull)
+      .select(col("id"), posexplode(col("v")).as(Seq("pos", "x")))
+      .join(broadcast(planes), Seq("pos"))
+      .groupBy(col("id"), col("t"), col("j")).agg(sum(col("w") * col("x")).as("s"))
+      .groupBy(col("id"), col("t"))
+      .agg(sum(when(col("s") >= 0, call_function("shiftleft", lit(1L), col("j").cast("int")))
+        .otherwise(lit(0L))).as("bucket"))
+    val probed = if (multiProbe) Similarity.multiProbe(db, "id", ix.bits) else db
+    val cand = probed.as("x").join(ix.buckets.as("y"),
+        col("x.t") === col("y.t") && col("x.bucket") === col("y.bucket") && col("x.id") =!= col("y.id"))
+      .select(col("x.id").as("id_a"), col("y.id").as("id_b")).distinct()
+    val out = cand
+      .join(dv.select(col("id").as("id_a"), col("v").as("va"), col("nn").as("na")), Seq("id_a"))
+      .join(ix.vecs.select(col("id").as("id_b"), col("v").as("vb"), col("nn").as("nb")), Seq("id_b"))
+      .withColumn("cosine", Similarity.cosineOf(
+        call_function("graft_qdot", col("va"), col("vb")), col("na"), col("nb")))
+      .filter(col("cosine") >= threshold)
+      .select("id_a", "id_b", "cosine")
+    try rowSet(out) finally dv.unpersist()
+  }
+
+  /** A seeded corpus of `n` 8-dim vectors: a zero vector, exact duplicate
+    * vectors under two ids, and clusters around a few directions so pairs
+    * spread over the cosine range. */
+  private def seededVectors(n: Int, seed: Int, idBase: Long): Seq[(Long, Array[Float])] = {
+    val rnd = new scala.util.Random(seed)
+    val centers = Array.fill(4)(Array.fill(8)(rnd.nextGaussian()))
+    Seq.tabulate(n) { i =>
+      val v = if (i == 3) Array.fill(8)(0.0f)
+        else {
+          val c = centers(i % 4)
+          c.map(x => (x + 0.9 * rnd.nextGaussian()).toFloat)
+        }
+      (idBase + i, v)
+    }
+  }
+
+  test("packed index delta scan ≡ the relational band-join path, bit for bit") {
+    val base = seededVectors(120, 11, 0L)
+    // exact duplicate vectors under two ids
+    val corpusRows = base :+ ((500L, base(7)._2.clone()))
+    val corpus = corpusRows.toDF("vec_id", "embedding")
+    val noisy = seededVectors(40, 12, 1000L)
+    val deltaRows = noisy ++ Seq(
+      (7L, base(7)._2.clone()), // overlaps a corpus id with the same vector
+      (8L, base(20)._2.clone()), // overlaps a corpus id, another vector
+      (2000L, base(9)._2.clone()), (2001L, base(9)._2.clone()), // duplicated delta vectors
+      (2002L, Array.fill(8)(0.0f))) // a zero vector (NULL cosine)
+    val delta = deltaRows.toDF("vec_id", "embedding")
+    val dir = java.nio.file.Files.createTempDirectory("graft_packed").toString
+    for ((threshold, tables) <- Seq((0.3, 24), (0.9, 16))) {
+      val ix = Dedup.embeddingIndex(corpus, "vec_id", "embedding", threshold = threshold)
+      assert(ix.nTables == tables && ix.bits == Similarity.sizedSignBits(corpusRows.size))
+      val loose = relationalBetween(delta, ix, threshold, multiProbe = false)
+      for (multiProbe <- Seq(true, false)) {
+        val want = relationalBetween(delta, ix, threshold, multiProbe)
+        val got = Dedup.embeddingNearDupPairsBetween(delta, ix, "vec_id", "embedding",
+          threshold, multiProbe)
+        assert(rowSet(got) == want, s"θ=$threshold multiProbe=$multiProbe")
+        assert(got.count() == want.size, "each pair once")
+        assert(want.nonEmpty)
+      }
+      // the Hamming-1 probes find pairs the exact buckets miss
+      assert(relationalBetween(delta, ix, threshold, multiProbe = true).size > loose.size || threshold > 0.5)
+      // save/load through the views: same rows, same pairs
+      Dedup.saveEmbeddingIndex(ix, s"$dir/t$tables")
+      val loaded = Dedup.loadEmbeddingIndex(spark, s"$dir/t$tables")
+      assert(rowSet(loaded.vecs) == rowSet(ix.vecs) && rowSet(loaded.buckets) == rowSet(ix.buckets))
+      assert(loaded.buckets.schema.map(f => (f.name, f.dataType)) ==
+        ix.buckets.schema.map(f => (f.name, f.dataType)))
+      assert(rowSet(Dedup.embeddingNearDupPairsBetween(delta, loaded, "vec_id", "embedding", threshold)) ==
+        rowSet(Dedup.embeddingNearDupPairsBetween(delta, ix, "vec_id", "embedding", threshold)))
+      // empty delta and empty corpus: zero pairs
+      assert(Dedup.embeddingNearDupPairsBetween(delta.limit(0), ix, "vec_id", "embedding",
+        threshold).count() == 0)
+      loaded.release(); ix.release()
+    }
+    val emptyIx = Dedup.embeddingIndex(corpus.limit(0), "vec_id", "embedding")
+    assert(Dedup.embeddingNearDupPairsBetween(delta, emptyIx, "vec_id", "embedding").count() == 0)
+    emptyIx.release()
+  }
+
+  test("the embedding gate leaks no pin: a batch or corpus of another dimension raises") {
+    def pinned = spark.sparkContext.getPersistentRDDs.keySet.toSet
+    val corpus = vecRows(0L until 20L)
+    val ix = Dedup.embeddingIndex(corpus, "vec_id", "embedding", signBits = 3)
+    val wrong = Seq((100L, Array(0.1f, 0.2f, 0.3f))).toDF("vec_id", "embedding")
+    val before = pinned
+    val e = intercept[Exception](graft.streaming.Streams.dropEmbeddingNearDupsBatch(
+      wrong, "vec_id", "embedding", ix, 0.9).collect())
+    assert(exceptionChain(e).exists(_.getMessage.contains("dimensions differ")), e.getMessage)
+    assert(pinned == before)
+    ix.release()
+    val mixed = corpus.union(wrong)
+    val start = pinned
+    val e2 = intercept[Exception](Dedup.embeddingIndex(mixed, "vec_id", "embedding", signBits = 3))
+    assert(exceptionChain(e2).exists(_.getMessage.contains("dimensions differ")), e2.getMessage)
+    assert(pinned == start)
+  }
+
+  test("job budgets: a one-file parquet pin ≤ 2 jobs; embeddingIndex ≤ 3; the ingest gate ≤ 3") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_budget").toString
+    vecRows(0L until 400L).coalesce(1).write.parquet(s"$dir/corpus")
+    vecRows(390L until 454L).coalesce(1).write.parquet(s"$dir/batch")
+    val corpus = spark.read.parquet(s"$dir/corpus")
+    var pinned: DataFrame = null
+    val pinJobs = jobsRun { pinned = Pinned.pin(Par.spread(corpus)) }
+    pinned.unpersist()
+    assert(pinJobs <= 2, s"pin: $pinJobs jobs")
+    var ix: Dedup.EmbeddingIndex = null
+    val buildJobs = jobsRun { ix = Dedup.embeddingIndex(corpus, "vec_id", "embedding", threshold = 0.9) }
+    assert(buildJobs <= 3, s"embeddingIndex: $buildJobs jobs")
+    val batch = spark.read.parquet(s"$dir/batch")
+    var kept: DataFrame = null
+    val gateJobs = jobsRun {
+      kept = graft.streaming.Streams.dropEmbeddingNearDupsBatch(batch, "vec_id", "embedding", ix, 0.9)
+        .localCheckpoint(true)
+    }
+    ix.release()
+    assert(kept.count() < 64L) // vecRows repeats every 23 ids: most batch vectors are corpus copies
+    assert(gateJobs <= 3, s"dropEmbeddingNearDupsBatch: $gateJobs jobs")
   }
 
   private def exceptionChain(e: Throwable): Seq[Throwable] =

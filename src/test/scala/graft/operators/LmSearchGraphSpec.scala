@@ -271,7 +271,7 @@ class LmSearchGraphSpec extends SparkTestBase {
     var ext: Search.Bm25Index = null
     val jobs = jobsRun { ext = Search.extendBm25Index(ix, segDocs(60L until 63L), "text") }
     assert(ext.segments.size == 2)
-    assert(jobs <= 5, s"$jobs jobs")
+    assert(jobs <= 3, s"$jobs jobs")
     ext.release(); ix.release()
   }
 

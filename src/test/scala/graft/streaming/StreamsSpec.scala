@@ -423,6 +423,27 @@ class StreamsSpec extends SparkTestBase {
     } finally { q.stop(); ix.release() }
   }
 
+  test("dropEmbeddingNearDupsBatch: null ids and null vectors survive; every row of a matched id is dropped") {
+    import graft.operators.Dedup
+    val corpus = Seq(
+      (1L, Array(1.0f, 0.0f, 0.0f)),
+      (2L, Array(0.0f, 1.0f, 0.0f))
+    ).toDF("vec_id", "embedding")
+    val ix = Dedup.embeddingIndex(corpus, "vec_id", "embedding", signBits = 3)
+    val batch = Seq[(java.lang.Long, Array[Float], String)](
+      (10L, Array(0.99f, 0.01f, 0.0f), "dup"),
+      (10L, Array(0.0f, 0.0f, 1.0f), "same id, novel vector"),
+      (null, Array(0.99f, 0.01f, 0.0f), "null id, near-dup vector"),
+      (11L, null, "null vector"),
+      (12L, Array(0.0f, 0.0f, 1.0f), "novel")
+    ).toDF("vec_id", "embedding", "tag")
+    try {
+      val kept = Streams.dropEmbeddingNearDupsBatch(batch, "vec_id", "embedding", ix, threshold = 0.9)
+        .select("tag").collect().map(_.getString(0)).toSet
+      assert(kept == Set("null id, near-dup vector", "null vector", "novel"))
+    } finally ix.release()
+  }
+
   test("assignEmbeddingsStreamBulk: streamed batches get stored-codebook assignments ≡ batch twin") {
     import graft.operators.Similarity
     implicit val sqlCtx = spark.sqlContext
