@@ -373,8 +373,8 @@ private[graft] object QueriesText extends OracleSqlHelpers {
             .cast(LongType).as("uni_fertility_micro"))
         .transform(Ops.sortSmallT(col("lang")))
     }),
-    // frozen-vocab token-budget admission ✚ (r10): the batch sibling of
-    // Streams.unigramBudgetStream — keep documents whose subword cost
+    // frozen-vocab token-budget admission ✚ (r10): the gate a stream runs
+    // per micro-batch through Streams.eachBatch — keep documents whose subword cost
     // under the trained vocab fits the budget (the context-window /
     // storage-cost gate an ingest pipeline runs before paying to embed)
     "q199_unigram_budget" -> ((s, d) => {

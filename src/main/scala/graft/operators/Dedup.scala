@@ -346,11 +346,8 @@ object Dedup {
       minDocFreq: Int = 2,
       outCol: String = "clean_text", nKeptCol: String = "n_lines_kept"): DataFrame = {
     require(minDocFreq >= 2, s"minDocFreq must be >= 2 (got $minDocFreq)")
-    val reserved = Seq("__bid", "__pos", "__line", "__tl", "__lh", outCol, nKeptCol)
-    val clash = df.columns.filter(reserved.contains)
-    require(clash.isEmpty,
-      s"stripBoilerplateLines reserves ${reserved.mkString("/")}; " +
-        s"rename input column(s): ${clash.mkString(", ")}")
+    Ops.requireUnreserved("stripBoilerplateLines",
+      Seq("__bid", "__pos", "__line", "__tl", "__lh", outCol, nKeptCol), df.columns)
     val lines = Par.spread(df)
       .select(col(idCol).as("__bid"),
         posexplode(split(col(textCol), "\n")).as(Seq("__pos", "__line")))
@@ -832,11 +829,8 @@ object Dedup {
         .select(col("id").as(idCol))
       Joins.join(df, folded, Seq(idCol), "anti")
     } else {
-      val reserved = Seq("__graft_comp", "__graft_rk")
-      val clash = df.columns.filter(reserved.contains)
-      require(clash.isEmpty,
-        s"dedupedCorpus(keepBy) reserves ${reserved.mkString("/")}; " +
-          s"rename input column(s): ${clash.mkString(", ")}")
+      Ops.requireUnreserved("dedupedCorpus(keepBy)",
+        Seq("__graft_comp", "__graft_rk"), df.columns)
       // labels cover EVERY doc (singletons label themselves), so the window
       // ranks each cluster once and keeps singletons trivially
       val labels = connectedComponents(pairs, df, idCol)

@@ -80,11 +80,9 @@ object Joins {
       rightSuffix: String = "_r"): DataFrame = {
     require(Seq("backward", "forward", "nearest").contains(direction),
       s"direction must be backward|forward|nearest, got $direction")
-    val reserved = Seq("__ts", "__side", "__l", "__r", "__m", "__mb", "__mf")
-    val clash = (left.columns ++ right.columns).distinct.filter(reserved.contains)
-    require(clash.isEmpty,
-      s"asofJoin reserves internal column names ${reserved.mkString("/")}; " +
-        s"rename input column(s): ${clash.mkString(", ")}")
+    Ops.requireUnreserved("asofJoin",
+      Seq("__ts", "__side", "__l", "__r", "__m", "__mb", "__mf"),
+      left.columns ++ right.columns)
     val rightVals = right.columns.filterNot(c => on.contains(c) || c == tsCol).toSeq
     val lStructT = StructType(left.schema.fields)
     val rStructT = StructType(right.schema(tsCol) +: rightVals.map(right.schema(_)))
@@ -280,7 +278,9 @@ object Joins {
     * but ~`fpp` of genuinely-novel rows are falsely dropped too. Use it
     * where losing fpp of novel rows is an acceptable price for testing
     * novelty without a join (crawl frontier, seen-URL sets); follow with
-    * an exact anti-join instead when completeness is contractual. */
+    * an exact anti-join instead when completeness is contractual. As an
+    * ingest gate it is stateless across batches: ids novel in one batch are
+    * NOT added to `seen` — fold them into the next run's bloom. */
   def bloomAntiFilter(df: DataFrame, keyCol: String, seen: Array[Byte]): DataFrame = {
     graft.expressions.GraftFunctions.register(df.sparkSession)
     df.filter(!call_function("graft_bloom_might_contain",
@@ -403,7 +403,10 @@ object Joins {
     * is the stored table. Output schema and semantics are identical to
     * `fuzzyJoin(probe, …, dict, …, ix.maxDist)` (the q136 gate asserts
     * index-probe ≡ from-scratch through the oracle): (id_l, id_r, str_l,
-    * str_r, dist) with id_l from the probe and id_r from the dictionary. */
+    * str_r, dist) with id_l from the probe and id_r from the dictionary.
+    * As an ingest gate it is stateless across batches: strings the
+    * dictionary should learn are folded in between runs with
+    * [[extendFuzzyIndex]], not per micro-batch. */
   def fuzzyProbe(ix: FuzzyIndex, probe: DataFrame, probeId: String,
       probeStr: String): DataFrame = {
     val ps = probe.select(col(probeId).as("id_l"), col(probeStr).as("str_l"),

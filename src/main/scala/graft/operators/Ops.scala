@@ -22,6 +22,16 @@ import org.apache.spark.sql.functions._
   */
 object Ops {
 
+  /** Fail with an IllegalArgumentException naming `op`, its `reserved`
+    * internal column names and the input `columns` that clash with them. */
+  private[graft] def requireUnreserved(op: String, reserved: Seq[String],
+      columns: Seq[String]): Unit = {
+    val clash = columns.distinct.filter(reserved.contains)
+    require(clash.isEmpty,
+      s"$op reserves internal column names ${reserved.mkString("/")}; " +
+        s"rename input column(s): ${clash.mkString(", ")}")
+  }
+
   /** Compile one (column, op, value) predicate to a Column.
     * Ops: `=`/`==`, `!=`, `<`, `>`, `<=`, `>=`, `in`, `not in`
     * (reference kernel `ops.py:6-32`). */
@@ -556,11 +566,7 @@ object Ops {
   def takeTopMass(df: DataFrame, groupCols: Seq[String], idCol: String,
       scoreCol: String, weightCol: String, pNum: Int, pDen: Int): DataFrame = {
     require(pDen > 0 && pNum > 0 && pNum <= pDen, "need 0 < pNum/pDen <= 1")
-    val reserved = Seq("__graft_cum", "__graft_tot")
-    val clash = df.columns.filter(reserved.contains)
-    require(clash.isEmpty,
-      s"takeTopMass reserves ${reserved.mkString("/")}; " +
-        s"rename input column(s): ${clash.mkString(", ")}")
+    requireUnreserved("takeTopMass", Seq("__graft_cum", "__graft_tot"), df.columns)
     val w = Window.partitionBy(groupCols.map(col): _*)
       .orderBy(col(scoreCol).desc, col(idCol))
     val totals = df.filter(col(weightCol).isNotNull && col(scoreCol).isNotNull)
@@ -674,11 +680,8 @@ object Ops {
       idCol: String, weightCol: String, n: Int): DataFrame = {
     require(n > 0, "n must be positive")
     require(groupCols.nonEmpty, "need at least one group column")
-    val reserved = Seq("__graft_wkey", "__graft_rn")
-    val clash = df.columns.filter(reserved.contains)
-    require(clash.isEmpty,
-      s"sampleWeightedPerGroup reserves ${reserved.mkString("/")}; " +
-        s"rename input column(s): ${clash.mkString(", ")}")
+    requireUnreserved("sampleWeightedPerGroup", Seq("__graft_wkey", "__graft_rn"),
+      df.columns)
     val u = (idHash60(col(idCol)) + lit(1L)).cast("double") / lit(math.pow(2.0, 60))
     val w = Window.partitionBy(groupCols.map(col): _*)
       .orderBy(col("__graft_wkey").desc, col(idCol))
@@ -766,7 +769,9 @@ object Ops {
     *
     * Determinism contract: (keys, ordCol) unique within each side — then
     * the (ord DESC, side DESC) order is total and the winner is a pure
-    * function of the data. One keyed window shuffle; no global sort, no
+    * function of the data. A delta restating old versions (a replayed
+    * ingest batch) is idempotent: older ord values never clobber the
+    * standing winner. One keyed window shuffle; no global sort, no
     * driver state. At cluster scale this is the compaction job shape: both
     * sides hash-partition on the key, skew bounded by per-key version
     * count, never table size. */

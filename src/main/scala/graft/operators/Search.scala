@@ -239,8 +239,10 @@ object Search {
   }
 
   /** The (id, token, tf) postings rows of a document frame — the rows a
-    * standing index's `postings` view holds for those documents (the
-    * streaming ingest twin ships them to a store's postings table). */
+    * standing index's `postings` view gains when those documents are
+    * folded in, e.g. shipped per micro-batch to a store's postings table.
+    * The in-memory fold is [[extendBm25Index]], which appends the batch as
+    * one new segment and leaves the indexed segments untouched. */
   def bm25Postings(df: DataFrame, idCol: String, textCol: String): DataFrame =
     segmentRows(df, idCol, textCol)
       .filter(col("token").isNotNull).select(col(idCol), col("token"), col("tf"))

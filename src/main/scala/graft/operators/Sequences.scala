@@ -79,8 +79,9 @@ object Sequences {
     * transition (last old → first new) is counted exactly once; pairs
     * inside the batch count normally; nothing already-counted is touched.
     * Precondition (the q145-upsert delta contract): every batch event of a
-    * key orders (ts, id)-after that key's carried last event. Returns the
-    * updated (counts, lasts).
+    * key orders (ts, id)-after that key's carried last event — an
+    * event-time-ordered source (a log topic) watermarked upstream provides
+    * it. Returns the updated (counts, lasts).
     *
     * Scale shape: the corpus-sized history is NEVER re-scanned — one
     * key-partitioned window over (batch + one carried row per touched
@@ -555,7 +556,8 @@ object Sequences {
     * [[periodState]] WITHOUT re-reading history — union + distinct, the
     * idempotent upsert (re-folding the same batch is a no-op; unlike the
     * order-sensitive prefix/EWMA stores there is no delta-ordering
-    * precondition, because set membership is order-free). Readout via
+    * precondition, because set membership is order-free), so replayed,
+    * late or out-of-order batches cannot corrupt the store. Readout via
     * [[retentionFromState]] must hash-match the full-history
     * [[retentionCohorts]] — q238 IS that equivalence gate. */
   def ingestPeriods(state: DataFrame, batch: DataFrame, keyCol: String,

@@ -1694,11 +1694,8 @@ object Stats {
       remapCol: String = "iso_micro"): DataFrame = {
     require(nBins >= 1 && nBins <= 1000,
       "nBins must be in [1, 1000] and match the remap's fit")
-    val reserved = Seq("__cal_bin", "__cal_iso")
-    val clash = df.columns.filter(reserved.contains)
-    require(clash.isEmpty,
-      s"applyCalibration reserves ${reserved.mkString("/")}; " +
-        s"rename input column(s): ${clash.mkString(", ")}")
+    Ops.requireUnreserved("applyCalibration", Seq("__cal_bin", "__cal_iso"),
+      df.columns)
     val r = remap.select(col("bin").as("__cal_bin"),
       col(remapCol).as("__cal_iso"))
     df.withColumn("__cal_bin",

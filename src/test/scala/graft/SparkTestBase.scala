@@ -43,6 +43,14 @@ trait SparkTestBase extends AnyFunSuite {
   def withSQLConf[T](pairs: (String, String)*)(f: => T): T =
     SparkTestBase.withSQLConf(pairs: _*)(f)
 
+  /** The ids of the RDDs Spark holds persisted right now — compare two
+    * readings to see what an operator pinned or left pinned. */
+  def pinned: Set[Int] = spark.sparkContext.getPersistentRDDs.keySet.toSet
+
+  /** `e` and its causes, outermost first. */
+  def exceptionChain(e: Throwable): Seq[Throwable] =
+    Iterator.iterate(e)(_.getCause).takeWhile(_ != null).take(10).toSeq
+
   /** The number of Spark jobs started while `f` ran. */
   def jobsRun(f: => Unit): Int = jobExecutions(f).size
 

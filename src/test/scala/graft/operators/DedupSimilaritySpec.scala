@@ -519,7 +519,6 @@ class DedupSimilaritySpec extends SparkTestBase {
   }
 
   test("failing index builds check arguments before pinning and leak no pin") {
-    def pinned = spark.sparkContext.getPersistentRDDs.keySet.toSet
     val tenDim = Seq.tabulate(4)(i => (i.toLong, Array.tabulate(10)(j => (i + j).toFloat)))
       .toDF("vec_id", "embedding")
     def leaksNothing(build: => Any): Unit = {
@@ -1367,7 +1366,6 @@ class DedupSimilaritySpec extends SparkTestBase {
   }
 
   test("IvfPqIndex release: an index and its extensions free every pin in either order") {
-    def pinned = spark.sparkContext.getPersistentRDDs.keySet.toSet
     val qs = vecRows(Seq(3L))
     for (newestFirst <- Seq(false, true)) {
       val start = pinned
@@ -1567,7 +1565,6 @@ class DedupSimilaritySpec extends SparkTestBase {
   }
 
   test("a training set of mixed dimensions fails on the driver and leaks no pin") {
-    def pinned = spark.sparkContext.getPersistentRDDs.keySet.toSet
     val mixed = vecRows(0L until 8L)
       .union(Seq((8L, Array(0.1f, 0.2f, 0.3f))).toDF("vec_id", "embedding"))
     val builds = Seq[(String, () => Any)](
@@ -1686,7 +1683,6 @@ class DedupSimilaritySpec extends SparkTestBase {
   }
 
   test("the embedding gate leaks no pin: a batch or corpus of another dimension raises") {
-    def pinned = spark.sparkContext.getPersistentRDDs.keySet.toSet
     val corpus = vecRows(0L until 20L)
     val ix = Dedup.embeddingIndex(corpus, "vec_id", "embedding", signBits = 3)
     val wrong = Seq((100L, Array(0.1f, 0.2f, 0.3f))).toDF("vec_id", "embedding")
@@ -1726,6 +1722,4 @@ class DedupSimilaritySpec extends SparkTestBase {
     assert(gateJobs <= 3, s"dropEmbeddingNearDupsBatch: $gateJobs jobs")
   }
 
-  private def exceptionChain(e: Throwable): Seq[Throwable] =
-    Iterator.iterate(e)(_.getCause).takeWhile(_ != null).take(10).toSeq
 }

@@ -247,7 +247,6 @@ class LmSearchGraphSpec extends SparkTestBase {
   }
 
   test("Bm25Index release: an index and its extensions free every pin in either order") {
-    def pinned = spark.sparkContext.getPersistentRDDs.keySet.toSet
     for (newestFirst <- Seq(false, true)) {
       val start = pinned
       val ixs = (1 to 4).scanLeft(Search.bm25Index(segDocs(0L until 6L), "doc_id", "text")) {

@@ -2,8 +2,10 @@ package graft.streaming
 
 import java.sql.Timestamp
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.StreamingQueryException
 import graft.SparkTestBase
 
 case class Ev(event_id: Long, ts: Timestamp, user_id: Long, event_type: String, value: Double)
@@ -359,6 +361,8 @@ class StreamsSpec extends SparkTestBase {
     } finally q.stop()
   }
 
+  // Tests named after a `…StreamBulk`/`…Stream` stage run that stage's batch
+  // operator through `Streams.eachBatch`, the one micro-batch bridge.
   test("dropNearDupsStreamBulk: foreachBatch relational path equals the per-row path") {
     import graft.operators.Dedup
     implicit val sqlCtx = spark.sqlContext
@@ -378,12 +382,12 @@ class StreamsSpec extends SparkTestBase {
       .select("id").collect().map(_.getLong(0)).toSet
     assert(bulk == perRow)                                   // the equality contract
     assert(perRow.contains(11L) && !perRow.contains(10L))    // and it does real work
-    // the same relational path through a REAL StreamingQuery via foreachBatch
+    // the same relational path through a REAL StreamingQuery via eachBatch
     val got = scala.collection.mutable.Set[Long]()
     val mem = MemoryStream[(Long, String)]
-    val q = Streams.dropNearDupsStreamBulk(
-        mem.toDF().toDF("id", "text"), "id", "text", index) { out =>
-      got ++= out.select("id").collect().map(_.getLong(0))
+    val q = Streams.eachBatch(mem.toDF().toDF("id", "text")) { b =>
+      got ++= Streams.dropNearDupsBatch(b, "id", "text", index)
+        .select("id").collect().map(_.getLong(0))
     }.start()
     try {
       mem.addData(rows: _*)
@@ -408,13 +412,13 @@ class StreamsSpec extends SparkTestBase {
         batchIn, "vec_id", "embedding", ix, threshold = 0.9)
       .select("vec_id").collect().map(_.getLong(0)).toSet
     assert(batchKept == Set(11L)) // the near-dup is dropped, the novel row kept
-    // the same relational path through a REAL StreamingQuery via foreachBatch
+    // the same relational path through a REAL StreamingQuery via eachBatch
     val got = scala.collection.mutable.Set[Long]()
     val mem = MemoryStream[(Long, Array[Float])]
-    val q = Streams.dropEmbeddingNearDupsStreamBulk(
-        mem.toDF().toDF("vec_id", "embedding"), "vec_id", "embedding", ix,
-        threshold = 0.9) { out =>
-      got ++= out.select("vec_id").collect().map(_.getLong(0))
+    val q = Streams.eachBatch(mem.toDF().toDF("vec_id", "embedding")) { b =>
+      got ++= Streams.dropEmbeddingNearDupsBatch(b, "vec_id", "embedding", ix,
+          threshold = 0.9)
+        .select("vec_id").collect().map(_.getLong(0))
     }.start()
     try {
       mem.addData(rows: _*)
@@ -463,9 +467,9 @@ class StreamsSpec extends SparkTestBase {
     // the same no-retrain assignment through a REAL StreamingQuery
     val got = scala.collection.mutable.Set[(Long, Long, Int, Long)]()
     val mem = MemoryStream[(Long, Array[Float])]
-    val q = Streams.assignEmbeddingsStreamBulk(
-        mem.toDF().toDF("vec_id", "embedding"), "vec_id", "embedding", ix) { out =>
-      got ++= out.collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2), r.getLong(3)))
+    val q = Streams.eachBatch(mem.toDF().toDF("vec_id", "embedding")) { b =>
+      got ++= Similarity.assignToIvfPqIndex(b, ix, "vec_id", "embedding")
+        .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2), r.getLong(3)))
     }.start()
     try {
       mem.addData(rows: _*)
@@ -483,9 +487,9 @@ class StreamsSpec extends SparkTestBase {
       .collect().map(r => (r.getLong(0), r.getString(1), r.getLong(2))).toSet
     val got = scala.collection.mutable.Set[(Long, String, Long)]()
     val mem = MemoryStream[(Long, String)]
-    val q = Streams.bm25PostingsStreamBulk(
-        mem.toDF().toDF("doc_id", "text"), "doc_id", "text") { out =>
-      got ++= out.collect().map(r => (r.getLong(0), r.getString(1), r.getLong(2)))
+    val q = Streams.eachBatch(mem.toDF().toDF("doc_id", "text")) { b =>
+      got ++= Search.bm25Postings(b, "doc_id", "text")
+        .collect().map(r => (r.getLong(0), r.getString(1), r.getLong(2)))
     }.start()
     try {
       mem.addData(rows: _*)
@@ -506,9 +510,8 @@ class StreamsSpec extends SparkTestBase {
     assert(batchOut.intersect((40L to 50L).toSet).isEmpty)
     val got = scala.collection.mutable.Set[Long]()
     val mem = MemoryStream[(Long, String)]
-    val q = Streams.bloomNoveltyStreamBulk(
-        mem.toDF().toDF("doc_id", "text"), "doc_id", seen) { out =>
-      got ++= out.collect().map(_.getLong(0))
+    val q = Streams.eachBatch(mem.toDF().toDF("doc_id", "text")) { b =>
+      got ++= Joins.bloomAntiFilter(b, "doc_id", seen).collect().map(_.getLong(0))
     }.start()
     try {
       mem.addData(batch: _*)
@@ -535,9 +538,9 @@ class StreamsSpec extends SparkTestBase {
     assert(kept == Set(10L))
     val got = scala.collection.mutable.Set[Long]()
     val mem = MemoryStream[(Long, String, Array[Double])]
-    val q = Streams.centroidGateStreamBulk(
-        mem.toDF().toDF("id", "grp", "vec"), "vec", "grp", cents, 500000000L) { out =>
-      got ++= out.collect().map(_.getAs[Long]("id"))
+    val q = Streams.eachBatch(mem.toDF().toDF("id", "grp", "vec")) { b =>
+      got ++= Streams.centroidGateBatch(b, "vec", "grp", cents, 500000000L)
+        .collect().map(_.getAs[Long]("id"))
     }.start()
     try {
       mem.addData(batch: _*)
@@ -566,9 +569,9 @@ class StreamsSpec extends SparkTestBase {
     assert(kept == Set(20L, 22L))
     val got = scala.collection.mutable.Set[Long]()
     val mem = MemoryStream[(Long, String, Double)]
-    val q = Streams.conformalGateStreamBulk(
-        mem.toDF().toDF("id", "grp", "score"), "score", "grp", th) { out =>
-      got ++= out.collect().map(_.getAs[Long]("id"))
+    val q = Streams.eachBatch(mem.toDF().toDF("id", "grp", "score")) { b =>
+      got ++= Streams.conformalGateBatch(b, "score", "grp", th)
+        .collect().map(_.getAs[Long]("id"))
     }.start()
     try {
       mem.addData(batch: _*)
@@ -588,9 +591,9 @@ class StreamsSpec extends SparkTestBase {
     assert(batchOut == Set((1L, 10L), (1L, 11L), (1L, 12L), (2L, 10L)))
     val got = scala.collection.mutable.Set[(Long, Long)]()
     val mem = MemoryStream[(Long, String)]
-    val q = Streams.fuzzyProbeStreamBulk(
-        mem.toDF().toDF("id", "s"), "id", "s", ix) { out =>
-      got ++= out.collect().map(r => (r.getLong(0), r.getLong(1)))
+    val q = Streams.eachBatch(mem.toDF().toDF("id", "s")) { b =>
+      got ++= Joins.fuzzyProbe(ix, b, "id", "s")
+        .collect().map(r => (r.getLong(0), r.getLong(1)))
     }.start()
     try {
       mem.addData(batch: _*)
@@ -715,12 +718,12 @@ class StreamsSpec extends SparkTestBase {
     val kept = Streams.surprisalGateBatch(batch, "id", "text", lm, thr)
       .select("id").collect().map(_.getLong(0)).toSet
     assert(kept == Set(10L))
-    // the same gate through a REAL StreamingQuery via foreachBatch
+    // the same gate through a REAL StreamingQuery via eachBatch
     val got = scala.collection.mutable.Set[Long]()
     val mem = MemoryStream[(Long, String)]
-    val q = Streams.surprisalGateStream(
-        mem.toDF().toDF("id", "text"), "id", "text", lm, thr) { out =>
-      got ++= out.select("id").collect().map(_.getLong(0))
+    val q = Streams.eachBatch(mem.toDF().toDF("id", "text")) { b =>
+      got ++= Streams.surprisalGateBatch(b, "id", "text", lm, thr)
+        .select("id").collect().map(_.getLong(0))
     }.start()
     try {
       mem.addData((10L, "the quick dog"), (11L, "zzz qqq xxx www yyy"))
@@ -753,12 +756,12 @@ class StreamsSpec extends SparkTestBase {
     // the surviving row carries its piece count
     assert(Streams.unigramBudgetBatch(batch, "id", "text", vocab, budget)
       .select("n_pieces").collect().head.getLong(0) == budget)
-    // the same gate through a REAL StreamingQuery via foreachBatch
+    // the same gate through a REAL StreamingQuery via eachBatch
     val got = scala.collection.mutable.Set[Long]()
     val mem = MemoryStream[(Long, String)]
-    val q = Streams.unigramBudgetStream(
-        mem.toDF().toDF("id", "text"), "id", "text", vocab, budget) { out =>
-      got ++= out.select("id").collect().map(_.getLong(0))
+    val q = Streams.eachBatch(mem.toDF().toDF("id", "text")) { b =>
+      got ++= Streams.unigramBudgetBatch(b, "id", "text", vocab, budget)
+        .select("id").collect().map(_.getLong(0))
     }.start()
     try {
       mem.addData((10L, "the cat"),
@@ -789,12 +792,12 @@ class StreamsSpec extends SparkTestBase {
     val kept = Streams.wordpieceBudgetBatch(batch, "id", "text", vocab, 3L)
       .select("id").collect().map(_.getLong(0)).toSet
     assert(kept == Set(10L, 11L) && counts(12L) > 3L)
-    // the same gate through a REAL StreamingQuery via foreachBatch
+    // the same gate through a REAL StreamingQuery via eachBatch
     val got = scala.collection.mutable.Set[Long]()
     val mem = MemoryStream[(Long, String)]
-    val q = Streams.wordpieceBudgetStream(
-        mem.toDF().toDF("id", "text"), "id", "text", vocab, 3L) { out =>
-      got ++= out.select("id").collect().map(_.getLong(0))
+    val q = Streams.eachBatch(mem.toDF().toDF("id", "text")) { b =>
+      got ++= Streams.wordpieceBudgetBatch(b, "id", "text", vocab, 3L)
+        .select("id").collect().map(_.getLong(0))
     }.start()
     try {
       mem.addData((10L, "low"), (11L, "zzz zzz"),
@@ -848,10 +851,9 @@ class StreamsSpec extends SparkTestBase {
     }.collect().map(r => (r.getLong(0), r.getLong(1), r.getString(2))).toSet
     var state = init
     val mem = MemoryStream[(Long, Long, String, Boolean)]
-    val q = Streams.upsertStreamBulk(mem.toDF().toDF("k", "ord", "v", "dead"),
-        Seq("k"), "ord", Some("dead"))(
-        () => state, out => state = out.localCheckpoint(true))
-      .start()
+    val q = Streams.eachBatch(mem.toDF().toDF("k", "ord", "v", "dead")) { b =>
+      state = Ops.upsert(state, b, Seq("k"), "ord", Some("dead")).localCheckpoint(true)
+    }.start()
     try {
       mem.addData(b1: _*); q.processAllAvailable()
       mem.addData(b2: _*); q.processAllAvailable()
@@ -870,9 +872,10 @@ class StreamsSpec extends SparkTestBase {
     // standing state starts as an EMPTY cell table
     var state = Seq.empty[(Int, Long, Long)].toDF("r", "b", "c")
     val mem = MemoryStream[Tuple1[Long]]
-    val q = Streams.countMinStreamBulk(mem.toDF().toDF("item"), "item",
-        depth, width)(() => state, out => state = out.localCheckpoint(true))
-      .start()
+    val q = Streams.eachBatch(mem.toDF().toDF("item")) { b =>
+      state = Sketches.countMinMerge(Seq(state,
+        Sketches.countMinBuild(b, "item", depth, width))).localCheckpoint(true)
+    }.start()
     try {
       mem.addData(b1: _*); q.processAllAvailable()
       mem.addData(b2: _*); q.processAllAvailable()
@@ -903,10 +906,10 @@ class StreamsSpec extends SparkTestBase {
       .collect().map(r => r.getLong(0) -> r.getString(1)).toMap
     var got: Map[Long, String] = Map.empty
     val mem = MemoryStream[(Long, String)]
-    val q = Streams.classifyGateStreamBulk(mem.toDF().toDF("id", "text"),
-        "id", "text", model, minMarginMicro = 100000L)(
-        out => got = out.collect().map(r => r.getLong(0) -> r.getString(1)).toMap)
-      .start()
+    val q = Streams.eachBatch(mem.toDF().toDF("id", "text")) { b =>
+      got = Streams.classifyGateBatch(b, "id", "text", model, minMarginMicro = 100000L)
+        .collect().map(r => r.getLong(0) -> r.getString(1)).toMap
+    }.start()
     try {
       mem.addData(batch: _*); q.processAllAvailable()
       assert(got == expect && got.nonEmpty)
@@ -928,11 +931,11 @@ class StreamsSpec extends SparkTestBase {
       case (c, l) => (c.localCheckpoint(true), l.localCheckpoint(true))
     }
     val mem = MemoryStream[(Long, String, Long, Long)]
-    val q = Streams.transitionsStreamBulk(mem.toDF().toDF("u", "st", "t", "id"),
-        "u", "st", "t", "id")(
-        () => state,
-        (c, l) => state = (c.localCheckpoint(true), l.localCheckpoint(true)))
-      .start()
+    val q = Streams.eachBatch(mem.toDF().toDF("u", "st", "t", "id")) { b =>
+      val (c, l) = state
+      val (c1, l1) = Sequences.ingestTransitions(c, l, b, "u", "st", "t", "id")
+      state = (c1.localCheckpoint(true), l1.localCheckpoint(true))
+    }.start()
     try {
       mem.addData(b1: _*); q.processAllAvailable()
       mem.addData(b2: _*); q.processAllAvailable()
@@ -956,10 +959,10 @@ class StreamsSpec extends SparkTestBase {
     val b2 = Seq((1L, 12L), (3L, 25L), (2L, 5L), (1L, 15L))
     var state = Seq.empty[(Long, Long)].toDF("key", "period")
     val mem = MemoryStream[(Long, Long)]
-    val q = Streams.periodIngestStreamBulk(
-        mem.toDF().toDF("u", "t"), "u", "t", periodUs = 10L)(
-        () => state, out => state = out.localCheckpoint(true))
-      .start()
+    val q = Streams.eachBatch(mem.toDF().toDF("u", "t")) { b =>
+      state = Sequences.ingestPeriods(state, b, "u", "t", periodUs = 10L)
+        .localCheckpoint(true)
+    }.start()
     try {
       mem.addData(b1: _*); q.processAllAvailable()
       mem.addData(b2: _*); q.processAllAvailable()
@@ -986,10 +989,9 @@ class StreamsSpec extends SparkTestBase {
     var state = Seq.empty[(String, String, Long, Long)]
       .toDF("item_i", "item_j", "n_ij", "wins_i")
     val mem = MemoryStream[(String, String)]
-    val q = Streams.gamesIngestStreamBulk(
-        mem.toDF().toDF("w", "l"), "w", "l")(
-        () => state, out => state = out.localCheckpoint(true))
-      .start()
+    val q = Streams.eachBatch(mem.toDF().toDF("w", "l")) { b =>
+      state = Stats.ingestGames(state, b, "w", "l").localCheckpoint(true)
+    }.start()
     try {
       mem.addData(b1: _*); q.processAllAvailable()
       mem.addData(b2: _*); q.processAllAvailable()
@@ -1018,10 +1020,10 @@ class StreamsSpec extends SparkTestBase {
     var state = Seq.empty[(Long, Long, Long, Long)]
       .toDF("bin", "n", "n_pos", "sp_micro")
     val mem = MemoryStream[(Double, Boolean)]
-    val q = Streams.calibrationIngestStreamBulk(
-        mem.toDF().toDF("p", "y"), "p", "y", nBins = 10)(
-        () => state, out => state = out.localCheckpoint(true))
-      .start()
+    val q = Streams.eachBatch(mem.toDF().toDF("p", "y")) { b =>
+      state = Stats.ingestCalibration(state, b, "p", "y", nBins = 10)
+        .localCheckpoint(true)
+    }.start()
     try {
       mem.addData(b1: _*); q.processAllAvailable()
       mem.addData(b2: _*); q.processAllAvailable()
@@ -1078,10 +1080,10 @@ class StreamsSpec extends SparkTestBase {
     val b2 = Seq((1L, 30L, 4L, 4.0), (1L, 40L, 5L, 8.0), (1L, 50L, 6L, 16.0))
     var state = Seq.empty[(Long, Long, Long, Double)].toDF("u", "t", "id", "v")
     val mem = MemoryStream[(Long, Long, Long, Double)]
-    val q = Streams.recentIngestStreamBulk(
-        mem.toDF().toDF("u", "t", "id", "v"), "u", "t", "v", "id",
-        lookback = 4)(() => state, out => state = out.localCheckpoint(true))
-      .start()
+    val q = Streams.eachBatch(mem.toDF().toDF("u", "t", "id", "v")) { b =>
+      state = Sequences.ingestRecent(state, b, "u", "t", "v", "id", lookback = 4)
+        .localCheckpoint(true)
+    }.start()
     try {
       mem.addData(b1: _*); q.processAllAvailable()
       mem.addData(b2: _*); q.processAllAvailable()
@@ -1110,10 +1112,10 @@ class StreamsSpec extends SparkTestBase {
     val b2 = Seq((1L, 30L, 4L, "c"), (1L, 40L, 5L, "d"), (3L, 50L, 6L, "q"))
     var state = Seq.empty[(Long, String, Long, Long)].toDF("u", "s", "t", "id")
     val mem = MemoryStream[(Long, Long, Long, String)]
-    val q = Streams.prefixIngestStreamBulk(
-        mem.toDF().toDF("u", "t", "id", "s"), "u", "s", "t", "id",
-        maxLen = 3)(() => state, out => state = out.localCheckpoint(true))
-      .start()
+    val q = Streams.eachBatch(mem.toDF().toDF("u", "t", "id", "s")) { b =>
+      state = Sequences.ingestPrefix(state, b, "u", "s", "t", "id", maxLen = 3)
+        .localCheckpoint(true)
+    }.start()
     try {
       mem.addData(b1: _*); q.processAllAvailable()
       mem.addData(b2: _*); q.processAllAvailable()
@@ -1125,5 +1127,60 @@ class StreamsSpec extends SparkTestBase {
         .collect().map(r => (r.getString(0), r.getLong(1))).toSet
       assert(paths == Set(("a>b>c", 1L), ("a", 1L), ("q", 1L)))
     } finally q.stop()
+  }
+
+  test("eachBatch: a fold whose step throws stops the query; store is skipped and the state stays at batch 1") {
+    import graft.operators.Ops
+    implicit val sqlCtx = spark.sqlContext
+    var state = Seq((1L, 10L, "a")).toDF("k", "ord", "v")
+    var stores = 0
+    val boom = new IllegalStateException("step failed on micro-batch 2")
+    var steps = 0
+    def load(): DataFrame = state
+    def step(st: DataFrame, b: DataFrame): DataFrame = {
+      steps += 1
+      if (steps == 2) throw boom
+      Ops.upsert(st, b, Seq("k"), "ord")
+    }
+    def store(out: DataFrame): Unit = { stores += 1; state = out.localCheckpoint(true) }
+    val mem = MemoryStream[(Long, Long, String)]
+    val q = Streams.eachBatch(mem.toDF().toDF("k", "ord", "v"))(b => store(step(load(), b)))
+      .start()
+    try {
+      mem.addData((1L, 20L, "a2"), (2L, 5L, "b")); q.processAllAvailable()
+      val afterFirst = rowSet(state)
+      assert(afterFirst == Set(Seq(1L, 20L, "a2"), Seq(2L, 5L, "b")) && stores == 1)
+      mem.addData((3L, 1L, "c"))
+      val e = intercept[StreamingQueryException](q.processAllAvailable())
+      assert(exceptionChain(e).contains(boom), e.getMessage)
+      assert(steps == 2 && stores == 1, "store must not run for the failed batch")
+      assert(rowSet(state) == afterFirst)
+      assert(!q.isActive)
+    } finally q.stop()
+  }
+
+  test("eachBatch over dropEmbeddingNearDupsBatch leaves no pinned RDD once the query stops") {
+    import graft.operators.Dedup
+    implicit val sqlCtx = spark.sqlContext
+    val start = pinned
+    val corpus = Seq(
+      (1L, Array(1.0f, 0.0f, 0.0f)),
+      (2L, Array(0.0f, 1.0f, 0.0f))
+    ).toDF("vec_id", "embedding")
+    val ix = Dedup.embeddingIndex(corpus, "vec_id", "embedding", signBits = 3)
+    val got = scala.collection.mutable.Set[Long]()
+    val mem = MemoryStream[(Long, Array[Float])]
+    val q = Streams.eachBatch(mem.toDF().toDF("vec_id", "embedding")) { b =>
+      got ++= Streams.dropEmbeddingNearDupsBatch(b, "vec_id", "embedding", ix, threshold = 0.9)
+        .select("vec_id").collect().map(_.getLong(0))
+    }.start()
+    try {
+      mem.addData((10L, Array(0.99f, 0.01f, 0.0f)), (11L, Array(0.0f, 0.0f, 1.0f)))
+      q.processAllAvailable()
+      mem.addData((12L, Array(0.0f, 0.98f, 0.02f)), (13L, Array(0.0f, -1.0f, 0.0f)))
+      q.processAllAvailable()
+      assert(got.toSet == Set(11L, 13L))
+    } finally { q.stop(); ix.release() }
+    assert((pinned -- start).isEmpty, s"left pinned: ${pinned -- start}")
   }
 }
