@@ -280,8 +280,8 @@ private[graft] trait OracleSqlHelpers {
   // w0 = unique normalized words with counts, each char-spaced; per merge
   // i: weighted adjacent-pair counts (bp), the (pc DESC, a, b) argmax (bb),
   // and the greedy fold re-segmentation (w) — DuckDB's list_reduce runs
-  // the identical accumulator logic as Spark's `aggregate` fold in
-  // Bpe.applyMerge (append b to a trailing " a" tail, else append " "+x)
+  // the fold Bpe's encoder applies (append b to a trailing " a" tail, else
+  // append " "+x)
   protected val sqlBpeBase =
     """bpwc AS (SELECT token AS word, count(*) AS cnt FROM (
               SELECT unnest(string_split_regex(trim(regexp_replace(lower(text), '[^a-z0-9]+', ' ', 'g')), '\s+')) AS token

@@ -3,11 +3,13 @@ package graft.expressions
 import java.nio.charset.StandardCharsets
 import java.security.MessageDigest
 
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression, UnsafeArrayData}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression, UnsafeArrayData}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType, StructField, StructType}
+import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
+import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, IntegerType, LongType, StringType, StructField, StructType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** The per-document MinHash computation behind [[MinhashLong]]: word
@@ -143,4 +145,117 @@ object MinhashLong {
   val resultType: StructType = StructType(Seq(
     StructField("sh", ArrayType(LongType, containsNull = false), nullable = false),
     StructField("mh", ArrayType(LongType, containsNull = false), nullable = false)))
+}
+
+/** The broadcast side of a MinHash index's delta probe: a small delta
+  * batch's shingle-hash sets (sorted, distinct — [[MinhashKernel]]'s `sh`)
+  * and, per band, a map from band key to the delta rows carrying it.
+  * [[MinhashProbeLong]] matches one corpus row against it. */
+final class MinhashProbeTable private (threshold: Double, sets: Array[Array[Long]],
+    bands: Array[java.util.HashMap[UTF8String, Array[Int]]]) extends Serializable {
+
+  /** (a, jaccard) for each delta row `a` sharing a band key with the corpus
+    * row's `keys`, once per `a` however many bands collide, in ascending
+    * `a`, whose exact Jaccard with the row's set `sh` reaches the
+    * threshold. The verify is the relational one's arithmetic: the PPJoin
+    * length filter min(|A|, |B|) ≥ max(|A|, |B|)·(θ − 1e-9), then
+    * common / (|A| + |B| − common) as a double. A row with an empty set
+    * matches nothing. */
+  def matches(keys: ArrayData, sh: ArrayData): ArrayData = {
+    val nb = sh.numElements()
+    if (nb == 0) return MinhashProbeTable.none
+    var cand = new Array[Int](16)
+    var n = 0
+    var t = 0
+    while (t < math.min(keys.numElements(), bands.length)) {
+      val hit = bands(t).get(keys.getUTF8String(t))
+      if (hit != null) {
+        if (n + hit.length > cand.length)
+          cand = java.util.Arrays.copyOf(cand, math.max(2 * cand.length, n + hit.length))
+        System.arraycopy(hit, 0, cand, n, hit.length)
+        n += hit.length
+      }
+      t += 1
+    }
+    if (n == 0) return MinhashProbeTable.none
+    java.util.Arrays.sort(cand, 0, n)
+    val out = new Array[Any](n)
+    var kept = 0
+    var k = 0
+    while (k < n) {
+      val a = cand(k)
+      if (k == 0 || a != cand(k - 1)) {
+        val x = sets(a)
+        val na = x.length
+        if (math.min(na, nb).toDouble >= math.max(na, nb) * (threshold - 1e-9)) {
+          val common = MinhashProbeTable.common(x, sh)
+          val jaccard = common.toDouble / (na + nb - common)
+          if (jaccard >= threshold) { out(kept) = InternalRow(a, jaccard); kept += 1 }
+        }
+      }
+      k += 1
+    }
+    new GenericArrayData(out.take(kept))
+  }
+}
+
+object MinhashProbeTable {
+  private val none = new GenericArrayData(Array.empty[Any])
+
+  /** The size of the intersection of two sorted distinct sets. */
+  private def common(x: Array[Long], y: ArrayData): Int = {
+    var (i, j, c) = (0, 0, 0)
+    while (i < x.length && j < y.numElements()) {
+      val (u, v) = (x(i), y.getLong(j))
+      if (u < v) i += 1
+      else if (u > v) j += 1
+      else { c += 1; i += 1; j += 1 }
+    }
+    c
+  }
+
+  /** The table of delta rows with shingle-hash sets `sets` and band keys
+    * `bandKeys` (one per band, in band order, the same bands for every
+    * row), verified at `threshold`. */
+  def apply(threshold: Double, sets: Array[Array[Long]],
+      bandKeys: Array[Array[String]]): MinhashProbeTable = {
+    val bands = Array.tabulate(bandKeys.headOption.fold(0)(_.length)) { t =>
+      val m = new java.util.HashMap[UTF8String, Array[Int]]()
+      bandKeys.indices.groupBy(a => bandKeys(a)(t)).foreach { case (key, as) =>
+        m.put(UTF8String.fromString(key), as.toArray)
+      }
+      m
+    }
+    new MinhashProbeTable(threshold, sets, bands)
+  }
+}
+
+/** Native Catalyst expression: the delta rows of a broadcast
+  * [[MinhashProbeTable]] that one corpus row's band keys (`left`,
+  * `array<string>` in band order) collide with and whose exact Jaccard
+  * with the row's shingle-hash set (`right`, sorted distinct
+  * `array<bigint>`) reaches the table's threshold, as `array<struct<a
+  * int, jaccard double>>` — the band probe and the verify of a MinHash
+  * delta probe inside ONE scan of the corpus index, with the duplicates
+  * across bands removed inside the row. Null-intolerant: a row without
+  * band keys or set matches nothing. */
+case class MinhashProbeLong(left: Expression, right: Expression,
+    table: Broadcast[MinhashProbeTable]) extends BinaryExpression {
+  override def dataType: DataType = ArrayType(StructType(Seq(
+    StructField("a", IntegerType, nullable = false),
+    StructField("jaccard", DoubleType, nullable = false))), containsNull = false)
+  override def prettyName: String = "graft_minhash_probe"
+
+  override def nullSafeEval(keys: Any, sh: Any): Any =
+    table.value.matches(keys.asInstanceOf[ArrayData], sh.asInstanceOf[ArrayData])
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val b = ctx.addReferenceObj("minhashProbe", table, classOf[Broadcast[_]].getName)
+    nullSafeCodeGen(ctx, ev, (keys, sh) =>
+      s"${ev.value} = ((${classOf[MinhashProbeTable].getName}) $b.value()).matches($keys, $sh);")
+  }
+
+  override protected def withNewChildrenInternal(
+      newLeft: Expression, newRight: Expression): MinhashProbeLong =
+    copy(left = newLeft, right = newRight)
 }

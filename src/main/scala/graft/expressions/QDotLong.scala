@@ -177,6 +177,11 @@ object GraftFunctions {
       "graft_minhash", children => MinhashLong(children(0),
         litInt(children(1), "graft_minhash", "n"),
         litInt(children(2), "graft_minhash", "numHashes")), "scala_udf")
+    // a word's BPE pieces under an ordered merge list; the merges trail as
+    // a foldable array<struct<string, string>> literal of (a, b) pairs
+    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
+      "graft_bpe_encode", children => BpeEncodeLong(children(0),
+        BpeMerges.of(children(1), "graft_bpe_encode")), "scala_udf")
     // KLL aggregates: the analyzer wraps a returned AggregateFunction in
     // its AggregateExpression automatically; k must be a literal int
     spark.sessionState.functionRegistry.createOrReplaceTempFunction(

@@ -7,9 +7,10 @@ import org.apache.spark.sql.functions._
   * extension beyond the reference surface — SURVEY §2.1 ✚): tokenization,
   * language-ID, quality scoring, fingerprinting, shingling, SimHash.
   *
-  * Everything here is built from codegen'd built-in functions (higher-order
-  * array functions, `md5`, regexes) — no UDFs, so the whole pipeline stays
-  * inside WholeStageCodegen and scales linearly with executors. Hashes are
+  * Everything here is built from built-in functions (`md5`, regexes,
+  * higher-order array functions) and graft's own Catalyst kernels — no
+  * UDFs, so it scales linearly with executors. The higher-order functions
+  * are the one part Spark runs interpreted (CodegenFallback). Hashes are
   * md5-based so the DuckDB oracle can reproduce them bit-for-bit.
   */
 object Text {
@@ -35,10 +36,10 @@ object Text {
     * (whitespace counting underestimates ~30% on punctuated text).
     *
     * A real learned BPE exists since r8 — [[graft.operators.Bpe]] trains
-    * and applies merge tables as codegen'd folds (greedy merge application
-    * turned out to be exactly Spark's `aggregate` higher-order function,
-    * retiring the r4 claim that it needed a UDF or thousands of
-    * driver-synced iterations). This proxy REMAINS the budget yardstick
+    * merge tables with one collect and a driver-side merge loop, and
+    * applies them with one codegen'd kernel (`graft_bpe_encode`, a left
+    * fold per merge), retiring the r4 claim that it needed thousands of
+    * driver-synced iterations. This proxy REMAINS the budget yardstick
     * because it is model-agnostic: any fixed learned vocab misstates
     * budgets for every model whose vocab differs, while each pre-token
     * below tokenizes to ≥ 1 real subword tokens in ALL BPE-family models,

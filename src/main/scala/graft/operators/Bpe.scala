@@ -1,9 +1,10 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, GraftColumns}
 import org.apache.spark.sql.functions._
 import org.apache.spark.unsafe.types.UTF8String
 
+import graft.expressions.{BpeEncodeLong, BpeMerges, BpePieceCountLong}
 import graft.functions.Text
 
 /** Learned byte-pair-encoding vocabulary training and subword encoding
@@ -25,19 +26,16 @@ import graft.functions.Text
   * words that contain the merged pair, so a 30k-merge vocabulary never
   * rescans the whole vocabulary per merge. Encoding never shuffles at all.
   *
-  * Greedy merge application is the sequential-looking step that kept r4
-  * from attempting real BPE — but it is exactly a left fold, and Spark's
-  * `aggregate` higher-order function IS a codegen'd left fold. With the
-  * word's symbols space-joined in a string accumulator, merging pair (a,b)
-  * is: if the next symbol is `b` and the accumulator's LAST symbol is
-  * exactly `a` (it equals `a`, or ends with `" a"` — the space delimiter
-  * makes the check exact since symbols never contain spaces), append `b`
-  * with no separator (fusing "… a" + "b" = "… ab"); otherwise append
-  * " "+symbol. Non-overlap falls out naturally: a fused tail "ab" no
-  * longer ends with " a", so "a a a a" under (a,a) folds to "aa aa", not
-  * "aaa a" — the exact greedy left-to-right semantics of the reference
-  * algorithm, and DuckDB's `list_reduce` replays the identical fold for
-  * the oracle. Zero UDFs.
+  * Greedy merge application is a left fold per merge, in merge order:
+  * walking the word's symbols, merging pair (a,b) fuses a symbol `b` onto
+  * the symbol emitted last when that symbol is exactly `a`, and emits
+  * every other symbol as is. Non-overlap falls out naturally: a fused "ab"
+  * is not `a`, so "a a a a" under (a,a) folds to "aa aa", not "aaa a" —
+  * the exact greedy left-to-right semantics of the reference algorithm.
+  * DuckDB's `list_reduce` replays the identical fold over the space-joined
+  * symbol string for the oracle. Encoding runs it in one codegen'd kernel,
+  * `graft_bpe_encode` ([[graft.expressions.BpeMerges]]): the merge list is
+  * interned once on the driver, and a merge is one pass of int compares.
   *
   * Determinism: pair counts are exact long sums; the argmax tie-breaks by
   * (count DESC, left ASC, right ASC), strings compared as UTF-8 bytes
@@ -63,19 +61,6 @@ object Bpe {
     * appending a sentinel token to the string before training if needed. */
   def charSymbols(word: Column): Column =
     trim(regexp_replace(word, "(.)", "$1 "))
-
-  /** One greedy merge of pair (a, b) over a space-joined symbol string —
-    * the codegen'd left fold described in the header. Single-symbol
-    * strings pass through untouched (empty fold tail). */
-  def applyMerge(symsStr: Column, a: Column, b: Column): Column = {
-    val sy = split(symsStr, " ")
-    aggregate(
-      slice(sy, lit(2), size(sy) - 1), element_at(sy, 1),
-      (acc, x) =>
-        when(x === b && (acc === a || acc.endsWith(concat(lit(" "), a))),
-          concat(acc, b))
-          .otherwise(concat(acc, lit(" "), x)))
-  }
 
   /** The adjacent-pair frequency table of a (word, cnt, syms) state frame:
     * (a, b, pc) with pc = Σ cnt over every adjacent occurrence. Shared
@@ -113,7 +98,7 @@ object Bpe {
     * up to `numMerges` merges (a, b, pair_count), in order. Each merge is
     * the argmax of the count-weighted adjacent-pair counts by (count DESC,
     * a ASC, b ASC) — strings compared as UTF-8 bytes, Spark's order — and
-    * is applied to every word with [[applyMerge]]'s exact fold: left to
+    * is applied to every word with the encoder's exact fold: left to
     * right, `b` fuses onto a preceding symbol equal to `a`, so a fused
     * "ab" never re-merges ("a a a" under (a, a) becomes "aa a").
     *
@@ -184,7 +169,8 @@ object Bpe {
     merges.toSeq
   }
 
-  /** [[applyMerge]]'s fold over symbol ids: `b` fuses into `ab` when the
+  /** The merge fold over symbol ids ([[graft.expressions.BpeMerges]]
+    * runs the same one at encode time): `b` fuses into `ab` when the
     * symbol emitted last is exactly `a`, else it is emitted as is. */
   private def fuse(sy: Array[Int], a: Int, b: Int, ab: Int): Array[Int] = {
     val out = new Array[Int](sy.length)
@@ -217,69 +203,52 @@ object Bpe {
   }
 
   /** Encode one token column into its subword pieces (array of strings)
-    * under an ordered merge list — a pure projection: an outer fold over
-    * the merge table (an array-of-structs LITERAL riding in the plan, the
-    * model as data) whose accumulator is the symbol string, with
-    * [[applyMerge]]'s inner fold applied per merge. Two nested
-    * higher-order functions and an O(M) literal — NOT M syntactically
-    * chained folds, which would copy the whole accumulated expression
-    * tree into each level's `split` references and blow up ~3^M (the
-    * first cut of q128 spent 12 minutes analyzing exactly that). No
-    * shuffle, no state, no UDF. */
-  def encodePieces(token: Column, merges: Seq[(String, String)]): Column = {
-    require(merges.nonEmpty, "merges must be non-empty")
-    val mArr = array(merges.map { case (a, b) =>
-      struct(lit(a).as("a"), lit(b).as("b"))
-    }: _*)
-    split(
-      aggregate(mArr, charSymbols(token),
-        (s, m) => applyMerge(s, m.getField("a"), m.getField("b"))),
-      " ")
-  }
+    * under an ordered merge list — a pure projection of the
+    * `graft_bpe_encode` kernel ([[graft.expressions.BpeEncodeLong]]), the
+    * merge list riding in the plan as one driver-built object. No shuffle,
+    * no state. A null token encodes to null. */
+  def encodePieces(token: Column, merges: Seq[(String, String)]): Column =
+    GraftColumns.of(BpeEncodeLong(GraftColumns.expr(token), BpeMerges(merges)))
 
   /** Encode the corpus dictionary: unique words with counts and their
     * piece arrays — the scale shape for whole-corpus tokenization (encode
-    * each unique word ONCE, join back to documents by word; the fold cost
-    * is vocab-sized, not corpus-sized). */
+    * each unique word ONCE; the encode cost is vocab-sized, not
+    * corpus-sized). Jobs with a collect on a one-file input: 3 (the
+    * spread's and the word-count's exchanges, then the result). */
   def encodeWords(docs: DataFrame, textCol: String,
       merges: Seq[(String, String)]): DataFrame =
     wordCounts(docs, textCol)
       .select(col("word"), col("cnt"), encodePieces(col("word"), merges).as("pieces"))
 
   /** Corpus-wide subword piece frequencies: (piece, total) — the vocab
-    * histogram a tokenizer report prints, and the q128 oracle surface.
-    *
-    * The encoded dictionary is MATERIALIZED (`localCheckpoint`) before the
-    * explode: higher-order functions are CodegenFallback expressions, and
-    * a Generate fused directly over the nested fold re-initializes the
-    * interpreted tree per row — measured at ~180 ms/row (!) at sf0.1, vs
-    * 0.1 s for the whole exploded aggregate once the fold's output is
-    * pinned. The frame is vocab-sized, so the eager pin costs nothing at
-    * any corpus scale. */
+    * histogram a tokenizer report prints, and the q128 oracle surface. */
   def pieceCounts(docs: DataFrame, textCol: String,
       merges: Seq[(String, String)]): DataFrame =
     encodeWords(docs, textCol, merges)
-      .select(col("pieces"), col("cnt")).localCheckpoint(true)
       .select(explode(col("pieces")).as("piece"), col("cnt"))
       .groupBy("piece").agg(sum(col("cnt")).as("total"))
 
   /** Per-document token budget under the LEARNED vocab: (id, n_tokens,
     * n_pieces) — the number a packing/budgeting pipeline actually needs
     * (vs [[graft.functions.Text.bpeishTokenCount]]'s model-agnostic
-    * bound). The dictionary join-back shape: the fold runs once per
-    * UNIQUE word to get its piece count, then a plain (doc, word) ⋈
-    * (word, n) equi-join and a per-doc sum — at 100 TB the expensive
-    * encode is vocab-sized and the corpus pass is one join + one
-    * map-side-combined agg. */
+    * bound). One projection per document after [[Par.spreadBy]] on the id:
+    * its [[Search]]-contract tokens and, from the
+    * [[graft.expressions.BpePieceCountLong]] kernel, their count and the
+    * sum of their piece counts, each distinct word encoded once per task;
+    * then a sum per id that needs no exchange of its own. Rows sharing an
+    * id are summed; a doc with no token (empty or null text) is absent.
+    * Jobs with a collect on a one-file input: 2 (the spread's exchange,
+    * then the result). */
   def docPieceCounts(docs: DataFrame, idCol: String, textCol: String,
       merges: Seq[(String, String)]): DataFrame = {
-    val dt = Par.spread(docs)
-      .select(col(idCol), explode(Text.tokens(Text.normalize(col(textCol)))).as("word"))
-      .filter(length(col("word")) > 0)
-    val wp = wordCounts(docs, textCol)
-      .select(col("word"), size(encodePieces(col("word"), merges)).as("n_p"))
-    dt.join(wp, "word")
+    val counted = GraftColumns.of(BpePieceCountLong(
+      GraftColumns.expr(Text.tokens(Text.normalize(col(textCol)))), BpeMerges(merges)))
+    // the filter sits above the sum: below it, it would be pushed under
+    // the projection with the kernel inlined, running it twice a row
+    Par.spreadBy(docs, col(idCol))
+      .select(col(idCol), counted.as("k"))
       .groupBy(idCol)
-      .agg(count(lit(1)).as("n_tokens"), sum(col("n_p").cast("long")).as("n_pieces"))
+      .agg(sum(col("k.n_tokens")).as("n_tokens"), sum(col("k.n_pieces")).as("n_pieces"))
+      .filter(col("n_tokens") > 0)
   }
 }

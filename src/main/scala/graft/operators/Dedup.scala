@@ -7,7 +7,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DataType, DoubleType, StructField, StructType}
 import org.apache.spark.storage.StorageLevel
 
-import graft.expressions.{LshProbeLong, LshProbeTable, PlaneMatrix}
+import graft.expressions.{LshProbeLong, LshProbeTable, MinhashProbeLong, MinhashProbeTable, PlaneMatrix}
 import graft.functions.Text
 import graft.operators.Pinned.pin
 
@@ -45,7 +45,9 @@ import graft.operators.Pinned.pin
   * materializing it once is what lets the self-joined signature pipeline
   * run ONCE instead of once per join side. On a multi-node cluster you'd
   * swap the final `localCheckpoint` for a table write (localCheckpoint
-  * blocks are not fault-tolerant); single-JVM here.
+  * blocks are not fault-tolerant); single-JVM here. The delta probes
+  * ([[minhashLshPairsBetweenIndexed]], [[embeddingNearDupPairsBetween]])
+  * pin nothing: they collect their pairs and return a driver-local frame.
   */
 object Dedup {
 
@@ -135,15 +137,9 @@ object Dedup {
     * are dropped BEFORE the O(|A|+|B|) array_intersect, which matters for
     * LSH-banding candidates that never went through a prefix index. */
   private def verifyJaccard(cand: DataFrame, sets: DataFrame, threshold: Double): DataFrame =
-    verifyJaccard2(cand, sets, sets, threshold)
-
-  /** [[verifyJaccard]] with distinct set frames per pair side (the
-    * delta↔corpus case of [[minhashLshPairsBetween]]). */
-  private def verifyJaccard2(cand: DataFrame, setsA: DataFrame, setsB: DataFrame,
-      threshold: Double): DataFrame =
     cand
-      .join(setsA.select(col("id").as("id_a"), col("sh").as("sh_a"), col("nsh").as("nsh_a")), Seq("id_a"))
-      .join(setsB.select(col("id").as("id_b"), col("sh").as("sh_b"), col("nsh").as("nsh_b")), Seq("id_b"))
+      .join(sets.select(col("id").as("id_a"), col("sh").as("sh_a"), col("nsh").as("nsh_a")), Seq("id_a"))
+      .join(sets.select(col("id").as("id_b"), col("sh").as("sh_b"), col("nsh").as("nsh_b")), Seq("id_b"))
       .filter(least(col("nsh_a"), col("nsh_b")).cast("double") >=
         greatest(col("nsh_a"), col("nsh_b")) * lit(threshold - 1e-9))
       .withColumn("common", size(array_intersect(col("sh_a"), col("sh_b"))))
@@ -411,13 +407,18 @@ object Dedup {
     * row, on that row's text (see [[ngramJaccardPairs]]). */
   def minhashIndex(
       df: DataFrame, idCol: String, textCol: String,
-      n: Int = 3, bands: Int = 4, rowsPerBand: Int = 3): MinhashIndex = {
+      n: Int = 3, bands: Int = 4, rowsPerBand: Int = 3): MinhashIndex =
+    MinhashIndex(pin(packedRows(df, idCol, textCol, n, bands, rowsPerBand)))
+
+  /** The (id, sh, nsh, band_keys) rows of a [[MinhashIndex]], unpinned. */
+  private def packedRows(df: DataFrame, idCol: String, textCol: String,
+      n: Int, bands: Int, rowsPerBand: Int): DataFrame = {
     require(n > 0 && bands > 0 && rowsPerBand > 0,
       s"need n, bands and rowsPerBand > 0, got n=$n bands=$bands rowsPerBand=$rowsPerBand")
     val bandKeys = (0 until bands).map(bi =>
       md5(concat_ws("|", slice(col("mh"), bi * rowsPerBand + 1, rowsPerBand).cast("array<string>"))))
-    MinhashIndex(pin(minhashed(df, idCol, textCol, n, bands * rowsPerBand)
-      .select(col("id"), col("sh"), col("nsh"), array(bandKeys: _*).as("band_keys"))))
+    minhashed(df, idCol, textCol, n, bands * rowsPerBand)
+      .select(col("id"), col("sh"), col("nsh"), array(bandKeys: _*).as("band_keys"))
   }
 
   /** MinHash + LSH near-dup pairs.
@@ -498,40 +499,74 @@ object Dedup {
   }
 
   /** Incremental (delta ↔ corpus) MinHash-LSH near-dup pairs: the daily-
-    * ingest shape of corpus dedup at 100 TB — band-join the NEW batch
-    * against the standing corpus instead of self-joining the whole corpus
-    * again. Output: (id_a = left/delta id, id_b = right/corpus id, jaccard),
-    * same-id pairs excluded (overlapping id spaces). The MinHash family
-    * depends only on shingle values, so signatures computed here for the
-    * corpus side are bit-identical to any previous run's — in a real
-    * pipeline the corpus's banded signatures are computed ONCE, stored as a
-    * table keyed by (band, band_key), and each delta joins against that
-    * index; this method takes the raw frame and derives them for the
-    * oracle's sake, which changes cost, not results. Candidate volume is
-    * |delta bands| ⋈ |corpus bands| bucket-bounded — never a self-join of
-    * the big side. Eager (result checkpointed, caches released). */
+    * ingest shape of corpus dedup at 100 TB — probe the standing corpus
+    * with the NEW batch instead of self-joining the whole corpus again.
+    * Output: (id_a = left/delta id, id_b = right/corpus id, jaccard). The
+    * MinHash family depends only on shingle values, so signatures computed
+    * here for the corpus side are bit-identical to any previous run's — in
+    * a real pipeline the corpus index is built ONCE and each delta probes
+    * it ([[minhashLshPairsBetweenIndexed]]); this method builds it from the
+    * raw frame for the oracle's sake, which changes cost, not results. The
+    * delta's rows are computed and collected once, never pinned. Contract
+    * and output as [[minhashLshPairsBetweenIndexed]]; the corpus index is
+    * released before this returns. */
   def minhashLshPairsBetween(
       left: DataFrame, right: DataFrame, idCol: String, textCol: String,
       n: Int = 3, bands: Int = 4, rowsPerBand: Int = 3,
       threshold: Double = 0.8): DataFrame = {
-    val ixL = minhashIndex(left, idCol, textCol, n, bands, rowsPerBand)
     val ixR = minhashIndex(right, idCol, textCol, n, bands, rowsPerBand)
-    val out = minhashLshPairsBetweenIndexed(ixL, ixR, threshold)
-    ixL.release(); ixR.release()
-    out
+    try pairsBetween(packedRows(left, idCol, textCol, n, bands, rowsPerBand), ixR, threshold)
+    finally ixR.release()
   }
 
   /** [[minhashLshPairsBetween]] over prebuilt indexes — the standing-corpus
-    * shape made literal: the big side's [[MinhashIndex]] is built (or
-    * loaded) ONCE and every delta batch band-joins against it; neither
-    * index is released here. */
+    * shape made literal, as an index probe plus an exact verify (the
+    * MinHash twin of [[embeddingNearDupPairsBetween]]). The left (delta)
+    * index — by contract the SMALL, batch-sized side — is collected from
+    * its cache, and its (band, band_key) → delta-row probe table is
+    * broadcast. ONE scan of the right index's pinned `packed` frame then
+    * looks each row's band keys up, drops the duplicates across bands
+    * inside the row and verifies each candidate with the exact Jaccard of
+    * the relational verify (the PPJoin length filter, then
+    * common / (|A| + |B| − common) as a double) — the right index is never
+    * joined or shuffled, and nothing is pinned. Docs without a shingle
+    * match nothing. Ids are expected unique per row: a repeated id is
+    * matched on each of its own rows. Output: (id_a = left id, id_b =
+    * right id, jaccard ≥ threshold), each pair once; same-id and null-id
+    * pairs excluded (overlapping id spaces). Eager: the pairs are computed
+    * before this returns, as a driver-local frame; neither index is
+    * released. Two Spark jobs: the delta collect and the corpus scan. */
   def minhashLshPairsBetweenIndexed(
-      left: MinhashIndex, right: MinhashIndex, threshold: Double): DataFrame = {
-    val cand = left.bandedKeys.as("x").join(right.bandedKeys.as("y"),
-        col("x.band") === col("y.band") && col("x.band_key") === col("y.band_key") &&
-          col("x.id") =!= col("y.id"))
-      .select(col("x.id").as("id_a"), col("y.id").as("id_b")).distinct()
-    verifyJaccard2(cand, left.shingles, right.shingles, threshold).localCheckpoint(true)
+      left: MinhashIndex, right: MinhashIndex, threshold: Double): DataFrame =
+    pairsBetween(left.packed, right, threshold)
+
+  /** [[minhashLshPairsBetweenIndexed]] with the delta as its unpinned or
+    * pinned (id, sh, nsh, band_keys) rows. */
+  private def pairsBetween(delta: DataFrame, corpus: MinhashIndex,
+      threshold: Double): DataFrame = {
+    val spark = delta.sparkSession
+    val schema = StructType(Seq(StructField("id_a", delta.schema("id").dataType),
+      StructField("id_b", corpus.packed.schema("id").dataType), StructField("jaccard", DoubleType)))
+    // docs without a shingle are dropped here, not by a filter in the plan
+    // (see [[minhashed]])
+    val probes = delta.select("id", "sh", "band_keys").collect()
+      .filter(r => !r.isNullAt(0) && !r.isNullAt(1) && r.getSeq[Long](1).nonEmpty)
+    if (probes.isEmpty) return spark.createDataFrame(java.util.Collections.emptyList[Row](), schema)
+    val table = spark.sparkContext.broadcast(MinhashProbeTable(threshold,
+      probes.map(_.getSeq[Long](1).toArray), probes.map(_.getSeq[String](2).toArray)))
+    try {
+      val probe = GraftColumns.of(MinhashProbeLong(
+        UnresolvedAttribute("band_keys"), UnresolvedAttribute("sh"), table))
+      val hits = corpus.packed
+        .select(col("id"), explode(probe).as("c"))
+        .select(col("c.a"), col("id"), col("c.jaccard"))
+        .collect()
+      val pairs = hits.flatMap { h =>
+        val (idA, idB) = (probes(h.getInt(0)).get(0), h.get(1))
+        if (idB == null || idA == idB) None else Some(Row(idA, idB, h.getDouble(2)))
+      }
+      spark.createDataFrame(java.util.Arrays.asList(pairs: _*), schema)
+    } finally table.destroy()
   }
 
   /** Relational 64-bit SimHash: explode tokens, hash each ONCE (codegen'd
@@ -734,11 +769,14 @@ object Dedup {
     val initRdd = init.rdd
     StarForest.pass(init.schema("u").dataType) match {
       case Some(localPass) if initRdd.getNumPartitions <= 1 =>
-        // one partition holds every edge: its star forest IS the fixed point
-        val forest = spark.createDataFrame(initRdd.mapPartitions(localPass), init.schema)
+        // one partition holds every edge: its star forest IS the fixed point.
+        // It has one row per non-root node and fit one task, so it is
+        // collected, and the labels join the nodes as a relation of known
+        // size (a broadcast)
+        val forest = initRdd.mapPartitions(localPass).collect()
+        val labels = spark.createDataFrame(java.util.Arrays.asList(forest: _*), init.schema)
         return withSingletons(
-          forest.select(col("u").as("id"), col("v").as("component")).localCheckpoint(true),
-          nodes, idCol)
+          labels.select(col("u").as("id"), col("v").as("component")), nodes, idCol)
       case _ =>
     }
     var cur = initRdd.persist(StorageLevel.MEMORY_AND_DISK)

@@ -50,9 +50,11 @@ object WordPiece {
     when(p.startsWith("##"), p.substr(lit(3), length(p) - 2)).otherwise(p)
 
   /** One greedy merge of pair (a, b) over a space-joined symbol string —
-    * [[Bpe.applyMerge]]'s fold with the WordPiece fusion rule: the fused
-    * symbol is a + b-without-`##` (the right side inside a word is always
-    * a continuation), so the result keeps a's word-position status. */
+    * BPE's merge fold ([[Bpe]]) with the WordPiece fusion rule: `b` fuses
+    * onto an accumulator that equals `a` or ends with " " + `a`, and the
+    * fused symbol is a + b-without-`##` (the right side inside a word is
+    * always a continuation), so the result keeps a's word-position
+    * status. */
   def applyMerge(symsStr: Column, a: Column, b: Column): Column = {
     val sy = split(symsStr, " ")
     aggregate(

@@ -9,4 +9,7 @@ import org.apache.spark.sql.classic.ExpressionUtils
   * columns through it. */
 object GraftColumns {
   def of(e: Expression): Column = ExpressionUtils.column(e)
+
+  /** The Catalyst expression of a column, to wrap in such a kernel. */
+  def expr(c: Column): Expression = ExpressionUtils.expression(c)
 }

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.scalatest.prop.TableDrivenPropertyChecks._
 import graft.SparkTestBase
@@ -31,21 +31,127 @@ class BpeSpec extends SparkTestBase {
     assert(merges(3) == ((4, "lo", "w", 7L)))
   }
 
+  /** One greedy merge of (a, b) over a space-joined symbol string as a
+    * higher-order-function fold — the definition the encode kernel
+    * replaced (`Bpe.applyMerge`), and the fold DuckDB's `list_reduce`
+    * replays for the oracle. */
+  private def hofMerge(symsStr: Column, a: Column, b: Column): Column = {
+    val sy = split(symsStr, " ")
+    aggregate(
+      slice(sy, lit(2), size(sy) - 1), element_at(sy, 1),
+      (acc, x) =>
+        when(x === b && (acc === a || acc.endsWith(concat(lit(" "), a))),
+          concat(acc, b))
+          .otherwise(concat(acc, lit(" "), x)))
+  }
+
+  /** The former `Bpe.encodePieces`: an outer fold over the merge list as
+    * an array-of-structs literal, [[hofMerge]] per merge. */
+  private def hofPieces(token: Column, merges: Seq[(String, String)]): Column = {
+    val mArr = array(merges.map { case (a, b) => struct(lit(a).as("a"), lit(b).as("b")) }: _*)
+    split(aggregate(mArr, Bpe.charSymbols(token),
+      (s, m) => hofMerge(s, m.getField("a"), m.getField("b"))), " ")
+  }
+
+  /** The former `Bpe.docPieceCounts`: pieces per unique word, joined back
+    * to the (doc, word) rows and summed per doc. */
+  private def joinBackDocPieceCounts(docs: DataFrame, merges: Seq[(String, String)]): DataFrame = {
+    val dt = docs.select(col("doc_id"),
+        explode(graft.functions.Text.tokens(graft.functions.Text.normalize(col("text")))).as("word"))
+      .filter(length(col("word")) > 0)
+    val wp = Bpe.wordCounts(docs, "text").select(col("word"), size(hofPieces(col("word"), merges)).as("n_p"))
+    dt.join(wp, "word").groupBy("doc_id")
+      .agg(count(lit(1)).as("n_tokens"), sum(col("n_p").cast("long")).as("n_pieces"))
+  }
+
+  /** `f`'s rows with whole-stage codegen on, then fully interpreted. */
+  private def bothModes(f: => DataFrame): (Set[Seq[Any]], Set[Seq[Any]]) = {
+    val gen = rowSet(f)
+    var interp = Set.empty[Seq[Any]]
+    withSQLConf("spark.sql.codegen.wholeStage" -> "false",
+        "spark.sql.codegen.factoryMode" -> "NO_CODEGEN") { interp = rowSet(f) }
+    (gen, interp)
+  }
+
+  private def encoded(words: Seq[String], merges: Seq[(String, String)]): Seq[String] =
+    words.toDF("w").select(concat_ws(" ", Bpe.encodePieces(col("w"), merges)))
+      .collect().map(_.getString(0)).toSeq
+
   test("applyMerge: greedy left-to-right non-overlap (the a-a-a case)") {
     val rows = Seq("a a a a a a", "x a b a b", "a", "b a a b")
       .toDF("syms")
-      .select(Bpe.applyMerge(col("syms"), lit("a"), lit("a")).as("m"))
+      .select(hofMerge(col("syms"), lit("a"), lit("a")).as("m"))
       .collect().map(_.getString(0)).toSeq
     // matches DuckDB list_reduce of the identical fold
     assert(rows == Seq("aa aa aa", "x a b a b", "a", "b aa b"))
+    // the encode kernel folds the same words the same way
+    assert(encoded(Seq("aaaaaa", "xabab", "a", "baab"), Seq(("a", "a"))) == rows)
   }
 
   test("applyMerge: fused tail never re-merges, multi-char symbols delimit exactly") {
     // symbol "xa" must not satisfy an ends-with-"a" check: delimiter makes it exact
     val out = Seq("xa b c", "a b a b").toDF("syms")
-      .select(Bpe.applyMerge(col("syms"), lit("a"), lit("b")).as("m"))
+      .select(hofMerge(col("syms"), lit("a"), lit("b")).as("m"))
       .collect().map(_.getString(0)).toSeq
     assert(out == Seq("xa b c", "ab ab"))
+    // in the kernel "xa" is a fused symbol: (x, a) runs first
+    assert(encoded(Seq("xabc", "abab"), Seq(("x", "a"), ("a", "b"))) == out)
+  }
+
+  test("graft_bpe_encode ≡ the higher-order-function fold, codegen and interpreted") {
+    import graft.expressions.GraftFunctions
+    GraftFunctions.register(spark)
+    val tricky = corpus.unionByName(Seq(
+      (5L, "aaaa aaaa banana banana banana"),
+      (6L, "abcabc abcabc xyxyxy")).toDF("doc_id", "text"))
+    val trained = Bpe.train(tricky, "text", 12).orderBy("rank")
+      .collect().map(r => (r.getString(1), r.getString(2))).toSeq
+    val vocab = Bpe.wordCounts(tricky, "text").collect().map(_.getString(0)).toSeq
+    // the a-a-a and fused-tail cases, multi-character and supplementary-
+    // plane symbols, 1-char and empty words, and what charSymbols does
+    // with spaces, tabs and line terminators inside a word
+    val edge = Seq("aaaaaa", "aaaaaaa", "xabab", "xabc", "abab", "a", "", "low", "lowest",
+      "😀😀x", "𐐀a𐐀a", "éé", "ａx",
+      "a b", " ab ", "a\tb", "a\nb", "ab\n", "\r\na", "a b", "  ")
+    val extra = Seq(("a", "a"), ("x", "a"), ("a", "b"), ("ab", "ab"), ("zz", "q"),
+      ("😀", "😀"), ("𐐀", "a"), ("é", "é"), ("", "b"),
+      ("a", ""), ("x y", "z"), ("q", "r s"))
+    val words = (vocab ++ edge).map(Option(_)) :+ None
+    val df = words.toDF("w").repartition(3) // executed, not folded on the driver
+    for (merges <- Seq(trained, extra, trained ++ extra, Seq(("zz", "q")))) {
+      val (gen, interp) = bothModes(df.select(col("w"), Bpe.encodePieces(col("w"), merges),
+        call_function("graft_bpe_encode", col("w"), typedLit(merges))))
+      assert(gen == interp, s"codegen and interpreted evaluation differ under $merges")
+      val want = rowSet(df.select(col("w"), hofPieces(col("w"), merges), hofPieces(col("w"), merges)))
+      assert(gen == want, s"kernel and fold differ under $merges")
+    }
+    // the cases really are cases: a never-occurring merge changes nothing,
+    // the null word encodes to null, the empty word to one empty piece
+    val none = df.select(col("w"), Bpe.encodePieces(col("w"), Seq(("zz", "q"))).as("p")).collect()
+      .map(r => Option(r.getString(0)) -> Option(r.getSeq[String](1))).toMap
+    assert(none(Some("low")).contains(Seq("l", "o", "w")))
+    assert(none(None).isEmpty && none(Some("")).contains(Seq("")))
+  }
+
+  test("docPieceCounts ≡ the dictionary join-back; repeated ids sum, token-less docs are absent") {
+    val merges = Bpe.train(corpus, "text", 6).orderBy("rank")
+      .collect().map(r => (r.getString(1), r.getString(2))).toSeq
+    val docs = corpus.unionByName(Seq(
+      (1L, "slowest lower"), // a repeated id: its rows are summed
+      (7L, "!!! ... ???"), // no token after normalization
+      (8L, "")).toDF("doc_id", "text"))
+      .unionByName(Seq((9L, Option.empty[String])).toDF("doc_id", "text"))
+    val (gen, interp) = bothModes(Bpe.docPieceCounts(docs, "doc_id", "text", merges))
+    assert(gen == interp)
+    assert(gen == rowSet(joinBackDocPieceCounts(docs, merges)))
+    assert(gen.map(_.head) == Set(1L, 2L, 3L, 4L))
+    assert(gen.collectFirst { case Seq(1L, n, _) => n }.contains(7L))
+    // pieceCounts (q128) over the kernel ≡ over the fold
+    val pieces = docs.select(explode(graft.functions.Text.tokens(
+      graft.functions.Text.normalize(col("text")))).as("word")).filter(length(col("word")) > 0)
+      .select(explode(hofPieces(col("word"), merges)).as("piece"))
+      .groupBy("piece").agg(count(lit(1)).as("total"))
+    assert(rowSet(Bpe.pieceCounts(docs, "text", merges)) == rowSet(pieces))
   }
 
   test("encodePieces ≡ final training segmentation; concat of pieces restores the word") {
@@ -113,7 +219,7 @@ class BpeSpec extends SparkTestBase {
 
   /** The relational round loop `train` ran before its merge loop moved to
     * the driver, at one merge a round: per round, the (pc DESC, a, b)
-    * argmax of the Spark pair counts, then one `applyMerge` projection. */
+    * argmax of the Spark pair counts, then one [[hofMerge]] projection. */
   private def sparkRounds(words: DataFrame, numMerges: Int): Seq[(Int, String, String, Long)] = {
     var state = words.localCheckpoint(true)
     val merges = scala.collection.mutable.ArrayBuffer.empty[(Int, String, String, Long)]
@@ -125,7 +231,7 @@ class BpeSpec extends SparkTestBase {
         val (a, b, pc) = (top(0).getString(0), top(0).getString(1), top(0).getLong(2))
         merges += ((merges.size + 1, a, b, pc))
         state = state.select(col("word"), col("cnt"),
-          Bpe.applyMerge(col("syms"), lit(a), lit(b)).as("syms")).localCheckpoint(true)
+          hofMerge(col("syms"), lit(a), lit(b)).as("syms")).localCheckpoint(true)
       }
     }
     merges.toSeq

@@ -102,6 +102,89 @@ class DedupSimilaritySpec extends SparkTestBase {
     ixC.release(); ixD.release()
   }
 
+  /** The band-join delta path `minhashLshPairsBetweenIndexed` ran before
+    * its one-scan probe: a (band, band_key) equi-join of the two indexes'
+    * band rows, a candidate distinct, and the exact verify joined back to
+    * both shingle sets. */
+  private def bandJoinBetween(left: Dedup.MinhashIndex, right: Dedup.MinhashIndex,
+      threshold: Double): Set[Seq[Any]] = {
+    val cand = left.bandedKeys.as("x").join(right.bandedKeys.as("y"),
+        col("x.band") === col("y.band") && col("x.band_key") === col("y.band_key") &&
+          col("x.id") =!= col("y.id"))
+      .select(col("x.id").as("id_a"), col("y.id").as("id_b")).distinct()
+    rowSet(cand
+      .join(left.shingles.select(col("id").as("id_a"), col("sh").as("sh_a"), col("nsh").as("nsh_a")), Seq("id_a"))
+      .join(right.shingles.select(col("id").as("id_b"), col("sh").as("sh_b"), col("nsh").as("nsh_b")), Seq("id_b"))
+      .filter(least(col("nsh_a"), col("nsh_b")).cast("double") >=
+        greatest(col("nsh_a"), col("nsh_b")) * lit(threshold - 1e-9))
+      .withColumn("common", size(array_intersect(col("sh_a"), col("sh_b"))))
+      .withColumn("jaccard",
+        col("common").cast("double") / (col("nsh_a") + col("nsh_b") - col("common")))
+      .filter(col("jaccard") >= threshold)
+      .select("id_a", "id_b", "jaccard"))
+  }
+
+  /** A seeded corpus of 20-word docs and a delta of edited copies: 1–6
+    * words replaced, an exact copy, a copy under a corpus id, docs below
+    * three tokens, an empty and a null text. */
+  private def minhashDeltaFixture: (Seq[(Long, String)], Seq[(Long, Option[String])]) = {
+    val rnd = new scala.util.Random(20261019L)
+    val vocab = (0 until 60).map(i => s"w$i")
+    val corpus = (0L until 150L).map(i => (i, Seq.fill(20)(vocab(rnd.nextInt(vocab.size))).mkString(" ")))
+    def edit(t: String, k: Int) = {
+      val ws = t.split(" ")
+      (0 until k).foreach(_ => ws(rnd.nextInt(ws.length)) = vocab(rnd.nextInt(vocab.size)))
+      ws.mkString(" ")
+    }
+    val edited = (0 until 40).map(i => (1000L + i, Option(edit(corpus(rnd.nextInt(150))._2, 1 + i % 6))))
+    val delta = edited ++ Seq(
+      (2000L, Option(corpus(5)._2)), // an exact copy: it collides in every band
+      (7L, Option(edit(corpus(7)._2, 1))), // a near-dup under its corpus doc's own id
+      (9L, Option(corpus(10)._2)), // a corpus id on another doc's copy
+      (2001L, Option("w1 w2")), (2002L, Option("")), (2003L, None))
+    (corpus, delta)
+  }
+
+  test("minhash delta probe ≡ the band join + exact verify: each pair once, no pin") {
+    val (corpusRows, deltaRows) = minhashDeltaFixture
+    val longIds = (corpusRows.toDF("doc_id", "text"), deltaRows.toDF("doc_id", "text"))
+    val stringIds = (corpusRows.map { case (i, t) => (s"d$i", t) }.toDF("doc_id", "text"),
+      deltaRows.map { case (i, t) => (s"d$i", t) }.toDF("doc_id", "text"))
+    for ((corpus, delta) <- Seq(longIds, stringIds); threshold <- Seq(0.5, 0.8)) {
+      val ixR = Dedup.minhashIndex(corpus, "doc_id", "text")
+      val ixL = Dedup.minhashIndex(delta, "doc_id", "text")
+      val want = bandJoinBetween(ixL, ixR, threshold)
+      val before = pinned
+      val got = Dedup.minhashLshPairsBetweenIndexed(ixL, ixR, threshold)
+      assert(pinned == before, "the probe pins nothing")
+      assert(rowSet(got) == want, s"θ=$threshold")
+      assert(got.count() == want.size, s"each pair once at θ=$threshold")
+      assert(got.schema.map(_.dataType) == Seq(corpus.schema("doc_id").dataType,
+        corpus.schema("doc_id").dataType, org.apache.spark.sql.types.DoubleType))
+      // the cases are there: the exact copy (every band) and the id-sharing
+      // near-dup pair (excluded), several edited copies at θ 0.5
+      val key = (i: Long) => if (corpus.schema("doc_id").dataType.typeName == "string") s"d$i" else i
+      assert(want.contains(Seq(key(2000L), key(5L), 1.0)))
+      assert(!want.exists(p => p(0) == p(1)))
+      assert(want.size >= (if (threshold < 0.6) 10 else 3), s"${want.size} pairs at θ=$threshold")
+      assert(rowSet(Dedup.minhashLshPairsBetween(delta, corpus, "doc_id", "text",
+        threshold = threshold)) == want)
+      // empty delta, empty standing index
+      val none = Dedup.minhashIndex(delta.limit(0), "doc_id", "text")
+      assert(Dedup.minhashLshPairsBetweenIndexed(none, ixR, threshold).count() == 0)
+      val empty = Dedup.minhashIndex(corpus.limit(0), "doc_id", "text")
+      assert(Dedup.minhashLshPairsBetweenIndexed(ixL, empty, threshold).count() == 0)
+      Seq(ixR, ixL, none, empty).foreach(_.release())
+    }
+    // the exact copy collides in all four bands, yet is one pair
+    val ixR = Dedup.minhashIndex(longIds._1, "doc_id", "text")
+    val ixL = Dedup.minhashIndex(longIds._2, "doc_id", "text")
+    val bands = ixL.bandedKeys.filter(col("id") === 2000L).join(
+      ixR.bandedKeys.filter(col("id") === 5L), Seq("band", "band_key")).count()
+    assert(bands == 4)
+    ixR.release(); ixL.release()
+  }
+
   test("minhashLshPairsBetween: delta vs corpus finds the cross pair, never corpus-internal ones") {
     val delta = docs.filter(col("doc_id") === 0)
     // corpus holds BOTH a near-dup of the delta doc (1) and an internal
