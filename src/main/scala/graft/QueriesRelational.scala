@@ -15,7 +15,7 @@ import graft.streaming.Streams
 private[graft] object QueriesRelational extends OracleSqlHelpers {
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // ----- the reference's own benchmark workload (compare.py:25-34) -------
-    // join -> drop_duplicates -> groupby mean, on real tables at the bench SF.
+    // join -> drop_duplicates -> groupby mean, on real tables.
     "q00_compare_pipeline" -> ((s, d) => {
       val o = Tables.orders(s, d).withColumnRenamed("o_orderkey", "l_orderkey")
       val l = Tables.lineitem(s, d)
@@ -160,7 +160,7 @@ private[graft] object QueriesRelational extends OracleSqlHelpers {
         .select(col("event_id"), col("k").cast(LongType).as("k"))
         .orderBy("event_id")
     }),
-    // ----- headline agg (bench) --------------------------------------------
+    // ----- headline agg ----------------------------------------------------
     "q22_pricing_summary" -> ((s, d) => {
       Tables.lineitem(s, d)
         .filter(col("l_shipdate") < to_timestamp(lit("1999-01-01")))

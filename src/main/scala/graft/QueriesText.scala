@@ -394,8 +394,9 @@ private[graft] object QueriesText extends OracleSqlHelpers {
         .transform(Ops.sortSmallT(col("rank")))),
     // WordPiece encode ✚ - greedy longest-match-first (MaxMatch) against
     // the FINAL vocab, NOT a merge replay (the family's defining encode
-    // difference): one codegen'd fold over DISTINCT words, [UNK] words
-    // cost exactly 1 piece; the oracle walks precomputed jump pointers
+    // difference): one higher-order fold over DISTINCT words (Spark runs
+    // it interpreted: higher-order functions are CodegenFallback), [UNK]
+    // words cost exactly 1 piece; the oracle walks precomputed jump pointers
     "q203_wordpiece_encode" -> ((s, d) => {
       val docs = Tables.documents(s, d)
       val merges = WordPiece.train(docs, "text", numMerges = 8)

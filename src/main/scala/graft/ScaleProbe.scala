@@ -430,8 +430,8 @@ object ScaleProbe {
       // positions shuffle bucket cells, not a per-group sorted history).
       // GC fence (r13): the r13 axes run ~30 axes deep in one JVM; an
       // untimed collection here keeps earlier axes' garbage off these
-      // clocks (the Bench release() rationale — run-3 measured a 3.6×
-      // factor-10 swing on THIS axis from accumulated heap state alone).
+      // clocks (run-3 measured a 3.6× factor-10 swing on THIS axis from
+      // accumulated heap state alone).
       System.gc()
       val wzt0 = System.nanoTime()
       val nWz = graft.operators.Stats.winsorizedMean(

@@ -2,17 +2,13 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.expressions.Window
-import org.apache.spark.sql.types.LongType
 
-import graft.operators.{Audit, Bpe, Classify, Dedup, Dsir, Graph, Grouping, Intervals, Joins, Layout, Lm, Ops, Pack, Profile, Search, Sequences, Similarity, Sketches, Stats}
-import graft.functions.{Jsons, Multimodal, Pii, Quality, Repetition, Text}
-import graft.streaming.Streams
+import graft.operators.{Grouping, Joins, Ops}
 
 /** Per-group iteration output row (q09_group_iter). */
 case class FlagStat(l_returnflag: String, n_rows: Long, sum_qty: Double)
 
-/** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
+/** The query registry — see SURVEY.md §7.
   *
   * Every query takes (spark, sfDir) and reads the TESTDATA.md parquet tables.
   * Each has a DuckDB-runnable ANSI-SQL twin in [[oracleSql]] with IDENTICAL
@@ -60,69 +56,4 @@ object SparkEntry {
     QueriesGraph.oracleSql ++
     QueriesStats.oracleSql ++
     QueriesStream.oracleSql
-
-  /** q53's body, parameterized on the LSH table count so `Bench` can echo
-    * the non-default dial at the bench SF every round (the oracle row uses
-    * `nTables = 0` = the threshold-adaptive default: 24 tables at θ=0.3).
-    * The exact side is the deterministic ≤800-row cap —
-    * verification-bounded at any SF. */
-  def neardupRecallAt(s: SparkSession, d: String, nTables: Int): DataFrame = {
-    graft.expressions.GraftFunctions.register(s)
-    val e = Tables.embeddings(s, d)
-    val found = Dedup.embeddingNearDupPairs(e, "vec_id", "embedding",
-        nTables = nTables, threshold = 0.3)
-      .select(col("id_a"), col("id_b"), lit(1L).as("hit"))
-    val v = e.select(col("vec_id"), Similarity.quantize(col("embedding")).as("q"))
-      .withColumn("nn", call_function("graft_qdot", col("q"), col("q")))
-      // TakeOrdered (per-partition heap) — never a global sort
-      .orderBy(md5(col("vec_id").cast("string")), col("vec_id")).limit(800)
-    val exact = v.as("x").join(v.as("y"), col("x.vec_id") < col("y.vec_id"))
-      .withColumn("cosine",
-        call_function("graft_qdot", col("x.q"), col("y.q")).cast("double") /
-          (sqrt(col("x.nn").cast("double")) * sqrt(col("y.nn").cast("double"))))
-      .filter(col("cosine") >= 0.3)
-      .select(col("x.vec_id").as("id_a"), col("y.vec_id").as("id_b"))
-    exact.join(found, Seq("id_a", "id_b"), "left")
-      .agg(count(lit(1)).as("n_exact"),
-        sum(coalesce(col("hit"), lit(0L))).as("n_found"))
-      .select(col("n_exact"), col("n_found"),
-        (col("n_found").cast("double") / col("n_exact").cast("double")).as("recall"))
-  }
-
-  /** The between-path sibling of [[neardupRecallAt]] (r7): recall of the
-    * delta↔corpus banding (q115's shape — delta probed in the corpus
-    * index's bucket space) against the exact delta×corpus pairs of a
-    * deterministic ≤400×400 capped sample — verification-bounded at any
-    * SF, echoed by `Bench` at the bench SF every round. */
-  def neardupBetweenRecallAt(s: SparkSession, d: String): DataFrame = {
-    graft.expressions.GraftFunctions.register(s)
-    val e = Tables.embeddings(s, d)
-    val sharded = Ops.shardByHash(e, "vec_id", 5)
-    val corpus = sharded.filter(col("shard") =!= 0).drop("shard")
-    val delta = sharded.filter(col("shard") === 0).drop("shard")
-    val ix = Dedup.embeddingIndex(corpus, "vec_id", "embedding", threshold = 0.3)
-    val found = Dedup.embeddingNearDupPairsBetween(delta, ix, "vec_id", "embedding",
-        threshold = 0.3)
-      .select(col("id_a"), col("id_b"), lit(1L).as("hit"))
-    ix.release()
-    def capped(df: DataFrame) =
-      df.select(col("vec_id"), Similarity.quantize(col("embedding")).as("q"))
-        .withColumn("nn", call_function("graft_qdot", col("q"), col("q")))
-        // TakeOrdered (per-partition heap) — never a global sort
-        .orderBy(md5(col("vec_id").cast("string")), col("vec_id")).limit(400)
-    val dv = capped(delta)
-    val cv = capped(corpus)
-    val exact = dv.as("x").join(cv.as("y"), col("x.vec_id") =!= col("y.vec_id"))
-      .withColumn("cosine",
-        call_function("graft_qdot", col("x.q"), col("y.q")).cast("double") /
-          (sqrt(col("x.nn").cast("double")) * sqrt(col("y.nn").cast("double"))))
-      .filter(col("cosine") >= 0.3)
-      .select(col("x.vec_id").as("id_a"), col("y.vec_id").as("id_b"))
-    exact.join(found, Seq("id_a", "id_b"), "left")
-      .agg(count(lit(1)).as("n_exact"),
-        sum(coalesce(col("hit"), lit(0L))).as("n_found"))
-      .select(col("n_exact"), col("n_found"),
-        (col("n_found").cast("double") / col("n_exact").cast("double")).as("recall"))
-  }
-
 }

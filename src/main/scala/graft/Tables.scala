@@ -15,7 +15,7 @@ object Tables {
     * A bare `spark.read.parquet(path)` runs a 1-task schema-inference JOB
     * on every call — r16 profiling showed every query paying one ~30–50 ms
     * footer-read job PER TABLE READ (two-table joins pay two), pure fixed
-    * overhead across all 260 bench queries. The memo holds the file's own
+    * overhead across all 260 registered queries. The memo holds the file's own
     * inferred schema (the first read of a path's current contents pays the
     * inference), so later reads plan with `.schema(...)` and skip the job.
     * The key costs one file-status call on the driver, not a Spark job, and

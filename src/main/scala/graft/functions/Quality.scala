@@ -15,9 +15,10 @@ import org.apache.spark.sql.functions._
   * The two Gopher repetition rules (duplicate line/paragraph fraction,
   * top-n-gram share) live in [[Repetition]] — they need an explode+agg
   * shape, not a per-row scalar. Everything here is built-ins only (splits,
-  * `filter`/`aggregate` higher-order functions, `replace` counting) so the
-  * whole battery stays inside WholeStageCodegen: a stateless projection,
-  * linear in bytes, nothing to tune at 100 TB.
+  * `filter`/`aggregate` higher-order functions, `replace` counting): a
+  * stateless projection, linear in bytes, nothing to tune at 100 TB. The
+  * higher-order functions are `CodegenFallback` expressions, so those rules
+  * run interpreted inside the generated projection.
   *
   * Cross-engine: every rule is reproduced bit-for-bit by the q81 DuckDB
   * twin (same splits, same trim semantics, same integer thresholds).

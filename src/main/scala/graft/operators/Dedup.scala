@@ -894,7 +894,8 @@ object Dedup {
     * cosine 0.3–0.5, the hardest band for hyperplane LSH): 8 tables/no
     * probing = 0.34 pair recall; 16 tables + probing = 0.99 at sf0.01
     * (6 sign bits) and 0.86 at sf0.1 (8 bits; 24 tables measure 0.95 there
-    * at ~2× found-side cost — `Bench` re-measures the default every round).
+    * at ~2× found-side cost — `RecallFloorSpec` gates both dials on seeded
+    * 2000-vector corpora, and q53 pins the default's recall at sf0.01).
     * The decay with corpus size is inherent: sized sign bits cut per-table
     * collision probability ~0.63^bits at this θ, so holding recall at a
     * FIXED low threshold needs tables growing exponentially in bits —
@@ -906,9 +907,10 @@ object Dedup {
     * DEFAULT (`nTables = 0` = auto) adapts to the requested threshold:
     * 16 tables at θ ≥ 0.4, 24 below (VERDICT r5 §next-2 — the 16-table
     * dial measured 0.856 pair recall at θ=0.3/sf0.1 where 24 measures
-    * 0.946 at ~2× candidate cost; both re-measured by `Bench` every
-    * round). Deterministic and oracle-reproducible; precision = 1 via the
-    * exact verify. Eager (result checkpointed, caches released). */
+    * 0.946 at ~2× candidate cost; `RecallFloorSpec` sees 0.856–0.868 and
+    * 0.945–0.953 on its seeded corpora and gates both). Deterministic and
+    * oracle-reproducible; precision = 1 via the exact verify. Eager
+    * (result checkpointed, caches released). */
   def embeddingNearDupPairs(
       df: DataFrame, idCol: String, vecCol: String,
       nTables: Int = 0, signBits: Int = 0, threshold: Double = 0.4,

@@ -45,69 +45,12 @@ object Graph {
     * Damping = dampNum/dampDen (default 85/100). Ranks start at
     * floor(1e6/N) micro; each round: r(v) = floor((dampDen-dampNum)·1e6 /
     * (dampDen·N)) + Σ_{u→v} floor(r(u)·dampNum/(dampDen·outdeg(u))).
-    * Output: node, rank_micro (long), both exact. */
+    * Output: node, rank_micro (long), both exact. The teleport set is every
+    * node, so an empty edge list yields an empty frame. */
   def pageRank(
       edges: DataFrame, srcCol: String, dstCol: String, iterations: Int,
-      dampNum: Int = 85, dampDen: Int = 100): DataFrame = {
-    require(iterations >= 1, "iterations must be >= 1")
-    require(dampNum > 0 && dampDen > dampNum, "need 0 < dampNum < dampDen")
-    val e = pin(edges.select(col(srcCol).cast(LongType).as("src"),
-      col(dstCol).cast(LongType).as("dst")).distinct())
-    // outdeg is node-cardinality — attach it to the edge list ONCE with a
-    // plain shuffle join (both sides hash on src; never broadcast: a
-    // web-graph's node table does not fit an executor). The cached layout
-    // is hash-partitioned AND sorted on src, so every iteration's
-    // sort-merge join streams the big cached side with NO exchange and NO
-    // re-sort — only the (node-cardinality) rank frame moves per round.
-    val eDeg = pin(e.join(e.groupBy("src").agg(count(lit(1)).as("outdeg")), "src")
-      .repartition(col("src")).sortWithinPartitions("src"))
-    val nodeList = pin(e.select(col("src").as("node"))
-      .union(e.select(col("dst").as("node"))).distinct())
-    e.unpersist(blocking = false) // eDeg + nodeList carry all the loop needs
-    // N rides along as a broadcast scalar — never collected to the driver
-    val n = nodeList.agg(count(lit(1)).as("N"))
-    val base = floor(lit((dampDen - dampNum).toLong * 1000000L) / (lit(dampDen) * col("N")))
-      .cast(LongType)
-    val r0 = floor(lit(1000000L) / col("N")).cast(LongType)
-    // The round state is the INFLOW table only — (node, in_micro) for
-    // nodes with ≥1 in-edge; rank(u) = base + coalesce(inflow(u), 0) is a
-    // scalar expression, not a node-sized frame (rank_0 = r0 uniformly).
-    // Each round is therefore ONE left join of the cached src-sorted edge
-    // side against the previous agg (both keyed on the node id — no
-    // exchange on either side) feeding ONE map-side-combined agg on dst:
-    // one node-cardinality exchange per round, vs the three the former
-    // ranks-frame formulation paid (ranks re-shuffle onto src + agg +
-    // the per-round nodeBase fill join — guide §2.4). The fill join that
-    // gives zero-inflow nodes their base rank runs ONCE, at the end.
-    // floor(base + inflow) arithmetic is unchanged — bit-identical ranks.
-    var inflow: DataFrame = null
-    for (r <- 1 to iterations) {
-      val joined =
-        if (r == 1) eDeg.crossJoin(broadcast(n))
-        else eDeg.join(inflow, eDeg("src") === inflow("node"), "left")
-          .crossJoin(broadcast(n))
-      val rank = if (r == 1) r0 else base + coalesce(col("in_micro"), lit(0L))
-      inflow = joined
-        .select(col("dst").as("node"),
-          floor(rank * lit(dampNum.toLong) / (lit(dampDen.toLong) * col("outdeg")))
-            .cast(LongType).as("contrib"))
-        .groupBy("node").agg(sum(col("contrib")).as("in_micro"))
-      // dev-only plan capture (VERDICT r15 "what's wrong" #3): the final
-      // localCheckpoint hides the per-round plan from query-level explain,
-      // so GRAFT_PR_DUMP_ROUND_PLAN=true prints one mid-loop round here
-      // (plans/r16). Never set by the bench/verify mains.
-      if (r == 2 && sys.env.get("GRAFT_PR_DUMP_ROUND_PLAN").contains("true"))
-        inflow.explain("formatted")
-    }
-    val out = nodeList.crossJoin(broadcast(n))
-      .join(inflow, Seq("node"), "left")
-      .select(col("node"),
-        (base + coalesce(col("in_micro"), lit(0L))).as("rank_micro"))
-      .localCheckpoint(true) // executes the k-join plan ONCE
-    eDeg.unpersist(blocking = false)
-    nodeList.unpersist(blocking = false)
-    out
-  }
+      dampNum: Int = 85, dampDen: Int = 100): DataFrame =
+    rankRounds(edges, srcCol, dstCol, None, iterations, dampNum, dampDen)
 
   /** Personalized (topic-sensitive) PageRank — Haveliwala 2002: the
     * teleport mass returns ONLY to the `seeds` node set, so rank measures
@@ -127,55 +70,81 @@ object Graph {
   def personalizedPageRank(
       edges: DataFrame, srcCol: String, dstCol: String,
       seeds: DataFrame, seedCol: String, iterations: Int,
-      dampNum: Int = 85, dampDen: Int = 100): DataFrame = {
+      dampNum: Int = 85, dampDen: Int = 100): DataFrame =
+    rankRounds(edges, srcCol, dstCol,
+      Some(seeds.select(col(seedCol).cast(LongType).as("node"))), iterations, dampNum, dampDen)
+
+  /** The round loop both PageRanks share. `seeds` (a `node` column) is the
+    * teleport set; None teleports to every node. The teleport set's size
+    * N rides along as a broadcast scalar — never collected to the driver.
+    *
+    * The round state is the INFLOW table only — (node, in_micro) for nodes
+    * with ≥1 in-edge; rank(u) = teleport(u) + coalesce(inflow(u), 0) is a
+    * scalar expression, not a node-sized frame, where teleport(u) is the
+    * base floor((dampDen−dampNum)·1e6/(dampDen·N)) on the teleport set and
+    * 0 elsewhere (rank_0 = floor(1e6/N) on the teleport set). Each round is
+    * therefore ONE left join of the cached src-sorted edge side against the
+    * previous agg (both keyed on the node id — no exchange on either side)
+    * feeding ONE map-side-combined agg on dst: one node-cardinality
+    * exchange per round. The fill join that gives zero-inflow nodes their
+    * teleport rank runs ONCE, at the end. */
+  private def rankRounds(
+      edges: DataFrame, srcCol: String, dstCol: String, seeds: Option[DataFrame],
+      iterations: Int, dampNum: Int, dampDen: Int): DataFrame = {
     require(iterations >= 1, "iterations must be >= 1")
     require(dampNum > 0 && dampDen > dampNum, "need 0 < dampNum < dampDen")
-    val sd = pin(seeds.select(col(seedCol).cast(LongType).as("node")).distinct())
-    require(sd.limit(1).count() == 1L, "seeds must be non-empty")
+    val sd = seeds.map(s => pin(s.distinct()))
+    val noSeeds = sd.exists(_.limit(1).count() == 0L)
+    if (noSeeds) sd.foreach(_.unpersist(blocking = false))
+    require(!noSeeds, "seeds must be non-empty")
     val e = pin(edges.select(col(srcCol).cast(LongType).as("src"),
       col(dstCol).cast(LongType).as("dst")).distinct())
-    // the src node's seed flag rides ON the cached edge layout (one extra
-    // node-keyed join at build time), so each round's rank expression
-    // rank(u) = is_seed(u)·base + coalesce(inflow(u), 0) needs no
-    // node-sized rank frame — the [[pageRank]] inflow-only round shape:
-    // one cached-edge left join + one map-side-combined agg per round.
-    val eDeg = pin(e.join(e.groupBy("src").agg(count(lit(1)).as("outdeg")), "src")
-      .join(sd.select(col("node").as("src"), lit(1).as("src_seed")), Seq("src"), "left")
+    // outdeg is node-cardinality — attach it to the edge list ONCE with a
+    // plain shuffle join (both sides hash on src; never broadcast: a
+    // web-graph's node table does not fit an executor). The cached layout
+    // is hash-partitioned AND sorted on src, so every iteration's
+    // sort-merge join streams the big cached side with NO exchange and NO
+    // re-sort — only the (node-cardinality) rank frame moves per round.
+    // A personalized walk's src seed flag rides on the same layout.
+    val withDeg = e.join(e.groupBy("src").agg(count(lit(1)).as("outdeg")), "src")
+    val eDeg = pin(sd.fold(withDeg)(s => withDeg
+        .join(s.select(col("node").as("src"), lit(1).as("src_seed")), Seq("src"), "left"))
       .repartition(col("src")).sortWithinPartitions("src"))
-    val nodeList = pin(e.select(col("src").as("node"))
-      .union(e.select(col("dst").as("node")))
-      .union(sd.select(col("node"))).distinct())
-    e.unpersist(blocking = false)
-    val sN = sd.agg(count(lit(1)).as("S"))
-    val seedBase = floor(lit((dampDen - dampNum).toLong * 1000000L) /
-      (lit(dampDen) * col("S"))).cast(LongType)
-    val r0 = floor(lit(1000000L) / col("S")).cast(LongType)
+    val graphNodes = e.select(col("src").as("node")).union(e.select(col("dst").as("node")))
+    val nodeList = pin(sd.fold(graphNodes)(s => graphNodes.union(s.select(col("node")))).distinct())
+    e.unpersist(blocking = false) // eDeg + nodeList carry all the loop needs
+    val n = sd.getOrElse(nodeList).agg(count(lit(1)).as("N"))
+    // `v` on the teleport set, 0 elsewhere; the flag column exists only
+    // for a personalized walk
+    def teleport(flag: String, v: Column): Column =
+      if (sd.isEmpty) v else when(col(flag) === 1, v).otherwise(lit(0L))
+    val base = floor(lit((dampDen - dampNum).toLong * 1000000L) / (lit(dampDen) * col("N")))
+      .cast(LongType)
+    val r0 = floor(lit(1000000L) / col("N")).cast(LongType)
     var inflow: DataFrame = null
     for (r <- 1 to iterations) {
       val joined =
-        if (r == 1) eDeg.crossJoin(broadcast(sN))
+        if (r == 1) eDeg.crossJoin(broadcast(n))
         else eDeg.join(inflow, eDeg("src") === inflow("node"), "left")
-          .crossJoin(broadcast(sN))
+          .crossJoin(broadcast(n))
       val rank =
-        if (r == 1) when(col("src_seed") === 1, r0).otherwise(lit(0L))
-        else when(col("src_seed") === 1, seedBase).otherwise(lit(0L)) +
-          coalesce(col("in_micro"), lit(0L))
+        if (r == 1) teleport("src_seed", r0)
+        else teleport("src_seed", base) + coalesce(col("in_micro"), lit(0L))
       inflow = joined
         .select(col("dst").as("node"),
           floor(rank * lit(dampNum.toLong) / (lit(dampDen.toLong) * col("outdeg")))
             .cast(LongType).as("contrib"))
         .groupBy("node").agg(sum(col("contrib")).as("in_micro"))
     }
-    val out = nodeList.crossJoin(broadcast(sN))
-      .join(sd.select(col("node"), lit(1).as("is_seed")), Seq("node"), "left")
+    val nodes = nodeList.crossJoin(broadcast(n))
+    val out = sd.fold(nodes)(s => nodes.join(s.select(col("node"), lit(1).as("is_seed")), Seq("node"), "left"))
       .join(inflow, Seq("node"), "left")
       .select(col("node"),
-        (when(col("is_seed") === 1, seedBase).otherwise(lit(0L)) +
-          coalesce(col("in_micro"), lit(0L))).as("rank_micro"))
-      .localCheckpoint(true)
+        (teleport("is_seed", base) + coalesce(col("in_micro"), lit(0L))).as("rank_micro"))
+      .localCheckpoint(true) // executes the k-join plan ONCE
     eDeg.unpersist(blocking = false)
     nodeList.unpersist(blocking = false)
-    sd.unpersist(blocking = false)
+    sd.foreach(_.unpersist(blocking = false))
     out
   }
 

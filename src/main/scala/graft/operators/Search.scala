@@ -359,10 +359,10 @@ object Search {
     * once; the r13 measurements (VERDICT r12 #2) found the two plans
     * within ~25% of each other on the ScaleProbe tfidf axis at every
     * factor (position-in-run biased), while the DE-NOISED instrument —
-    * the bench harness, median of 3 with GC between runs — reads this
-    * query at 1.09 s lazy vs 1.80 s pinned at sf0.1: materialization +
-    * cache read-back costs more than the recompute, so the
-    * recompute-twice plan shipped and the pinned counterfactual stays
+    * a per-query harness (since retired), median of 3 with GC between
+    * runs — read this query at 1.09 s lazy vs 1.80 s pinned at sf0.1:
+    * materialization + cache read-back costs more than the recompute, so
+    * the recompute-twice plan shipped and the pinned counterfactual stays
     * measured in the probe every round. Posting-list-shaped joins only,
     * no global sort, no driver state. Output: (id, `term`, `tf`, `df`,
     * `tfidf_micro`, `rank` ≤ k). */

@@ -354,8 +354,9 @@ object Similarity {
         // exact top-5 at sf0.1 (2000 uniform vecs, 45 cells → 36% scanned) —
         // VERDICT r4 §wrong-3; 32 probes (71% scanned at that toy size) measure
         // ≥ 0.98, while at any serious index size the 2·√cells term dominates
-        // and the floor is irrelevant. Bench emits the recall at the bench SF
-        // every round; `nprobe` stays the caller's dial.
+        // and the floor is irrelevant. `RecallFloorSpec`'s ivfTopK row gates
+        // the recall (0.940–0.985 on seeded 2000-vector corpora); `nprobe`
+        // stays the caller's dial.
         val probes = ivfProbes(cells, nprobe)
         val cents = centsFrame(spark, trainIvfCents(trainingSet(c, cells), cells, lloydIters))
         val q = queries.select(col(idCol).as("query_id"), quantize(col(vecCol), scale).as("qv"))
@@ -505,10 +506,11 @@ object Similarity {
     * reorders a crowded cosine band — measured on this suite's
     * deliberately-uniform test vectors at sf0.1: coarse 32-bit codes rank
     * the exact top-5 at only 0.20 recall, while the default 96-bit codes +
-    * a shortlist-50 rerank measure **0.90**, echoed by `Bench` as
-    * `pq_top5`; clustered real embeddings are the favorable case). With
-    * rerank the output cosine is EXACT (micro-rounded); with `rerank = 0`
-    * it is the pure-ADC approximation.
+    * a shortlist-50 rerank measure **0.90** — 0.920–0.960 on the seeded
+    * 2000-vector corpora of `RecallFloorSpec`'s pqTopK row, which gates it,
+    * and 1.0 in q118's `hit` column at sf0.01; clustered real embeddings
+    * are the favorable case). With rerank the output cosine is EXACT
+    * (micro-rounded); with `rerank = 0` it is the pure-ADC approximation.
     *
     * Scale shape: [[ivfPqTopKIndexed]]'s — the query side carries one
     * lookup table per query (m·(kCents+1)+1 longs) into a broadcast join,
@@ -640,8 +642,9 @@ object Similarity {
     * rotation only adds noise. Residual encoding is the production
     * default for real CLUSTERED embeddings, where ‖v − c‖ ≪ ‖v‖ makes
     * the same code budget cover a much smaller space (Jégou §IV-A);
-    * `Bench` echoes both (`ivfpq_top5` / `ivfpq_res_top5`) every round so
-    * the dial stays a measured choice. */
+    * `RecallFloorSpec` gates both (its ivfPqTopK rows: 0.895–0.920 flat,
+    * 0.875–0.935 residual on seeded 2000-vector corpora; q119 and q121 pin
+    * the sf0.01 hits), so the dial stays a measured choice. */
   def ivfPqIndex(
       corpus: DataFrame, idCol: String, vecCol: String,
       nCells: Int = 0, ivfLloydIters: Int = 4,
