@@ -5,8 +5,6 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.LongType
 
-import graft.operators.Pinned.pin
-
 /** Market-basket association mining (Agrawal & Srikant 1994's support /
   * confidence framing; lift per Brin et al. 1997) over a (basket, item)
   * relation — the co-purchase / co-occurrence analytics the reference's
@@ -56,55 +54,54 @@ object Baskets {
     // both count joins): pin it rather than lean on ReuseExchange
     // canonicalization surviving AQE replans; released before return
     // (the result is eager — the Similarity-family contract)
-    val bi = pin(rel
-      .filter(col(basketCol).isNotNull && col(itemCol).isNotNull)
-      .select(col(basketCol).as("__bk"), col(itemCol).as("__it"))
-      .distinct()) // presence, not multiplicity — the basket-count model
-    val n = bi.agg(countDistinct(col("__bk")).as("__n"))
-    val itemCounts = pin(bi.groupBy(col("__it"))
-      .agg(count(lit(1)).as("__ic")))
-    // downward closure: an item in < minPairCount baskets cannot reach it
-    // as a pair — prune BEFORE the per-basket self-join
-    val frequent = bi.join(
-      itemCounts.filter(col("__ic") >= minPairCount).select(col("__it")),
-      Seq("__it"))
-    // per-basket fan-out cap: keep each basket's first `maxBasketItems`
-    // frequent items in (idHash60, item) order — deterministic sampling of
-    // co-occurrence, exact marginals (scaladoc); rank-filter shape so the
-    // window group-limits map-side instead of materializing mega-baskets
-    val wBk = Window.partitionBy(col("__bk"))
-      .orderBy(Ops.idHash60(col("__it")), col("__it"))
-    val capped = frequent
-      .withColumn("__rn", row_number().over(wBk))
-      .filter(col("__rn") <= maxBasketItems)
-      .drop("__rn")
-    val pairs = capped.as("l")
-      .join(capped.as("r"), col("l.__bk") === col("r.__bk")
-        && col("l.__it") < col("r.__it"))
-      .groupBy(col("l.__it").as("item_a"), col("r.__it").as("item_b"))
-      .agg(count(lit(1)).as("n_ab"))
-      .filter(col("n_ab") >= minPairCount)
-    val mic = (x: org.apache.spark.sql.Column) =>
-      round(x * 1e6).cast(LongType)
-    val out = pairs
-      .join(itemCounts.select(col("__it").as("item_a"), col("__ic").as("n_a")),
-        Seq("item_a"))
-      .join(itemCounts.select(col("__it").as("item_b"), col("__ic").as("n_b")),
-        Seq("item_b"))
-      .crossJoin(broadcast(n))
-      .select(col("item_a"), col("item_b"), col("n_ab"), col("n_a"), col("n_b"),
-        mic(col("n_ab").cast("double") / col("__n").cast("double"))
-          .as("support_micro"),
-        mic(col("n_ab").cast("double") / col("n_a").cast("double"))
-          .as("conf_ab_micro"),
-        mic(col("n_ab").cast("double") / col("n_b").cast("double"))
-          .as("conf_ba_micro"),
-        mic(col("n_ab").cast("double") * col("__n").cast("double")
-          / (col("n_a").cast("double") * col("n_b").cast("double")))
-          .as("lift_micro"))
-      .localCheckpoint(true)
-    itemCounts.unpersist(false)
-    bi.unpersist(false)
-    out
+    Pinned.scoped { pin =>
+      val bi = pin(rel
+        .filter(col(basketCol).isNotNull && col(itemCol).isNotNull)
+        .select(col(basketCol).as("__bk"), col(itemCol).as("__it"))
+        .distinct()) // presence, not multiplicity — the basket-count model
+      val n = bi.agg(countDistinct(col("__bk")).as("__n"))
+      val itemCounts = pin(bi.groupBy(col("__it"))
+        .agg(count(lit(1)).as("__ic")))
+      // downward closure: an item in < minPairCount baskets cannot reach it
+      // as a pair — prune BEFORE the per-basket self-join
+      val frequent = bi.join(
+        itemCounts.filter(col("__ic") >= minPairCount).select(col("__it")),
+        Seq("__it"))
+      // per-basket fan-out cap: keep each basket's first `maxBasketItems`
+      // frequent items in (idHash60, item) order — deterministic sampling of
+      // co-occurrence, exact marginals (scaladoc); rank-filter shape so the
+      // window group-limits map-side instead of materializing mega-baskets
+      val wBk = Window.partitionBy(col("__bk"))
+        .orderBy(Ops.idHash60(col("__it")), col("__it"))
+      val capped = frequent
+        .withColumn("__rn", row_number().over(wBk))
+        .filter(col("__rn") <= maxBasketItems)
+        .drop("__rn")
+      val pairs = capped.as("l")
+        .join(capped.as("r"), col("l.__bk") === col("r.__bk")
+          && col("l.__it") < col("r.__it"))
+        .groupBy(col("l.__it").as("item_a"), col("r.__it").as("item_b"))
+        .agg(count(lit(1)).as("n_ab"))
+        .filter(col("n_ab") >= minPairCount)
+      val mic = (x: org.apache.spark.sql.Column) =>
+        round(x * 1e6).cast(LongType)
+      pairs
+        .join(itemCounts.select(col("__it").as("item_a"), col("__ic").as("n_a")),
+          Seq("item_a"))
+        .join(itemCounts.select(col("__it").as("item_b"), col("__ic").as("n_b")),
+          Seq("item_b"))
+        .crossJoin(broadcast(n))
+        .select(col("item_a"), col("item_b"), col("n_ab"), col("n_a"), col("n_b"),
+          mic(col("n_ab").cast("double") / col("__n").cast("double"))
+            .as("support_micro"),
+          mic(col("n_ab").cast("double") / col("n_a").cast("double"))
+            .as("conf_ab_micro"),
+          mic(col("n_ab").cast("double") / col("n_b").cast("double"))
+            .as("conf_ba_micro"),
+          mic(col("n_ab").cast("double") * col("__n").cast("double")
+            / (col("n_a").cast("double") * col("n_b").cast("double")))
+            .as("lift_micro"))
+        .localCheckpoint(true)
+    }
   }
 }

@@ -9,7 +9,6 @@ import org.apache.spark.storage.StorageLevel
 
 import graft.expressions.{LshProbeLong, LshProbeTable, MinhashProbeLong, MinhashProbeTable, PlaneMatrix}
 import graft.functions.Text
-import graft.operators.Pinned.pin
 
 /** Deduplication for large-scale text corpora (north-star extension,
   * SURVEY §2.1 ✚): exact, n-gram Jaccard, MinHash+LSH banding, SimHash,
@@ -30,17 +29,16 @@ import graft.operators.Pinned.pin
   * All hashing is md5-based (codegen'd, no UDF) so the DuckDB oracle
   * reproduces results exactly.
   *
-  * Cache discipline: a [[MinhashIndex]] is ONE pinned frame, one row per
-  * document (id, sh, nsh, band_keys), built by a single projection of the
-  * [[graft.expressions.MinhashLong]] kernel; its shingle-set and band-key
-  * views derive from it, so the index holds one cache, not one per view.
-  * The pair operators persist their intermediates, EAGERLY materialize the
-  * small pair result via `localCheckpoint(true)`, then unpersist every
-  * intermediate before returning — no INTERMEDIATE storage outlives the
-  * call. The checkpointed result itself does hold its (small, final-output-sized)
-  * blocks until the returned DataFrame is unpersisted or GC'd — a
-  * long-lived session that calls these in a loop should release results
-  * it is done with. Eager evaluation is a deliberate semantic: a
+  * Cache discipline ([[Pinned]] states the rule): a [[MinhashIndex]] is ONE
+  * pinned segment, one row per document (id, sh, nsh, band_keys), built by
+  * a single projection of the [[graft.expressions.MinhashLong]] kernel; its
+  * shingle-set and band-key views derive from it, so the index holds one
+  * cache, not one per view. The pair operators pin their intermediates for
+  * the call and EAGERLY materialize the small pair result via
+  * `localCheckpoint(true)`. That checkpoint holds its (small,
+  * final-output-sized) blocks until the returned DataFrame is garbage
+  * collected: `unpersist` on a locally checkpointed frame releases
+  * nothing. Eager evaluation is a deliberate semantic: a
   * near-dup-pairs result is consumed in full by any caller, and
   * materializing it once is what lets the self-joined signature pipeline
   * run ONCE instead of once per join side. On a multi-node cluster you'd
@@ -113,22 +111,22 @@ object Dedup {
       n: Int = 3, threshold: Double = 0.8): DataFrame = {
     // already sorted; a doc without shingles (nsh 0 or null) has an empty
     // prefix, so it never reaches the candidate or verify joins
-    val s = pin(minhashed(df, idCol, textCol, n, numHashes = 0).drop("mh"))
-    // epsilon guards float rounding UP only (a longer prefix is still lossless)
-    val prefLen = (col("nsh") - ceil(col("nsh") * (threshold - 1e-9)) + 1).cast("int")
-    val ex = s.select(col("id"), col("nsh"), explode(slice(col("sh"), lit(1), prefLen)).as("shingle"))
-    // PPJoin LENGTH filter (lossless): J(a,b) >= t forces
-    // min(|A|,|B|) >= t * max(|A|,|B|) — kill size-incompatible candidates
-    // at the index join, before the distinct and the full-set verify.
-    // Epsilon loosens only (a spared candidate is re-checked exactly).
-    val cand = ex.as("x").join(ex.as("y"),
-        col("x.shingle") === col("y.shingle") && col("x.id") < col("y.id") &&
-          least(col("x.nsh"), col("y.nsh")).cast("double") >=
-            greatest(col("x.nsh"), col("y.nsh")) * lit(threshold - 1e-9))
-      .select(col("x.id").as("id_a"), col("y.id").as("id_b")).distinct()
-    val out = verifyJaccard(cand, s, threshold).localCheckpoint(true)
-    s.unpersist(false)
-    out
+    Pinned.scoped { pin =>
+      val s = pin(minhashed(df, idCol, textCol, n, numHashes = 0).drop("mh"))
+      // epsilon guards float rounding UP only (a longer prefix is still lossless)
+      val prefLen = (col("nsh") - ceil(col("nsh") * (threshold - 1e-9)) + 1).cast("int")
+      val ex = s.select(col("id"), col("nsh"), explode(slice(col("sh"), lit(1), prefLen)).as("shingle"))
+      // PPJoin LENGTH filter (lossless): J(a,b) >= t forces
+      // min(|A|,|B|) >= t * max(|A|,|B|) — kill size-incompatible candidates
+      // at the index join, before the distinct and the full-set verify.
+      // Epsilon loosens only (a spared candidate is re-checked exactly).
+      val cand = ex.as("x").join(ex.as("y"),
+          col("x.shingle") === col("y.shingle") && col("x.id") < col("y.id") &&
+            least(col("x.nsh"), col("y.nsh")).cast("double") >=
+              greatest(col("x.nsh"), col("y.nsh")) * lit(threshold - 1e-9))
+        .select(col("x.id").as("id_a"), col("y.id").as("id_b")).distinct()
+      verifyJaccard(cand, s, threshold).localCheckpoint(true)
+    }
   }
 
   /** Join candidate (id_a,id_b) pairs back to shingle sets and keep those
@@ -178,16 +176,16 @@ object Dedup {
       k: Int = 50, minShared: Long = 1L): DataFrame = {
     require(k >= 2, s"k must be >= 2 tokens, got $k")
     require(minShared >= 1L, s"minShared must be >= 1, got $minShared")
-    val e = pin(shingleHashed(df, idCol, textCol, k))
-    val out = e.as("x").join(e.as("y"),
-        col("x.h") === col("y.h") && col("x.id") < col("y.id"))
-      .select(col("x.id").as("id_a"), col("y.id").as("id_b"))
-      .groupBy("id_a", "id_b")
-      .agg(count(lit(1)).as("n_shared"))
-      .filter(col("n_shared") >= minShared)
-      .localCheckpoint(true)
-    e.unpersist(false)
-    out
+    Pinned.scoped { pin =>
+      val e = pin(shingleHashed(df, idCol, textCol, k))
+      e.as("x").join(e.as("y"),
+          col("x.h") === col("y.h") && col("x.id") < col("y.id"))
+        .select(col("x.id").as("id_a"), col("y.id").as("id_b"))
+        .groupBy("id_a", "id_b")
+        .agg(count(lit(1)).as("n_shared"))
+        .filter(col("n_shared") >= minShared)
+        .localCheckpoint(true)
+    }
   }
 
   /** Longest shared verbatim SPAN per document pair — the exact quantity
@@ -211,13 +209,13 @@ object Dedup {
       k: Int = 10, minRunTokens: Int = 50): DataFrame = {
     require(k >= 2, s"k must be >= 2 tokens, got $k")
     require(minRunTokens >= k, s"minRunTokens ($minRunTokens) must be >= k ($k)")
-    val e = pin(positionalWindowHashes(df, idCol, textCol, k))
-    val out = spansFromMatches(
-      e.as("x").join(e.as("y"),
-        col("x.h") === col("y.h") && col("x.id") < col("y.id")),
-      k, minRunTokens)
-    e.unpersist(false)
-    out
+    Pinned.scoped { pin =>
+      val e = pin(positionalWindowHashes(df, idCol, textCol, k))
+      spansFromMatches(
+        e.as("x").join(e.as("y"),
+          col("x.h") === col("y.h") && col("x.id") < col("y.id")),
+        k, minRunTokens)
+    }
   }
 
   /** Span-based DECONTAMINATION: for each (train, eval) pair, the longest
@@ -235,15 +233,15 @@ object Dedup {
       k: Int = 10, minRunTokens: Int = 50): DataFrame = {
     require(k >= 2, s"k must be >= 2 tokens, got $k")
     require(minRunTokens >= k, s"minRunTokens ($minRunTokens) must be >= k ($k)")
-    val eT = pin(positionalWindowHashes(corpus, idCol, textCol, k))
-    val eE = pin(positionalWindowHashes(evalSet, idCol, textCol, k))
-    val out = spansFromMatches(
-      eT.as("x").join(eE.as("y"),
-        col("x.h") === col("y.h") && col("x.id") =!= col("y.id")),
-      k, minRunTokens)
-      .withColumnRenamed("id_a", "train_id").withColumnRenamed("id_b", "eval_id")
-    eT.unpersist(false); eE.unpersist(false)
-    out
+    Pinned.scoped { pin =>
+      val eT = pin(positionalWindowHashes(corpus, idCol, textCol, k))
+      val eE = pin(positionalWindowHashes(evalSet, idCol, textCol, k))
+      spansFromMatches(
+        eT.as("x").join(eE.as("y"),
+          col("x.h") === col("y.h") && col("x.id") =!= col("y.id")),
+        k, minRunTokens)
+        .withColumnRenamed("id_a", "train_id").withColumnRenamed("id_b", "eval_id")
+    }
   }
 
   /** (id, p, h) rows: one 60-bit hash per k-token window WITH its position
@@ -379,21 +377,22 @@ object Dedup {
     * delta's band-join against it, and the incremental-components fold,
     * without re-shingling the big side.
     *
-    * One pinned frame, `packed` = (id, sh, nsh, band_keys), one row per
-    * document: the sorted shingle-hash set (exact-verify side) and the
+    * One pinned [[Segment]] of `packed` (id, sh, nsh, band_keys) rows, one
+    * per document: the sorted shingle-hash set (exact-verify side) and the
     * `bands` band keys (candidate-generation side) side by side.
     * [[shingles]] and [[bandedKeys]] are derived views of it with the
     * stored two-table layout's schemas — (id, sh, nsh) and (id, band,
     * band_key) — so the index holds one cache (in a real deployment: two
     * tables keyed by id / (band, band_key)). `release()` when done. */
-  final case class MinhashIndex private[operators] (packed: DataFrame) {
-    // docs without a shingle stay in the pinned frame (see [[minhashed]]);
+  final case class MinhashIndex private[operators] (segments: Vector[Segment])
+      extends StandingIndex {
+    def packed: DataFrame = Segment.union(segments)
+    // docs without a shingle stay in the pinned rows (see [[minhashed]]);
     // the views drop them: they would all share the empty signature's keys
     private def indexed = packed.filter(col("nsh") > 0)
     def shingles: DataFrame = indexed.select(col("id"), col("sh"), col("nsh"))
     def bandedKeys: DataFrame = indexed.select(col("id"),
       posexplode(col("band_keys")).as(Seq("band", "band_key")))
-    def release(): Unit = packed.unpersist(false)
   }
 
   /** Build a [[MinhashIndex]] in one pass over the docs: one projection of
@@ -408,7 +407,7 @@ object Dedup {
   def minhashIndex(
       df: DataFrame, idCol: String, textCol: String,
       n: Int = 3, bands: Int = 4, rowsPerBand: Int = 3): MinhashIndex =
-    MinhashIndex(pin(packedRows(df, idCol, textCol, n, bands, rowsPerBand)))
+    MinhashIndex(Vector(Segment.pin(packedRows(df, idCol, textCol, n, bands, rowsPerBand))))
 
   /** The (id, sh, nsh, band_keys) rows of a [[MinhashIndex]], unpinned. */
   private def packedRows(df: DataFrame, idCol: String, textCol: String,
@@ -435,9 +434,7 @@ object Dedup {
       n: Int = 3, bands: Int = 4, rowsPerBand: Int = 3,
       threshold: Double = 0.8): DataFrame = {
     val ix = minhashIndex(df, idCol, textCol, n, bands, rowsPerBand)
-    val out = minhashLshPairsIndexed(ix, threshold)
-    ix.release()
-    out
+    try minhashLshPairsIndexed(ix, threshold) finally ix.release()
   }
 
   /** Persist a [[MinhashIndex]] as two parquet tables (`shingles`,
@@ -450,7 +447,7 @@ object Dedup {
     IndexFiles.save(path, Seq("shingles" -> ix.shingles, "banded" -> ix.bandedKeys))
 
   /** Load a stored [[MinhashIndex]] ([[minhashIndex]] contract: the two
-    * tables are re-packed by id into the one pinned frame, band keys back
+    * tables are re-packed by id into one pinned segment, band keys back
     * in band order). Signatures are a pure function of each doc's text, so
     * a loaded index is interchangeable with a freshly built one. Fails fast
     * with a clear message on a partial save. */
@@ -461,8 +458,8 @@ object Dedup {
       .groupBy(col("id"))
       .agg(sort_array(collect_list(struct(col("band"), col("band_key")))).as("bk"))
       .select(col("id"), col("bk.band_key").as("band_keys"))
-    MinhashIndex(pin(part("shingles").join(keys, "id")
-      .select(col("id"), col("sh"), col("nsh"), col("band_keys"))))
+    MinhashIndex(Vector(Segment.pin(part("shingles").join(keys, "id")
+      .select(col("id"), col("sh"), col("nsh"), col("band_keys")))))
   }
 
   /** Persist dedup component labels (r14 ✚, VERDICT r13 "what's wrong"
@@ -480,12 +477,17 @@ object Dedup {
   def saveComponentLabels(labels: DataFrame, path: String): Unit =
     IndexFiles.save(path, Seq("labels" -> labels.select(col("id"), col("component"))))
 
-  /** Load a stored component-label table (pinned — split/audit/fold
-    * consumers typically read it several times). Fails fast with a clear
-    * message when the store dir is missing. */
+  /** Load a stored component-label table, pinned — split/audit/fold
+    * consumers typically read it several times; the caller unpersists it
+    * when done. Fails fast with a clear message when the store dir is
+    * missing. */
   def loadComponentLabels(spark: org.apache.spark.sql.SparkSession,
-      path: String): DataFrame =
-    pin(IndexFiles.open(spark, path, "ComponentLabels", Seq("labels"))("labels"))
+      path: String): DataFrame = {
+    val labels = IndexFiles.open(spark, path, "ComponentLabels", Seq("labels"))("labels")
+      .persist(StorageLevel.MEMORY_AND_DISK)
+    try { Pinned.batches(labels).count(); labels } // one job materializes it
+    catch { case e: Throwable => labels.unpersist(false); throw e }
+  }
 
   /** [[minhashLshPairs]] over a prebuilt [[MinhashIndex]] — the index is
     * NOT released (the caller owns it and may reuse it, q109-style). */
@@ -617,22 +619,22 @@ object Dedup {
       df: DataFrame, idCol: String, textCol: String,
       maxHamming: Int = 3): DataFrame = {
     require(maxHamming <= 3, "16-bit banding is only complete for maxHamming <= 3")
-    val h = pin(simhashTable(df, idCol, textCol))
-    val banded = simhashBandIndex(h)
-    val cand = banded.as("x").join(banded.as("y"),
-        col("x.band") === col("y.band") && col("x.bandval") === col("y.bandval") &&
-          col("x.id") < col("y.id"))
-      .select(col("x.id").as("id_a"), col("x.sh64").as("h_a"),
-        col("y.id").as("id_b"), col("y.sh64").as("h_b"))
-      .distinct()
-    // popcount(xor): two codegen'd integer instructions per pair
-    val ham = bit_count(col("h_a").bitwiseXOR(col("h_b"))).cast("long")
-    val out = cand.withColumn("hamming", ham)
-      .filter(col("hamming") <= maxHamming)
-      .select("id_a", "id_b", "hamming")
-      .localCheckpoint(true)
-    h.unpersist(false)
-    out
+    Pinned.scoped { pin =>
+      val h = pin(simhashTable(df, idCol, textCol))
+      val banded = simhashBandIndex(h)
+      val cand = banded.as("x").join(banded.as("y"),
+          col("x.band") === col("y.band") && col("x.bandval") === col("y.bandval") &&
+            col("x.id") < col("y.id"))
+        .select(col("x.id").as("id_a"), col("x.sh64").as("h_a"),
+          col("y.id").as("id_b"), col("y.sh64").as("h_b"))
+        .distinct()
+      // popcount(xor): two codegen'd integer instructions per pair
+      val ham = bit_count(col("h_a").bitwiseXOR(col("h_b"))).cast("long")
+      cand.withColumn("hamming", ham)
+        .filter(col("hamming") <= maxHamming)
+        .select("id_a", "id_b", "hamming")
+        .localCheckpoint(true)
+    }
   }
 
   /** Near-dup pairs → dedup groups: alternating large-star / small-star
@@ -917,34 +919,34 @@ object Dedup {
       multiProbe: Boolean = true, seed: Long = 42L): DataFrame = {
     val ix = embeddingIndex(df, idCol, vecCol, nTables, signBits, threshold,
       seed = seed)
-    val out = embeddingNearDupPairsIndexed(ix, threshold, multiProbe)
-    ix.release()
-    out
+    try embeddingNearDupPairsIndexed(ix, threshold, multiProbe) finally ix.release()
   }
 
   /** A reusable embedding near-dup index — the vector sibling of
-    * [[MinhashIndex]]: ONE pinned frame `packed` = (id, v, nn, bk) with
-    * each corpus vector quantized (`v`), its exact integer norm (`nn`) and
-    * its sign-LSH signature in every table (`bk`, `array<bigint>` indexed
-    * by table), plus the hyperplane parameters (`nTables`, `bits`, `dim`,
-    * `scale`, `seed`) that a DELTA batch must share to land in the same
-    * bucket space. A bucket is the low `bits` bits of a signature: a plane
-    * depends only on (seed, t, j, pos), so a build whose bits are sized to
-    * the corpus computes the signatures at the widest width before it
-    * knows the corpus size, and every reader masks them. `vecs` (id, v, nn) and `buckets` (id, t, bucket) are derived
-    * views with the stored tables' schemas. Hyperplanes are a pure function
+    * [[MinhashIndex]]: ONE pinned [[Segment]] of `packed` (id, v, nn, bk)
+    * rows, with each corpus vector quantized (`v`), its exact integer norm
+    * (`nn`) and its sign-LSH signature in every table (`bk`,
+    * `array<bigint>` indexed by table), plus the hyperplane parameters
+    * (`nTables`, `bits`, `dim`, `scale`, `seed`) that a DELTA batch must
+    * share to land in the same bucket space. A bucket is the low `bits`
+    * bits of a signature: a plane depends only on (seed, t, j, pos), so a
+    * build whose bits are sized to the corpus computes the signatures at
+    * the widest width before it knows the corpus size, and every reader
+    * masks them. `vecs` (id, v, nn) and `buckets` (id, t, bucket) are
+    * derived views with the stored tables' schemas. Hyperplanes are a pure function
     * of the parameters (seeded md5), so they are re-derived, not stored:
     * `planes` is built once per index, as one primitive long array.
     * `release()` when done. */
   final case class EmbeddingIndex private[operators] (
-      packed: DataFrame, nTables: Int, bits: Int, dim: Int, scale: Int, seed: Long) {
+      segments: Vector[Segment], nTables: Int, bits: Int, dim: Int, scale: Int, seed: Long)
+      extends StandingIndex {
+    def packed: DataFrame = Segment.union(segments)
     def vecs: DataFrame = packed.select("id", "v", "nn")
     def buckets: DataFrame = packed
       .select(col("id"), posexplode(transform(col("bk"), _.bitwiseAND(lit((1L << bits) - 1))))
         .as(Seq("t", "bucket")))
       .select(col("id"), col("t").cast("long").as("t"), col("bucket"))
     private[operators] lazy val planes: PlaneMatrix = PlaneMatrix.seeded(nTables, bits, dim, seed)
-    def release(): Unit = packed.unpersist(false)
   }
 
   /** Build an [[EmbeddingIndex]]: one pinned projection quantizes each
@@ -969,17 +971,17 @@ object Dedup {
         Similarity.quantize(col(vecCol), scale).as("v"))
       .withColumn("nn", call_function("graft_qdot", col("v"), col("v")))
     df.filter(col(vecCol).isNotNull).select(size(col(vecCol))).head(1).headOption match {
-      case None =>
-        EmbeddingIndex(rows.withColumn("bk", lit(null).cast("array<bigint>")).limit(0),
-          tables, bits = 4, dim = 0, scale = scale, seed = seed)
+      case None => // nothing to pin: one segment of typed empty rows
+        val empty = new Segment(rows.withColumn("bk", lit(null).cast("array<bigint>")).limit(0),
+          0L, 0, Nil)
+        EmbeddingIndex(Vector(empty), tables, bits = 4, dim = 0, scale = scale, seed = seed)
       case Some(first) =>
         val dim = first.getInt(0)
         val wide = PlaneMatrix.seeded(tables,
           if (signBits > 0) signBits else Similarity.maxSignBits, dim, seed)
-        val (packed, n) =
-          Pinned.pinRows(rows.withColumn("bk", Similarity.lshBucketsOf("v", wide)))
-        EmbeddingIndex(packed, tables,
-          if (signBits > 0) signBits else Similarity.sizedSignBits(n), dim, scale, seed)
+        val seg = Segment.pin(rows.withColumn("bk", Similarity.lshBucketsOf("v", wide)))
+        EmbeddingIndex(Vector(seg), tables,
+          if (signBits > 0) signBits else Similarity.sizedSignBits(seg.rows), dim, scale, seed)
     }
   }
 
@@ -1013,7 +1015,8 @@ object Dedup {
     graft.expressions.GraftFunctions.register(spark)
     val bk = if (dim == 0) lit(null).cast("array<bigint>")
       else Similarity.lshBucketsOf("v", PlaneMatrix.seeded(nT, bits, dim, seed))
-    EmbeddingIndex(pin(part("vecs").withColumn("bk", bk)), nT, bits, dim, p.getAs[Int]("scale"), seed)
+    EmbeddingIndex(Vector(Segment.pin(part("vecs").withColumn("bk", bk))),
+      nT, bits, dim, p.getAs[Int]("scale"), seed)
   }
 
   /** [[embeddingNearDupPairs]] over a prebuilt [[EmbeddingIndex]] — the

@@ -4,8 +4,6 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DecimalType, LongType}
 
-import graft.operators.Pinned.pin
-
 /** Graph analytics over relational edge lists. [[Dedup.connectedComponents]]
   * covers the clustering half; this adds the importance-scoring half —
   * PageRank (Brin & Page 1998) with a FIXED iteration count, the form a
@@ -23,14 +21,17 @@ import graft.operators.Pinned.pin
   * The floored remainders leak ≤1 micro of mass per (node, round) — the
   * documented price of exactness; rank ORDER is unaffected at micro scale.
   *
-  * Storage discipline (same as [[Dedup]]): the edge+degree list and node
-  * list are pinned (persist + materialize) ONCE — every iteration then
+  * Storage discipline ([[Pinned]] states the rule): the edge+degree list
+  * and node list are pinned for the call ONCE — every iteration then
   * reads the cached blocks instead of re-deriving them (lazy evaluation
   * would otherwise re-run the edge derivation per round: the first cut of
   * this operator showed 272 parquet scans in one q93 plan). The result is
-  * `localCheckpoint(true)`-materialized and all intermediates unpersisted
-  * before returning; on a multi-node cluster swap the final checkpoint for
-  * a table write (localCheckpoint blocks are not fault-tolerant).
+  * `localCheckpoint(true)`-materialized. Its blocks, like those of the
+  * per-round checkpoints that cut lineage in [[kCore]],
+  * [[labelPropagation]] and [[bfsHops]], are freed only when the frame is
+  * garbage collected (`unpersist` on a locally checkpointed frame releases
+  * nothing); on a multi-node cluster swap the final checkpoint for a table
+  * write (localCheckpoint blocks are not fault-tolerant).
   *
   * Scale shape per iteration: one shuffle join (ranks ⋈ cached edges on
   * src) + one map-side-combined agg on dst. Both hash-partition on the
@@ -93,59 +94,55 @@ object Graph {
       iterations: Int, dampNum: Int, dampDen: Int): DataFrame = {
     require(iterations >= 1, "iterations must be >= 1")
     require(dampNum > 0 && dampDen > dampNum, "need 0 < dampNum < dampDen")
-    val sd = seeds.map(s => pin(s.distinct()))
-    val noSeeds = sd.exists(_.limit(1).count() == 0L)
-    if (noSeeds) sd.foreach(_.unpersist(blocking = false))
-    require(!noSeeds, "seeds must be non-empty")
-    val e = pin(edges.select(col(srcCol).cast(LongType).as("src"),
-      col(dstCol).cast(LongType).as("dst")).distinct())
-    // outdeg is node-cardinality — attach it to the edge list ONCE with a
-    // plain shuffle join (both sides hash on src; never broadcast: a
-    // web-graph's node table does not fit an executor). The cached layout
-    // is hash-partitioned AND sorted on src, so every iteration's
-    // sort-merge join streams the big cached side with NO exchange and NO
-    // re-sort — only the (node-cardinality) rank frame moves per round.
-    // A personalized walk's src seed flag rides on the same layout.
-    val withDeg = e.join(e.groupBy("src").agg(count(lit(1)).as("outdeg")), "src")
-    val eDeg = pin(sd.fold(withDeg)(s => withDeg
-        .join(s.select(col("node").as("src"), lit(1).as("src_seed")), Seq("src"), "left"))
-      .repartition(col("src")).sortWithinPartitions("src"))
-    val graphNodes = e.select(col("src").as("node")).union(e.select(col("dst").as("node")))
-    val nodeList = pin(sd.fold(graphNodes)(s => graphNodes.union(s.select(col("node")))).distinct())
-    e.unpersist(blocking = false) // eDeg + nodeList carry all the loop needs
-    val n = sd.getOrElse(nodeList).agg(count(lit(1)).as("N"))
-    // `v` on the teleport set, 0 elsewhere; the flag column exists only
-    // for a personalized walk
-    def teleport(flag: String, v: Column): Column =
-      if (sd.isEmpty) v else when(col(flag) === 1, v).otherwise(lit(0L))
-    val base = floor(lit((dampDen - dampNum).toLong * 1000000L) / (lit(dampDen) * col("N")))
-      .cast(LongType)
-    val r0 = floor(lit(1000000L) / col("N")).cast(LongType)
-    var inflow: DataFrame = null
-    for (r <- 1 to iterations) {
-      val joined =
-        if (r == 1) eDeg.crossJoin(broadcast(n))
-        else eDeg.join(inflow, eDeg("src") === inflow("node"), "left")
-          .crossJoin(broadcast(n))
-      val rank =
-        if (r == 1) teleport("src_seed", r0)
-        else teleport("src_seed", base) + coalesce(col("in_micro"), lit(0L))
-      inflow = joined
-        .select(col("dst").as("node"),
-          floor(rank * lit(dampNum.toLong) / (lit(dampDen.toLong) * col("outdeg")))
-            .cast(LongType).as("contrib"))
-        .groupBy("node").agg(sum(col("contrib")).as("in_micro"))
+    Pinned.scoped { pin =>
+      val sd = seeds.map(s => pin(s.distinct()))
+      require(!sd.exists(_.limit(1).count() == 0L), "seeds must be non-empty")
+      val e = pin(edges.select(col(srcCol).cast(LongType).as("src"),
+        col(dstCol).cast(LongType).as("dst")).distinct())
+      // outdeg is node-cardinality — attach it to the edge list ONCE with a
+      // plain shuffle join (both sides hash on src; never broadcast: a
+      // web-graph's node table does not fit an executor). The cached layout
+      // is hash-partitioned AND sorted on src, so every iteration's
+      // sort-merge join streams the big cached side with NO exchange and NO
+      // re-sort — only the (node-cardinality) rank frame moves per round.
+      // A personalized walk's src seed flag rides on the same layout.
+      val withDeg = e.join(e.groupBy("src").agg(count(lit(1)).as("outdeg")), "src")
+      val eDeg = pin(sd.fold(withDeg)(s => withDeg
+          .join(s.select(col("node").as("src"), lit(1).as("src_seed")), Seq("src"), "left"))
+        .repartition(col("src")).sortWithinPartitions("src"))
+      val graphNodes = e.select(col("src").as("node")).union(e.select(col("dst").as("node")))
+      val nodeList = pin(sd.fold(graphNodes)(s => graphNodes.union(s.select(col("node")))).distinct())
+      pin.release(e) // eDeg + nodeList carry all the loop needs
+      val n = sd.getOrElse(nodeList).agg(count(lit(1)).as("N"))
+      // `v` on the teleport set, 0 elsewhere; the flag column exists only
+      // for a personalized walk
+      def teleport(flag: String, v: Column): Column =
+        if (sd.isEmpty) v else when(col(flag) === 1, v).otherwise(lit(0L))
+      val base = floor(lit((dampDen - dampNum).toLong * 1000000L) / (lit(dampDen) * col("N")))
+        .cast(LongType)
+      val r0 = floor(lit(1000000L) / col("N")).cast(LongType)
+      var inflow: DataFrame = null
+      for (r <- 1 to iterations) {
+        val joined =
+          if (r == 1) eDeg.crossJoin(broadcast(n))
+          else eDeg.join(inflow, eDeg("src") === inflow("node"), "left")
+            .crossJoin(broadcast(n))
+        val rank =
+          if (r == 1) teleport("src_seed", r0)
+          else teleport("src_seed", base) + coalesce(col("in_micro"), lit(0L))
+        inflow = joined
+          .select(col("dst").as("node"),
+            floor(rank * lit(dampNum.toLong) / (lit(dampDen.toLong) * col("outdeg")))
+              .cast(LongType).as("contrib"))
+          .groupBy("node").agg(sum(col("contrib")).as("in_micro"))
+      }
+      val nodes = nodeList.crossJoin(broadcast(n))
+      sd.fold(nodes)(s => nodes.join(s.select(col("node"), lit(1).as("is_seed")), Seq("node"), "left"))
+        .join(inflow, Seq("node"), "left")
+        .select(col("node"),
+          (teleport("is_seed", base) + coalesce(col("in_micro"), lit(0L))).as("rank_micro"))
+        .localCheckpoint(true) // executes the k-join plan ONCE
     }
-    val nodes = nodeList.crossJoin(broadcast(n))
-    val out = sd.fold(nodes)(s => nodes.join(s.select(col("node"), lit(1).as("is_seed")), Seq("node"), "left"))
-      .join(inflow, Seq("node"), "left")
-      .select(col("node"),
-        (teleport("is_seed", base) + coalesce(col("in_micro"), lit(0L))).as("rank_micro"))
-      .localCheckpoint(true) // executes the k-join plan ONCE
-    eDeg.unpersist(blocking = false)
-    nodeList.unpersist(blocking = false)
-    sd.foreach(_.unpersist(blocking = false))
-    out
   }
 
   /** Synchronous semi-supervised label propagation (Zhu & Ghahramani 2002
@@ -177,28 +174,29 @@ object Graph {
     // cached hash-partitioned AND sorted on src (the [[pageRank]] eDeg
     // discipline): every round's vote join streams the edge side with no
     // exchange and no re-sort — only the (node-sized) label frame moves
-    val e = pin(edges.select(col(srcCol).cast(LongType).as("src"),
-      col(dstCol).cast(LongType).as("dst")).distinct()
-      .repartition(col("src")).sortWithinPartitions("src"))
-    var labeled = seedLabels
-      .select(col(nodeCol).cast(LongType).as("node"),
-        col(labelCol).cast("string").as("label"), lit(0L).as("round"))
-      .localCheckpoint(true)
-    for (i <- 1 to iterations) {
-      val votes = labeled
-        .join(e, labeled("node") === e("src"))
-        .select(col("dst").as("cand"), col("label"))
-        .join(labeled.select(col("node").as("cand")), Seq("cand"), "left_anti")
-        .groupBy(col("cand"), col("label")).agg(count(lit(1)).as("n"))
-      val newly = votes
-        .withColumn("rn", row_number().over(org.apache.spark.sql.expressions.Window
-          .partitionBy(col("cand")).orderBy(col("n").desc, col("label"))))
-        .filter(col("rn") === 1)
-        .select(col("cand").as("node"), col("label"), lit(i.toLong).as("round"))
-      labeled = labeled.unionByName(newly).localCheckpoint(true)
+    Pinned.scoped { pin =>
+      val e = pin(edges.select(col(srcCol).cast(LongType).as("src"),
+        col(dstCol).cast(LongType).as("dst")).distinct()
+        .repartition(col("src")).sortWithinPartitions("src"))
+      var labeled = seedLabels
+        .select(col(nodeCol).cast(LongType).as("node"),
+          col(labelCol).cast("string").as("label"), lit(0L).as("round"))
+        .localCheckpoint(true)
+      for (i <- 1 to iterations) {
+        val votes = labeled
+          .join(e, labeled("node") === e("src"))
+          .select(col("dst").as("cand"), col("label"))
+          .join(labeled.select(col("node").as("cand")), Seq("cand"), "left_anti")
+          .groupBy(col("cand"), col("label")).agg(count(lit(1)).as("n"))
+        val newly = votes
+          .withColumn("rn", row_number().over(org.apache.spark.sql.expressions.Window
+            .partitionBy(col("cand")).orderBy(col("n").desc, col("label"))))
+          .filter(col("rn") === 1)
+          .select(col("cand").as("node"), col("label"), lit(i.toLong).as("round"))
+        labeled = labeled.unionByName(newly).localCheckpoint(true)
+      }
+      labeled
     }
-    e.unpersist(blocking = false)
-    labeled
   }
 
   /** Per-node triangle counts over an undirected graph given as an edge
@@ -226,45 +224,43 @@ object Graph {
       .filter(col("eu") =!= col("ev"))
       .select(least(col("eu"), col("ev")).as("eu"), greatest(col("eu"), col("ev")).as("ev"))
       .distinct()
-    val e = pin(e0)
-    // pinned: deg feeds THREE consumers (both endpoint-degree joins and
-    // the final zero-fill frame) — unpinned, each re-ran the 2|E| union
-    // aggregation from the cached edges (r15)
-    val deg = pin(e.select(col("eu").as("node")).union(e.select(col("ev").as("node")))
-      .groupBy("node").agg(count(lit(1)).as("deg")))
-    // attach both endpoint degrees (two shuffle joins on a node key — the
-    // degree table is node-cardinality, never broadcast by assumption)
-    val withDeg = e
-      .join(deg.select(col("node").as("eu"), col("deg").as("du")), "eu")
-      .join(deg.select(col("node").as("ev"), col("deg").as("dv")), "ev")
-    // orient low-π → high-π; carry the far endpoint's π-key for wedge order
-    // (struct fields named identically so the CASE branches share a type)
-    def pk(d: Column, n: Column) = struct(d.as("pd"), n.as("pn"))
-    val lowIsU = pk(col("du"), col("eu")) < pk(col("dv"), col("ev"))
-    val oriented = pin(withDeg.select(
-      when(lowIsU, col("eu")).otherwise(col("ev")).as("a"),
-      when(lowIsU, col("ev")).otherwise(col("eu")).as("b"),
-      when(lowIsU, pk(col("dv"), col("ev"))).otherwise(pk(col("du"), col("eu"))).as("pb")))
-    // wedges at the π-smallest vertex: unordered pair {x,y} of higher
-    // neighbors, emitted once with π(x) < π(y)
-    val e1 = oriented.select(col("a"), col("b").as("x"), col("pb").as("px"))
-    val e2 = oriented.select(col("a"), col("b").as("y"), col("pb").as("py"))
-    val wedges = e1.join(e2, Seq("a")).filter(col("px") < col("py"))
-      .select(col("a"), col("x"), col("y"))
-    // close: the (x,y) edge, if present, is oriented x→y (π(x) < π(y))
-    val tri = wedges.join(
-      oriented.select(col("a").as("x"), col("b").as("y")), Seq("x", "y"))
-    val perNode = tri
-      .select(explode(array(col("a"), col("x"), col("y"))).as("node"))
-      .groupBy("node").agg(count(lit(1)).as("n_tri"))
-    val out = deg.select(col("node"))
-      .join(perNode, Seq("node"), "left")
-      .select(col("node"), coalesce(col("n_tri"), lit(0L)).as("n_tri"))
-      .localCheckpoint(true)
-    e.unpersist(blocking = false)
-    oriented.unpersist(blocking = false)
-    deg.unpersist(blocking = false)
-    out
+    Pinned.scoped { pin =>
+      val e = pin(e0)
+      // pinned: deg feeds THREE consumers (both endpoint-degree joins and
+      // the final zero-fill frame) — unpinned, each re-ran the 2|E| union
+      // aggregation from the cached edges (r15)
+      val deg = pin(e.select(col("eu").as("node")).union(e.select(col("ev").as("node")))
+        .groupBy("node").agg(count(lit(1)).as("deg")))
+      // attach both endpoint degrees (two shuffle joins on a node key — the
+      // degree table is node-cardinality, never broadcast by assumption)
+      val withDeg = e
+        .join(deg.select(col("node").as("eu"), col("deg").as("du")), "eu")
+        .join(deg.select(col("node").as("ev"), col("deg").as("dv")), "ev")
+      // orient low-π → high-π; carry the far endpoint's π-key for wedge order
+      // (struct fields named identically so the CASE branches share a type)
+      def pk(d: Column, n: Column) = struct(d.as("pd"), n.as("pn"))
+      val lowIsU = pk(col("du"), col("eu")) < pk(col("dv"), col("ev"))
+      val oriented = pin(withDeg.select(
+        when(lowIsU, col("eu")).otherwise(col("ev")).as("a"),
+        when(lowIsU, col("ev")).otherwise(col("eu")).as("b"),
+        when(lowIsU, pk(col("dv"), col("ev"))).otherwise(pk(col("du"), col("eu"))).as("pb")))
+      // wedges at the π-smallest vertex: unordered pair {x,y} of higher
+      // neighbors, emitted once with π(x) < π(y)
+      val e1 = oriented.select(col("a"), col("b").as("x"), col("pb").as("px"))
+      val e2 = oriented.select(col("a"), col("b").as("y"), col("pb").as("py"))
+      val wedges = e1.join(e2, Seq("a")).filter(col("px") < col("py"))
+        .select(col("a"), col("x"), col("y"))
+      // close: the (x,y) edge, if present, is oriented x→y (π(x) < π(y))
+      val tri = wedges.join(
+        oriented.select(col("a").as("x"), col("b").as("y")), Seq("x", "y"))
+      val perNode = tri
+        .select(explode(array(col("a"), col("x"), col("y"))).as("node"))
+        .groupBy("node").agg(count(lit(1)).as("n_tri"))
+      deg.select(col("node"))
+        .join(perNode, Seq("node"), "left")
+        .select(col("node"), coalesce(col("n_tri"), lit(0L)).as("n_tri"))
+        .localCheckpoint(true)
+    }
   }
 
   /** `rounds`-round k-core peeling over an undirected edge list: repeat
@@ -340,50 +336,49 @@ object Graph {
         "sums grow like degree^(2k) and overflow silently beyond that; " +
         "for deeper propagation use pageRank (per-round normalized)")
     val dec = DecimalType(38, 0)
-    val e = pin(edges
-      .filter(col(srcCol).isNotNull && col(dstCol).isNotNull)
-      .select(col(srcCol).cast("string").as("src"),
-        col(dstCol).cast("string").as("dst")).distinct())
-    val nodes = pin(e.select(col("src").as("node"))
-      .union(e.select(col("dst").as("node"))).distinct())
-    // rounds carry only the NONZERO frontier: a node absent from the agg
-    // contributes nothing to the next round's sums anyway, so the
-    // zero-filled node frame is joined exactly once, at the report —
-    // halving the per-round join count (12.4 s → 8.1 s at sf0.1)
-    var hub = nodes.select(col("node"), lit(1).cast(dec).as("h"))
-    var auth: DataFrame = null
-    for (_ <- 1 to iterations) {
-      auth = e.join(hub, e("src") === hub("node"))
-        .groupBy(col("dst").as("node")).agg(sum(col("h")).as("a"))
-      hub = e.join(auth, e("dst") === auth("node"))
-        .groupBy(col("src").as("node")).agg(sum(col("a")).as("h"))
+    Pinned.scoped { pin =>
+      val e = pin(edges
+        .filter(col(srcCol).isNotNull && col(dstCol).isNotNull)
+        .select(col(srcCol).cast("string").as("src"),
+          col(dstCol).cast("string").as("dst")).distinct())
+      val nodes = pin(e.select(col("src").as("node"))
+        .union(e.select(col("dst").as("node"))).distinct())
+      // rounds carry only the NONZERO frontier: a node absent from the agg
+      // contributes nothing to the next round's sums anyway, so the
+      // zero-filled node frame is joined exactly once, at the report —
+      // halving the per-round join count (12.4 s → 8.1 s at sf0.1)
+      var hub = nodes.select(col("node"), lit(1).cast(dec).as("h"))
+      var auth: DataFrame = null
+      for (_ <- 1 to iterations) {
+        auth = e.join(hub, e("src") === hub("node"))
+          .groupBy(col("dst").as("node")).agg(sum(col("h")).as("a"))
+        hub = e.join(auth, e("dst") === auth("node"))
+          .groupBy(col("src").as("node")).agg(sum(col("a")).as("h"))
+      }
+      // the zero-fill coalesce applies ONLY to the left-join miss case: a
+      // node PRESENT in the agg frame with a null sum can only mean decimal
+      // overflow in the final round (sum of non-null values), and silently
+      // scoring it 0 would be wrong output with no error (ADVICE r9 §1) —
+      // fail loudly instead (codegen'd raise_error: free when it never fires)
+      val scores = nodes
+        .join(auth.withColumn("__hit_a", lit(1)), Seq("node"), "left")
+        .join(hub.withColumn("__hit_h", lit(1)), Seq("node"), "left")
+        .select(col("node"),
+          when(col("__hit_a") === 1 && col("a").isNull, raise_error(lit(
+            "hits(): Decimal(38,0) overflow in authority sums - lower iterations")))
+            .otherwise(coalesce(col("a"), lit(0).cast(dec))).as("a"),
+          when(col("__hit_h") === 1 && col("h").isNull, raise_error(lit(
+            "hits(): Decimal(38,0) overflow in hub sums - lower iterations")))
+            .otherwise(coalesce(col("h"), lit(0).cast(dec))).as("h"))
+      val mx = scores.agg(max(col("a")).as("ma"), max(col("h")).as("mh"))
+      scores.crossJoin(broadcast(mx))
+        .select(col("node"),
+          when(col("ma") > 0, round(col("a").cast("double")
+            / col("ma").cast("double") * 1e6).cast(LongType)).as("auth_micro"),
+          when(col("mh") > 0, round(col("h").cast("double")
+            / col("mh").cast("double") * 1e6).cast(LongType)).as("hub_micro"))
+        .localCheckpoint(true)
     }
-    // the zero-fill coalesce applies ONLY to the left-join miss case: a
-    // node PRESENT in the agg frame with a null sum can only mean decimal
-    // overflow in the final round (sum of non-null values), and silently
-    // scoring it 0 would be wrong output with no error (ADVICE r9 §1) —
-    // fail loudly instead (codegen'd raise_error: free when it never fires)
-    val scores = nodes
-      .join(auth.withColumn("__hit_a", lit(1)), Seq("node"), "left")
-      .join(hub.withColumn("__hit_h", lit(1)), Seq("node"), "left")
-      .select(col("node"),
-        when(col("__hit_a") === 1 && col("a").isNull, raise_error(lit(
-          "hits(): Decimal(38,0) overflow in authority sums - lower iterations")))
-          .otherwise(coalesce(col("a"), lit(0).cast(dec))).as("a"),
-        when(col("__hit_h") === 1 && col("h").isNull, raise_error(lit(
-          "hits(): Decimal(38,0) overflow in hub sums - lower iterations")))
-          .otherwise(coalesce(col("h"), lit(0).cast(dec))).as("h"))
-    val mx = scores.agg(max(col("a")).as("ma"), max(col("h")).as("mh"))
-    val out = scores.crossJoin(broadcast(mx))
-      .select(col("node"),
-        when(col("ma") > 0, round(col("a").cast("double")
-          / col("ma").cast("double") * 1e6).cast(LongType)).as("auth_micro"),
-        when(col("mh") > 0, round(col("h").cast("double")
-          / col("mh").cast("double") * 1e6).cast(LongType)).as("hub_micro"))
-      .localCheckpoint(true)
-    e.unpersist(blocking = false)
-    nodes.unpersist(blocking = false)
-    out
   }
 
   /** Multi-source breadth-first hop distance — the crawl-depth /
@@ -410,34 +405,34 @@ object Graph {
   def bfsHops(edges: DataFrame, srcCol: String, dstCol: String,
       seeds: DataFrame, seedCol: String, maxHops: Int): DataFrame = {
     require(maxHops >= 1, "maxHops must be >= 1")
-    val e = pin(edges
-      .select(col(srcCol).cast(LongType).as("src"),
-        col(dstCol).cast(LongType).as("dst"))
-      .distinct()
-      .repartition(col("src")).sortWithinPartitions("src"))
-    var dist = seeds.select(col(seedCol).cast(LongType).as("node"))
-      .distinct()
-      .withColumn("hops", lit(0L))
-      .localCheckpoint(true)
-    var frontier = dist.select("node")
-    var h = 1
-    var settled = false
-    while (h <= maxHops && !settled) {
-      val reached = frontier.join(e, frontier("node") === e("src"))
-        .select(col("dst").as("node")).distinct()
-      val newly = reached
-        .join(dist.select("node"), Seq("node"), "left_anti")
-        .withColumn("hops", lit(h.toLong))
-        .localCheckpoint(true) // pin the band: dist stays a shallow union
-      if (newly.isEmpty) settled = true
-      else {
-        dist = dist.unionByName(newly)
-        frontier = newly.select("node")
+    Pinned.scoped { pin =>
+      val e = pin(edges
+        .select(col(srcCol).cast(LongType).as("src"),
+          col(dstCol).cast(LongType).as("dst"))
+        .distinct()
+        .repartition(col("src")).sortWithinPartitions("src"))
+      var dist = seeds.select(col(seedCol).cast(LongType).as("node"))
+        .distinct()
+        .withColumn("hops", lit(0L))
+        .localCheckpoint(true)
+      var frontier = dist.select("node")
+      var h = 1
+      var settled = false
+      while (h <= maxHops && !settled) {
+        val reached = frontier.join(e, frontier("node") === e("src"))
+          .select(col("dst").as("node")).distinct()
+        val newly = reached
+          .join(dist.select("node"), Seq("node"), "left_anti")
+          .withColumn("hops", lit(h.toLong))
+          .localCheckpoint(true) // pin the band: dist stays a shallow union
+        if (newly.isEmpty) settled = true
+        else {
+          dist = dist.unionByName(newly)
+          frontier = newly.select("node")
+        }
+        h += 1
       }
-      h += 1
+      dist.localCheckpoint(true)
     }
-    val out = dist.localCheckpoint(true)
-    e.unpersist(blocking = false)
-    out
   }
 }

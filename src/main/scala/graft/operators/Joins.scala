@@ -5,8 +5,6 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{StructType, TimestampType}
 
-import graft.operators.Pinned.pin
-
 /** Join surface. Reference: inner equi-join only (`pyarrow_ops/join.py:15-47`,
   * "currently performs inner join" README.md:46), with left-wins resolution of
   * duplicate non-key columns (`join.py:7-13`, verified SURVEY §2.2.7). The
@@ -328,6 +326,13 @@ object Joins {
     acc
   }
 
+  /** The (fz_id, fz_s, fz_sig) rows of `df`: one per (row, deletion
+    * signature), unpinned. */
+  private def signatureRows(df: DataFrame, idCol: String, strCol: String,
+      maxDist: Int): DataFrame =
+    df.select(col(idCol).as("fz_id"), col(strCol).as("fz_s"),
+      explode(deletionSignatures(col(strCol), maxDist)).as("fz_sig"))
+
   /** All pairs of `df` rows whose `strCol` values are within edit distance
     * `maxDist`, as (id_a, id_b, str_a, str_b, dist) with id_a < id_b.
     * Shape: explode signatures → equi-join on the signature string →
@@ -339,8 +344,7 @@ object Joins {
     * runs once per candidate pair, not once per shared signature. */
   def fuzzySelfPairs(df: DataFrame, idCol: String, strCol: String,
       maxDist: Int): DataFrame = {
-    val sig = df.select(col(idCol).as("fz_id"), col(strCol).as("fz_s"),
-      explode(deletionSignatures(col(strCol), maxDist)).as("fz_sig"))
+    val sig = signatureRows(df, idCol, strCol, maxDist)
     val a = sig.select(col("fz_id").as("id_a"), col("fz_s").as("str_a"), col("fz_sig"))
     val b = sig.select(col("fz_id").as("id_b"), col("fz_s").as("str_b"), col("fz_sig"))
     a.join(b, Seq("fz_sig"))
@@ -375,16 +379,19 @@ object Joins {
     * record linkage: [[fuzzyJoin]] recomputes deletion signatures for BOTH
     * sides on every call, which is the benchmark shape, not the deployed
     * one). The dictionary side's exploded deletion-neighborhood signatures
-    * are computed ONCE ((fz_sig, id, str) rows), pinned, and probed by each
-    * ingest batch with a signature equi-join + levenshtein verify — in a
+    * are computed ONCE ((fz_sig, id, str) rows), pinned as [[Segment]]s
+    * (an extend appends the batch's rows as one more, like
+    * [[Search.Bm25Index]]'s), and probed by each ingest batch with a
+    * signature equi-join + levenshtein verify — in a
     * deployment the signature table is stored bucketed by `fz_sig`, so a
     * probe shuffles only the (small) batch side. `maxDist` is fixed at
     * build time: signatures are depth-`maxDist` neighborhoods, and the
     * lossless-candidate guarantee only holds for probes at the SAME depth
     * (a probe at larger d would miss pairs). `release()` when done. */
   final case class FuzzyIndex private[operators] (
-      idCol: String, strCol: String, maxDist: Int, signatures: DataFrame) {
-    def release(): Unit = signatures.unpersist(false)
+      idCol: String, strCol: String, maxDist: Int, segments: Vector[Segment])
+      extends StandingIndex {
+    def signatures: DataFrame = Segment.union(segments)
   }
 
   /** Build a [[FuzzyIndex]] over the dictionary `dict`: one projection +
@@ -393,9 +400,8 @@ object Joins {
   def fuzzyIndex(dict: DataFrame, idCol: String, strCol: String,
       maxDist: Int): FuzzyIndex = {
     require(maxDist >= 1 && maxDist <= 3, "maxDist must be in 1..3 (L^d signature blowup)")
-    val sig = pin(dict.select(col(idCol).as("fz_id"), col(strCol).as("fz_s"),
-      explode(deletionSignatures(col(strCol), maxDist)).as("fz_sig")))
-    FuzzyIndex(idCol, strCol, maxDist, sig)
+    FuzzyIndex(idCol, strCol, maxDist,
+      Vector(Segment.pin(signatureRows(dict, idCol, strCol, maxDist))))
   }
 
   /** [[fuzzyJoin]] of a probe batch against a prebuilt [[FuzzyIndex]] —
@@ -420,16 +426,18 @@ object Joins {
   }
 
   /** Fold an ingest batch INTO the dictionary: the batch's signature rows
-    * union in — signatures are a pure per-row function of the string, so
-    * the extended index is bit-indistinguishable from one rebuilt on the
-    * union. Batch ids must be disjoint from indexed ids (the usual ingest
-    * contract). Returns a NEW pinned index; the caller may `release()` the
-    * old one afterwards. */
+    * are pinned as ONE new segment and appended to the old segments, which
+    * the new index shares ([[Segment.append]]'s binary-counter compaction
+    * keeps O(log N) segments, so an extend costs O(batch) amortized, not
+    * O(dictionary)). Signatures are a pure per-row function of the string,
+    * so the extended index is bit-indistinguishable from one rebuilt on
+    * the union. Batch ids must be disjoint from indexed ids (the usual
+    * ingest contract). Returns a NEW index; the caller may `release()` the
+    * old one afterwards, before or after the new one. */
   def extendFuzzyIndex(ix: FuzzyIndex, batch: DataFrame): FuzzyIndex = {
-    val add = batch.select(col(ix.idCol).as("fz_id"), col(ix.strCol).as("fz_s"),
-      explode(deletionSignatures(col(ix.strCol), ix.maxDist)).as("fz_sig"))
-    FuzzyIndex(ix.idCol, ix.strCol, ix.maxDist,
-      pin(ix.signatures.unionByName(add)))
+    val batchSeg = Segment.pin(signatureRows(batch, ix.idCol, ix.strCol, ix.maxDist))
+    ix.copy(segments = Segment.append(ix.segments, batchSeg)(
+      (older, newest) => Segment.pin(Segment.union(Seq(older, newest)))))
   }
 
   /** Persist a [[FuzzyIndex]]: the signature table, then `params` as the
@@ -443,15 +451,15 @@ object Joins {
       "params" -> Seq((ix.idCol, ix.strCol, ix.maxDist)).toDF("id_col", "str_col", "max_dist")))
   }
 
-  /** Load a stored [[FuzzyIndex]] (signatures pinned). Signatures are
-    * stored bytes, so a loaded index probes bit-identically to the one
-    * saved. Fails fast with a clear message on a partial save. */
+  /** Load a stored [[FuzzyIndex]] (signatures pinned as one segment).
+    * Signatures are stored bytes, so a loaded index probes bit-identically
+    * to the one saved. Fails fast with a clear message on a partial save. */
   def loadFuzzyIndex(spark: org.apache.spark.sql.SparkSession,
       path: String): FuzzyIndex = {
     val part = IndexFiles.open(spark, path, "FuzzyIndex", Seq("signatures", "params"))
     val p = part("params").head()
     FuzzyIndex(p.getAs[String]("id_col"), p.getAs[String]("str_col"),
-      p.getAs[Int]("max_dist"), pin(part("signatures")))
+      p.getAs[Int]("max_dist"), Vector(Segment.pin(part("signatures"))))
   }
 
   /** Sorted-neighborhood blocking (Hernández & Stolfo 1995) — the OTHER

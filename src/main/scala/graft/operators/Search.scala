@@ -149,8 +149,8 @@ object Search {
     * index and the one extended from it may be released in either
     * order. */
   final case class Bm25Index private[operators] (
-      idCol: String, segments: Vector[Segment], nDocs: Long, totalTokens: Long) {
-    private val released = new java.util.concurrent.atomic.AtomicBoolean(false)
+      idCol: String, segments: Vector[Segment], nDocs: Long, totalTokens: Long)
+      extends StandingIndex {
     /** Every segment's rows, document rows included. */
     private[operators] def rows: DataFrame = Segment.union(segments)
     def postings: DataFrame =
@@ -169,8 +169,6 @@ object Search {
       typedLit(segments.map(s => prune(s.side.head).select(col("token"), col("df")))
         .reduce(_ unionByName _).collect().toSeq
         .groupMapReduce(_.getString(0))(_.getLong(1))(_ + _))
-    def release(): Unit =
-      if (released.compareAndSet(false, true)) segments.foreach(_.release())
   }
 
   /** The segment rows of a document frame: one tokenize feeding one

@@ -1,6 +1,6 @@
 package graft.operators
 
-import java.util.concurrent.atomic.AtomicInteger
+import java.util.concurrent.atomic.{AtomicBoolean, AtomicInteger}
 
 import org.apache.hadoop.fs.Path
 import org.apache.spark.rdd.RDD
@@ -13,34 +13,66 @@ import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRela
 import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.storage.StorageLevel
 
-/** The one pin discipline every operator shares. */
+/** The one pin discipline every operator shares. An operator call leaves
+  * nothing pinned, and a standing index owns exactly its own pins:
+  *
+  *  - a transient pin — a frame an operator call reads more than once — is
+  *    taken through [[scoped]], which releases it when the call returns or
+  *    throws;
+  *  - a standing index's pins are its [[Segment]]s, released through
+  *    [[StandingIndex.release]].
+  *
+  * No operator persists or unpersists a frame itself. Three sites do, each
+  * for a reason the two forms above do not cover (`PinDisciplineSpec`
+  * keeps this list and fails on any other):
+  *
+  *  - `Dedup.foldComponents` pins each round's edge RDD and releases the
+  *    round before it, because the loop carries one live round at a time;
+  *  - `Search.seal` builds a segment's two caches in one job (its rows on
+  *    the map side, its (token, df, cf) frame on the reduce side);
+  *  - `Dedup.loadComponentLabels` returns a pinned frame its caller owns
+  *    and unpersists. */
 private[graft] object Pinned {
 
-  /** Persist + force-materialize: after this, every later consumer —
-    * including both sides of a self-join — reads the cached blocks instead
-    * of recomputing the plan (lazy persist alone would let the self-join's
-    * two concurrently-scheduled map stages each compute the pipeline). */
-  def pin(df: DataFrame): DataFrame = pinRows(df)._1
+  /** Run `body` with a [[Scope]] to pin through. Every frame pinned in it
+    * is released when `body` returns or throws, so no failure after a pin
+    * can leak it. `body`'s result must not read a pinned frame lazily:
+    * materialize it first (a checkpoint, or a segment pinned from it). */
+  def scoped[T](body: Scope => T): T = {
+    val pins = new Scope
+    try body(pins) finally pins.held.foreach(_.unpersist(false))
+  }
 
-  /** [[pin]], also returning the row count of the count that
-    * materialized it — callers that need the size read it from here
-    * instead of paying a second count over the cache. The count sums the
-    * row counts of the cache's own batches, so it is ONE job after the
-    * frame's exchanges: it builds the batches as it counts them, and reads
-    * no column. A count that fails releases the cache it started. */
-  def pinRows(df: DataFrame): (DataFrame, Long) = {
+  /** The pins of one [[scoped]] call. */
+  final class Scope private[Pinned] {
+    private[Pinned] var held = List.empty[DataFrame]
+
+    /** Persist + force-materialize `df` until the scope ends: after this,
+      * every later consumer — including both sides of a self-join — reads
+      * the cached blocks instead of recomputing the plan (lazy persist
+      * alone would let the self-join's two concurrently-scheduled map
+      * stages each compute the pipeline). */
+    def apply(df: DataFrame): DataFrame = counted(df)._1
+
+    /** [[apply]], also returning the row count of the job that
+      * materialized it — callers that need the size read it from here
+      * instead of paying a second count over the cache. */
+    def counted(df: DataFrame): (DataFrame, Long) = { val pin = pinRows(df); held ::= df; pin }
+
+    /** Release `df` before the scope ends, once the frames pinned from it
+      * carry all the rest of the call needs. */
+    def release(df: DataFrame): Unit = { held = held.filterNot(_ eq df); df.unpersist(false) }
+  }
+
+  /** Persist `df` and count its rows, which materializes it. The count
+    * sums the row counts of the cache's own batches, so it is ONE job
+    * after the frame's exchanges: it builds the batches as it counts them,
+    * and reads no column. A count that fails releases the cache it
+    * started. */
+  private[operators] def pinRows(df: DataFrame): (DataFrame, Long) = {
     df.persist(StorageLevel.MEMORY_AND_DISK)
     try (df, batches(df).map(_.numRows.toLong).fold(0L)(_ + _))
     catch { case e: Throwable => df.unpersist(false); throw e }
-  }
-
-  /** [[pinRows]] for the span of `body`: the pin is released when `body`
-    * returns or throws, so no failure after the pin can leak it. `body`'s
-    * result must not read the pinned frame lazily — materialize it first
-    * (a checkpoint, or a segment pinned from it). */
-  def scoped[T](df: DataFrame)(body: (DataFrame, Long) => T): T = {
-    val (pinned, rows) = pinRows(df)
-    try body(pinned, rows) finally pinned.unpersist(false)
   }
 
   /** The rows of a persisted frame as an RDD over its cached batches. An
@@ -84,6 +116,21 @@ final class Segment private[operators] (
 
   def release(): Unit =
     if (refs.decrementAndGet() == 0) (frame +: side).foreach(_.unpersist(false))
+}
+
+/** A standing index: the [[Segment]]s it lists, holding one reference to
+  * each. Every standing index type (BM25, IVF-PQ, MinHash, embedding,
+  * fuzzy) releases through this one [[release]]. */
+trait StandingIndex {
+  def segments: Vector[Segment]
+
+  private val released = new AtomicBoolean(false)
+
+  /** Drop this index's reference to each of its segments. The segments an
+    * index shares with an index extended from it stay pinned until both
+    * are released, in either order. A second call does nothing. */
+  final def release(): Unit =
+    if (released.compareAndSet(false, true)) segments.foreach(_.release())
 }
 
 private[operators] object Segment {

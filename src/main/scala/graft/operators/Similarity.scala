@@ -7,7 +7,6 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{ArrayType, IntegerType, LongType, StructField, StructType}
 
 import graft.expressions.{LshBucketsLong, PlaneMatrix}
-import graft.operators.Pinned.pin
 
 /** Approximate-nearest-neighbor similarity search over embedding columns
   * (north-star extension, SURVEY §2.1 ✚).
@@ -47,6 +46,10 @@ import graft.operators.Pinned.pin
   * summation order would not be). Quantized int8/int16 embeddings are also
   * the standard memory/bandwidth optimization for ANN at scale. Hyperplane
   * weights and centroid seeds derive from md5, which both engines share.
+  *
+  * Storage discipline ([[Pinned]] states the rule): an eager operator pins
+  * what it reads more than once for the span of the call and checkpoints
+  * its result; a standing [[IvfPqIndex]] owns its pins as [[Segment]]s.
   */
 object Similarity {
 
@@ -194,36 +197,34 @@ object Similarity {
       nTables: Int = 16, signBits: Int = 0,
       scale: Int = 1000, seed: Long = 42L): DataFrame = {
     graft.expressions.GraftFunctions.register(corpus.sparkSession)
-    val (c, n) = Pinned.pinRows(Par.spread(corpus).select(col(idCol).as("nbr_id"), quantize(col(vecCol), scale).as("nv"))
-      .withColumn("nn", nqdot(col("nv"), col("nv"))))
-    if (n == 0L) { // empty corpus: typed empty result, no dim probe to throw
-      val out = c.select(col("nbr_id").as("query_id"), col("nbr_id"),
-        lit(0.0).as("cosine"), lit(0L).as("rank")).limit(0).localCheckpoint(true)
-      c.unpersist(false)
-      out
-    } else {
-      val bits = if (signBits > 0) signBits else sizedSignBits(n)
-      val dim = c.select(size(col("nv")).as("d")).head().getInt(0)
-      val planes = PlaneMatrix.seeded(nTables, bits, dim, seed)
-      val q = pin(queries.select(col(idCol).as("query_id"), quantize(col(vecCol), scale).as("qv"))
-        .withColumn("qn", nqdot(col("qv"), col("qv"))))
-      val cb = lshBuckets(c, "nbr_id", "nv", planes)
-      val qb = multiProbe(lshBuckets(q, "query_id", "qv", planes), "query_id", bits)
-      val cand = cb.join(broadcast(qb), Seq("t", "bucket"))
-        .filter(col("query_id") =!= col("nbr_id"))
-        .select("query_id", "nbr_id").distinct()
-      val scored = cand.join(c, Seq("nbr_id")).join(broadcast(q), Seq("query_id"))
-        .withColumn("cosine",
-          cosineOf(nqdot(col("qv"), col("nv")), col("qn"), col("nn")))
-      val w = Window.partitionBy(col("query_id"))
-        .orderBy(col("cosine").desc, col("nbr_id"))
-      val out = scored.withColumn("rank", row_number().over(w).cast("long"))
-        .filter(col("rank") <= k)
-        .select("query_id", "nbr_id", "cosine", "rank")
-        .localCheckpoint(true)
-      c.unpersist(false)
-      q.unpersist(false)
-      out
+    Pinned.scoped { pin =>
+      val (c, n) = pin.counted(Par.spread(corpus)
+        .select(col(idCol).as("nbr_id"), quantize(col(vecCol), scale).as("nv"))
+        .withColumn("nn", nqdot(col("nv"), col("nv"))))
+      if (n == 0L) { // empty corpus: typed empty result, no dim probe to throw
+        c.select(col("nbr_id").as("query_id"), col("nbr_id"),
+          lit(0.0).as("cosine"), lit(0L).as("rank")).limit(0).localCheckpoint(true)
+      } else {
+        val bits = if (signBits > 0) signBits else sizedSignBits(n)
+        val dim = c.select(size(col("nv")).as("d")).head().getInt(0)
+        val planes = PlaneMatrix.seeded(nTables, bits, dim, seed)
+        val q = pin(queries.select(col(idCol).as("query_id"), quantize(col(vecCol), scale).as("qv"))
+          .withColumn("qn", nqdot(col("qv"), col("qv"))))
+        val cb = lshBuckets(c, "nbr_id", "nv", planes)
+        val qb = multiProbe(lshBuckets(q, "query_id", "qv", planes), "query_id", bits)
+        val cand = cb.join(broadcast(qb), Seq("t", "bucket"))
+          .filter(col("query_id") =!= col("nbr_id"))
+          .select("query_id", "nbr_id").distinct()
+        val scored = cand.join(c, Seq("nbr_id")).join(broadcast(q), Seq("query_id"))
+          .withColumn("cosine",
+            cosineOf(nqdot(col("qv"), col("nv")), col("qn"), col("nn")))
+        val w = Window.partitionBy(col("query_id"))
+          .orderBy(col("cosine").desc, col("nbr_id"))
+        scored.withColumn("rank", row_number().over(w).cast("long"))
+          .filter(col("rank") <= k)
+          .select("query_id", "nbr_id", "cosine", "rank")
+          .localCheckpoint(true)
+      }
     }
   }
 
@@ -336,8 +337,10 @@ object Similarity {
       scale: Int = 1000): DataFrame = {
     val spark = corpus.sparkSession
     graft.expressions.GraftFunctions.register(spark)
-    Pinned.scoped(Par.spread(corpus).select(col(idCol).as("nbr_id"), quantize(col(vecCol), scale).as("nv"))
-        .withColumn("vv", nqdot(col("nv"), col("nv")))) { (c, n) =>
+    Pinned.scoped { pin =>
+      val (c, n) = pin.counted(Par.spread(corpus)
+        .select(col(idCol).as("nbr_id"), quantize(col(vecCol), scale).as("nv"))
+        .withColumn("vv", nqdot(col("nv"), col("nv"))))
       if (n == 0L) { // empty corpus: typed empty result, no dim probe to throw
         c.select(col("nbr_id").as("query_id"), col("nbr_id"),
           lit(0.0).as("cosine"), lit(0L).as("rank")).limit(0).localCheckpoint(true)
@@ -412,9 +415,10 @@ object Similarity {
       nCells: Int = 0, lloydIters: Int = 4, scale: Int = 1000): DataFrame = {
     val spark = corpus.sparkSession
     graft.expressions.GraftFunctions.register(spark)
-    Pinned.scoped(Par.spread(corpus)
+    Pinned.scoped { pin =>
+      val (c, n) = pin.counted(Par.spread(corpus)
         .select(col(idCol).as("nbr_id"), quantize(col(vecCol), scale).as("nv"))
-        .withColumn("vv", nqdot(col("nv"), col("nv")))) { (c, n) =>
+        .withColumn("vv", nqdot(col("nv"), col("nv"))))
       if (n == 0L) {
         c.select(col("nbr_id").as(idCol), lit(0L).as("cell"),
           lit(0L).as("proto_micro"), lit(0L).as("cell_rank"),
@@ -588,16 +592,13 @@ object Similarity {
   final case class IvfPqIndex private[operators] (
       segments: Vector[Segment], cents: DataFrame, books: DataFrame,
       m: Int, dsub: Int, dim: Int, kCents: Int, nCells: Int,
-      residual: Boolean, scale: Int) {
-    private val released = new java.util.concurrent.atomic.AtomicBoolean(false)
+      residual: Boolean, scale: Int) extends StandingIndex {
     def store: DataFrame = Segment.union(segments)
     def cells: DataFrame = store.select(col("nbr_id"), col("cell"))
     def codes: DataFrame = store
       .select(col("nbr_id"), posexplode(col("codes")).as(Seq("sub", "code")))
       .select(col("nbr_id"), col("sub"), col("code").cast("long"))
     def vecs: DataFrame = store.select(col("nbr_id"), col("nv"), col("vv"))
-    def release(): Unit =
-      if (released.compareAndSet(false, true)) segments.foreach(_.release())
   }
 
   /** The plan-time PQ arguments of the index kernels: the codebooks, plus
@@ -653,8 +654,10 @@ object Similarity {
     val spark = corpus.sparkSession
     graft.expressions.GraftFunctions.register(spark)
     require(m > 0 && kCents > 1, s"need m > 0 subspaces and kCents > 1, got m=$m kCents=$kCents")
-    Pinned.scoped(Par.spread(corpus).select(col(idCol).as("nbr_id"), quantize(col(vecCol), scale).as("nv"))
-        .withColumn("vv", nqdot(col("nv"), col("nv")))) { (c, n) =>
+    Pinned.scoped { pin =>
+      val (c, n) = pin.counted(Par.spread(corpus)
+        .select(col(idCol).as("nbr_id"), quantize(col(vecCol), scale).as("nv"))
+        .withColumn("vv", nqdot(col("nv"), col("nv"))))
       if (n == 0L) { // empty corpus: typed empty index, no dim probe to throw
         val empty = new Lloyd.Cents(Array.empty, Array.empty, 0)
         val store = Segment.pin(c.select(col("nbr_id"), lit(0L).as("cell"),
@@ -926,55 +929,55 @@ object Similarity {
     // is a no-op (never shuffle full text at scale for free).
     val slots = docs.sparkSession.sparkContext.defaultParallelism
     val spread = if (docs.rdd.getNumPartitions < slots) docs.repartition(slots) else docs
-    val tf = pin(spread.select(col(idCol).as("doc"), explode(termsCol).as("term"))
-      .select(col("doc"), xxhash64(col("term")).as("h"))
-      .groupBy("doc", "h").agg(count(lit(1)).as("tf")))
-    // df gate: one extra hash-agg over the (already-shuffled) postings;
-    // rare terms survive, boilerplate dies here instead of in the join.
-    // df rides along — it is also the prefix filter's global term order.
-    val kept = tf.groupBy("h").agg(count(lit(1)).as("df"))
-      .filter(col("df") <= maxDf)
-    // Bayardo prefix: inclusive suffix norm² in (df asc, h asc) order;
-    // a term is indexed iff the suffix from it could still reach the
-    // threshold against a unit vector: suf2 ≥ t²·n2. The 1e-9 slack loosens
-    // only (a spared posting adds a candidate that exact verify re-checks).
-    // n2 and suf2 share one exchange on doc (two window specs, same key).
-    val wDoc = Window.partitionBy(col("doc"))
-    val wSuf = Window.partitionBy(col("doc"))
-      .orderBy(col("df").asc, col("h").asc)
-      .rowsBetween(Window.currentRow, Window.unboundedFollowing)
-    val ktf = pin(tf.join(kept, Seq("h"))
-      .withColumn("n2", sum(col("tf") * col("tf")).over(wDoc))
-      .withColumn("suf2", sum(col("tf") * col("tf")).over(wSuf)))
-    tf.unpersist(false)
-    val prefix = ktf
-      .filter(col("suf2").cast("double") >=
-        col("n2").cast("double") * lit(threshold * threshold - 1e-9))
-      .select(col("h"), col("doc"))
-    val cand = ktf.select(col("h"), col("doc").as("doc_a"))
-      .join(prefix.select(col("h"), col("doc").as("doc_b")), Seq("h"))
-      .filter(col("doc_a") < col("doc_b"))
-      .select("doc_a", "doc_b").distinct()
-    // exact verify on full vectors: sort_array orders struct(h, tf) by h
-    // (h is unique per doc — it is the tf group key), flatten interleaves;
-    // n2 rides in the same frame so the verify needs only two joins
-    val vecs = ktf.groupBy("doc")
-      .agg(flatten(transform(
-        sort_array(collect_list(struct(col("h"), col("tf")))),
-        e => array(e.getField("h"), e.getField("tf")))).as("vec"),
-        max(col("n2")).as("n2"))
-    val out = cand
-      .join(vecs.select(col("doc").as("doc_a"), col("vec").as("vec_a"),
-        col("n2").as("n2_a")), Seq("doc_a"))
-      .join(vecs.select(col("doc").as("doc_b"), col("vec").as("vec_b"),
-        col("n2").as("n2_b")), Seq("doc_b"))
-      .withColumn("dot", call_function("graft_sdot", col("vec_a"), col("vec_b")))
-      .withColumn("cosine", cosineOf(col("dot"), col("n2_a"), col("n2_b")))
-      .filter(col("cosine") >= threshold)
-      .select("doc_a", "doc_b", "cosine")
-      .localCheckpoint(true)
-    ktf.unpersist(false)
-    out
+    Pinned.scoped { pin =>
+      val tf = pin(spread.select(col(idCol).as("doc"), explode(termsCol).as("term"))
+        .select(col("doc"), xxhash64(col("term")).as("h"))
+        .groupBy("doc", "h").agg(count(lit(1)).as("tf")))
+      // df gate: one extra hash-agg over the (already-shuffled) postings;
+      // rare terms survive, boilerplate dies here instead of in the join.
+      // df rides along — it is also the prefix filter's global term order.
+      val kept = tf.groupBy("h").agg(count(lit(1)).as("df"))
+        .filter(col("df") <= maxDf)
+      // Bayardo prefix: inclusive suffix norm² in (df asc, h asc) order;
+      // a term is indexed iff the suffix from it could still reach the
+      // threshold against a unit vector: suf2 ≥ t²·n2. The 1e-9 slack loosens
+      // only (a spared posting adds a candidate that exact verify re-checks).
+      // n2 and suf2 share one exchange on doc (two window specs, same key).
+      val wDoc = Window.partitionBy(col("doc"))
+      val wSuf = Window.partitionBy(col("doc"))
+        .orderBy(col("df").asc, col("h").asc)
+        .rowsBetween(Window.currentRow, Window.unboundedFollowing)
+      val ktf = pin(tf.join(kept, Seq("h"))
+        .withColumn("n2", sum(col("tf") * col("tf")).over(wDoc))
+        .withColumn("suf2", sum(col("tf") * col("tf")).over(wSuf)))
+      pin.release(tf)
+      val prefix = ktf
+        .filter(col("suf2").cast("double") >=
+          col("n2").cast("double") * lit(threshold * threshold - 1e-9))
+        .select(col("h"), col("doc"))
+      val cand = ktf.select(col("h"), col("doc").as("doc_a"))
+        .join(prefix.select(col("h"), col("doc").as("doc_b")), Seq("h"))
+        .filter(col("doc_a") < col("doc_b"))
+        .select("doc_a", "doc_b").distinct()
+      // exact verify on full vectors: sort_array orders struct(h, tf) by h
+      // (h is unique per doc — it is the tf group key), flatten interleaves;
+      // n2 rides in the same frame so the verify needs only two joins
+      val vecs = ktf.groupBy("doc")
+        .agg(flatten(transform(
+          sort_array(collect_list(struct(col("h"), col("tf")))),
+          e => array(e.getField("h"), e.getField("tf")))).as("vec"),
+          max(col("n2")).as("n2"))
+      cand
+        .join(vecs.select(col("doc").as("doc_a"), col("vec").as("vec_a"),
+          col("n2").as("n2_a")), Seq("doc_a"))
+        .join(vecs.select(col("doc").as("doc_b"), col("vec").as("vec_b"),
+          col("n2").as("n2_b")), Seq("doc_b"))
+        .withColumn("dot", call_function("graft_sdot", col("vec_a"), col("vec_b")))
+        .withColumn("cosine", cosineOf(col("dot"), col("n2_a"), col("n2_b")))
+        .filter(col("cosine") >= threshold)
+        .select("doc_a", "doc_b", "cosine")
+        .localCheckpoint(true)
+    }
   }
 
   /** k-NN majority-vote classification — the standard end-use of the ANN
@@ -1045,41 +1048,41 @@ object Similarity {
     // truncating the whole query's ranks 2..k — an inner join here would
     // empty the `ms`/`next` joins the first time a vector-less candidate
     // is selected (advisor r8).
-    val pairs = pin(ids
-      .join(ids.select(col("query_id"), col("nbr_id").as("other_id")), Seq("query_id"))
-      .filter(col("nbr_id") =!= col("other_id"))
-      .join(qv.select(col("mv_id").as("nbr_id"), col("mv").as("va"), col("mn").as("na")), Seq("nbr_id"), "left")
-      .join(qv.select(col("mv_id").as("other_id"), col("mv").as("vb"), col("mn").as("nb")), Seq("other_id"), "left")
-      .select(col("query_id"), col("nbr_id"), col("other_id"),
-        coalesce(round(cosineOf(nqdot(col("va"), col("vb")), col("na"), col("nb")) * 1e9)
-          .cast("long"), lit(0L)).as("sim_nano")))
-    val c = pin(cand.select(col("query_id"), col("nbr_id"), col("rel_nano")))
-    // round 1: pure relevance argmax
-    var selected = c.withColumn("rn", row_number().over(Window
-        .partitionBy(col("query_id")).orderBy(col("rel_nano").desc, col("nbr_id"))))
-      .filter(col("rn") === 1)
-      .select(col("query_id"), col("nbr_id"), lit(1L).as("mmr_rank"))
-      .localCheckpoint(true)
-    for (i <- 2 to k) {
-      val ms = pairs
-        .join(selected.select(col("query_id"), col("nbr_id").as("other_id")),
-          Seq("query_id", "other_id"))
-        .groupBy(col("query_id"), col("nbr_id"))
-        .agg(max(col("sim_nano")).as("max_sim"))
-      val next = c
-        .join(selected.select("query_id", "nbr_id"), Seq("query_id", "nbr_id"), "left_anti")
-        .join(ms, Seq("query_id", "nbr_id"))
-        .withColumn("score", lit(lNum.toLong) * col("rel_nano") -
-          lit((lDen - lNum).toLong) * col("max_sim"))
-        .withColumn("rn", row_number().over(Window
-          .partitionBy(col("query_id")).orderBy(col("score").desc, col("nbr_id"))))
+    Pinned.scoped { pin =>
+      val pairs = pin(ids
+        .join(ids.select(col("query_id"), col("nbr_id").as("other_id")), Seq("query_id"))
+        .filter(col("nbr_id") =!= col("other_id"))
+        .join(qv.select(col("mv_id").as("nbr_id"), col("mv").as("va"), col("mn").as("na")), Seq("nbr_id"), "left")
+        .join(qv.select(col("mv_id").as("other_id"), col("mv").as("vb"), col("mn").as("nb")), Seq("other_id"), "left")
+        .select(col("query_id"), col("nbr_id"), col("other_id"),
+          coalesce(round(cosineOf(nqdot(col("va"), col("vb")), col("na"), col("nb")) * 1e9)
+            .cast("long"), lit(0L)).as("sim_nano")))
+      val c = pin(cand.select(col("query_id"), col("nbr_id"), col("rel_nano")))
+      // round 1: pure relevance argmax
+      var selected = c.withColumn("rn", row_number().over(Window
+          .partitionBy(col("query_id")).orderBy(col("rel_nano").desc, col("nbr_id"))))
         .filter(col("rn") === 1)
-        .select(col("query_id"), col("nbr_id"), lit(i.toLong).as("mmr_rank"))
-      selected = selected.union(next).localCheckpoint(true)
+        .select(col("query_id"), col("nbr_id"), lit(1L).as("mmr_rank"))
+        .localCheckpoint(true)
+      for (i <- 2 to k) {
+        val ms = pairs
+          .join(selected.select(col("query_id"), col("nbr_id").as("other_id")),
+            Seq("query_id", "other_id"))
+          .groupBy(col("query_id"), col("nbr_id"))
+          .agg(max(col("sim_nano")).as("max_sim"))
+        val next = c
+          .join(selected.select("query_id", "nbr_id"), Seq("query_id", "nbr_id"), "left_anti")
+          .join(ms, Seq("query_id", "nbr_id"))
+          .withColumn("score", lit(lNum.toLong) * col("rel_nano") -
+            lit((lDen - lNum).toLong) * col("max_sim"))
+          .withColumn("rn", row_number().over(Window
+            .partitionBy(col("query_id")).orderBy(col("score").desc, col("nbr_id"))))
+          .filter(col("rn") === 1)
+          .select(col("query_id"), col("nbr_id"), lit(i.toLong).as("mmr_rank"))
+        selected = selected.union(next).localCheckpoint(true)
+      }
+      selected
     }
-    pairs.unpersist(blocking = false)
-    c.unpersist(blocking = false)
-    selected
   }
 
   /** Per-group semantic outlier scoring (r9 ✚ — the curation stage that
@@ -1182,42 +1185,42 @@ object Similarity {
     // inline quantize() and nqdot() into EVERY element of the
     // unit-quantization transform (the lambda references nn 64×/row), an
     // O(dim²) re-evaluation measured at ~10× the whole operator's cost.
-    // pin (not localCheckpoint) so the blocks are RELEASED on return —
-    // the [[prototypicality]] discipline; the result is eager.
-    val q = pin(Par.spread(df)
-      .select(col(grpCol).as("gd_grp"), quantize(col(vecCol), scale).as("q"))
-      .withColumn("nn", nqdot(col("q"), col("q"))))
-    val zeros = q.filter(col("nn") === 0L).groupBy(col("gd_grp"))
-      .agg(count(lit(1)).as("n_zero"))
-    // greatest(nn, 1): rows with nn = 0 are filtered out, but ANSI mode
-    // aborts on a zero divisor WHEREVER the optimizer evaluates the
-    // projection — total expressions over the filtered domain only
-    // (the WordPiece greatest-guard discipline); nn > 0 ⟹ value unchanged
-    val u = q.filter(col("nn") > 0L)
-      .withColumn("u", transform(col("q"), x =>
-        round(x.cast("double")
-          / sqrt(greatest(col("nn"), lit(1L)).cast("double")) * scale)
-          .cast("long")))
-      .withColumn("self", nqdot(col("u"), col("u")))
-    val rows = u.groupBy(col("gd_grp"))
-      .agg(count(lit(1)).as("n"), sum(col("self").cast(dec)).as("__selfsum"))
-    val comps = u.select(col("gd_grp"), posexplode(col("u")).as(Seq("pos", "x")))
-      .groupBy(col("gd_grp"), col("pos"))
-      .agg(sum(col("x")).as("s"))
-      .groupBy(col("gd_grp"))
-      .agg(sum(col("s").cast(dec) * col("s").cast(dec)).as("__ss"))
-    val out = rows.join(comps, Seq("gd_grp"))
-      .join(zeros, Seq("gd_grp"), "left")
-      .select(col("gd_grp").as(grpCol), col("n"),
-        coalesce(col("n_zero"), lit(0L)).as("n_zero"),
-        when(col("n") >= 2,
-          round((col("__ss") - col("__selfsum")).cast("double")
-            / (col("n") * (col("n") - 1)).cast("double")
-            / lit(scale.toDouble * scale) * 1e6).cast("long"))
-          .as("mean_pair_cos_micro"))
-      .localCheckpoint(true)
-    q.unpersist(false)
-    out
+    // pin (not localCheckpoint) so the blocks are RELEASED on return;
+    // the result is eager.
+    Pinned.scoped { pin =>
+      val q = pin(Par.spread(df)
+        .select(col(grpCol).as("gd_grp"), quantize(col(vecCol), scale).as("q"))
+        .withColumn("nn", nqdot(col("q"), col("q"))))
+      val zeros = q.filter(col("nn") === 0L).groupBy(col("gd_grp"))
+        .agg(count(lit(1)).as("n_zero"))
+      // greatest(nn, 1): rows with nn = 0 are filtered out, but ANSI mode
+      // aborts on a zero divisor WHEREVER the optimizer evaluates the
+      // projection — total expressions over the filtered domain only
+      // (the WordPiece greatest-guard discipline); nn > 0 ⟹ value unchanged
+      val u = q.filter(col("nn") > 0L)
+        .withColumn("u", transform(col("q"), x =>
+          round(x.cast("double")
+            / sqrt(greatest(col("nn"), lit(1L)).cast("double")) * scale)
+            .cast("long")))
+        .withColumn("self", nqdot(col("u"), col("u")))
+      val rows = u.groupBy(col("gd_grp"))
+        .agg(count(lit(1)).as("n"), sum(col("self").cast(dec)).as("__selfsum"))
+      val comps = u.select(col("gd_grp"), posexplode(col("u")).as(Seq("pos", "x")))
+        .groupBy(col("gd_grp"), col("pos"))
+        .agg(sum(col("x")).as("s"))
+        .groupBy(col("gd_grp"))
+        .agg(sum(col("s").cast(dec) * col("s").cast(dec)).as("__ss"))
+      rows.join(comps, Seq("gd_grp"))
+        .join(zeros, Seq("gd_grp"), "left")
+        .select(col("gd_grp").as(grpCol), col("n"),
+          coalesce(col("n_zero"), lit(0L)).as("n_zero"),
+          when(col("n") >= 2,
+            round((col("__ss") - col("__selfsum")).cast("double")
+              / (col("n") * (col("n") - 1)).cast("double")
+              / lit(scale.toDouble * scale) * 1e6).cast("long"))
+            .as("mean_pair_cos_micro"))
+        .localCheckpoint(true)
+    }
   }
 
   /** The nano-quantized cosine of a quantized vector against a stored

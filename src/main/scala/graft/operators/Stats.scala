@@ -4,7 +4,6 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DecimalType, LongType}
-import org.apache.spark.storage.StorageLevel
 
 /** Exact-sum hypothesis tests (✚ extension surface) — the A/B-comparison
   * primitives a data platform runs over event logs and corpus metadata.
@@ -335,9 +334,8 @@ object Stats {
     * [[Ranks]] machinery (range-bucketed — no data-sized per-group sort),
     * the two bounds are a filter + |groups|-sized agg, and the clip+mean
     * is one more hash-agg: no window ever holds more than a bucket cell.
-    * The result is EAGER (pin-and-release over the shared base frame —
-    * the [[graft.operators.Baskets]]/[[Similarity]] pin discipline; the
-    * r13 ScaleProbe winsorize axis measures the whole op scan-tracking
+    * The result is EAGER (the shared base frame is pinned for the call,
+    * as [[Pinned]] states; the r13 ScaleProbe winsorize axis measures the whole op scan-tracking
     * across 10× rows, 1.62→2.53 s GC-fenced, so unlike tf-idf the pin is
     * justified here: the base frame feeds FOUR branches, not two).
     * Output per group: `n`, `k`, `lo_micro`, `hi_micro`, `wsum_micro`,
@@ -347,37 +345,34 @@ object Stats {
     require(trimPct >= 0 && trimPct < 50, "trimPct must be in [0, 50)")
     // x feeds four plan branches (range bounds, positions, counts, the
     // final clip join): pin it so the scan+quantization runs once per
-    // action (the Baskets/Similarity pin-and-release discipline);
-    // released after the eager localCheckpoint below
-    val x = df.filter(col(groupCol).isNotNull && col(valueCol).isNotNull)
-      .select(col(groupCol).as("g"),
-        round(col(valueCol).cast("double") * 1e6).cast(LongType).as("__v"),
-        col(idCol).as("__id"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    x.count()
-    val b = Ranks.withRangeBucket(x, "__v", "__bk")
-    val pos = Ranks.twoLevel(b, col("__bk"), Seq(col("__v"), col("__id")),
-      posCol = Some("__p"), partCols = Seq("g"))
-    val nk = x.groupBy(col("g")).agg(count(lit(1)).as("n"))
-      .withColumn("k", Ranks.floorDiv(col("n") * trimPct, 100L))
-    val bounds = pos.join(nk, Seq("g"))
-      .filter(col("__p") === col("k") + 1 || col("__p") === col("n") - col("k"))
-      .groupBy(col("g"))
-      .agg(min(when(col("__p") === col("k") + 1, col("__v"))).as("lo_micro"),
-        min(when(col("__p") === col("n") - col("k"), col("__v"))).as("hi_micro"))
-    val out = x.join(bounds, Seq("g")).join(nk, Seq("g"))
-      .withColumn("__w",
-        greatest(least(col("__v"), col("hi_micro")), col("lo_micro")))
-      .groupBy(col("g").as(groupCol))
-      .agg(max(col("n")).as("n"), max(col("k")).as("k"),
-        max(col("lo_micro")).as("lo_micro"), max(col("hi_micro")).as("hi_micro"),
-        sum(col("__w")).as("wsum_micro"))
-      .withColumn("wmean_micro",
-        round(col("wsum_micro").cast("double") / col("n").cast("double"))
-          .cast(LongType))
-      .localCheckpoint(true)
-    x.unpersist(false)
-    out
+    // action
+    Pinned.scoped { pin =>
+      val x = pin(df.filter(col(groupCol).isNotNull && col(valueCol).isNotNull)
+        .select(col(groupCol).as("g"),
+          round(col(valueCol).cast("double") * 1e6).cast(LongType).as("__v"),
+          col(idCol).as("__id")))
+      val b = Ranks.withRangeBucket(x, "__v", "__bk")
+      val pos = Ranks.twoLevel(b, col("__bk"), Seq(col("__v"), col("__id")),
+        posCol = Some("__p"), partCols = Seq("g"))
+      val nk = x.groupBy(col("g")).agg(count(lit(1)).as("n"))
+        .withColumn("k", Ranks.floorDiv(col("n") * trimPct, 100L))
+      val bounds = pos.join(nk, Seq("g"))
+        .filter(col("__p") === col("k") + 1 || col("__p") === col("n") - col("k"))
+        .groupBy(col("g"))
+        .agg(min(when(col("__p") === col("k") + 1, col("__v"))).as("lo_micro"),
+          min(when(col("__p") === col("n") - col("k"), col("__v"))).as("hi_micro"))
+      x.join(bounds, Seq("g")).join(nk, Seq("g"))
+        .withColumn("__w",
+          greatest(least(col("__v"), col("hi_micro")), col("lo_micro")))
+        .groupBy(col("g").as(groupCol))
+        .agg(max(col("n")).as("n"), max(col("k")).as("k"),
+          max(col("lo_micro")).as("lo_micro"), max(col("hi_micro")).as("hi_micro"),
+          sum(col("__w")).as("wsum_micro"))
+        .withColumn("wmean_micro",
+          round(col("wsum_micro").cast("double") / col("n").cast("double"))
+            .cast(LongType))
+        .localCheckpoint(true)
+    }
   }
 
   /** Weight-of-evidence / information-value feature screen of a discrete
@@ -602,33 +597,31 @@ object Stats {
     * cannot move it. Scale shape: the [[winsorizedMean]] machinery —
     * per-group positions from the two-level [[Ranks]] buckets (no
     * data-sized per-group sort), one |groups|-sized bound agg;
-    * pin-and-release on the shared base frame, eager result. Output per
+    * the shared base frame pinned for the call, eager result. Output per
     * group: `n`, `k`, `qhat_micro`. */
   def conformalThreshold(df: DataFrame, groupCol: String, scoreCol: String,
       idCol: String, alphaPct: Int = 10): DataFrame = {
     require(alphaPct >= 1 && alphaPct <= 99, "alphaPct must be in [1, 99]")
-    val x = df.filter(col(groupCol).isNotNull && col(scoreCol).isNotNull)
-      .select(col(groupCol).as("g"),
-        round(col(scoreCol).cast("double") * 1e6).cast(LongType).as("__v"),
-        col(idCol).as("__id"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    x.count()
-    val b = Ranks.withRangeBucket(x, "__v", "__bk")
-    val pos = Ranks.twoLevel(b, col("__bk"), Seq(col("__v"), col("__id")),
-      posCol = Some("__p"), partCols = Seq("g"))
-    val nk = x.groupBy(col("g")).agg(count(lit(1)).as("n"))
-      .withColumn("k", Ranks.floorDiv(
-        (col("n") + 1) * (100 - alphaPct) + 99, 100L))
-    val qhat = pos.join(nk, Seq("g"))
-      .filter(col("__p") === col("k"))
-      .groupBy(col("g"))
-      .agg(min(col("__v")).as("qhat_micro"))
-    val out = nk.join(qhat, Seq("g"), "left")
-      .select(col("g").as(groupCol), col("n"), col("k"),
-        when(col("k") <= col("n"), col("qhat_micro")).as("qhat_micro"))
-      .localCheckpoint(true)
-    x.unpersist(false)
-    out
+    Pinned.scoped { pin =>
+      val x = pin(df.filter(col(groupCol).isNotNull && col(scoreCol).isNotNull)
+        .select(col(groupCol).as("g"),
+          round(col(scoreCol).cast("double") * 1e6).cast(LongType).as("__v"),
+          col(idCol).as("__id")))
+      val b = Ranks.withRangeBucket(x, "__v", "__bk")
+      val pos = Ranks.twoLevel(b, col("__bk"), Seq(col("__v"), col("__id")),
+        posCol = Some("__p"), partCols = Seq("g"))
+      val nk = x.groupBy(col("g")).agg(count(lit(1)).as("n"))
+        .withColumn("k", Ranks.floorDiv(
+          (col("n") + 1) * (100 - alphaPct) + 99, 100L))
+      val qhat = pos.join(nk, Seq("g"))
+        .filter(col("__p") === col("k"))
+        .groupBy(col("g"))
+        .agg(min(col("__v")).as("qhat_micro"))
+      nk.join(qhat, Seq("g"), "left")
+        .select(col("g").as(groupCol), col("n"), col("k"),
+          when(col("k") <= col("n"), col("qhat_micro")).as("qhat_micro"))
+        .localCheckpoint(true)
+    }
   }
 
   /** Bradley–Terry preference strengths (r13 ✚) — aggregate pairwise
@@ -1583,38 +1576,36 @@ object Stats {
     * Scale shape: the [[conformalThreshold]] machinery — global positions
     * from the two-level [[Ranks]] buckets (no data-sized single-partition
     * window), one broadcast 1-row count, one hash-agg to ≤ nBins rows;
-    * pin-and-release on the filtered base, eager result. */
+    * the filtered base pinned for the call, eager result. */
   def reliabilityBinsQuantile(df: DataFrame, scoreCol: String,
       labelCol: String, idCol: String, nBins: Int = 10): DataFrame = {
     require(nBins >= 1 && nBins <= 100000, "nBins must be in [1, 100000]")
-    val x = df.filter(col(scoreCol).isNotNull && col(labelCol).isNotNull
-        && col(scoreCol) >= 0 && col(scoreCol) <= 1 && col(idCol).isNotNull)
-      .select(round(col(scoreCol).cast("double") * 1e6).cast(LongType).as("__p"),
-        col(labelCol).cast("boolean").as("__y"), col(idCol).as("__id"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    x.count()
-    val b = Ranks.withRangeBucket(x, "__p", "__bk")
-    val pos = Ranks.twoLevel(b, col("__bk"), Seq(col("__p"), col("__id")),
-      posCol = Some("__pos"))
-    val n1 = x.agg(count(lit(1)).as("__n"))
-    val out = pos.crossJoin(broadcast(n1))
-      // positive operands: div truncation IS the floor
-      .withColumn("bin",
-        call_function("div", (col("__pos") - 1) * nBins, col("__n")))
-      .groupBy(col("bin"))
-      .agg(count(lit(1)).as("n"),
-        count(when(col("__y"), lit(1))).as("n_pos"),
-        sum(col("__p")).as("__sp"),
-        min(col("__p")).as("lo_micro"), max(col("__p")).as("hi_micro"))
-      .select(col("bin"), col("n"), col("n_pos"),
-        round(col("__sp").cast("double") / col("n").cast("double"))
-          .cast(LongType).as("conf_micro"),
-        round(col("n_pos").cast("double") * 1e6 / col("n").cast("double"))
-          .cast(LongType).as("acc_micro"),
-        col("lo_micro"), col("hi_micro"))
-      .localCheckpoint(true)
-    x.unpersist(false)
-    out
+    Pinned.scoped { pin =>
+      val x = pin(df.filter(col(scoreCol).isNotNull && col(labelCol).isNotNull
+          && col(scoreCol) >= 0 && col(scoreCol) <= 1 && col(idCol).isNotNull)
+        .select(round(col(scoreCol).cast("double") * 1e6).cast(LongType).as("__p"),
+          col(labelCol).cast("boolean").as("__y"), col(idCol).as("__id")))
+      val b = Ranks.withRangeBucket(x, "__p", "__bk")
+      val pos = Ranks.twoLevel(b, col("__bk"), Seq(col("__p"), col("__id")),
+        posCol = Some("__pos"))
+      val n1 = x.agg(count(lit(1)).as("__n"))
+      pos.crossJoin(broadcast(n1))
+        // positive operands: div truncation IS the floor
+        .withColumn("bin",
+          call_function("div", (col("__pos") - 1) * nBins, col("__n")))
+        .groupBy(col("bin"))
+        .agg(count(lit(1)).as("n"),
+          count(when(col("__y"), lit(1))).as("n_pos"),
+          sum(col("__p")).as("__sp"),
+          min(col("__p")).as("lo_micro"), max(col("__p")).as("hi_micro"))
+        .select(col("bin"), col("n"), col("n_pos"),
+          round(col("__sp").cast("double") / col("n").cast("double"))
+            .cast(LongType).as("conf_micro"),
+          round(col("n_pos").cast("double") * 1e6 / col("n").cast("double"))
+            .cast(LongType).as("acc_micro"),
+          col("lo_micro"), col("hi_micro"))
+        .localCheckpoint(true)
+    }
   }
 
   /** Isotonic calibration remap (r14 ✚) — the FIX step after

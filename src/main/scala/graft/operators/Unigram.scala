@@ -212,8 +212,6 @@ object Unigram {
       // eager per-round pin: the [[Graph.pageRank]] lineage discipline
       vocab = emRound(words, vocab, chars, maxPieceLen, vocabSize)
         .localCheckpoint(true)
-    words.unpersist(blocking = false)
-    chars.unpersist(blocking = false)
     vocab
   }
 

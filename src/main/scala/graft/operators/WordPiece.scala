@@ -107,7 +107,6 @@ object WordPiece {
           .localCheckpoint(true)
       }
     }
-    words.unpersist(blocking = false)
     merges.toSeq.toDF("rank", "sym_a", "sym_b", "merged", "pair_count",
       "score_nano")
   }

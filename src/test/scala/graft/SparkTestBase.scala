@@ -9,6 +9,8 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.operators.StandingIndex
+
 /** One shared local session for the whole forked test JVM — the SAME
   * configuration as the contract mains (GraftSession), so a knob added
   * there applies to the test suite too. */
@@ -46,6 +48,25 @@ trait SparkTestBase extends AnyFunSuite {
   /** The ids of the RDDs Spark holds persisted right now — compare two
     * readings to see what an operator pinned or left pinned. */
   def pinned: Set[Int] = spark.sparkContext.getPersistentRDDs.keySet.toSet
+
+  /** For both release orders: build a standing index's generations
+    * (`order(newestFirst)`, in the order they are to be released), release
+    * all but the last, and check that the last still answers `query`;
+    * releasing it twice then leaves nothing pinned but the answer's own
+    * checkpoint. */
+  def releasesEveryPin[I <: StandingIndex](name: String)(order: Boolean => Seq[I])(
+      query: I => DataFrame): Unit =
+    for (newestFirst <- Seq(false, true)) {
+      val start = pinned
+      val ixs = order(newestFirst)
+      ixs.init.foreach(_.release())
+      val before = pinned
+      assert(query(ixs.last).count() > 0, name)
+      val checkpoint = pinned -- before // the result's own blocks
+      ixs.last.release()
+      ixs.last.release() // idempotent
+      assert((pinned -- start -- checkpoint).isEmpty, s"$name newestFirst=$newestFirst")
+    }
 
   /** `e` and its causes, outermost first. */
   def exceptionChain(e: Throwable): Seq[Throwable] =

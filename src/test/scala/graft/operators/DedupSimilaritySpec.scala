@@ -566,9 +566,11 @@ class DedupSimilaritySpec extends SparkTestBase {
     // embedding: vecs, then buckets (fails), then the params marker
     val emb = Dedup.embeddingIndex(vecs, "vec_id", "embedding", signBits = 3)
     Dedup.saveEmbeddingIndex(emb, s"$dir/emb")
-    val badPacked = emb.packed.withColumn("bk",
+    val embSeg = emb.segments.head
+    val badPacked = embSeg.frame.withColumn("bk",
       when(col("id") === 2L, boom).otherwise(col("bk")))
-    intercept[Exception](Dedup.saveEmbeddingIndex(emb.copy(packed = badPacked), s"$dir/emb"))
+    val badEmb = emb.copy(segments = Vector(new Segment(badPacked, embSeg.rows, embSeg.partitions, Nil)))
+    intercept[Exception](Dedup.saveEmbeddingIndex(badEmb, s"$dir/emb"))
     failsToLoad(Dedup.loadEmbeddingIndex(spark, s"$dir/emb"))
     // a clean re-save restores it; saving over the directory an index was
     // loaded from is refused before the marker is touched
@@ -1448,10 +1450,9 @@ class DedupSimilaritySpec extends SparkTestBase {
     }
   }
 
-  test("IvfPqIndex release: an index and its extensions free every pin in either order") {
+  test("IvfPqIndex, MinhashIndex and EmbeddingIndex release: an index and its extensions free every pin in either order") {
     val qs = vecRows(Seq(3L))
-    for (newestFirst <- Seq(false, true)) {
-      val start = pinned
+    releasesEveryPin("IvfPqIndex") { newestFirst =>
       val base = Similarity.ivfPqIndex(vecRows(0L until 8L), "vec_id", "embedding",
         nCells = 2, m = 3, kCents = 4)
       val ixs = (1 to 4).scanLeft(base) { (ix, step) =>
@@ -1461,16 +1462,14 @@ class DedupSimilaritySpec extends SparkTestBase {
       // an empty batch adds no segment
       val same = Similarity.extendIvfPqIndex(ixs.last, vecRows(Nil), "vec_id", "embedding")
       assert(same.segments == ixs.last.segments)
-      val order = (if (newestFirst) ixs.reverse else ixs) :+ same
-      order.init.foreach(_.release())
-      val last = order.last
-      val before = pinned
-      assert(Similarity.ivfPqTopKIndexed(last, qs, "vec_id", "embedding", 3).count() > 0)
-      val checkpoint = pinned -- before // the result's own blocks
-      last.release()
-      last.release() // idempotent
-      assert((pinned -- start -- checkpoint).isEmpty, s"newestFirst=$newestFirst")
-    }
+      (if (newestFirst) ixs.reverse else ixs) :+ same
+    }(Similarity.ivfPqTopKIndexed(_, qs, "vec_id", "embedding", 3))
+    // no extend: one generation, released twice
+    releasesEveryPin("MinhashIndex")(_ => Seq(Dedup.minhashIndex(docs, "doc_id", "text")))(
+      Dedup.minhashLshPairsIndexed(_, 0.5))
+    releasesEveryPin("EmbeddingIndex") { _ =>
+      Seq(Dedup.embeddingIndex(vecRows(0L until 30L), "vec_id", "embedding", signBits = 3))
+    }(Dedup.embeddingNearDupPairsIndexed(_, 0.9))
   }
 
   test("job budgets: a non-compacting IVF-PQ extend ≤ 2 jobs; hyperplanes 0") {
@@ -1672,6 +1671,37 @@ class DedupSimilaritySpec extends SparkTestBase {
     assert(pinned == before)
   }
 
+  test("an operator that throws after its first pin leaks no pin") {
+    val threeDim = Seq((100L, Array(0.1f, 0.2f, 0.3f))).toDF("vec_id", "embedding")
+    val edges = Seq((1L, 2L), (2L, 3L), (3L, 1L)).toDF("src", "dst")
+    val seeds = Seq(1L).toDF("node")
+    val calls = Seq[(String, () => Any)](
+      // the corpus and the queries are pinned before their dimensions meet
+      "bucketedTopK" -> (() => Similarity.bucketedTopK(vecRows(0L until 8L), threeDim,
+        "vec_id", "embedding", k = 2)),
+      // the corpus windows are pinned before the eval set is read
+      "substringSpansBetween" -> (() => Dedup.substringSpansBetween(docs,
+        docs.withColumnRenamed("text", "body"), "doc_id", "text")),
+      // the seeds are pinned before the edges are read
+      "personalizedPageRank" -> (() => Graph.personalizedPageRank(
+        edges.drop("dst"), "src", "dst", seeds, "node", iterations = 2)),
+      // the edges are pinned before the seeds are read
+      "labelPropagation" -> (() => Graph.labelPropagation(edges, "src", "dst",
+        seeds.withColumn("label", lit("a")), "missing", "label", iterations = 2)),
+      // an edge plan of its own: labelPropagation pins the same layout, and
+      // Spark shares one cache entry between equal plans
+      "bfsHops" -> (() => Graph.bfsHops(edges.limit(2), "src", "dst", seeds, "missing",
+        maxHops = 2)),
+      // the candidate pairs are pinned before the relevance column is read
+      "mmrRerank" -> (() => Similarity.mmrRerank(Seq(("q", 1L), ("q", 2L)).toDF("query_id", "nbr_id"),
+        vecRows(0L until 4L).withColumnRenamed("vec_id", "id"), "id", "embedding", k = 2)))
+    for ((name, call) <- calls) {
+      val before = pinned
+      intercept[Exception](call())
+      assert(pinned == before, name)
+    }
+  }
+
   /** The delta path the packed index replaced, kept as its reference:
     * pinned delta → relational bucketing (dim-explode ⋈ hyperplanes, two
     * aggregates) → multi-probe → (t, bucket) band join against the corpus
@@ -1787,9 +1817,9 @@ class DedupSimilaritySpec extends SparkTestBase {
     vecRows(0L until 400L).coalesce(1).write.parquet(s"$dir/corpus")
     vecRows(390L until 454L).coalesce(1).write.parquet(s"$dir/batch")
     val corpus = spark.read.parquet(s"$dir/corpus")
-    var pinned: DataFrame = null
-    val pinJobs = jobsRun { pinned = Pinned.pin(Par.spread(corpus)) }
-    pinned.unpersist()
+    var seg: Segment = null
+    val pinJobs = jobsRun { seg = Segment.pin(Par.spread(corpus)) }
+    seg.release()
     assert(pinJobs <= 2, s"pin: $pinJobs jobs")
     var ix: Dedup.EmbeddingIndex = null
     val buildJobs = jobsRun { ix = Dedup.embeddingIndex(corpus, "vec_id", "embedding", threshold = 0.9) }

@@ -208,6 +208,44 @@ class LmSearchGraphSpec extends SparkTestBase {
     (i, (Seq.fill((i % 3).toInt)(words.head) ++ words).mkString(" "))
   }.toDF("doc_id", "text")
 
+  // 4-letter words of 4 distinct letters: each has 5 signature rows at
+  // maxDist 1 (itself and its 4 single deletions), so every 3-word batch
+  // pins the same row count
+  private def fuzzyWords(ids: Seq[Long]) = ids.map { i =>
+    (i, (0 until 4).map(j => ('a' + (i * 5 + j * 7) % 26).toChar).mkString)
+  }.toDF("id", "s")
+
+  test("FuzzyIndex extend chain: every extend probes as a rebuild on the union; segments stay O(log)") {
+    val probes = fuzzyWords(Seq(0L, 7L, 30L, 44L, 99L))
+      .unionByName(Seq((100L, "zzzz")).toDF("id", "s"))
+    var ix = Joins.fuzzyIndex(fuzzyWords(0L until 12L), "id", "s", 1)
+    val batchRows = 15L
+    for (step <- 1 to 11) {
+      val next = Joins.extendFuzzyIndex(ix, fuzzyWords((9L + 3 * step) until (12L + 3 * step)))
+      ix.release()
+      ix = next
+      val ref = Joins.fuzzyIndex(fuzzyWords(0L until (12L + 3 * step)), "id", "s", 1)
+      assert(rowSet(Joins.fuzzyProbe(ix, probes, "id", "s")) ==
+        rowSet(Joins.fuzzyProbe(ref, probes, "id", "s")), s"step $step")
+      assert(rowSet(ix.signatures) == rowSet(ref.signatures), s"step $step")
+      ref.release()
+      // binary-counter compaction: sizes strictly fall from oldest to newest
+      val rows = ix.segments.map(_.rows)
+      val total = rows.sum
+      assert(total == 5L * (12 + 3 * step))
+      assert(rows.zip(rows.tail).forall { case (a, b) => a > b }, s"step $step: $rows")
+      val bound = (math.log(total.toDouble / batchRows) / math.log(2)).floor.toInt + 2
+      assert(ix.segments.size <= bound, s"step $step: $rows > $bound segments")
+    }
+    // 11 batches on a base of 4: 15 batch sizes = binary 8+4+2+1
+    assert(ix.segments.map(_.rows) == Vector(120L, 60L, 30L, 15L))
+    // and the from-scratch fuzzyJoin agrees with the extended index
+    val matched = rowSet(Joins.fuzzyProbe(ix, probes, "id", "s"))
+    assert(matched.nonEmpty)
+    assert(matched == rowSet(Joins.fuzzyJoin(probes, "id", "s", fuzzyWords(0L until 45L), "id", "s", 1)))
+    ix.release()
+  }
+
   test("Bm25Index extend chain: every extend ≡ a rebuild on the union; segments stay O(log)") {
     val terms = Seq("spark", "window", "cache")
     val qs = Seq(("a", "spark"), ("a", "sort"), ("b", "hash"), ("c", "zzz")).toDF("qid", "term")
@@ -246,23 +284,21 @@ class LmSearchGraphSpec extends SparkTestBase {
     ix.release()
   }
 
-  test("Bm25Index release: an index and its extensions free every pin in either order") {
-    for (newestFirst <- Seq(false, true)) {
-      val start = pinned
+  test("Bm25Index and FuzzyIndex release: an index and its extensions free every pin in either order") {
+    // the generation released last still answers after the others
+    releasesEveryPin("Bm25Index") { newestFirst =>
       val ixs = (1 to 4).scanLeft(Search.bm25Index(segDocs(0L until 6L), "doc_id", "text")) {
         (ix, step) => Search.extendBm25Index(ix, segDocs((3L + 3 * step) until (6L + 3 * step)), "text")
       }
-      // the generation released last still answers after the others
-      val order = if (newestFirst) ixs.reverse else ixs
-      order.init.foreach(_.release())
-      val last = order.last
-      val before = pinned
-      assert(Search.bm25TopKIndexed(last, Seq("spark"), 3).count() > 0)
-      val checkpoint = pinned -- before // the result's own blocks
-      last.release()
-      last.release() // idempotent
-      assert((pinned -- start -- checkpoint).isEmpty, s"newestFirst=$newestFirst")
-    }
+      if (newestFirst) ixs.reverse else ixs
+    }(Search.bm25TopKIndexed(_, Seq("spark"), 3))
+    val probe = fuzzyWords(Seq(0L)) // indexed by every generation
+    releasesEveryPin("FuzzyIndex") { newestFirst =>
+      val ixs = (1 to 4).scanLeft(Joins.fuzzyIndex(fuzzyWords(0L until 6L), "id", "s", 1)) {
+        (ix, step) => Joins.extendFuzzyIndex(ix, fuzzyWords((3L + 3 * step) until (6L + 3 * step)))
+      }
+      if (newestFirst) ixs.reverse else ixs
+    }(Joins.fuzzyProbe(_, probe, "id", "s"))
   }
 
   test("Bm25Index job budget: a non-compacting extend runs at most 5 Spark jobs") {
