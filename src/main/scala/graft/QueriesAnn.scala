@@ -241,12 +241,11 @@ private[graft] object QueriesAnn extends OracleSqlHelpers {
     // scored by the codegen'd exact-rational graft_jw_micro expression —
     // record-linkage ranking without a single float
     "q163_jw_rerank" -> ((s, d) => {
-      graft.expressions.GraftFunctions.register(s)
       val names = Tables.part(s, d).select(col("p_name").as("name")).distinct()
       Joins.fuzzySelfPairs(names, "name", "name", maxDist = 2)
         .select(col("id_a").as("name_a"), col("id_b").as("name_b"),
           col("dist").cast(LongType).as("dist"),
-          call_function("graft_jw_micro", col("id_a"), col("id_b")).as("jw_micro"))
+          graft.expressions.Kernels.jwMicro(col("id_a"), col("id_b")).as("jw_micro"))
         .orderBy(col("name_a"), col("name_b"))
     }),
     // sparse cosine all-pairs ✚: inverted-index candidates over 3-word
@@ -270,16 +269,15 @@ private[graft] object QueriesAnn extends OracleSqlHelpers {
     // SF; at sf0.01 (N ≤ 800) it is a no-op and the scorecard is exact.
     // `RecallFloorSpec` gates this recall and the 16-table dial's.
     "q53_neardup_recall" -> ((s, d) => {
-      graft.expressions.GraftFunctions.register(s)
       val e = Tables.embeddings(s, d)
       val found = Dedup.embeddingNearDupPairs(e, "vec_id", "embedding", threshold = 0.3)
         .select(col("id_a"), col("id_b"), lit(1L).as("hit"))
       val v = e.select(col("vec_id"), Similarity.quantize(col("embedding")).as("q"))
-        .withColumn("nn", call_function("graft_qdot", col("q"), col("q")))
+        .withColumn("nn", Similarity.qdot(col("q"), col("q")))
         .orderBy(md5(col("vec_id").cast("string")), col("vec_id")).limit(800)
       val exact = v.as("x").join(v.as("y"), col("x.vec_id") < col("y.vec_id"))
         .withColumn("cosine",
-          call_function("graft_qdot", col("x.q"), col("y.q")).cast("double") /
+          Similarity.qdot(col("x.q"), col("y.q")).cast("double") /
             (sqrt(col("x.nn").cast("double")) * sqrt(col("y.nn").cast("double"))))
         .filter(col("cosine") >= 0.3)
         .select(col("x.vec_id").as("id_a"), col("y.vec_id").as("id_b"))

@@ -141,10 +141,9 @@ private[graft] object QueriesDedup extends OracleSqlHelpers {
     // FastSS signature candidates → codegen'd JW decision edges (≥0.93) →
     // star-contraction components → lexicographic-min canonical name
     "q176_entity_resolution" -> ((s, d) => {
-      graft.expressions.GraftFunctions.register(s)
       val names = Tables.part(s, d).select(col("p_name").as("name")).distinct()
       val edges = Joins.fuzzySelfPairs(names, "name", "name", maxDist = 2)
-        .withColumn("jw", call_function("graft_jw_micro", col("id_a"), col("id_b")))
+        .withColumn("jw", graft.expressions.Kernels.jwMicro(col("id_a"), col("id_b")))
         .filter(col("jw") >= 930000L)
         .select(col("id_a"), col("id_b"))
       Dedup.connectedComponents(edges, names, "name")

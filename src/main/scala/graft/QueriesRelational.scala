@@ -178,7 +178,6 @@ private[graft] object QueriesRelational extends OracleSqlHelpers {
     // exercises real composition (the synthetic corpus is ASCII, where NFC
     // is the quick-checked identity fast path)
     "q80_unicode_nfc" -> ((s, d) => {
-      graft.expressions.GraftFunctions.register(s)
       Tables.documents(s, d)
         .select(col("doc_id"),
           concat(lit("Cafe\u0301 doc "), col("doc_id").cast("string"), lit(" "),
@@ -211,7 +210,6 @@ private[graft] object QueriesRelational extends OracleSqlHelpers {
     // asserts the sketch's DETERMINISTIC lower ≤ exact ≤ upper guarantee
     // (estimates are merge-tree-specific and never hash-compared)
     "q112_heavy_hitters" -> ((s, d) => {
-      graft.expressions.GraftFunctions.register(s)
       val toks = Tables.documents(s, d)
         .select(explode(Text.tokens(Text.normalize(col("text")))).as("token"))
       val hashed = toks.withColumn("h", xxhash64(col("token")))
@@ -222,7 +220,7 @@ private[graft] object QueriesRelational extends OracleSqlHelpers {
         .orderBy(col("n").desc, col("token")).limit(20)
       top.crossJoin(broadcast(merged))
         .withColumn("b",
-          call_function("graft_freq_bounds", col("fsketch"), xxhash64(col("token"))))
+          graft.expressions.Kernels.freqBounds(col("fsketch"), xxhash64(col("token"))))
         .select(col("token"), col("n"),
           (element_at(col("b"), 2) <= col("n") &&
             col("n") <= element_at(col("b"), 3)).as("ok_bounds"))
@@ -591,11 +589,10 @@ private[graft] object QueriesRelational extends OracleSqlHelpers {
     // generator — N·(w−1) pairs from sort-order locality, scored by the
     // q163 exact-rational Jaro-Winkler, matches kept at ≥ 0.9
     "q193_sorted_neighborhood" -> ((s, d) => {
-      graft.expressions.GraftFunctions.register(s)
       val names = Tables.part(s, d).select(col("p_name").as("name")).distinct()
       Joins.sortedNeighborhoodPairs(names, "name", "name", window = 5)
         .select(col("id_a").as("name_a"), col("id_b").as("name_b"), col("gap"),
-          call_function("graft_jw_micro", col("key_a"), col("key_b")).as("jw_micro"))
+          graft.expressions.Kernels.jwMicro(col("key_a"), col("key_b")).as("jw_micro"))
         .filter(col("jw_micro") >= 900000L)
         .orderBy(col("name_a"), col("name_b"))
     }),

@@ -37,7 +37,6 @@ private[graft] object QueriesStats extends OracleSqlHelpers {
     // below sketch capacity the sketch is EXACT and the bounds collapse
     // onto the true count. Exact sides hash-compare; oracle emits TRUE.
     "q113_theta_sets" -> ((s, d) => {
-      graft.expressions.GraftFunctions.register(s)
       val e = Tables.events(s, d).filter(col("event_type").isin("view", "purchase"))
       val sk = Sketches.thetaSketch(e, Seq("event_type"), "user_id")
       val sv = sk.filter(col("event_type") === "view").select(col("tsketch").as("sv"))

@@ -193,9 +193,8 @@ object ScaleProbe {
       val nBk = bloomKeys.count()
       val bloomBytes = Joins.bloomOfKeys(bloomKeys, "doc_id")
       val blt1 = System.nanoTime()
-      graft.expressions.GraftFunctions.register(spark)
-      val nBloomSurv = docs.filter(call_function("graft_bloom_might_contain",
-        lit(bloomBytes), col("doc_id"))).count()
+      val nBloomSurv = docs
+        .filter(graft.expressions.Kernels.bloomMightContain(bloomBytes, col("doc_id"))).count()
       val blt2 = System.nanoTime()
 
       // triangle axis (r9): per-node triangle counts over the LSH pair
@@ -241,8 +240,8 @@ object ScaleProbe {
       // JW rescore axis (r9 batch 2): graft_jw_micro over the matched
       // pairs — a stateless codegen'd projection, so jw_sec must track
       // fz_matches linearly and stay far below the probe join itself.
-      val nJwHigh = fzMatches.filter(call_function("graft_jw_micro",
-        col("str_l"), col("str_r")) >= 900000L).count()
+      val nJwHigh = fzMatches
+        .filter(graft.expressions.Kernels.jwMicro(col("str_l"), col("str_r")) >= 900000L).count()
       val fzt3 = System.nanoTime()
       fzMatches.unpersist(blocking = false)
       fzIx.release()

@@ -142,24 +142,10 @@ object BpeMerges {
   /** The characters Java's regex `.` does not match. */
   private def isLineTerminator(c: Int): Boolean =
     c == '\n' || c == '\r' || c == 0x85 || c == 0x2028 || c == 0x2029
-
-  /** Build from a FOLDABLE `array<struct<string, string>>` expression of
-    * (a, b) pairs in merge order — the SQL registry path, e.g.
-    * `typedLit(merges)`. */
-  def of(e: Expression, fn: String): BpeMerges = {
-    require(e.foldable, s"$fn: the merge list must be a foldable literal array, got: $e")
-    val ad = e.eval().asInstanceOf[ArrayData]
-    require(ad != null && ad.numElements() > 0, s"$fn: empty merge list")
-    BpeMerges((0 until ad.numElements()).map { i =>
-      val r = ad.getStruct(i, 2)
-      (r.getUTF8String(0).toString, r.getUTF8String(1).toString)
-    })
-  }
 }
 
-/** Native Catalyst expression `graft_bpe_encode(word, merges)`: a word's
-  * subword pieces (`array<string>`) under an ordered merge list
-  * ([[BpeMerges]]).
+/** Native Catalyst expression: a word's subword pieces (`array<string>`)
+  * under an ordered merge list ([[BpeMerges]]).
   *
   * Why an expression and not the built-in fold: greedy merge application
   * spelled as nested `aggregate` higher-order functions (an outer fold over

@@ -6,7 +6,7 @@ import org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, LongType}
 
-/** Plan-time centroid matrix for [[CellArgminLong]]: the localized centroid
+/** Plan-time centroid matrix for [[CellArgminLong]]: the trained centroid
   * set flattened to primitive arrays, sorted by centroid id ascending so a
   * strict-improvement scan reproduces `min(struct(d2, cent_id))` exactly
   * (equal d² keeps the earlier = lowest id — the broadcast-join + min-struct
@@ -84,11 +84,38 @@ final class CellMatrix(
   }
 }
 
+object CellMatrix {
+  /** The matrix of `(id, vector, self-dot)` rows given in any order: rows
+    * sorted by id, vectors flattened. Every vector must share one
+    * dimension. */
+  def of(rows: Seq[(Long, Array[Long], Long)]): CellMatrix = {
+    require(rows.nonEmpty, "centroid matrix must be non-empty")
+    val sorted = rows.sortBy(_._1)
+    val dim = sorted.head._2.length
+    require(sorted.forall(_._2.length == dim), "centroid vectors must share one dimension")
+    new CellMatrix(sorted.map(_._1).toArray, sorted.flatMap(_._2).toArray,
+      sorted.map(_._3).toArray, dim)
+  }
+}
+
 /** Per-subspace codebook matrices for [[PqMatrix]]: one [[CellMatrix]]
   * per PQ subspace index (0..m−1, dense). */
 final class CodeMatrix(val subs: Array[CellMatrix]) extends Serializable {
   require(subs.nonEmpty && subs.forall(_ != null),
     "codebook matrix must cover every subspace 0..m-1 densely")
+}
+
+object CodeMatrix {
+  /** The codebooks of `(sub, id, vector, self-dot)` rows given in any
+    * order, one [[CellMatrix]] per subspace; subspace indexes must cover
+    * 0..m−1 densely. */
+  def of(rows: Seq[(Int, Long, Array[Long], Long)]): CodeMatrix = {
+    val bySub = rows.groupBy(_._1)
+    require(bySub.keySet == (0 until bySub.size).toSet,
+      s"subspace indexes must cover 0..${bySub.size - 1} densely, got ${bySub.keys.toSeq.sorted}")
+    new CodeMatrix(Array.tabulate(bySub.size)(s =>
+      CellMatrix.of(bySub(s).map(r => (r._2, r._3, r._4)))))
+  }
 }
 
 /** Native Catalyst expression: exact-integer argmin cell assignment of a
@@ -114,64 +141,6 @@ case class CellArgminLong(left: Expression, right: Expression,
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): CellArgminLong =
     copy(left = newLeft, right = newRight)
-}
-
-object CellArgminLong {
-  /** Build a [[CellMatrix]] from a FOLDABLE `array<struct<cent_id bigint,
-    * cv array<bigint>, cc bigint>>` expression (the registry path: the
-    * caller passes the localized centroid set as a typedLit). Evaluated
-    * once at plan time. */
-  def cellMatrixOf(e: Expression, fn: String): CellMatrix = {
-    require(e.foldable, s"$fn: the centroid matrix must be a foldable " +
-      s"literal array, got: $e")
-    val ad = e.eval().asInstanceOf[ArrayData]
-    require(ad != null && ad.numElements() > 0, s"$fn: empty centroid matrix")
-    val n = ad.numElements()
-    val entries = (0 until n).map { i =>
-      val row = ad.getStruct(i, 3)
-      (row.getLong(0), row.getArray(1).toLongArray(), row.getLong(2))
-    }.sortBy(_._1)
-    val dim = entries.head._2.length
-    require(entries.forall(_._2.length == dim),
-      s"$fn: centroid vectors must share one dimension")
-    val flat = new Array[Long](n * dim)
-    entries.zipWithIndex.foreach { case ((_, cv, _), k) =>
-      System.arraycopy(cv, 0, flat, k * dim, dim)
-    }
-    new CellMatrix(entries.map(_._1).toArray, flat, entries.map(_._3).toArray, dim)
-  }
-
-  /** Build a [[CodeMatrix]] from a FOLDABLE `array<struct<sub int, cent_id
-    * bigint, cv array<bigint>, cc bigint>>` expression; subspace indexes
-    * must cover 0..m−1 densely (they do by construction — one trained
-    * codebook per subspace). */
-  def codeMatrixOf(e: Expression, fn: String): CodeMatrix = {
-    require(e.foldable, s"$fn: the codebook matrix must be a foldable " +
-      s"literal array, got: $e")
-    val ad = e.eval().asInstanceOf[ArrayData]
-    require(ad != null && ad.numElements() > 0, s"$fn: empty codebook matrix")
-    val n = ad.numElements()
-    val entries = (0 until n).map { i =>
-      val row = ad.getStruct(i, 4)
-      (row.getInt(0), row.getLong(1), row.getArray(2).toLongArray(), row.getLong(3))
-    }
-    val bySub = entries.groupBy(_._1)
-    val m = bySub.keys.max + 1
-    require(bySub.keys.min == 0 && bySub.size == m,
-      s"$fn: subspace indexes must cover 0..${m - 1} densely, got ${bySub.keys.toSeq.sorted}")
-    val subs = (0 until m).map { s =>
-      val es = bySub(s).map(t => (t._2, t._3, t._4)).sortBy(_._1)
-      val dim = es.head._2.length
-      require(es.forall(_._2.length == dim),
-        s"$fn: codebook vectors of subspace $s must share one dimension")
-      val flat = new Array[Long](es.length * dim)
-      es.zipWithIndex.foreach { case ((_, cv, _), k) =>
-        System.arraycopy(cv, 0, flat, k * dim, dim)
-      }
-      new CellMatrix(es.map(_._1).toArray, flat, es.map(_._3).toArray, dim)
-    }.toArray
-    new CodeMatrix(subs)
-  }
 }
 
 /** Plan-time PQ state of an IVF-PQ index for [[PqEncodeLong]] and
@@ -261,18 +230,6 @@ final class PqMatrix(val books: CodeMatrix, val cents: CellMatrix) extends Seria
       out(m * width) = base
     }
     UnsafeArrayData.fromPrimitiveArray(out)
-  }
-}
-
-object PqMatrix {
-  /** Build from the registry's foldable literals: the codebooks (the
-    * [[CellArgminLong.codeMatrixOf]] layout) and, for a residual index,
-    * the centroids ([[CellArgminLong.cellMatrixOf]]). */
-  def of(children: Seq[Expression], fn: String): PqMatrix = {
-    require(children.length == 3 || children.length == 4,
-      s"$fn expects (vector, cell, books[, cents]), got ${children.length} arguments")
-    new PqMatrix(CellArgminLong.codeMatrixOf(children(2), fn),
-      children.lift(3).map(CellArgminLong.cellMatrixOf(_, fn)).orNull)
   }
 }
 

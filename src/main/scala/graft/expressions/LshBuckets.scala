@@ -97,40 +97,6 @@ case class LshBucketsLong(child: Expression, matrix: PlaneMatrix) extends UnaryE
     copy(child = newChild)
 }
 
-object LshBucketsLong {
-  /** Build a [[PlaneMatrix]] from a FOLDABLE `array<struct<t bigint,
-    * j bigint, pos bigint, w bigint>>` expression (the SQL registry path:
-    * a plane table as a literal). Evaluated once at plan time;
-    * (t, j, pos) must cover the full dense grid. */
-  def planeMatrixOf(e: Expression, fn: String): PlaneMatrix = {
-    require(e.foldable, s"$fn: the plane matrix must be a foldable " +
-      s"literal array, got: $e")
-    val ad = e.eval().asInstanceOf[ArrayData]
-    require(ad != null && ad.numElements() > 0, s"$fn: empty plane matrix")
-    val n = ad.numElements()
-    var maxT = -1L
-    var maxJ = -1L
-    var maxP = -1L
-    val rows = (0 until n).map { i =>
-      val r = ad.getStruct(i, 4)
-      val (t, j, p, w) = (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))
-      if (t > maxT) maxT = t
-      if (j > maxJ) maxJ = j
-      if (p > maxP) maxP = p
-      (t, j, p, w)
-    }
-    val (nT, nB, nD) = ((maxT + 1).toInt, (maxJ + 1).toInt, (maxP + 1).toInt)
-    require(n == nT * nB * nD,
-      s"$fn: plane matrix must be the dense (t, j, pos) grid - got $n rows " +
-        s"for $nT tables x $nB bits x $nD dims")
-    val flat = new Array[Long](n)
-    rows.foreach { case (t, j, p, w) =>
-      flat(((t * nB + j) * nD + p).toInt) = w
-    }
-    new PlaneMatrix(nT, nB, nD, flat)
-  }
-}
-
 /** The broadcast side of an embedding index's ingest gate: the quantized
   * vectors and norms of a (small) delta batch and every (table, bucket)
   * key each of them probes — its own bucket and, with multi-probe, its `bits` Hamming-1

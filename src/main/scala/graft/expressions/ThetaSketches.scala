@@ -165,3 +165,8 @@ case class ThetaSetEstimate(left: Expression, right: Expression, op: String)
       newLeft: Expression, newRight: Expression): ThetaSetEstimate =
     copy(left = newLeft, right = newRight)
 }
+
+object ThetaSetEstimate {
+  /** The set operations, each registered as SQL `graft_theta_<op>`. */
+  val Ops: Seq[String] = Seq("intersect", "diff", "union")
+}

@@ -15,8 +15,8 @@ import org.apache.spark.unsafe.types.UTF8String
   * exact dedup, fingerprinting and shingle hashing — byte-different,
   * render-identical documents. Normalizing to NFC before `Text.fingerprint`
   * / shingling closes that hole. Spark has no built-in for this (the ICU
-  * collation support in 4.x changes comparison, not bytes), so this is the
-  * second place (after [[QDotLong]]) the engine drops below `functions._`.
+  * collation support in 4.x changes comparison, not bytes), so it is a
+  * native expression.
   *
   * Scale shape: stateless scalar projection inside WholeStageCodegen. The
   * generated code runs the UAX #15 quick-check (`Normalizer.isNormalized`)

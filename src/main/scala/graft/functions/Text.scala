@@ -19,13 +19,12 @@ object Text {
   def tokens(c: Column): Column = split(trim(c), "\\s+")
 
   /** Unicode normalization (UAX #15) — codegen'd native expression; see
-    * [[graft.expressions.UnicodeNormalize]]. Requires
-    * `GraftFunctions.register(spark)` (or the `GraftExtensions` injection)
-    * once per session. Run it before [[fingerprint]]/[[wordShingles]] when
-    * a corpus may mix composed and decomposed encodings — byte-different,
-    * render-identical text otherwise defeats exact dedup. */
+    * [[graft.expressions.UnicodeNormalize]]. Works on any session. Run it
+    * before [[fingerprint]]/[[wordShingles]] when a corpus may mix
+    * composed and decomposed encodings — byte-different, render-identical
+    * text otherwise defeats exact dedup. */
   def normalizeUnicode(c: Column, form: String = "NFC"): Column =
-    call_function("graft_normalize", c, lit(form))
+    graft.expressions.Kernels.normalize(c, form)
 
   def tokenCount(c: Column): Column = size(tokens(c))
 
@@ -37,7 +36,7 @@ object Text {
     *
     * A real learned BPE exists since r8 — [[graft.operators.Bpe]] trains
     * merge tables with one collect and a driver-side merge loop, and
-    * applies them with one codegen'd kernel (`graft_bpe_encode`, a left
+    * applies them with one codegen'd kernel (`BpeEncodeLong`, a left
     * fold per merge), retiring the r4 claim that it needed thousands of
     * driver-synced iterations. This proxy REMAINS the budget yardstick
     * because it is model-agnostic: any fixed learned vocab misstates

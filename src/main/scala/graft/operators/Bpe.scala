@@ -1,10 +1,10 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, GraftColumns}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.unsafe.types.UTF8String
 
-import graft.expressions.{BpeEncodeLong, BpeMerges, BpePieceCountLong}
+import graft.expressions.{BpeMerges, Kernels}
 import graft.functions.Text
 
 /** Learned byte-pair-encoding vocabulary training and subword encoding
@@ -34,8 +34,9 @@ import graft.functions.Text
   * the exact greedy left-to-right semantics of the reference algorithm.
   * DuckDB's `list_reduce` replays the identical fold over the space-joined
   * symbol string for the oracle. Encoding runs it in one codegen'd kernel,
-  * `graft_bpe_encode` ([[graft.expressions.BpeMerges]]): the merge list is
-  * interned once on the driver, and a merge is one pass of int compares.
+  * [[graft.expressions.BpeEncodeLong]]: the merge list is interned once on
+  * the driver ([[graft.expressions.BpeMerges]]), and a merge is one pass
+  * of int compares.
   *
   * Determinism: pair counts are exact long sums; the argmax tie-breaks by
   * (count DESC, left ASC, right ASC), strings compared as UTF-8 bytes
@@ -204,11 +205,11 @@ object Bpe {
 
   /** Encode one token column into its subword pieces (array of strings)
     * under an ordered merge list — a pure projection of the
-    * `graft_bpe_encode` kernel ([[graft.expressions.BpeEncodeLong]]), the
-    * merge list riding in the plan as one driver-built object. No shuffle,
-    * no state. A null token encodes to null. */
+    * [[graft.expressions.BpeEncodeLong]] kernel, the merge list riding in
+    * the plan as one driver-built object. No shuffle, no state. A null
+    * token encodes to null. */
   def encodePieces(token: Column, merges: Seq[(String, String)]): Column =
-    GraftColumns.of(BpeEncodeLong(GraftColumns.expr(token), BpeMerges(merges)))
+    Kernels.bpeEncode(token, BpeMerges(merges))
 
   /** Encode the corpus dictionary: unique words with counts and their
     * piece arrays — the scale shape for whole-corpus tokenization (encode
@@ -241,8 +242,8 @@ object Bpe {
     * then the result). */
   def docPieceCounts(docs: DataFrame, idCol: String, textCol: String,
       merges: Seq[(String, String)]): DataFrame = {
-    val counted = GraftColumns.of(BpePieceCountLong(
-      GraftColumns.expr(Text.tokens(Text.normalize(col(textCol)))), BpeMerges(merges)))
+    val counted =
+      Kernels.bpePieceCount(Text.tokens(Text.normalize(col(textCol))), BpeMerges(merges))
     // the filter sits above the sum: below it, it would be pushed under
     // the projection with the kernel inlined, running it twice a row
     Par.spreadBy(docs, col(idCol))

@@ -1,13 +1,12 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, GraftColumns, Row}
-import org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DataType, DoubleType, StructField, StructType}
 import org.apache.spark.storage.StorageLevel
 
-import graft.expressions.{LshProbeLong, LshProbeTable, MinhashProbeLong, MinhashProbeTable, PlaneMatrix}
+import graft.expressions.{Kernels, LshProbeTable, MinhashProbeTable, PlaneMatrix}
 import graft.functions.Text
 
 /** Deduplication for large-scale text corpora (north-star extension,
@@ -88,10 +87,8 @@ object Dedup {
     * pin this frame and filter the cached rows. */
   private def minhashed(df: DataFrame, idCol: String, textCol: String, n: Int,
       numHashes: Int): DataFrame = {
-    graft.expressions.GraftFunctions.register(df.sparkSession)
     Par.spread(df)
-      .select(col(idCol).as("id"),
-        call_function("graft_minhash", col(textCol), lit(n), lit(numHashes)).as("k"))
+      .select(col(idCol).as("id"), Kernels.minhash(col(textCol), n, numHashes).as("k"))
       .select(col("id"), col("k.sh").as("sh"), size(col("k.sh")).as("nsh"), col("k.mh").as("mh"))
   }
 
@@ -557,8 +554,7 @@ object Dedup {
     val table = spark.sparkContext.broadcast(MinhashProbeTable(threshold,
       probes.map(_.getSeq[Long](1).toArray), probes.map(_.getSeq[String](2).toArray)))
     try {
-      val probe = GraftColumns.of(MinhashProbeLong(
-        UnresolvedAttribute("band_keys"), UnresolvedAttribute("sh"), table))
+      val probe = Kernels.minhashProbe(col("band_keys"), col("sh"), table)
       val hits = corpus.packed
         .select(col("id"), explode(probe).as("c"))
         .select(col("c.a"), col("id"), col("c.jaccard"))
@@ -966,10 +962,9 @@ object Dedup {
       nTables: Int = 0, signBits: Int = 0, threshold: Double = 0.4,
       scale: Int = 1000, seed: Long = 42L): EmbeddingIndex = {
     val tables = if (nTables > 0) nTables else if (threshold >= 0.4) 16 else 24
-    graft.expressions.GraftFunctions.register(df.sparkSession)
     val rows = Par.spread(df).select(col(idCol).as("id"),
         Similarity.quantize(col(vecCol), scale).as("v"))
-      .withColumn("nn", call_function("graft_qdot", col("v"), col("v")))
+      .withColumn("nn", Similarity.qdot(col("v"), col("v")))
     df.filter(col(vecCol).isNotNull).select(size(col(vecCol))).head(1).headOption match {
       case None => // nothing to pin: one segment of typed empty rows
         val empty = new Segment(rows.withColumn("bk", lit(null).cast("array<bigint>")).limit(0),
@@ -1012,7 +1007,6 @@ object Dedup {
     val p = part("params").head()
     val (nT, bits, dim, seed) =
       (p.getAs[Int]("n_tables"), p.getAs[Int]("bits"), p.getAs[Int]("dim"), p.getAs[Long]("seed"))
-    graft.expressions.GraftFunctions.register(spark)
     val bk = if (dim == 0) lit(null).cast("array<bigint>")
       else Similarity.lshBucketsOf("v", PlaneMatrix.seeded(nT, bits, dim, seed))
     EmbeddingIndex(Vector(Segment.pin(part("vecs").withColumn("bk", bk))),
@@ -1071,12 +1065,11 @@ object Dedup {
       delta: DataFrame, corpus: EmbeddingIndex, idCol: String, vecCol: String,
       threshold: Double, multiProbe: Boolean = true): (DataType, Array[Row]) = {
     val spark = delta.sparkSession
-    graft.expressions.GraftFunctions.register(spark)
     val q = delta.select(col(idCol).as("id"), Similarity.quantize(col(vecCol), corpus.scale).as("v"))
     val idType = q.schema("id").dataType
     if (corpus.dim == 0) return (idType, Array.empty) // an empty corpus matches nothing
     val probes = q.filter(col("v").isNotNull)
-      .select(col("id"), col("v"), call_function("graft_qdot", col("v"), col("v")),
+      .select(col("id"), col("v"), Similarity.qdot(col("v"), col("v")),
         Similarity.lshBucketsOf("v", corpus.planes))
       .collect()
     if (probes.isEmpty) return (idType, Array.empty)
@@ -1084,8 +1077,7 @@ object Dedup {
       probes.map(_.getSeq[Long](1).toArray), probes.map(_.getLong(2)),
       probes.map(_.getSeq[Long](3).toArray)))
     try {
-      val probe = GraftColumns.of(
-        LshProbeLong(UnresolvedAttribute("bk"), UnresolvedAttribute("v"), table))
+      val probe = Kernels.lshProbe(col("bk"), col("v"), table)
       val hits = corpus.packed
         .select(col("id"), col("nn"), explode(probe).as("c"))
         .select(col("c.a"), col("id"),
@@ -1110,7 +1102,7 @@ object Dedup {
       .join(va.select(col("id").as("id_a"), col("v").as("va"), col("nn").as("na")), Seq("id_a"))
       .join(vb.select(col("id").as("id_b"), col("v").as("vb"), col("nn").as("nb")), Seq("id_b"))
       .withColumn("cosine",
-        Similarity.cosineOf(call_function("graft_qdot", col("va"), col("vb")),
+        Similarity.cosineOf(Similarity.qdot(col("va"), col("vb")),
           col("na"), col("nb")))
       .filter(col("cosine") >= threshold)
       .select("id_a", "id_b", "cosine")

@@ -5,6 +5,8 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{StructType, TimestampType}
 
+import graft.expressions.Kernels
+
 /** Join surface. Reference: inner equi-join only (`pyarrow_ops/join.py:15-47`,
   * "currently performs inner join" README.md:46), with left-wins resolution of
   * duplicate non-key columns (`join.py:7-13`, verified SURVEY §2.2.7). The
@@ -243,10 +245,8 @@ object Joins {
     * bytes: ~1.2 MB per million keys at fpp 1%, a plan-embeddable
     * constant. */
   def bloomOfKeys(keys: DataFrame, keyCol: String, fpp: Double = 0.01): Array[Byte] = {
-    graft.expressions.GraftFunctions.register(keys.sparkSession)
     val n = math.max(keys.count(), 1L)
-    keys.agg(call_function("graft_bloom_agg",
-        col(keyCol).cast("long"), lit(n), lit(fpp)))
+    keys.agg(Kernels.bloomAgg(col(keyCol).cast("long"), n, fpp))
       .head().getAs[Array[Byte]](0)
   }
 
@@ -263,10 +263,7 @@ object Joins {
     * otherwise carry: filters, then lets Catalyst plan the rest. */
   def bloomSemiFilter(df: DataFrame, keyCol: String,
       keys: DataFrame, keysCol: String, fpp: Double = 0.01): DataFrame = {
-    val bloom = bloomOfKeys(keys, keysCol, fpp)
-    graft.expressions.GraftFunctions.register(df.sparkSession)
-    df.filter(call_function("graft_bloom_might_contain",
-      lit(bloom), col(keyCol).cast("long")))
+    df.filter(Kernels.bloomMightContain(bloomOfKeys(keys, keysCol, fpp), col(keyCol).cast("long")))
   }
 
   /** Keep rows whose `keyCol` is definitely NOT among `seen` bytes (a
@@ -280,9 +277,7 @@ object Joins {
     * ingest gate it is stateless across batches: ids novel in one batch are
     * NOT added to `seen` — fold them into the next run's bloom. */
   def bloomAntiFilter(df: DataFrame, keyCol: String, seen: Array[Byte]): DataFrame = {
-    graft.expressions.GraftFunctions.register(df.sparkSession)
-    df.filter(!call_function("graft_bloom_might_contain",
-      lit(seen), col(keyCol).cast("long")))
+    df.filter(!Kernels.bloomMightContain(seen, col(keyCol).cast("long")))
   }
 
   /** Inner equi-join with the big (left) side bloom-pruned before the

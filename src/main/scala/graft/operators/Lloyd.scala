@@ -17,13 +17,6 @@ import graft.expressions.CellMatrix
   *  - a centroid no vector chose vanishes, the others keep their ids. */
 private[operators] object Lloyd {
 
-  /** A centroid set: ids ascending, one `dim`-long vector each. */
-  final class Cents(val ids: Array[Long], val cvs: Array[Array[Long]], val dim: Int) {
-    /** The wrapping self-dot of each centroid — `graft_qdot(cv, cv)`. */
-    lazy val ccs: Array[Long] = cvs.map(c => dot(c, 0, dim))
-    def matrix: CellMatrix = new CellMatrix(ids, cvs.flatten, ccs, dim)
-  }
-
   /** The wrapping dot of `len` longs of `x` at `off` with themselves. */
   def dot(x: Array[Long], off: Int, len: Int): Long = {
     var s = 0L
@@ -36,20 +29,23 @@ private[operators] object Lloyd {
   def roundedMean(s: Long, cnt: Long): Long =
     BigDecimal(s.toDouble / cnt.toDouble).setScale(0, BigDecimal.RoundingMode.HALF_UP).toLong
 
+  /** The centroid matrix of `ids` (ascending) and their vectors. */
+  private def matrix(ids: Array[Long], cvs: Array[Array[Long]], dim: Int): CellMatrix =
+    new CellMatrix(ids, cvs.flatten, cvs.map(dot(_, 0, dim)), dim)
+
   /** Train over the `len`-long slices at `off` of `xs`: the first `k`
     * slices seed centroids 1..k, then `rounds` Lloyd rounds. */
-  def train(xs: Array[Array[Long]], off: Int, len: Int, k: Int, rounds: Int): Cents = {
+  def train(xs: Array[Array[Long]], off: Int, len: Int, k: Int, rounds: Int): CellMatrix = {
     val norms = xs.map(dot(_, off, len))
-    var cents = new Cents(
-      Array.tabulate(math.min(k, xs.length))(i => i + 1L),
-      Array.tabulate(math.min(k, xs.length))(i => xs(i).slice(off, off + len)), len)
+    val seeds = math.min(k, xs.length)
+    var cents = matrix(Array.tabulate(seeds)(i => i + 1L),
+      Array.tabulate(seeds)(i => xs(i).slice(off, off + len)), len)
     for (_ <- 1 to rounds) {
-      val mat = cents.matrix
       val sums = Array.ofDim[Long](cents.ids.length, len)
       val cnt = new Array[Long](cents.ids.length)
       var p = 0
       while (p < xs.length) {
-        val c = mat.indexOf(mat.argminAt(xs(p), off, norms(p)))
+        val c = cents.indexOf(cents.argminAt(xs(p), off, norms(p)))
         val s = sums(c)
         var i = 0
         while (i < len) { s(i) = Math.addExact(s(i), xs(p)(off + i)); i += 1 }
@@ -57,7 +53,7 @@ private[operators] object Lloyd {
         p += 1
       }
       val kept = cents.ids.indices.filter(cnt(_) > 0)
-      cents = new Cents(kept.map(cents.ids(_)).toArray,
+      cents = matrix(kept.map(cents.ids(_)).toArray,
         kept.map(c => sums(c).map(roundedMean(_, cnt(c)))).toArray, len)
     }
     cents

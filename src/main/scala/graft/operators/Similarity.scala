@@ -1,12 +1,11 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, GraftColumns, Row, SparkSession}
-import org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{ArrayType, IntegerType, LongType, StructField, StructType}
 
-import graft.expressions.{LshBucketsLong, PlaneMatrix}
+import graft.expressions.{CellMatrix, CodeMatrix, Kernels, PlaneMatrix, PqMatrix}
 
 /** Approximate-nearest-neighbor similarity search over embedding columns
   * (north-star extension, SURVEY §2.1 ✚).
@@ -57,15 +56,10 @@ object Similarity {
   def quantize(v: Column, scale: Int = 1000): Column =
     transform(v.cast("array<double>"), x => round(x * scale).cast("long"))
 
-  /** Exact integer dot product (order-independent). Built-in HOF form —
-    * works on any session; the operators below use the codegen'd native
-    * expression instead (see [[graft.expressions.QDotLong]]). */
-  def qdot(a: Column, b: Column): Column =
-    aggregate(zip_with(a, b, (x, y) => x * y), lit(0L), (acc, x) => acc + x)
-
-  /** Codegen'd native dot product; requires `GraftFunctions.register`. */
-  private def nqdot(a: Column, b: Column): Column =
-    call_function("graft_qdot", a, b)
+  /** Exact integer dot product of two `array<bigint>` (order-independent):
+    * the codegen'd native kernel [[graft.expressions.QDotLong]]. Vectors of
+    * different dimensions raise its dimension error. */
+  def qdot(a: Column, b: Column): Column = Kernels.qdot(a, b)
 
   /** dot/(√na·√nb) with a zero-norm guard: a zero vector has no direction,
     * so its cosine is NULL — it never passes a `>= threshold` filter and
@@ -130,7 +124,7 @@ object Similarity {
     * vector of another dimension fails the query with `graft_qdot`'s
     * dimension error. */
   private[operators] def lshBucketsOf(vecCol: String, planes: PlaneMatrix): Column =
-    GraftColumns.of(LshBucketsLong(UnresolvedAttribute.quoted(vecCol), planes))
+    Kernels.lshBuckets(col(vecCol), planes)
 
   /** (id, t, bucket) for each row of `v` (id + quantized vector): bit j of
     * table t's bucket = [v · r_tj ≥ 0] ([[lshBucketsOf]], exploded by
@@ -164,16 +158,15 @@ object Similarity {
   def bruteForceTopK(
       corpus: DataFrame, queries: DataFrame,
       idCol: String, vecCol: String, k: Int, scale: Int = 1000): DataFrame = {
-    graft.expressions.GraftFunctions.register(corpus.sparkSession)
     // norms precomputed once per row, not once per pair
     val c = Par.spread(corpus)
       .select(col(idCol).as("nbr_id"), quantize(col(vecCol), scale).as("nv"))
-      .withColumn("nn", nqdot(col("nv"), col("nv")))
+      .withColumn("nn", qdot(col("nv"), col("nv")))
     val q = queries.select(col(idCol).as("query_id"), quantize(col(vecCol), scale).as("qv"))
-      .withColumn("qn", nqdot(col("qv"), col("qv")))
+      .withColumn("qn", qdot(col("qv"), col("qv")))
     val scored = c.join(broadcast(q), col("query_id") =!= col("nbr_id"))
       .withColumn("cosine",
-        cosineOf(nqdot(col("qv"), col("nv")), col("qn"), col("nn")))
+        cosineOf(qdot(col("qv"), col("nv")), col("qn"), col("nn")))
     val w = Window.partitionBy(col("query_id"))
       .orderBy(col("cosine").desc, col("nbr_id"))
     scored.withColumn("rank", row_number().over(w).cast("long"))
@@ -196,11 +189,10 @@ object Similarity {
       idCol: String, vecCol: String, k: Int,
       nTables: Int = 16, signBits: Int = 0,
       scale: Int = 1000, seed: Long = 42L): DataFrame = {
-    graft.expressions.GraftFunctions.register(corpus.sparkSession)
     Pinned.scoped { pin =>
       val (c, n) = pin.counted(Par.spread(corpus)
         .select(col(idCol).as("nbr_id"), quantize(col(vecCol), scale).as("nv"))
-        .withColumn("nn", nqdot(col("nv"), col("nv"))))
+        .withColumn("nn", qdot(col("nv"), col("nv"))))
       if (n == 0L) { // empty corpus: typed empty result, no dim probe to throw
         c.select(col("nbr_id").as("query_id"), col("nbr_id"),
           lit(0.0).as("cosine"), lit(0L).as("rank")).limit(0).localCheckpoint(true)
@@ -209,7 +201,7 @@ object Similarity {
         val dim = c.select(size(col("nv")).as("d")).head().getInt(0)
         val planes = PlaneMatrix.seeded(nTables, bits, dim, seed)
         val q = pin(queries.select(col(idCol).as("query_id"), quantize(col(vecCol), scale).as("qv"))
-          .withColumn("qn", nqdot(col("qv"), col("qv"))))
+          .withColumn("qn", qdot(col("qv"), col("qv"))))
         val cb = lshBuckets(c, "nbr_id", "nv", planes)
         val qb = multiProbe(lshBuckets(q, "query_id", "qv", planes), "query_id", bits)
         val cand = cb.join(broadcast(qb), Seq("t", "bucket"))
@@ -217,7 +209,7 @@ object Similarity {
           .select("query_id", "nbr_id").distinct()
         val scored = cand.join(c, Seq("nbr_id")).join(broadcast(q), Seq("query_id"))
           .withColumn("cosine",
-            cosineOf(nqdot(col("qv"), col("nv")), col("qn"), col("nn")))
+            cosineOf(qdot(col("qv"), col("nv")), col("qn"), col("nn")))
         val w = Window.partitionBy(col("query_id"))
           .orderBy(col("cosine").desc, col("nbr_id"))
         scored.withColumn("rank", row_number().over(w).cast("long"))
@@ -234,42 +226,27 @@ object Similarity {
     if (nprobe > 0) nprobe
     else math.max(math.min(cells, 32), 2 * math.ceil(math.sqrt(cells.toDouble)).toInt)
 
-  /** A stored frame (an [[IvfPqIndex]]'s `cents` or `books` read back from
-    * parquet) materialized as a driver-local relation: ≤ `cells` ≈ √N rows
-    * or m·kCents rows — the SAME frame every executor receives as a
-    * plan-time literal anyway — so collecting it once costs what shipping
-    * it costs, and (unlike localCheckpoint) it leaves no persisted blocks
-    * behind (ADVICE r2). */
-  private def localized(df: DataFrame): DataFrame = {
-    val rows = java.util.Arrays.asList(df.collect(): _*)
-    df.sparkSession.createDataFrame(rows, df.schema)
-  }
-
   private val centsSchema = StructType(Seq(StructField("cent_id", LongType),
     StructField("cv", ArrayType(LongType)), StructField("cc", LongType)))
 
-  /** Driver-trained centroid sets as the driver-local `(cent_id, cv, cc)`
-    * frame of an [[IvfPqIndex]] — or, keyed by subspace, its `(sub,
-    * cent_id, cv, cc)` codebooks. Building them runs no Spark job. */
-  private def centsFrame(spark: SparkSession, cents: Lloyd.Cents): DataFrame =
-    spark.createDataFrame(java.util.Arrays.asList(cents.ids.indices.map(k =>
-      Row(cents.ids(k), cents.cvs(k).toSeq, cents.ccs(k))): _*), centsSchema)
+  /** The `(id, vector, self-dot)` rows of a centroid matrix. */
+  private def centRows(m: CellMatrix): Seq[(Long, Seq[Long], Long)] =
+    m.ids.indices.map(k => (m.ids(k), m.flat.slice(k * m.dim, (k + 1) * m.dim).toSeq, m.ccs(k)))
 
-  private def booksFrame(spark: SparkSession, books: Seq[Lloyd.Cents]): DataFrame =
+  /** A centroid matrix as the driver-local `(cent_id, cv, cc)` frame — or,
+    * keyed by subspace, codebooks as `(sub, cent_id, cv, cc)`. Building
+    * them runs no Spark job. */
+  private def centsFrame(spark: SparkSession, cents: Option[CellMatrix]): DataFrame =
+    spark.createDataFrame(java.util.Arrays.asList(cents.toSeq.flatMap(centRows).map {
+      case (id, cv, cc) => Row(id, cv, cc) }: _*), centsSchema)
+
+  private def booksFrame(spark: SparkSession, books: Option[CodeMatrix]): DataFrame =
     spark.createDataFrame(java.util.Arrays.asList((for {
-      (b, sub) <- books.zipWithIndex
-      k <- b.ids.indices
-    } yield Row(sub, b.ids(k), b.cvs(k).toSeq, b.ccs(k))): _*),
+      b <- books.toSeq
+      (sub, s) <- b.subs.zipWithIndex
+      (id, cv, cc) <- centRows(sub)
+    } yield Row(s, id, cv, cc)): _*),
       StructType(StructField("sub", IntegerType) +: centsSchema.fields))
-
-  /** The localized `(cent_id, cv, cc)` centroid frame as a plan-time
-    * literal for the argmin expression — collected (it was built from
-    * driver-local rows, so this is a local scan) and shipped inside the
-    * plan exactly once per stage binary, like the broadcast it replaces. */
-  private def centsAsLit(cents: DataFrame): Column = {
-    val rows = cents.select(col("cent_id"), col("cv"), col("cc")).collect()
-    typedLit(rows.toSeq.map(r => (r.getLong(0), r.getSeq[Long](1), r.getLong(2))))
-  }
 
   /** `v` + a `cell` column: exact-integer argmin assignment (d² = v·v −
     * 2·v·c + c·c over longs; ties to the lowest cell id) as ONE codegen'd
@@ -280,10 +257,8 @@ object Similarity {
     * join back to the corpus frame the agg forced is gone too (guide
     * §2.4). Bit-identical to the min(struct) form (SimilaritySpec asserts
     * it, ties included). */
-  private def withCell(v: DataFrame, vec: String, norm: String,
-      cents: DataFrame): DataFrame =
-    v.withColumn("cell",
-      call_function("graft_cell_argmin", col(vec), col(norm), centsAsLit(cents)))
+  private def withCell(v: DataFrame, vec: String, norm: String, cents: CellMatrix): DataFrame =
+    v.withColumn("cell", Kernels.cellArgmin(col(vec), col(norm), cents))
 
   /** The training set of the IVF and PQ models over a pinned `(nbr_id, nv,
     * vv)` corpus: its first 256·`k` non-null vectors in md5(id) order, `k`
@@ -311,7 +286,7 @@ object Similarity {
     * `cells` hash-ordered seeds, refined by `lloydIters` integer-exact
     * Lloyd rounds on the driver ([[Lloyd.train]]); empty cells vanish
     * (identically on the oracle side). */
-  private def trainIvfCents(xs: Array[Array[Long]], cells: Int, lloydIters: Int): Lloyd.Cents =
+  private def trainIvfCents(xs: Array[Array[Long]], cells: Int, lloydIters: Int): CellMatrix =
     Lloyd.train(xs, 0, xs.head.length, cells, lloydIters)
 
   /** IVF-structured approximate top-k: a coarse k-means quantizer splits the
@@ -335,12 +310,10 @@ object Similarity {
       idCol: String, vecCol: String, k: Int,
       nCells: Int = 0, nprobe: Int = 0, lloydIters: Int = 4,
       scale: Int = 1000): DataFrame = {
-    val spark = corpus.sparkSession
-    graft.expressions.GraftFunctions.register(spark)
     Pinned.scoped { pin =>
       val (c, n) = pin.counted(Par.spread(corpus)
         .select(col(idCol).as("nbr_id"), quantize(col(vecCol), scale).as("nv"))
-        .withColumn("vv", nqdot(col("nv"), col("nv"))))
+        .withColumn("vv", qdot(col("nv"), col("nv"))))
       if (n == 0L) { // empty corpus: typed empty result, no dim probe to throw
         c.select(col("nbr_id").as("query_id"), col("nbr_id"),
           lit(0.0).as("cosine"), lit(0L).as("rank")).limit(0).localCheckpoint(true)
@@ -361,23 +334,17 @@ object Similarity {
         // the recall (0.940–0.985 on seeded 2000-vector corpora); `nprobe`
         // stays the caller's dial.
         val probes = ivfProbes(cells, nprobe)
-        val cents = centsFrame(spark, trainIvfCents(trainingSet(c, cells), cells, lloydIters))
-        val q = queries.select(col(idCol).as("query_id"), quantize(col(vecCol), scale).as("qv"))
-          .withColumn("qn", nqdot(col("qv"), col("qv")))
-        // queries probe their nprobe nearest cells (full ranking only over the
-        // tiny broadcast centroid set)
-        val qw = Window.partitionBy(col("query_id")).orderBy(col("d2"), col("cent_id"))
-        val qAsg = q.join(broadcast(cents))
-          .withColumn("d2", col("qn") - lit(2) * nqdot(col("qv"), col("cv")) + col("cc"))
-          .withColumn("__cr", row_number().over(qw))
-          .filter(col("__cr") <= probes)
-          .select(col("query_id"), col("qv"), col("qn"), col("cent_id").as("cell"))
+        val cents = trainIvfCents(trainingSet(c, cells), cells, lloydIters)
+        // queries probe their nprobe nearest cells, [[ivfPqSearch]]'s probe
+        val qAsg = queries.select(col(idCol).as("query_id"), quantize(col(vecCol), scale).as("qv"))
+          .withColumn("qn", qdot(col("qv"), col("qv")))
+          .withColumn("cell", explode(Kernels.ivfProbe(col("qv"), col("qn"), cents, probes)))
         // corpus-side assignment is the argmin projection over the pinned
         // cache — the old agg-exchange + join-back pair is gone (r15)
         val scored = withCell(c, "nv", "vv", cents).join(broadcast(qAsg), Seq("cell"))
           .filter(col("query_id") =!= col("nbr_id"))
           .withColumn("cosine",
-            cosineOf(nqdot(col("qv"), col("nv")), col("qn"), col("vv")))
+            cosineOf(qdot(col("qv"), col("nv")), col("qn"), col("vv")))
         val w = Window.partitionBy(col("query_id"))
           .orderBy(col("cosine").desc, col("nbr_id"))
         scored.withColumn("rank", row_number().over(w).cast("long"))
@@ -414,11 +381,10 @@ object Similarity {
   def prototypicality(corpus: DataFrame, idCol: String, vecCol: String,
       nCells: Int = 0, lloydIters: Int = 4, scale: Int = 1000): DataFrame = {
     val spark = corpus.sparkSession
-    graft.expressions.GraftFunctions.register(spark)
     Pinned.scoped { pin =>
       val (c, n) = pin.counted(Par.spread(corpus)
         .select(col(idCol).as("nbr_id"), quantize(col(vecCol), scale).as("nv"))
-        .withColumn("vv", nqdot(col("nv"), col("nv"))))
+        .withColumn("vv", qdot(col("nv"), col("nv"))))
       if (n == 0L) {
         c.select(col("nbr_id").as(idCol), lit(0L).as("cell"),
           lit(0L).as("proto_micro"), lit(0L).as("cell_rank"),
@@ -426,11 +392,11 @@ object Similarity {
       } else {
         val cells = if (nCells > 0) nCells
           else math.max(4, math.ceil(math.sqrt(n.toDouble)).toInt)
-        val cents = centsFrame(spark, trainIvfCents(trainingSet(c, cells), cells, lloydIters))
+        val cents = trainIvfCents(trainingSet(c, cells), cells, lloydIters)
         val scored = withCell(c, "nv", "vv", cents)
-          .join(broadcast(cents), col("cell") === col("cent_id"))
+          .join(broadcast(centsFrame(spark, Some(cents))), col("cell") === col("cent_id"))
           .withColumn("proto_micro",
-            round(cosineOf(nqdot(col("nv"), col("cv")), col("vv"), col("cc"))
+            round(cosineOf(qdot(col("nv"), col("cv")), col("vv"), col("cc"))
               * 1e6).cast("long"))
         val w = Window.partitionBy(col("cell"))
           .orderBy(col("proto_micro").desc, col("nbr_id"))
@@ -445,14 +411,6 @@ object Similarity {
     }
   }
 
-  /** The localized `(sub, cent_id, cv, cc)` codebook frame as a plan-time
-    * literal (the [[centsAsLit]] contract, keyed by subspace). */
-  private def booksAsLit(books: DataFrame): Column = {
-    val rows = books.select(col("sub"), col("cent_id"), col("cv"), col("cc")).collect()
-    typedLit(rows.toSeq.map(r =>
-      (r.getInt(0), r.getLong(1), r.getSeq[Long](2), r.getLong(3))))
-  }
-
   /** Deterministic per-subspace codebooks of a [[trainingSet]]: over the
     * raw vectors, or over their residuals v − cent(cell) against the
     * trained coarse centroids (exact elementwise subtraction, the cell
@@ -461,16 +419,13 @@ object Similarity {
     * `kCents` rows, same md5 ordering as the IVF seeds — supplies every
     * subspace's initial centroids 1..kCents, then `lloydIters` integer
     * Lloyd rounds per subspace on the driver ([[Lloyd.train]]). */
-  private def trainPqBooks(xs: Array[Array[Long]], cents: Lloyd.Cents, residual: Boolean,
-      m: Int, dsub: Int, kCents: Int, lloydIters: Int): Seq[Lloyd.Cents] = {
-    val enc = if (!residual) xs else {
-      val mat = cents.matrix
-      xs.map { x =>
-        val c = cents.cvs(mat.indexOf(mat.argminAt(x, 0, Lloyd.dot(x, 0, x.length))))
-        Array.tabulate(x.length)(i => Math.subtractExact(x(i), c(i)))
-      }
+  private def trainPqBooks(xs: Array[Array[Long]], cents: CellMatrix, residual: Boolean,
+      m: Int, dsub: Int, kCents: Int, lloydIters: Int): CodeMatrix = {
+    val enc = if (!residual) xs else xs.map { x =>
+      val off = cents.indexOf(cents.argminAt(x, 0, Lloyd.dot(x, 0, x.length))) * cents.dim
+      Array.tabulate(x.length)(i => Math.subtractExact(x(i), cents.flat(off + i)))
     }
-    (0 until m).map(s => Lloyd.train(enc, s * dsub, dsub, kCents, lloydIters))
+    new CodeMatrix(Array.tabulate(m)(s => Lloyd.train(enc, s * dsub, dsub, kCents, lloydIters)))
   }
 
   /** Product-quantization ADC top-k (Jégou, Douze & Schmid, "Product
@@ -553,6 +508,7 @@ object Similarity {
       nCells: Int = 0, nprobe: Int = 0, ivfLloydIters: Int = 4,
       m: Int = 16, kCents: Int = 64, pqLloydIters: Int = 2,
       rerank: Int = 0, scale: Int = 1000, residual: Boolean = false): DataFrame = {
+    requireRerank(rerank, k) // before the build pins anything
     val ix = ivfPqIndex(corpus, idCol, vecCol, nCells, ivfLloydIters,
       m, kCents, pqLloydIters, residual, scale)
     try ivfPqTopKIndexed(ix, queries, idCol, vecCol, k, nprobe, rerank)
@@ -564,10 +520,16 @@ object Similarity {
     * VECTOR the way inverted-file PQ stores lay out their lists (Jégou et
     * al. 2011; FAISS): `store` = (nbr_id, cell, codes: array<int>, nv, vv)
     * — the vector's coarse cell, its m PQ codes, and its raw quantized
-    * vector + exact norm (the rerank side) — next to the localized coarse
-    * centroids (`cents`) and per-subspace codebooks (`books`). A search
-    * reads each candidate's codes, norm and vector from its one row, so
-    * the only join is the probed-cell lookup.
+    * vector + exact norm (the rerank side). A search reads each
+    * candidate's codes, norm and vector from its one row, so the only join
+    * is the probed-cell lookup.
+    *
+    * The trained state is held as the matrices the kernels run on, built
+    * once by training or [[loadIvfPqIndex]]: `centroids`, the coarse
+    * quantizer, and `pq`, the per-subspace codebooks (with the centroids
+    * when the codes quantize residuals). An empty index (dim = 0) holds
+    * neither. `cents` (cent_id, cv, cc) and `books` (sub, cent_id, cv, cc)
+    * are driver-local frame views of them.
     *
     * The store is append-only and log-structured (the LSM-tree layout,
     * O'Neil et al. 1996): `store` is the union of immutable, pinned,
@@ -590,10 +552,13 @@ object Similarity {
     * it drops this index's reference to each segment, so an index and the
     * one extended from it may be released in either order. */
   final case class IvfPqIndex private[operators] (
-      segments: Vector[Segment], cents: DataFrame, books: DataFrame,
-      m: Int, dsub: Int, dim: Int, kCents: Int, nCells: Int,
+      segments: Vector[Segment], centroids: Option[CellMatrix], pq: Option[PqMatrix],
+      m: Int, dim: Int, kCents: Int, nCells: Int,
       residual: Boolean, scale: Int) extends StandingIndex {
+    def dsub: Int = pq.fold(0)(_.dsub)
     def store: DataFrame = Segment.union(segments)
+    def cents: DataFrame = centsFrame(store.sparkSession, centroids)
+    def books: DataFrame = booksFrame(store.sparkSession, pq.map(_.books))
     def cells: DataFrame = store.select(col("nbr_id"), col("cell"))
     def codes: DataFrame = store
       .select(col("nbr_id"), posexplode(col("codes")).as(Seq("sub", "code")))
@@ -601,10 +566,13 @@ object Similarity {
     def vecs: DataFrame = store.select(col("nbr_id"), col("nv"), col("vv"))
   }
 
-  /** The plan-time PQ arguments of the index kernels: the codebooks, plus
-    * the centroids when the codes quantize residuals. */
-  private def pqLits(books: DataFrame, cents: DataFrame, residual: Boolean): Seq[Column] =
-    booksAsLit(books) +: (if (residual) Seq(centsAsLit(cents)) else Nil)
+  /** The trained state of a non-empty [[IvfPqIndex]]: its centroids and
+    * the PQ matrix of its codebooks. */
+  private def trained(ix: IvfPqIndex): (CellMatrix, PqMatrix) = (ix.centroids.get, ix.pq.get)
+
+  /** The shortlist of a reranked search must hold the top `k`. */
+  private def requireRerank(rerank: Int, k: Int): Unit =
+    require(rerank == 0 || rerank >= k, s"rerank ($rerank) must be 0 or >= k ($k)")
 
   /** Store rows `(id, cell, codes, nv, vv)` of an `(id, nv, vv)` frame:
     * the cell argmin ([[withCell]]) and the m-code encoding
@@ -613,12 +581,9 @@ object Similarity {
     * codebooks — no exchange. Codes are the per-subspace argmin that
     * training assigns ([[Lloyd.train]] runs the same [[graft.expressions
     * .CellMatrix]] code). */
-  private def storeRows(v: DataFrame, id: String, cents: DataFrame,
-      books: DataFrame, residual: Boolean): DataFrame =
+  private def storeRows(v: DataFrame, id: String, cents: CellMatrix, pq: PqMatrix): DataFrame =
     withCell(v, "nv", "vv", cents).select(col(id), col("cell"),
-      call_function("graft_pq_encode",
-        col("nv") +: col("cell") +: pqLits(books, cents, residual): _*).as("codes"),
-      col("nv"), col("vv"))
+      Kernels.pqEncode(col("nv"), col("cell"), pq).as("codes"), col("nv"), col("vv"))
 
   /** Train an [[IvfPqIndex]] over `corpus`: [[trainIvfCents]]'s coarse
     * quantizer (the IVF half), then [[trainPqBooks]]'s per-subspace
@@ -651,19 +616,15 @@ object Similarity {
       nCells: Int = 0, ivfLloydIters: Int = 4,
       m: Int = 16, kCents: Int = 64, pqLloydIters: Int = 2,
       residual: Boolean = false, scale: Int = 1000): IvfPqIndex = {
-    val spark = corpus.sparkSession
-    graft.expressions.GraftFunctions.register(spark)
     require(m > 0 && kCents > 1, s"need m > 0 subspaces and kCents > 1, got m=$m kCents=$kCents")
     Pinned.scoped { pin =>
       val (c, n) = pin.counted(Par.spread(corpus)
         .select(col(idCol).as("nbr_id"), quantize(col(vecCol), scale).as("nv"))
-        .withColumn("vv", nqdot(col("nv"), col("nv"))))
+        .withColumn("vv", qdot(col("nv"), col("nv"))))
       if (n == 0L) { // empty corpus: typed empty index, no dim probe to throw
-        val empty = new Lloyd.Cents(Array.empty, Array.empty, 0)
         val store = Segment.pin(c.select(col("nbr_id"), lit(0L).as("cell"),
           array().cast("array<int>").as("codes"), col("nv"), col("vv")).limit(0))
-        IvfPqIndex(Vector(store), centsFrame(spark, empty), booksFrame(spark, Nil),
-          m, dsub = 0, dim = 0, kCents, nCells = 0, residual, scale)
+        IvfPqIndex(Vector(store), None, None, m, dim = 0, kCents, nCells = 0, residual, scale)
       } else {
         val cells = if (nCells > 0) nCells else math.max(4, math.ceil(math.sqrt(n.toDouble)).toInt)
         val xs = trainingSet(c, math.max(cells, kCents))
@@ -671,13 +632,12 @@ object Similarity {
         require(dim % m == 0, s"dim $dim must be divisible by m=$m subspaces")
         val dsub = dim / m
         // coarse quantizer (the IVF half), then the codebooks (the PQ half)
-        val ivf = trainIvfCents(xs, cells, ivfLloydIters)
-        val cents = centsFrame(spark, ivf)
-        val books = booksFrame(spark,
-          trainPqBooks(xs, ivf, residual, m, dsub, kCents, pqLloydIters))
+        val cents = trainIvfCents(xs, cells, ivfLloydIters)
+        val pq = new PqMatrix(trainPqBooks(xs, cents, residual, m, dsub, kCents, pqLloydIters),
+          if (residual) cents else null)
         // the stored representation: one row per vector, pinned once
-        val store = Segment.pin(storeRows(c, "nbr_id", cents, books, residual))
-        IvfPqIndex(Vector(store), cents, books, m, dsub, dim, kCents, cells, residual, scale)
+        val store = Segment.pin(storeRows(c, "nbr_id", cents, pq))
+        IvfPqIndex(Vector(store), Some(cents), Some(pq), m, dim, kCents, cells, residual, scale)
       }
     }
   }
@@ -722,8 +682,7 @@ object Similarity {
       idCol: String, vecCol: String, k: Int,
       nprobe: Int = 0, rerank: Int = 0,
       allowed: Option[DataFrame] = None): DataFrame = {
-    graft.expressions.GraftFunctions.register(queries.sparkSession)
-    require(rerank == 0 || rerank >= k, s"rerank ($rerank) must be 0 or >= k ($k)")
+    requireRerank(rerank, k)
     if (ix.dim == 0) { // empty index: typed empty result
       return ix.vecs.select(col("nbr_id").as("query_id"), col("nbr_id"),
         lit(0L).as("cosine_micro"), lit(0L).as("rank")).limit(0).localCheckpoint(true)
@@ -737,19 +696,18 @@ object Similarity {
       ix: IvfPqIndex, queries: DataFrame,
       idCol: String, vecCol: String, k: Int,
       nprobe: Int, rerank: Int, allowed: Option[DataFrame]): DataFrame = {
-    val probes = ivfProbes(ix.nCells, nprobe)
+    val (cents, pq) = trained(ix)
     val q = queries.select(col(idCol).as("query_id"), quantize(col(vecCol), ix.scale).as("qv"))
-      .withColumn("qn", nqdot(col("qv"), col("qv")))
-      .withColumn("cell", explode(call_function("graft_ivf_probe",
-        col("qv"), col("qn"), centsAsLit(ix.cents), lit(probes))))
-      .withColumn("lut", call_function("graft_adc_lut",
-        col("qv") +: col("cell") +: pqLits(ix.books, ix.cents, ix.residual): _*))
+      .withColumn("qn", qdot(col("qv"), col("qv")))
+      .withColumn("cell", explode(
+        Kernels.ivfProbe(col("qv"), col("qn"), cents, ivfProbes(ix.nCells, nprobe))))
+      .withColumn("lut", Kernels.adcLut(col("qv"), col("cell"), pq))
     val scored = ix.store.join(broadcast(q), Seq("cell"))
       .filter(col("query_id") =!= col("nbr_id"))
       .select(col("query_id"), col("nbr_id"),
-        cosineOf(call_function("graft_adc_dot", col("codes"), col("lut")),
+        cosineOf(Kernels.adcDot(col("codes"), col("lut")),
           col("qn"), col("vv")).as("adc_cos"),
-        cosineOf(nqdot(col("qv"), col("nv")), col("qn"), col("vv")).as("cosine"))
+        cosineOf(qdot(col("qv"), col("nv")), col("qn"), col("vv")).as("cosine"))
     val cand = allowed match {
       case None => scored
       // no broadcast hint: the allowed set can be any fraction of the
@@ -792,11 +750,11 @@ object Similarity {
     * to append to the store's cells/codes tables. */
   def assignToIvfPqIndex(
       batch: DataFrame, ix: IvfPqIndex, idCol: String, vecCol: String): DataFrame = {
-    graft.expressions.GraftFunctions.register(batch.sparkSession)
     require(ix.dim > 0, "cannot assign into an empty IvfPqIndex (dim = 0)")
     val v = batch.select(col(idCol).as("id"), quantize(col(vecCol), ix.scale).as("nv"))
-      .withColumn("vv", nqdot(col("nv"), col("nv")))
-    storeRows(v, "id", ix.cents, ix.books, ix.residual)
+      .withColumn("vv", qdot(col("nv"), col("nv")))
+    val (cents, pq) = trained(ix)
+    storeRows(v, "id", cents, pq)
       .select(col("id"), col("cell"), posexplode(col("codes")).as(Seq("sub", "code")))
       .select(col("id"), col("cell"), col("sub"), col("code").cast("long"))
   }
@@ -815,11 +773,11 @@ object Similarity {
     * from corpus ids (the usual ingest contract). */
   def extendIvfPqIndex(
       ix: IvfPqIndex, batch: DataFrame, idCol: String, vecCol: String): IvfPqIndex = {
-    graft.expressions.GraftFunctions.register(batch.sparkSession)
     require(ix.dim > 0, "cannot extend an empty IvfPqIndex (dim = 0)")
     val v = batch.select(col(idCol).as("nbr_id"), quantize(col(vecCol), ix.scale).as("nv"))
-      .withColumn("vv", nqdot(col("nv"), col("nv")))
-    val batchSeg = Segment.pin(storeRows(v, "nbr_id", ix.cents, ix.books, ix.residual))
+      .withColumn("vv", qdot(col("nv"), col("nv")))
+    val (cents, pq) = trained(ix)
+    val batchSeg = Segment.pin(storeRows(v, "nbr_id", cents, pq))
     ix.copy(segments = Segment.append(ix.segments, batchSeg)(
       (older, newest) => Segment.pin(Segment.union(Seq(older, newest)))))
   }
@@ -828,7 +786,7 @@ object Similarity {
     * `vecs`/`cells`/`codes` views next to `cents`/`books`; `params` is the
     * commit marker ([[IndexFiles.save]]). */
   def saveIvfPqIndex(ix: IvfPqIndex, path: String): Unit = {
-    val spark = ix.cents.sparkSession
+    val spark = ix.store.sparkSession
     import spark.implicits._
     IndexFiles.save(path, Seq("vecs" -> ix.vecs, "cents" -> ix.cents,
       "cells" -> ix.cells, "books" -> ix.books, "codes" -> ix.codes,
@@ -838,14 +796,23 @@ object Similarity {
 
   /** Load a stored [[IvfPqIndex]]: the three per-vector tables are packed
     * back into the one-row-per-vector store (codes ordered by subspace)
-    * and pinned as one segment; cents/books are re-localized — the
-    * [[ivfPqIndex]] contract. All trained state is stored bytes, so a loaded index
-    * answers queries bit-identically to the one saved (q120's gate).
-    * Fails fast on a partial save. */
+    * and pinned as one segment; cents/books are collected back into the
+    * matrices the kernels run on — the [[ivfPqIndex]] contract. All
+    * trained state is stored bytes, so a loaded index answers queries
+    * bit-identically to the one saved (q120's gate). Fails fast on a
+    * partial save. */
   def loadIvfPqIndex(spark: SparkSession, path: String): IvfPqIndex = {
     val part = IndexFiles.open(spark, path, "IvfPqIndex",
       Seq("vecs", "cents", "cells", "books", "codes", "params"))
     val p = part("params").head()
+    val residual = p.getAs[Boolean]("residual")
+    val cents = part("cents").select("cent_id", "cv", "cc").collect()
+      .map(r => (r.getLong(0), r.getSeq[Long](1).toArray, r.getLong(2))).toSeq
+    val books = part("books").select("sub", "cent_id", "cv", "cc").collect()
+      .map(r => (r.getInt(0), r.getLong(1), r.getSeq[Long](2).toArray, r.getLong(3))).toSeq
+    val centroids = if (cents.isEmpty) None else Some(CellMatrix.of(cents))
+    val pq = if (books.isEmpty) None
+      else Some(new PqMatrix(CodeMatrix.of(books), if (residual) centroids.get else null))
     val packed = part("codes").groupBy(col("nbr_id"))
       .agg(transform(array_sort(collect_list(struct(col("sub"), col("code")))),
         e => e.getField("code").cast("int")).as("codes"))
@@ -853,12 +820,8 @@ object Similarity {
       .join(part("cells"), Seq("nbr_id"))
       .join(packed, Seq("nbr_id"))
       .select(col("nbr_id"), col("cell"), col("codes"), col("nv"), col("vv")))
-    IvfPqIndex(Vector(store),
-      localized(part("cents")),
-      localized(part("books")),
-      p.getAs[Int]("m"), p.getAs[Int]("dsub"), p.getAs[Int]("dim"),
-      p.getAs[Int]("k_cents"), p.getAs[Int]("n_cells"),
-      p.getAs[Boolean]("residual"), p.getAs[Int]("scale"))
+    IvfPqIndex(Vector(store), centroids, pq, p.getAs[Int]("m"), p.getAs[Int]("dim"),
+      p.getAs[Int]("k_cents"), p.getAs[Int]("n_cells"), residual, p.getAs[Int]("scale"))
   }
 
   /** Sparse cosine all-pairs via a term inverted index — the sparse-text
@@ -920,7 +883,6 @@ object Similarity {
       threshold: Double, maxDf: Long): DataFrame = {
     require(maxDf > 0, "maxDf must be positive")
     require(threshold >= 0, "threshold must be non-negative")
-    graft.expressions.GraftFunctions.register(docs.sparkSession)
     // The term explode is the one CPU-heavy NARROW stage (regex shingling
     // runs before any exchange, so it inherits the INPUT's parallelism) —
     // a small corpus read as one parquet split would shingle on one core.
@@ -972,7 +934,7 @@ object Similarity {
           col("n2").as("n2_a")), Seq("doc_a"))
         .join(vecs.select(col("doc").as("doc_b"), col("vec").as("vec_b"),
           col("n2").as("n2_b")), Seq("doc_b"))
-        .withColumn("dot", call_function("graft_sdot", col("vec_a"), col("vec_b")))
+        .withColumn("dot", Kernels.sdot(col("vec_a"), col("vec_b")))
         .withColumn("cosine", cosineOf(col("dot"), col("n2_a"), col("n2_b")))
         .filter(col("cosine") >= threshold)
         .select("doc_a", "doc_b", "cosine")
@@ -1041,7 +1003,7 @@ object Similarity {
     require(lDen > 0 && lNum >= 0 && lNum <= lDen, "need 0 <= lNum/lDen <= 1")
     val qv = Par.spread(vecs)
       .select(col(idCol).as("mv_id"), quantize(col(vecCol), scale).as("mv"))
-      .withColumn("mn", nqdot(col("mv"), col("mv")))
+      .withColumn("mn", qdot(col("mv"), col("mv")))
     val ids = cand.select(col("query_id"), col("nbr_id"))
     // LEFT joins to vecs: a candidate id absent from `vecs` keeps its pair
     // rows with sim 0 (no redundancy evidence) instead of silently
@@ -1055,7 +1017,7 @@ object Similarity {
         .join(qv.select(col("mv_id").as("nbr_id"), col("mv").as("va"), col("mn").as("na")), Seq("nbr_id"), "left")
         .join(qv.select(col("mv_id").as("other_id"), col("mv").as("vb"), col("mn").as("nb")), Seq("other_id"), "left")
         .select(col("query_id"), col("nbr_id"), col("other_id"),
-          coalesce(round(cosineOf(nqdot(col("va"), col("vb")), col("na"), col("nb")) * 1e9)
+          coalesce(round(cosineOf(qdot(col("va"), col("vb")), col("na"), col("nb")) * 1e9)
             .cast("long"), lit(0L)).as("sim_nano")))
       val c = pin(cand.select(col("query_id"), col("nbr_id"), col("rel_nano")))
       // round 1: pure relevance argmax
@@ -1113,7 +1075,6 @@ object Similarity {
     * a plain parquet write away from persistent. */
   def groupCentroids(df: DataFrame, vecCol: String, grpCol: String,
       scale: Int = 1000): DataFrame = {
-    graft.expressions.GraftFunctions.register(df.sparkSession)
     Par.spread(df)
       .select(col(grpCol).as("co_grp"), quantize(col(vecCol), scale).as("qv"))
       .select(col("co_grp"), posexplode(col("qv")).as(Seq("dim", "x")))
@@ -1121,7 +1082,7 @@ object Similarity {
       .groupBy(col("co_grp"))
       .agg(transform(array_sort(collect_list(struct(col("dim"), col("sx")))),
         e => e.getField("sx")).as("cs"))
-      .withColumn("cnn", nqdot(col("cs"), col("cs")))
+      .withColumn("cnn", qdot(col("cs"), col("cs")))
       .withColumnRenamed("co_grp", grpCol)
   }
 
@@ -1154,7 +1115,7 @@ object Similarity {
     }
     side(a, "a").join(side(b, "b"), Seq(grpCol))
       .select(col(grpCol), col("n_a"), col("n_b"),
-        round(cosineOf(nqdot(col("cs_a"), col("cs_b")),
+        round(cosineOf(qdot(col("cs_a"), col("cs_b")),
           col("nn_a"), col("nn_b")) * 1e9).cast("long").as("cos_nano"))
       .withColumn("drift_nano", lit(1000000000L) - col("cos_nano"))
   }
@@ -1179,10 +1140,9 @@ object Similarity {
   def groupDiversity(df: DataFrame, grpCol: String, vecCol: String,
       scale: Int = 1000): DataFrame = {
     require(scale >= 1, "scale must be >= 1")
-    graft.expressions.GraftFunctions.register(df.sparkSession)
     val dec = org.apache.spark.sql.types.DecimalType(38, 0)
     // pin (grp, q, nn) BEFORE deriving u: CollapseProject would otherwise
-    // inline quantize() and nqdot() into EVERY element of the
+    // inline quantize() and qdot() into EVERY element of the
     // unit-quantization transform (the lambda references nn 64×/row), an
     // O(dim²) re-evaluation measured at ~10× the whole operator's cost.
     // pin (not localCheckpoint) so the blocks are RELEASED on return;
@@ -1190,7 +1150,7 @@ object Similarity {
     Pinned.scoped { pin =>
       val q = pin(Par.spread(df)
         .select(col(grpCol).as("gd_grp"), quantize(col(vecCol), scale).as("q"))
-        .withColumn("nn", nqdot(col("q"), col("q"))))
+        .withColumn("nn", qdot(col("q"), col("q"))))
       val zeros = q.filter(col("nn") === 0L).groupBy(col("gd_grp"))
         .agg(count(lit(1)).as("n_zero"))
       // greatest(nn, 1): rows with nn = 0 are filtered out, but ANSI mode
@@ -1202,7 +1162,7 @@ object Similarity {
           round(x.cast("double")
             / sqrt(greatest(col("nn"), lit(1L)).cast("double")) * scale)
             .cast("long")))
-        .withColumn("self", nqdot(col("u"), col("u")))
+        .withColumn("self", qdot(col("u"), col("u")))
       val rows = u.groupBy(col("gd_grp"))
         .agg(count(lit(1)).as("n"), sum(col("self").cast(dec)).as("__selfsum"))
       val comps = u.select(col("gd_grp"), posexplode(col("u")).as(Seq("pos", "x")))
@@ -1228,13 +1188,12 @@ object Similarity {
     * [[centroidOutliers]] and the streaming gate; zero-norm pinned to
     * −2e9 (below any real cosine) on every engine. */
   private[graft] def centroidCosNano(qv: Column, cs: Column, cnn: Column): Column =
-    coalesce(round(cosineOf(nqdot(qv, cs), nqdot(qv, qv), cnn) * 1e9)
+    coalesce(round(cosineOf(qdot(qv, cs), qdot(qv, qv), cnn) * 1e9)
       .cast("long"), lit(-2000000000L))
 
   def centroidOutliers(df: DataFrame, idCol: String, vecCol: String,
       grpCol: String, k: Int, scale: Int = 1000): DataFrame = {
     require(k >= 1, "k must be >= 1")
-    graft.expressions.GraftFunctions.register(df.sparkSession)
     val qv = Par.spread(df).select(col(grpCol).as("co_grp"), col(idCol).as("co_id"),
       quantize(col(vecCol), scale).as("qv"))
     val sums = groupCentroids(df, vecCol, grpCol, scale)

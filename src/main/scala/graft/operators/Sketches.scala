@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.expressions.Kernels
+
 /** Mergeable cardinality sketches for shard-parallel distinct counting —
   * the HyperLogLog workflow a 100 TB pipeline actually runs: each shard/
   * partition/day builds a small binary sketch once, sketches are stored or
@@ -59,11 +61,8 @@ object Sketches {
     * for the error contract). k=200 ≈ 1.65% two-sided rank error, ~3 KB. */
   def quantileSketch(df: DataFrame, groupCols: Seq[String], valueCol: String,
       k: Int = 200): DataFrame = {
-    graft.expressions.GraftFunctions.register(df.sparkSession)
-    val g = df.groupBy(groupCols.map(col): _*)
-      .agg(call_function("graft_kll_agg", col(valueCol).cast("long"), lit(k))
-        .as("qsketch"))
-    g
+    df.groupBy(groupCols.map(col): _*)
+      .agg(Kernels.kllAgg(col(valueCol).cast("long"), k).as("qsketch"))
   }
 
   /** Merge per-group quantile sketches to a coarser grouping (global when
@@ -73,15 +72,10 @@ object Sketches {
     * (see q110), never equality-compare them. */
   def mergeQuantiles(sketches: DataFrame, groupCols: Seq[String],
       ps: Seq[Double]): DataFrame = {
-    graft.expressions.GraftFunctions.register(sketches.sparkSession)
-    val merged =
-      if (groupCols.isEmpty)
-        sketches.agg(call_function("graft_kll_merge", col("qsketch")).as("qsketch"))
-      else sketches.groupBy(groupCols.map(col): _*)
-        .agg(call_function("graft_kll_merge", col("qsketch")).as("qsketch"))
+    val merged = sketches.groupBy(groupCols.map(col): _*)
+      .agg(Kernels.kllMerge(col("qsketch")).as("qsketch"))
     ps.foldLeft(merged) { (acc, p) =>
-      acc.withColumn(s"q${(p * 100).round}",
-        call_function("graft_kll_quantile", col("qsketch"), lit(p)))
+      acc.withColumn(s"q${(p * 100).round}", Kernels.kllQuantile(col("qsketch"), p))
     }.drop("qsketch")
   }
 
@@ -92,22 +86,17 @@ object Sketches {
     * DETERMINISTIC ±εN bound contract, ε ≈ 3.5/maxMapSize). */
   def frequencySketch(df: DataFrame, groupCols: Seq[String], itemCol: String,
       maxMapSize: Int = 1024): DataFrame = {
-    graft.expressions.GraftFunctions.register(df.sparkSession)
     df.groupBy(groupCols.map(col): _*)
-      .agg(call_function("graft_freq_agg", col(itemCol).cast("long"),
-        lit(maxMapSize)).as("fsketch"))
+      .agg(Kernels.freqAgg(col(itemCol).cast("long"), maxMapSize).as("fsketch"))
   }
 
   /** Merge per-group frequency sketches to a coarser grouping (global when
     * `groupCols = Nil`); keeps the merged `fsketch` binary so callers can
-    * probe items with `graft_freq_bounds` (q112's shape). */
-  def mergeFrequency(sketches: DataFrame, groupCols: Seq[String]): DataFrame = {
-    graft.expressions.GraftFunctions.register(sketches.sparkSession)
-    if (groupCols.isEmpty)
-      sketches.agg(call_function("graft_freq_merge", col("fsketch")).as("fsketch"))
-    else sketches.groupBy(groupCols.map(col): _*)
-      .agg(call_function("graft_freq_merge", col("fsketch")).as("fsketch"))
-  }
+    * probe items with [[graft.expressions.Kernels.freqBounds]] (q112's
+    * shape). */
+  def mergeFrequency(sketches: DataFrame, groupCols: Seq[String]): DataFrame =
+    sketches.groupBy(groupCols.map(col): _*)
+      .agg(Kernels.freqMerge(col("fsketch")).as("fsketch"))
 
   // ---- theta sketches: distinct-count SET ALGEBRA ------------------------
 
@@ -118,16 +107,13 @@ object Sketches {
     * 1/√4096 ≈ 1.6% once sampling; EXACT below 4096 retained keys. */
   def thetaSketch(df: DataFrame, groupCols: Seq[String], valueCol: String,
       lgK: Int = 12): DataFrame = {
-    graft.expressions.GraftFunctions.register(df.sparkSession)
     df.groupBy(groupCols.map(col): _*)
-      .agg(call_function("graft_theta_agg", col(valueCol).cast("long"), lit(lgK))
-        .as("tsketch"))
+      .agg(Kernels.thetaAgg(col(valueCol).cast("long"), lgK).as("tsketch"))
   }
 
   /** `[round(estimate), lb(3σ), ub(3σ)]` of a set operation between two
     * sketch Columns: op ∈ intersect / diff (A∖B) / union. */
-  def thetaSetBounds(a: Column, b: Column, op: String): Column =
-    call_function(s"graft_theta_$op", a, b)
+  def thetaSetBounds(a: Column, b: Column, op: String): Column = Kernels.thetaSet(a, b, op)
 
   // ---- count-min sketch: a mergeable RELATIONAL frequency table ----------
 

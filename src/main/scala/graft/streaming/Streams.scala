@@ -93,18 +93,17 @@ object Streams {
     * unbounded in the key cardinality: the hot-key / dominant-domain
     * monitor for an ingest pipeline. Same code batch & streaming
     * ([[approxDistinctPerWindow]]'s pattern — q112 is the batch-shape
-    * sibling); downstream probes items with `graft_freq_bounds`, whose
+    * sibling); downstream probes items with
+    * [[graft.expressions.Kernels.freqBounds]], whose
     * lower ≤ true ≤ upper brackets hold DETERMINISTICALLY on every
     * micro-batch merge tree (the estimates themselves are merge-specific).
     * Output: window_start_us, fsketch (binary). */
   def frequentKeysPerWindow(events: DataFrame, keyCol: String,
       windowLen: String, maxMapSize: Int = 256,
       watermark: Option[String] = None): DataFrame = {
-    graft.expressions.GraftFunctions.register(events.sparkSession)
     val src = watermark.fold(events)(w => events.withWatermark("ts", w))
     src.groupBy(window(col("ts"), windowLen).as("w"))
-      .agg(call_function("graft_freq_agg", col(keyCol).cast("long"),
-        lit(maxMapSize)).as("fsketch"))
+      .agg(graft.expressions.Kernels.freqAgg(col(keyCol).cast("long"), maxMapSize).as("fsketch"))
       .select(unix_micros(col("w.start")).as("window_start_us"), col("fsketch"))
   }
 
@@ -602,7 +601,6 @@ object Streams {
       centroids: DataFrame, minCosNano: Long, scale: Int = 1000): DataFrame = {
     requireUnreserved("centroidGateBatch", Seq("__cg_qv", "__cg_cs", "__cg_cnn"),
       batch.columns)
-    graft.expressions.GraftFunctions.register(batch.sparkSession)
     val c = centroids.select(col(grpCol), col("cs").as("__cg_cs"),
       col("cnn").as("__cg_cnn"))
     batch

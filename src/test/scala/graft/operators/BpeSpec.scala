@@ -99,8 +99,6 @@ class BpeSpec extends SparkTestBase {
   }
 
   test("graft_bpe_encode ≡ the higher-order-function fold, codegen and interpreted") {
-    import graft.expressions.GraftFunctions
-    GraftFunctions.register(spark)
     val tricky = corpus.unionByName(Seq(
       (5L, "aaaa aaaa banana banana banana"),
       (6L, "abcabc abcabc xyxyxy")).toDF("doc_id", "text"))
@@ -120,7 +118,7 @@ class BpeSpec extends SparkTestBase {
     val df = words.toDF("w").repartition(3) // executed, not folded on the driver
     for (merges <- Seq(trained, extra, trained ++ extra, Seq(("zz", "q")))) {
       val (gen, interp) = bothModes(df.select(col("w"), Bpe.encodePieces(col("w"), merges),
-        call_function("graft_bpe_encode", col("w"), typedLit(merges))))
+        graft.expressions.Kernels.bpeEncode(col("w"), graft.expressions.BpeMerges(merges))))
       assert(gen == interp, s"codegen and interpreted evaluation differ under $merges")
       val want = rowSet(df.select(col("w"), hofPieces(col("w"), merges), hofPieces(col("w"), merges)))
       assert(gen == want, s"kernel and fold differ under $merges")

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.SparkTestBase
+import graft.expressions.{CellMatrix, CodeMatrix, Kernels, PqMatrix}
 
 class DedupSimilaritySpec extends SparkTestBase {
   import spark.implicits._
@@ -714,6 +715,11 @@ class DedupSimilaritySpec extends SparkTestBase {
     val exp = (500.0 * 500 - 250.0 * 250) /
       (math.sqrt(500.0 * 500 + 250.0 * 250) * math.sqrt(500.0 * 500 + 250.0 * 250))
     assert(math.abs(r.getDouble(1) - exp) < 1e-12)
+    // vectors of different dimensions raise, as in every operator
+    val err = intercept[Exception](Seq((Array(0.5), Array(0.5, 0.25))).toDF("a", "b")
+      .select(Similarity.qdot(Similarity.quantize(col("a")), Similarity.quantize(col("b"))))
+      .collect())
+    assert(exceptionChain(err).exists(_.getMessage.contains("dimensions differ")))
   }
 
   test("centroidOutliers: the planted stray ranks first in its group; partition-independent") {
@@ -807,6 +813,16 @@ class DedupSimilaritySpec extends SparkTestBase {
     assert(h.getAs[Long]("rbo_micro") == Similarity.rboWeights10(1))
   }
 
+  /** The centroid matrix of a `(cent_id, cv, cc)` frame's rows. */
+  private def cellMatrixOf(cents: DataFrame): CellMatrix =
+    CellMatrix.of(cents.select("cent_id", "cv", "cc").collect().toSeq
+      .map(r => (r.getLong(0), r.getSeq[Long](1).toArray, r.getLong(2))))
+
+  /** The codebook matrix of a `(sub, cent_id, cv, cc)` frame's rows. */
+  private def codeMatrixOf(books: DataFrame): CodeMatrix =
+    CodeMatrix.of(books.select("sub", "cent_id", "cv", "cc").collect().toSeq
+      .map(r => (r.getInt(0), r.getLong(1), r.getSeq[Long](2).toArray, r.getLong(3))))
+
   test("cell/code argmin expressions match the join+min(struct) formulation, ties included (r15)") {
     import graft.expressions.GraftFunctions
     GraftFunctions.register(spark)
@@ -821,10 +837,8 @@ class DedupSimilaritySpec extends SparkTestBase {
       (3L, Seq(0L, 0L, 0L, 4L)), (5L, Seq(-3L, 0L, 2L, 2L)))
       .toDF("cent_id", "cv")
       .withColumn("cc", call_function("graft_qdot", col("cv"), col("cv")))
-    val centsLit = typedLit(cents.collect().toSeq
-      .map(r => (r.getLong(0), r.getSeq[Long](1), r.getLong(2))))
-    val viaExpr = vecs.select(col("id"),
-      call_function("graft_cell_argmin", col("v"), col("vv"), centsLit).as("cell"))
+    val centsM = cellMatrixOf(cents)
+    val viaExpr = vecs.select(col("id"), Kernels.cellArgmin(col("v"), col("vv"), centsM).as("cell"))
     val viaJoin = vecs.join(broadcast(cents))
       .withColumn("d2", col("vv")
         - lit(2) * call_function("graft_qdot", col("v"), col("cv")) + col("cc"))
@@ -836,7 +850,7 @@ class DedupSimilaritySpec extends SparkTestBase {
     assert(viaExpr.filter(col("cell") === 5L).isEmpty)
     assert(!viaExpr.filter(col("cell") === 2L).isEmpty)
 
-    // per-subspace code argmin (graft_pq_encode's m argmins) vs the same
+    // per-subspace code argmin (PqEncodeLong's m argmins) vs the same
     // reference formulation, with a duplicated codebook entry inside sub 1
     // (codes 1 and 3 identical)
     val sv = vecs.select(col("id"), posexplode(array(
@@ -847,10 +861,8 @@ class DedupSimilaritySpec extends SparkTestBase {
       (1, 1L, Seq(1L, -1L)), (1, 2L, Seq(4L, 0L)), (1, 3L, Seq(1L, -1L)))
       .toDF("sub", "cent_id", "cv")
       .withColumn("cc", call_function("graft_qdot", col("cv"), col("cv")))
-    val booksLit = typedLit(books.collect().toSeq
-      .map(r => (r.getInt(0), r.getLong(1), r.getSeq[Long](2), r.getLong(3))))
-    val codeExpr = vecs.select(col("id"), posexplode(
-        call_function("graft_pq_encode", col("v"), lit(0L), booksLit)).as(Seq("sub", "code")))
+    val codeExpr = vecs.select(col("id"), posexplode(Kernels.pqEncode(col("v"), lit(0L),
+        new PqMatrix(codeMatrixOf(books), null))).as(Seq("sub", "code")))
       .select(col("id"), col("sub"), col("code").cast("long"))
     val codeJoin = sv.join(broadcast(books), Seq("sub"))
       .withColumn("d2", col("svv")
@@ -864,8 +876,7 @@ class DedupSimilaritySpec extends SparkTestBase {
     // dimension mismatch raises (the graft_qdot contract); local mode may
     // surface it bare or wrapped, so match on the message
     val err = intercept[Exception] {
-      vecs.select(call_function("graft_cell_argmin",
-        slice(col("v"), 1, 2), col("vv"), centsLit)).collect()
+      vecs.select(Kernels.cellArgmin(slice(col("v"), 1, 2), col("vv"), centsM)).collect()
     }
     assert(err.getMessage.contains("dimensions differ")
       || Option(err.getCause).exists(_.getMessage.contains("dimensions differ")))
@@ -1135,7 +1146,7 @@ class DedupSimilaritySpec extends SparkTestBase {
     * shortlist window + join back to the vectors for the exact rerank. */
   private def joinBasedIvfPq(ix: Similarity.IvfPqIndex, queries: DataFrame,
       k: Int, nprobe: Int, rerank: Int, allowed: Option[DataFrame]): Set[Seq[Any]] = {
-    def qdot(a: Column, b: Column) = call_function("graft_qdot", a, b)
+    def qdot(a: Column, b: Column) = Similarity.qdot(a, b)
     def gate(cand: DataFrame) = allowed.fold(cand)(a =>
       cand.join(a.select(col(a.columns.head).as("nbr_id")), Seq("nbr_id"), "left_semi"))
     def slices(v: Column) = posexplode(array(
@@ -1252,10 +1263,8 @@ class DedupSimilaritySpec extends SparkTestBase {
     val books = Seq((0, 1L, Seq(0L, 1L)), (0, 2L, Seq(-2L, 3L)),
         (1, 1L, Seq(1L, -1L)), (1, 2L, Seq(4L, 0L)), (1, 3L, Seq(1L, -1L)))
       .toDF("sub", "cent_id", "cv").withColumn("cc", qdot(col("cv"), col("cv")))
-    val centsLit = typedLit(cents.collect().toSeq
-      .map(r => (r.getLong(0), r.getSeq[Long](1), r.getLong(2))))
-    val booksLit = typedLit(books.collect().toSeq
-      .map(r => (r.getInt(0), r.getLong(1), r.getSeq[Long](2), r.getLong(3))))
+    val centsM = cellMatrixOf(cents)
+    val booksM = codeMatrixOf(books)
     def bothModes(df: => DataFrame): Set[Seq[Any]] = {
       val gen = rowSet(df)
       var interp = Set.empty[Seq[Any]]
@@ -1268,7 +1277,7 @@ class DedupSimilaritySpec extends SparkTestBase {
 
     // probe lists: (d2, cent_id) window over the centroid join
     val probe = bothModes(vecs.select(col("id"),
-      call_function("graft_ivf_probe", col("v"), col("vv"), centsLit, lit(3))))
+      Kernels.ivfProbe(col("v"), col("vv"), centsM, 3)))
     val probeRef = vecs.join(broadcast(cents))
       .withColumn("d2", col("vv") - lit(2) * qdot(col("v"), col("cv")) + col("cc"))
       .withColumn("r", row_number().over(
@@ -1285,8 +1294,7 @@ class DedupSimilaritySpec extends SparkTestBase {
 
     // codes: per-slice join+min(struct) argmin over v (non-residual) and
     // over v − c(cell) (residual, the cell being the argmin cell)
-    val withCell = vecs.withColumn("cell",
-      call_function("graft_cell_argmin", col("v"), col("vv"), centsLit))
+    val withCell = vecs.withColumn("cell", Kernels.cellArgmin(col("v"), col("vv"), centsM))
       .join(broadcast(cents.select(col("cent_id").as("cell"), col("cv"))), Seq("cell"))
       .withColumn("rv", zip_with(col("v"), col("cv"), (a, b) => a - b))
     def codesRef(vec: String) = withCell.select(col("id"),
@@ -1297,23 +1305,24 @@ class DedupSimilaritySpec extends SparkTestBase {
       .groupBy(col("id"), col("sub")).agg(min(struct(col("d2"), col("cent_id"))).as("m"))
       .groupBy(col("id")).agg(transform(array_sort(collect_list(struct(col("sub"), col("m.cent_id")))),
         e => e.getField("cent_id").cast("int")).as("codes"))
-    for ((extra, vec) <- Seq((Nil, "v"), (Seq(centsLit), "rv"))) {
+    // the centroids enter the PQ matrix only when the codes quantize residuals
+    for ((resid, vec) <- Seq((null, "v"), (centsM, "rv"))) {
       val enc = bothModes(withCell.select(col("id"),
-        call_function("graft_pq_encode", col("v") +: col("cell") +: booksLit +: extra: _*)))
+        Kernels.pqEncode(col("v"), col("cell"), new PqMatrix(booksM, resid))))
       assert(seqs(enc) == seqs(rowSet(codesRef(vec))), s"encode over $vec")
     }
 
     // LUT entries + ADC dot: every vector's codes scored against every
     // other vector's table equal the relational Σ_s qdot(slice, book) (+ q·c)
-    for ((extra, vec) <- Seq((Nil, "v"), (Seq(centsLit), "rv"))) {
-      val lits = booksLit +: extra
+    for ((resid, vec) <- Seq((null, "v"), (centsM, "rv"))) {
+      val pq = new PqMatrix(booksM, resid)
       val tables = withCell.select(col("id").as("qid"), col("cell"), col(vec).as("qx"), col("v").as("qv"),
-        call_function("graft_adc_lut", col("v") +: col("cell") +: lits: _*).as("lut"),
-        (if (extra.isEmpty) lit(0L) else qdot(col("v"), col("cv"))).as("base"))
-      val codes = withCell.select(col("id"),
-        call_function("graft_pq_encode", col("v") +: col("cell") +: lits: _*).as("codes"))
+        Kernels.adcLut(col("v"), col("cell"), pq).as("lut"),
+        (if (resid == null) lit(0L) else qdot(col("v"), col("cv"))).as("base"))
+      val codes =
+        withCell.select(col("id"), Kernels.pqEncode(col("v"), col("cell"), pq).as("codes"))
       val adc = bothModes(tables.crossJoin(codes).select(col("qid"), col("id"),
-        call_function("graft_adc_dot", col("codes"), col("lut"))))
+        Kernels.adcDot(col("codes"), col("lut"))))
       val ref = tables.crossJoin(codes.select(col("id"), posexplode(col("codes")).as(Seq("sub", "code"))))
         .join(broadcast(books.select(col("sub").as("bsub"), col("cent_id"), col("cv").as("bv"))),
           col("sub") === col("bsub") && col("code") === col("cent_id"))
@@ -1328,10 +1337,10 @@ class DedupSimilaritySpec extends SparkTestBase {
     // dimension mismatches raise on both paths
     val short = vecs.select(slice(col("v"), 1, 3).as("v"), col("vv"), lit(1L).as("cell"))
     val bad = Seq(
-      call_function("graft_ivf_probe", col("v"), col("vv"), centsLit, lit(2)),
-      call_function("graft_pq_encode", col("v"), col("cell"), booksLit),
-      call_function("graft_adc_lut", col("v"), col("cell"), booksLit, centsLit),
-      call_function("graft_adc_dot", array(Seq.fill(3)(col("cell").cast("int")): _*),
+      Kernels.ivfProbe(col("v"), col("vv"), centsM, 2),
+      Kernels.pqEncode(col("v"), col("cell"), new PqMatrix(booksM, null)),
+      Kernels.adcLut(col("v"), col("cell"), new PqMatrix(booksM, centsM)),
+      Kernels.adcDot(array(Seq.fill(3)(col("cell").cast("int")): _*),
         array(Seq.fill(3)(col("vv")): _*)))
     for (e <- bad) {
       val errGen = intercept[Exception](short.select(e).collect())
@@ -1538,14 +1547,12 @@ class DedupSimilaritySpec extends SparkTestBase {
     * round — with the per-subspace code argmin spelled as the
     * (d2, cent_id)-ordered window over a codebook join. */
   private object RelationalTraining {
-    private def qdot(a: Column, b: Column) = call_function("graft_qdot", a, b)
+    private def qdot(a: Column, b: Column) = Similarity.qdot(a, b)
     private def localized(df: DataFrame): DataFrame =
       spark.createDataFrame(java.util.Arrays.asList(df.collect(): _*), df.schema)
     private def byMd5 = md5(col("nbr_id").cast("string"))
     def withCell(c: DataFrame, cents: DataFrame): DataFrame =
-      c.withColumn("cell", call_function("graft_cell_argmin", col("nv"), col("vv"),
-        typedLit(cents.select("cent_id", "cv", "cc").collect().toSeq
-          .map(r => (r.getLong(0), r.getSeq[Long](1), r.getLong(2))))))
+      c.withColumn("cell", Kernels.cellArgmin(col("nv"), col("vv"), cellMatrixOf(cents)))
 
     def cents(c: DataFrame, cells: Int, lloydIters: Int): DataFrame = {
       var cents = localized(c.orderBy(byMd5).limit(cells)
@@ -1644,6 +1651,23 @@ class DedupSimilaritySpec extends SparkTestBase {
       ivfLloydIters = 1, m = 2, kCents = 4)
     try assert(one.cents.collect().map(_.getSeq[Long](1)).toSeq == Seq(Seq(-3L, 3L, 0L, -1L)))
     finally one.release()
+  }
+
+  test("a bad rerank fails before ivfPqTopK or pqTopK runs a job or pins anything") {
+    val vecs = vecRows(0L until 20L)
+    val runs = Seq[(String, () => Any)](
+      "ivfPqTopK" -> (() => Similarity.ivfPqTopK(vecs, vecs, "vec_id", "embedding", k = 5,
+        nCells = 2, m = 3, kCents = 4, rerank = 3)),
+      "pqTopK" -> (() => Similarity.pqTopK(vecs, vecs, "vec_id", "embedding", k = 5,
+        m = 3, kCents = 4, rerank = 3)))
+    for ((name, run) <- runs) {
+      val before = pinned
+      var err: IllegalArgumentException = null
+      val jobs = jobsRun { err = intercept[IllegalArgumentException](run()) }
+      assert(err.getMessage.contains("rerank"), s"$name: ${err.getMessage}")
+      assert(jobs == 0, name)
+      assert(pinned == before, name)
+    }
   }
 
   test("a training set of mixed dimensions fails on the driver and leaks no pin") {
