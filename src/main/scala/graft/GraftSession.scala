@@ -6,7 +6,7 @@ import org.apache.spark.sql.SparkSession
   * and the documentation of which knobs move when the same code leaves
   * local[N] for a 1000-executor cluster.
   *
-  * Local (tests, Verify/Smoke/Plans/ScaleProbe mains):
+  * Local (tests, the Verify and Smoke mains):
   *  - `shuffle.partitions` = cores: at single-digit-GB scale, 200 (the
   *    default) mostly measures task-launch overhead.
   *  - `nanosAsLong`: the events table is ns-precision parquet, which Spark

@@ -106,6 +106,7 @@ object Dedup {
   def ngramJaccardPairs(
       df: DataFrame, idCol: String, textCol: String,
       n: Int = 3, threshold: Double = 0.8): DataFrame = {
+    requireJaccard(threshold)
     // already sorted; a doc without shingles (nsh 0 or null) has an empty
     // prefix, so it never reaches the candidate or verify joins
     Pinned.scoped { pin =>
@@ -125,6 +126,11 @@ object Dedup {
       verifyJaccard(cand, s, threshold).localCheckpoint(true)
     }
   }
+
+  /** A Jaccard threshold keeps the pairs with J in [threshold, 1]; checked
+    * before a call builds or pins anything. */
+  private def requireJaccard(threshold: Double): Unit =
+    require(threshold > 0.0 && threshold <= 1.0, s"threshold must be in (0, 1], got $threshold")
 
   /** Join candidate (id_a,id_b) pairs back to shingle sets and keep those
     * with exact Jaccard ≥ threshold. Size-incompatible candidates
@@ -430,6 +436,7 @@ object Dedup {
       df: DataFrame, idCol: String, textCol: String,
       n: Int = 3, bands: Int = 4, rowsPerBand: Int = 3,
       threshold: Double = 0.8): DataFrame = {
+    requireJaccard(threshold)
     val ix = minhashIndex(df, idCol, textCol, n, bands, rowsPerBand)
     try minhashLshPairsIndexed(ix, threshold) finally ix.release()
   }
@@ -489,6 +496,7 @@ object Dedup {
   /** [[minhashLshPairs]] over a prebuilt [[MinhashIndex]] — the index is
     * NOT released (the caller owns it and may reuse it, q109-style). */
   def minhashLshPairsIndexed(ix: MinhashIndex, threshold: Double): DataFrame = {
+    requireJaccard(threshold)
     val banded = ix.bandedKeys
     val cand = banded.as("x").join(banded.as("y"),
         col("x.band") === col("y.band") && col("x.band_key") === col("y.band_key") &&
@@ -513,6 +521,7 @@ object Dedup {
       left: DataFrame, right: DataFrame, idCol: String, textCol: String,
       n: Int = 3, bands: Int = 4, rowsPerBand: Int = 3,
       threshold: Double = 0.8): DataFrame = {
+    requireJaccard(threshold)
     val ixR = minhashIndex(right, idCol, textCol, n, bands, rowsPerBand)
     try pairsBetween(packedRows(left, idCol, textCol, n, bands, rowsPerBand), ixR, threshold)
     finally ixR.release()
@@ -543,6 +552,7 @@ object Dedup {
     * pinned (id, sh, nsh, band_keys) rows. */
   private def pairsBetween(delta: DataFrame, corpus: MinhashIndex,
       threshold: Double): DataFrame = {
+    requireJaccard(threshold)
     val spark = delta.sparkSession
     val schema = StructType(Seq(StructField("id_a", delta.schema("id").dataType),
       StructField("id_b", corpus.packed.schema("id").dataType), StructField("jaccard", DoubleType)))

@@ -1,6 +1,11 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
+import org.apache.spark.sql.execution.exchange.Exchange
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -141,9 +146,32 @@ object Ops {
     * is bounded by construction — fixed bins, low-cardinality group keys,
     * top-k echoes, stat scalars — i.e. KBs at ANY corpus size, so one final
     * task is the right plan at 100 TB too. Row-scale outputs (per-doc,
-    * per-order) must keep the range-partitioned `orderBy`. */
-  def sortSmall(df: DataFrame, cols: Column*): DataFrame =
+    * per-order) must keep the range-partitioned `orderBy`.
+    *
+    * Guarded: the coalesce is narrow, so it would pull every stage up to
+    * the nearest exchange into its one task. A `df` whose physical plan
+    * reaches a file or in-memory scan without crossing an exchange, or a
+    * node that already outputs one partition, fails here with an
+    * IllegalArgumentException naming the scans (e.g. a broadcast join
+    * over a parquet scan: its streamed side has no exchange). */
+  def sortSmall(df: DataFrame, cols: Column*): DataFrame = {
+    val scans = unboundedScans(df.queryExecution.executedPlan)
+    require(scans.isEmpty, "sortSmall needs an exchange between its one partition and every " +
+      "scan, but these scans would run in that one task: " + scans.map(_.nodeName).mkString(", "))
     df.coalesce(1).sortWithinPartitions(cols: _*)
+  }
+
+  /** The file and in-memory scans of `plan` that a coalesce to one
+    * partition on top of it would read in one task: those reached without
+    * crossing an exchange (a query stage or reused exchange included) or
+    * a node whose output is already one partition. */
+  private def unboundedScans(plan: SparkPlan): Seq[SparkPlan] = plan match {
+    case a: AdaptiveSparkPlanExec => unboundedScans(a.executedPlan)
+    case _: Exchange | _: QueryStageExec => Nil
+    case p if p.outputPartitioning.numPartitions == 1 => Nil
+    case scan @ (_: FileSourceScanExec | _: BatchScanExec | _: InMemoryTableScanExec) => Seq(scan)
+    case p => p.children.flatMap(unboundedScans)
+  }
 
   /** Chain form of [[sortSmall]]: `df.transform(Ops.sortSmallT(col("k")))`
     * — same contract (aggregate-bounded results only). */

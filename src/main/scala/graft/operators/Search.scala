@@ -355,13 +355,12 @@ object Search {
     * the score, and a doc-partitioned window for the top-k. Lazy: r12
     * pinned tf (persist + eager localCheckpoint) to run the explode
     * once; the r13 measurements (VERDICT r12 #2) found the two plans
-    * within ~25% of each other on the ScaleProbe tfidf axis at every
+    * within ~25% of each other on a 1–10× replication probe at every
     * factor (position-in-run biased), while the DE-NOISED instrument —
-    * a per-query harness (since retired), median of 3 with GC between
-    * runs — read this query at 1.09 s lazy vs 1.80 s pinned at sf0.1:
+    * a per-query harness, median of 3 with GC between runs (both since
+    * retired) — read this query at 1.09 s lazy vs 1.80 s pinned at sf0.1:
     * materialization + cache read-back costs more than the recompute, so
-    * the recompute-twice plan shipped and the pinned counterfactual stays
-    * measured in the probe every round. Posting-list-shaped joins only,
+    * the recompute-twice plan shipped. Posting-list-shaped joins only,
     * no global sort, no driver state. Output: (id, `term`, `tf`, `df`,
     * `tfidf_micro`, `rank` ≤ k). */
   def tfidfTopTerms(docs: DataFrame, idCol: String, textCol: String,

@@ -473,7 +473,7 @@ object Sequences {
     * and the cohort-size lookup a window over that already-tiny result.
     * No joins against raw events, no window over any data-sized frame,
     * no driver state. (A distinct-then-window formulation costs a second
-    * full (key, period) shuffle — plan-audited away, Plans.scala r13.) */
+    * full (key, period) shuffle — plan-audited away in r13.) */
   def retentionCohorts(events: DataFrame, keyCol: String, tsCol: String,
       periodUs: Long, maxOffset: Int = 52): DataFrame = {
     require(periodUs > 0, "periodUs must be positive")

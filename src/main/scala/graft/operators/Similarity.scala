@@ -189,6 +189,9 @@ object Similarity {
       idCol: String, vecCol: String, k: Int,
       nTables: Int = 16, signBits: Int = 0,
       scale: Int = 1000, seed: Long = 42L): DataFrame = {
+    require(k >= 1, s"k must be >= 1, got $k")
+    require(nTables >= 1 && signBits >= 0,
+      s"need nTables >= 1 and signBits >= 0 (0 derives it), got nTables=$nTables signBits=$signBits")
     Pinned.scoped { pin =>
       val (c, n) = pin.counted(Par.spread(corpus)
         .select(col(idCol).as("nbr_id"), quantize(col(vecCol), scale).as("nv"))
@@ -310,6 +313,9 @@ object Similarity {
       idCol: String, vecCol: String, k: Int,
       nCells: Int = 0, nprobe: Int = 0, lloydIters: Int = 4,
       scale: Int = 1000): DataFrame = {
+    require(k >= 1, s"k must be >= 1, got $k")
+    require(nCells >= 0 && nprobe >= 0,
+      s"need nCells >= 0 and nprobe >= 0 (0 derives them), got nCells=$nCells nprobe=$nprobe")
     Pinned.scoped { pin =>
       val (c, n) = pin.counted(Par.spread(corpus)
         .select(col(idCol).as("nbr_id"), quantize(col(vecCol), scale).as("nv"))

@@ -335,9 +335,10 @@ object Stats {
     * the two bounds are a filter + |groups|-sized agg, and the clip+mean
     * is one more hash-agg: no window ever holds more than a bucket cell.
     * The result is EAGER (the shared base frame is pinned for the call,
-    * as [[Pinned]] states; the r13 ScaleProbe winsorize axis measures the whole op scan-tracking
-    * across 10× rows, 1.62→2.53 s GC-fenced, so unlike tf-idf the pin is
-    * justified here: the base frame feeds FOUR branches, not two).
+    * as [[Pinned]] states; a since-retired r13 replication probe measured
+    * the whole op scan-tracking across 10× rows, 1.62→2.53 s GC-fenced, so
+    * unlike tf-idf the pin is justified here: the base frame feeds FOUR
+    * branches, not two).
     * Output per group: `n`, `k`, `lo_micro`, `hi_micro`, `wsum_micro`,
     * `wmean_micro`. */
   def winsorizedMean(df: DataFrame, groupCol: String, valueCol: String,

@@ -4,9 +4,10 @@ import java.util.concurrent.ConcurrentLinkedQueue
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.ListenerBusAccess
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.SparkPrivate
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerTaskEnd}
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.scalatest.{Args, BeforeAndAfterAll, Status}
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.operators.StandingIndex
@@ -28,11 +29,31 @@ object SparkTestBase {
   }
 }
 
-trait SparkTestBase extends AnyFunSuite {
+trait SparkTestBase extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark: SparkSession = {
     val s = SparkTestBase.spark
     s.sparkContext.setLogLevel("ERROR")
     s
+  }
+
+  /** The leak gate: once the suite and its own `afterAll` are done, no RDD
+    * the suite persisted may still be persisted. Local checkpoints are
+    * exempt: they hold an eager result's own blocks, not a pin. A suite
+    * that overrides `afterAll` (or mixes in BeforeAndAfterAll again) runs
+    * inside this check, which wraps the whole suite. */
+  override def run(testName: Option[String], args: Args): Status = {
+    val before = pinned
+    val status = super.run(testName, args)
+    status.waitUntilCompleted()
+    val leaked = spark.sparkContext.getPersistentRDDs.toSeq
+      .filter { case (id, rdd) => !before(id) && !SparkPrivate.locallyCheckpointed(rdd) }
+      .sortBy(_._1)
+    if (leaked.nonEmpty) {
+      leaked.foreach(_._2.unpersist(blocking = false)) // the next suite starts clean
+      throw new IllegalStateException(s"$suiteName left ${leaked.size} RDDs persisted:\n" +
+        leaked.map { case (_, rdd) => s"  $rdd (${rdd.getStorageLevel.description})" }.mkString("\n"))
+    }
+    status
   }
 
   /** Rows as a sorted set of plain Seqs — order-insensitive comparison. */
@@ -78,17 +99,34 @@ trait SparkTestBase extends AnyFunSuite {
   /** The SQL execution id of each Spark job started while `f` ran, in start
     * order — None for a job outside any SQL execution (an RDD action). */
   def jobExecutions(f: => Unit): Seq[Option[String]] = {
-    val sc = spark.sparkContext
     val jobs = new ConcurrentLinkedQueue[Option[String]]
-    val listener = new SparkListener {
+    listening(new SparkListener {
       override def onJobStart(e: SparkListenerJobStart): Unit = {
         jobs.add(Option(e.properties).flatMap(p => Option(p.getProperty("spark.sql.execution.id"))))
         ()
       }
-    }
-    ListenerBusAccess.drain(sc) // earlier jobs' events must not reach it
-    sc.addSparkListener(listener)
-    try { f; ListenerBusAccess.drain(sc) } finally sc.removeSparkListener(listener)
+    })(f)
     jobs.asScala.toSeq
+  }
+
+  /** The Spark jobs started and the shuffle bytes written while `f` ran. */
+  def jobsAndShuffleBytes(f: => Unit): (Int, Long) = {
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val bytes = new java.util.concurrent.atomic.AtomicLong
+    listening(new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = { jobs.incrementAndGet(); () }
+      override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
+        Option(e.taskMetrics).foreach(m => bytes.addAndGet(m.shuffleWriteMetrics.bytesWritten))
+    })(f)
+    (jobs.get, bytes.get)
+  }
+
+  /** Run `f` with `listener` registered, seeing exactly the events of the
+    * jobs `f` starts. */
+  private def listening(listener: SparkListener)(f: => Unit): Unit = {
+    val sc = spark.sparkContext
+    SparkPrivate.drain(sc) // earlier jobs' events must not reach it
+    sc.addSparkListener(listener)
+    try { f; SparkPrivate.drain(sc) } finally sc.removeSparkListener(listener)
   }
 }

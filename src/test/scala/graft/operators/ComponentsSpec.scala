@@ -96,8 +96,9 @@ class ComponentsSpec extends SparkTestBase {
     val labels = Dedup.connectedComponents(pairs, docs, "doc_id")
     val path = java.nio.file.Files.createTempDirectory("graft_cclbl_spec").toString
     Dedup.saveComponentLabels(labels, path)
-    val loaded = Dedup.loadComponentLabels(spark, path)
-      .orderBy("id").collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
+    val pinnedLabels = Dedup.loadComponentLabels(spark, path) // pinned: the caller unpersists
+    val loaded = try pinnedLabels.orderBy("id").collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
+      finally pinnedLabels.unpersist(false)
     assert(loaded == Seq((1L, 1L), (2L, 1L), (3L, 3L)))
     // a missing store names the problem instead of an AnalysisException
     val err = intercept[IllegalArgumentException] {

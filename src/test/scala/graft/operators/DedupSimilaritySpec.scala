@@ -1653,18 +1653,35 @@ class DedupSimilaritySpec extends SparkTestBase {
     finally one.release()
   }
 
-  test("a bad rerank fails before ivfPqTopK or pqTopK runs a job or pins anything") {
+  test("bad arguments fail before any job or pin") {
     val vecs = vecRows(0L until 20L)
-    val runs = Seq[(String, () => Any)](
-      "ivfPqTopK" -> (() => Similarity.ivfPqTopK(vecs, vecs, "vec_id", "embedding", k = 5,
+    def ivf(k: Int = 5, nCells: Int = 2, nprobe: Int = 0) =
+      Similarity.ivfTopK(vecs, vecs, "vec_id", "embedding", k, nCells, nprobe)
+    def lsh(k: Int = 5, nTables: Int = 4, signBits: Int = 0) =
+      Similarity.bucketedTopK(vecs, vecs, "vec_id", "embedding", k, nTables, signBits)
+    // (call, a word of its message, the call)
+    val runs = Seq[(String, String, () => Any)](
+      ("ivfPqTopK", "rerank", () => Similarity.ivfPqTopK(vecs, vecs, "vec_id", "embedding", k = 5,
         nCells = 2, m = 3, kCents = 4, rerank = 3)),
-      "pqTopK" -> (() => Similarity.pqTopK(vecs, vecs, "vec_id", "embedding", k = 5,
-        m = 3, kCents = 4, rerank = 3)))
-    for ((name, run) <- runs) {
+      ("pqTopK", "rerank", () => Similarity.pqTopK(vecs, vecs, "vec_id", "embedding", k = 5,
+        m = 3, kCents = 4, rerank = 3)),
+      ("ivfTopK k = 0", "k must", () => ivf(k = 0)),
+      ("ivfTopK nCells < 0", "nCells", () => ivf(nCells = -1)),
+      ("ivfTopK nprobe < 0", "nprobe", () => ivf(nprobe = -2)),
+      ("bucketedTopK k = 0", "k must", () => lsh(k = 0)),
+      ("bucketedTopK nTables = 0", "nTables", () => lsh(nTables = 0)),
+      ("bucketedTopK signBits < 0", "signBits", () => lsh(signBits = -1)),
+      ("ngramJaccardPairs threshold = 0", "threshold",
+        () => Dedup.ngramJaccardPairs(docs, "doc_id", "text", threshold = 0.0)),
+      ("minhashLshPairs threshold > 1", "threshold",
+        () => Dedup.minhashLshPairs(docs, "doc_id", "text", threshold = 1.5)),
+      ("minhashLshPairsBetween threshold NaN", "threshold",
+        () => Dedup.minhashLshPairsBetween(docs, docs, "doc_id", "text", threshold = Double.NaN)))
+    for ((name, word, run) <- runs) {
       val before = pinned
       var err: IllegalArgumentException = null
       val jobs = jobsRun { err = intercept[IllegalArgumentException](run()) }
-      assert(err.getMessage.contains("rerank"), s"$name: ${err.getMessage}")
+      assert(err.getMessage.contains(word), s"$name: ${err.getMessage}")
       assert(jobs == 0, name)
       assert(pinned == before, name)
     }

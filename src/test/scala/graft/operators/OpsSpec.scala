@@ -82,6 +82,22 @@ class OpsSpec extends SparkTestBase {
     assert(rowList(out) == Seq(Seq("Falcon", 380.0), Seq("Falcon", 370.0)))
   }
 
+  test("sortSmall: runs above an exchange, fails on a broadcast join straight over a parquet scan") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_sortsmall").toString
+    animals.write.parquet(s"$dir/animals")
+    val scan = spark.read.parquet(s"$dir/animals")
+    val sizes = Seq(("Falcon", "large"), ("Parrot", "small"), ("Goose", "large")).toDF("animal", "size")
+    // aggregate-bounded: the coalesce sits above the aggregate's exchange
+    val agg = scan.groupBy("animal").agg(max("max_speed").as("top"))
+    assert(Ops.sortSmall(agg, col("animal")).collect().map(_.getString(0)).toSeq ==
+      Seq("Falcon", "Goose", "Parrot"))
+    // a broadcast join has no exchange on its streamed side, so the coalesce
+    // would read the whole scan in one task
+    val joined = scan.join(broadcast(sizes), Seq("animal"))
+    val err = intercept[IllegalArgumentException](Ops.sortSmall(joined, col("animal")))
+    assert(err.getMessage.contains("Scan parquet"), err.getMessage)
+  }
+
   test("sample: seeded, reproducible, subset of input") {
     val big = spark.range(1000).toDF("id")
     val a = Ops.sample(big, 0.1, seed = 7).collect().map(_.getLong(0)).toSet
