@@ -176,7 +176,7 @@ private[graft] object QueriesText extends OracleSqlHelpers {
     // in id-hash order — the same md5-derived hash q56 re-derives, so the
     // selected set is a pure function of the data on any engine
     "q85_stratified_sample" -> ((s, d) => {
-      Ops.sampleNPerGroup(Tables.documents(s, d), Seq("lang", "source"), "doc_id", 5)
+      Ops.sampleKPerGroup(Tables.documents(s, d), Seq("lang", "source"), "doc_id", 5)
         .select("doc_id", "lang", "source")
         .orderBy("doc_id")
     }),

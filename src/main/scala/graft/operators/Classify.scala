@@ -86,6 +86,14 @@ object Classify {
     * normalization still classify (prior-only evidence). Ties break to the
     * lexicographically smallest label. */
   def nbPredict(model: NbModel, docs: DataFrame, idCol: String,
+      textCol: String): DataFrame =
+    rankedLabels(model, docs, idCol, textCol)
+      .filter(col("rn") === 1)
+      .select(col(idCol), col("label").as("pred_label"), col("score_micro"))
+
+  /** Every (doc, label) score with its rank `rn` among the doc's labels,
+    * by (score_micro DESC, label ASC). */
+  private def rankedLabels(model: NbModel, docs: DataFrame, idCol: String,
       textCol: String): DataFrame = {
     val t = toks(docs, Seq(idCol), textCol)
     // per-(doc, label) numerator over tokens SEEN for that label —
@@ -105,8 +113,6 @@ object Classify {
     val w = Window.partitionBy(col(idCol))
       .orderBy(col("score_micro").desc, col("label"))
     scored.withColumn("rn", row_number().over(w))
-      .filter(col("rn") === 1)
-      .select(col(idCol), col("label").as("pred_label"), col("score_micro"))
   }
 
   /** [[nbPredict]] plus the DECISION MARGIN — the exact micro-nat gap
@@ -117,23 +123,8 @@ object Classify {
     * (id, pred_label, score_micro, margin_micro). Same scale shape as
     * [[nbPredict]] — the window keeps two rows per doc instead of one. */
   def nbPredictTop2(model: NbModel, docs: DataFrame, idCol: String,
-      textCol: String): DataFrame = {
-    val t = toks(docs, Seq(idCol), textCol)
-    val overlap = t.join(model.tokenLik, Seq("token"))
-      .groupBy(col(idCol), col("label"))
-      .agg(sum(col("lik_micro")).as("num_micro"))
-    val nTok = docs.select(col(idCol), col(textCol))
-      .withColumn("n_tok", size(Text.tokens(Text.normalize(col(textCol)))))
-      .select(col(idCol), when(col("n_tok") > 0, col("n_tok")).otherwise(lit(0))
-        .cast(LongType).as("n_tok"))
-    val scored = nTok.crossJoin(broadcast(model.classStats))
-      .join(overlap, Seq(idCol, "label"), "left")
-      .select(col(idCol), col("label"),
-        (col("prior_micro") + coalesce(col("num_micro"), lit(0L)) -
-          col("n_tok") * col("denom_micro")).as("score_micro"))
-    val w = Window.partitionBy(col(idCol))
-      .orderBy(col("score_micro").desc, col("label"))
-    scored.withColumn("rn", row_number().over(w))
+      textCol: String): DataFrame =
+    rankedLabels(model, docs, idCol, textCol)
       .filter(col("rn") <= 2)
       .groupBy(col(idCol))
       .agg(
@@ -142,7 +133,6 @@ object Classify {
         max(when(col("rn") === 2, col("score_micro"))).as("second_micro"))
       .select(col(idCol), col("pred_label"), col("score_micro"),
         (col("score_micro") - col("second_micro")).as("margin_micro"))
-  }
 
   /** Parquet persistence for the standing-classifier shape (train once,
     * classify every ingest batch): two tables, `token_lik` and

@@ -481,17 +481,13 @@ object Dedup {
   def saveComponentLabels(labels: DataFrame, path: String): Unit =
     IndexFiles.save(path, Seq("labels" -> labels.select(col("id"), col("component"))))
 
-  /** Load a stored component-label table, pinned — split/audit/fold
-    * consumers typically read it several times; the caller unpersists it
-    * when done. Fails fast with a clear message when the store dir is
-    * missing. */
+  /** Load a stored component-label table, as a lazy frame over the stored
+    * parquet (nothing is pinned: a consumer that reads it several times
+    * pins it itself). Fails fast with a clear message when the store dir
+    * is missing. */
   def loadComponentLabels(spark: org.apache.spark.sql.SparkSession,
-      path: String): DataFrame = {
-    val labels = IndexFiles.open(spark, path, "ComponentLabels", Seq("labels"))("labels")
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    try { Pinned.batches(labels).count(); labels } // one job materializes it
-    catch { case e: Throwable => labels.unpersist(false); throw e }
-  }
+      path: String): DataFrame =
+    IndexFiles.open(spark, path, "ComponentLabels", Seq("labels"))("labels")
 
   /** [[minhashLshPairs]] over a prebuilt [[MinhashIndex]] — the index is
     * NOT released (the caller owns it and may reuse it, q109-style). */

@@ -362,12 +362,17 @@ object Joins {
       explode(deletionSignatures(col(leftStr), maxDist)).as("fz_sig"))
     val rs = right.select(col(rightId).as("id_r"), col(rightStr).as("str_r"),
       explode(deletionSignatures(col(rightStr), maxDist)).as("fz_sig"))
-    ls.join(rs, Seq("fz_sig"))
-      .select(col("id_l"), col("id_r"), col("str_l"), col("str_r"))
-      .distinct()
+    verifiedMatches(ls.join(rs, Seq("fz_sig"))
+      .select(col("id_l"), col("id_r"), col("str_l"), col("str_r")), maxDist)
+  }
+
+  /** The distinct (id_l, id_r, str_l, str_r) candidate pairs within edit
+    * distance `maxDist`, with their distance: the exact `levenshtein`
+    * verify runs once per candidate pair, not once per shared signature. */
+  private def verifiedMatches(candidates: DataFrame, maxDist: Int): DataFrame =
+    candidates.distinct()
       .withColumn("dist", levenshtein(col("str_l"), col("str_r")))
       .filter(col("dist") <= lit(maxDist))
-  }
 
   /** A standing FastSS fuzzy-match dictionary (r9 — the approximate-key
     * sibling of [[Search.Bm25Index]], completing the stored-index story for
@@ -412,12 +417,9 @@ object Joins {
       probeStr: String): DataFrame = {
     val ps = probe.select(col(probeId).as("id_l"), col(probeStr).as("str_l"),
       explode(deletionSignatures(col(probeStr), ix.maxDist)).as("fz_sig"))
-    ps.join(ix.signatures, Seq("fz_sig"))
+    verifiedMatches(ps.join(ix.signatures, Seq("fz_sig"))
       .select(col("id_l"), col("fz_id").as("id_r"),
-        col("str_l"), col("fz_s").as("str_r"))
-      .distinct()
-      .withColumn("dist", levenshtein(col("str_l"), col("str_r")))
-      .filter(col("dist") <= lit(ix.maxDist))
+        col("str_l"), col("fz_s").as("str_r")), ix.maxDist)
   }
 
   /** Fold an ingest batch INTO the dictionary: the batch's signature rows

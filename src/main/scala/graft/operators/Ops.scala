@@ -650,29 +650,6 @@ object Ops {
     df.withColumn(shardCol, pmod(idHash60(col(idCol)), lit(nShards.toLong)))
   }
 
-  /** Deterministic stratified sample: exactly min(n, |group|) rows from
-    * each group, taken in [[idHash60]] order — an unbiased,
-    * engine-independent shuffle of each group (the id tie-break makes the
-    * order total, so the selected SET is a pure function of the data).
-    * The per-strata counterpart of [[sampleByHash]]'s global band: balanced
-    * eval slices, per-language/per-source audit samples, debug extracts
-    * that stay stable run over run. One shuffle (the per-group window);
-    * no group ever needs more than n rows of window state beyond the sort,
-    * and rows, not groups, bound the work — skewed strata cost their row
-    * count, never |group|². */
-  def sampleNPerGroup(df: DataFrame, groupCols: Seq[String], idCol: String,
-      n: Int): DataFrame = {
-    require(n > 0, "n must be positive")
-    require(groupCols.nonEmpty, "need at least one group column")
-    require(!df.columns.contains("__graft_rn"),
-      "sampleNPerGroup reserves the internal column name __graft_rn; rename the input column")
-    val w = Window.partitionBy(groupCols.map(col): _*)
-      .orderBy(idHash60(col(idCol)), col(idCol))
-    df.withColumn("__graft_rn", row_number().over(w))
-      .filter(col("__graft_rn") <= n)
-      .drop("__graft_rn")
-  }
-
   /** Deterministic weighted sampling without replacement (Efraimidis &
     * Spirakis 2006 "A-ES": keep the k rows with the largest u^(1/w)): the
     * uniform draw is the reproducible u = ([[idHash60]](id)+1)/2^60 ∈ (0,1]
@@ -700,7 +677,7 @@ object Ops {
   }
 
   /** Per-stratum [[sampleWeighted]]: the n best A-ES keys within EACH group
-    * — weighted-by-importance where [[sampleNPerGroup]] is uniform (e.g.
+    * — weighted-by-importance where [[sampleKPerGroup]] is uniform (e.g.
     * "5 docs per language, longer/higher-quality ones proportionally more
     * likely"). Same determinism contract; one keyed window, no global
     * sort, rank state ≤ n per group. */

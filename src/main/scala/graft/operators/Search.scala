@@ -4,7 +4,6 @@ import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
-import org.apache.spark.storage.StorageLevel
 
 import graft.functions.Text
 
@@ -198,20 +197,19 @@ object Search {
     * latter two from the document rows' null-token group). Returns
     * (segment, N, TT). */
   private def seal(segRows: DataFrame): (Segment, Long, Long) = {
-    segRows.persist(StorageLevel.MEMORY_AND_DISK)
+    val rowsPin = Pin(segRows)
     val (tok, tf) = (segRows.schema.fieldIndex("token"), segRows.schema.fieldIndex("tf"))
-    val perToken = Pinned.cachedRows(segRows)
+    val perToken = rowsPin.cachedRows
       .map(r => (if (r.isNullAt(tok)) null else r.getUTF8String(tok).toString, (1L, r.getLong(tf))))
       .reduceByKey((a, b) => (a._1 + b._1, a._2 + b._2))
       .map { case (t, (df, cf)) => Row(t, df, cf) }
-    val dfs = segRows.sparkSession.createDataFrame(perToken, termDfSchema)
-      .persist(StorageLevel.MEMORY_AND_DISK)
+    val dfsPin = Pin(segRows.sparkSession.createDataFrame(perToken, termDfSchema))
     try {
-      val (rows, n, tt) = Pinned.cachedRows(dfs)
+      val (rows, n, tt) = dfsPin.cachedRows
         .map(r => if (r.isNullAt(0)) (r.getLong(1), r.getLong(1), r.getLong(2)) else (r.getLong(1), 0L, 0L))
         .fold((0L, 0L, 0L)) { case ((a, b, c), (x, y, z)) => (a + x, b + y, c + z) }
-      (new Segment(segRows, rows, Pinned.batches(segRows).getNumPartitions, Seq(dfs)), n, tt)
-    } catch { case e: Throwable => dfs.unpersist(false); segRows.unpersist(false); throw e }
+      (Segment.owning(rowsPin, rows, Seq(dfsPin)), n, tt)
+    } catch { case e: Throwable => dfsPin.release(); rowsPin.release(); throw e }
   }
 
   /** Build a [[Bm25Index]] of one segment: one tokenize pass feeds one

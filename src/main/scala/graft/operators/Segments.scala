@@ -4,9 +4,9 @@ import java.util.concurrent.atomic.{AtomicBoolean, AtomicInteger}
 
 import org.apache.hadoop.fs.Path
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, GraftPins, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.classic.ClassicConversions.castToImpl
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.columnar.CachedBatch
 import org.apache.spark.sql.execution.columnar.InMemoryRelation
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
@@ -22,16 +22,10 @@ import org.apache.spark.storage.StorageLevel
   *  - a standing index's pins are its [[Segment]]s, released through
   *    [[StandingIndex.release]].
   *
-  * No operator persists or unpersists a frame itself. Three sites do, each
-  * for a reason the two forms above do not cover (`PinDisciplineSpec`
-  * keeps this list and fails on any other):
-  *
-  *  - `Dedup.foldComponents` pins each round's edge RDD and releases the
-  *    round before it, because the loop carries one live round at a time;
-  *  - `Search.seal` builds a segment's two caches in one job (its rows on
-  *    the map side, its (token, df, cf) frame on the reduce side);
-  *  - `Dedup.loadComponentLabels` returns a pinned frame its caller owns
-  *    and unpersists. */
+  * Every pin is a [[Pin]], which owns its cache, so releasing one pin never
+  * un-pins another. No operator persists or unpersists a frame itself; the
+  * one site that persists by hand (`PinDisciplineSpec` fails on any
+  * other), `Dedup.foldComponents`, carries one live round RDD at a time. */
 private[graft] object Pinned {
 
   /** Run `body` with a [[Scope]] to pin through. Every frame pinned in it
@@ -40,74 +34,95 @@ private[graft] object Pinned {
     * materialize it first (a checkpoint, or a segment pinned from it). */
   def scoped[T](body: Scope => T): T = {
     val pins = new Scope
-    try body(pins) finally pins.held.foreach(_.unpersist(false))
+    try body(pins) finally pins.held.foreach(_.release())
   }
 
   /** The pins of one [[scoped]] call. */
   final class Scope private[Pinned] {
-    private[Pinned] var held = List.empty[DataFrame]
+    private[Pinned] var held = List.empty[Pin]
 
-    /** Persist + force-materialize `df` until the scope ends: after this,
-      * every later consumer — including both sides of a self-join — reads
-      * the cached blocks instead of recomputing the plan (lazy persist
-      * alone would let the self-join's two concurrently-scheduled map
-      * stages each compute the pipeline). */
+    /** Pin + force-materialize `df` until the scope ends, returning the
+      * pinned frame: every later consumer of it — including both sides of
+      * a self-join — reads the cached blocks instead of recomputing the
+      * plan (a lazy cache alone would let the self-join's two
+      * concurrently-scheduled map stages each compute the pipeline). */
     def apply(df: DataFrame): DataFrame = counted(df)._1
 
     /** [[apply]], also returning the row count of the job that
       * materialized it — callers that need the size read it from here
       * instead of paying a second count over the cache. */
-    def counted(df: DataFrame): (DataFrame, Long) = { val pin = pinRows(df); held ::= df; pin }
+    def counted(df: DataFrame): (DataFrame, Long) = {
+      val (pin, n) = Pin.counted(df); held ::= pin; (pin.frame, n)
+    }
 
-    /** Release `df` before the scope ends, once the frames pinned from it
-      * carry all the rest of the call needs. */
-    def release(df: DataFrame): Unit = { held = held.filterNot(_ eq df); df.unpersist(false) }
+    /** Release the pinned frame `df` before the scope ends, once the
+      * frames pinned from it carry all the rest of the call needs. */
+    def release(df: DataFrame): Unit = {
+      val (gone, kept) = held.partition(_.frame eq df)
+      held = kept; gone.foreach(_.release())
+    }
+  }
+}
+
+/** An owned pin: a cache relation built as `Dataset.persist` builds one
+  * but registered in no CacheManager, so no other frame, however equal its
+  * plan, reads, shares or releases it. `frame` is the pinned rows, planned
+  * directly over the relation; the first job that reads them builds it. */
+private[operators] final class Pin private (relation: InMemoryRelation, val frame: DataFrame) {
+
+  /** The cached batches. Reaching them runs the pinned plan's exchanges
+    * (their stages), not the batches themselves. */
+  def batches: RDD[CachedBatch] = relation.cacheBuilder.cachedColumnBuffers
+
+  /** The rows as an RDD over the cached batches. An RDD action over it
+    * builds the batches it reads: ONE job after the plan's own exchanges.
+    * A fresh query over the cache would plan it as an adaptive-execution
+    * stage of its own and pay a separate job to materialize it first; a
+    * DataFrame aggregate would add an exchange. */
+  def cachedRows: RDD[InternalRow] =
+    relation.cacheBuilder.serializer.convertCachedBatchToInternalRow(
+      batches, relation.output, relation.output, SQLConf.get)
+
+  /** Drop the cache (frames planned over it recompute their plan). */
+  def release(): Unit = relation.cacheBuilder.clearCache(blocking = false)
+}
+
+private[operators] object Pin {
+
+  /** Pin `df` without materializing it. */
+  def apply(df: DataFrame): Pin = {
+    val relation = GraftPins.relation(df, StorageLevel.MEMORY_AND_DISK)
+    new Pin(relation, GraftPins.ofRows(df.sparkSession, relation))
   }
 
-  /** Persist `df` and count its rows, which materializes it. The count
-    * sums the row counts of the cache's own batches, so it is ONE job
-    * after the frame's exchanges: it builds the batches as it counts them,
-    * and reads no column. A count that fails releases the cache it
-    * started. */
-  private[operators] def pinRows(df: DataFrame): (DataFrame, Long) = {
-    df.persist(StorageLevel.MEMORY_AND_DISK)
-    try (df, batches(df).map(_.numRows.toLong).fold(0L)(_ + _))
-    catch { case e: Throwable => df.unpersist(false); throw e }
+  /** Pin `df` and count its rows, which materializes it. The count sums
+    * the row counts of the cache's own batches, so it is ONE job after the
+    * frame's exchanges: it builds the batches as it counts them, and reads
+    * no column. A count that fails releases the cache it started. */
+  def counted(df: DataFrame): (Pin, Long) = {
+    val pin = Pin(df)
+    try (pin, pin.batches.map(_.numRows.toLong).fold(0L)(_ + _))
+    catch { case e: Throwable => pin.release(); throw e }
   }
-
-  /** The rows of a persisted frame as an RDD over its cached batches. An
-    * RDD action over it builds the batches it reads: ONE job after the
-    * frame's own exchanges. A fresh query over the cache would plan it as
-    * an adaptive-execution stage of its own and pay a separate job to
-    * materialize it first; a DataFrame aggregate would add an exchange. */
-  def cachedRows(df: DataFrame): RDD[InternalRow] = {
-    val rel = relation(df)
-    rel.cacheBuilder.serializer.convertCachedBatchToInternalRow(
-      rel.cacheBuilder.cachedColumnBuffers, rel.output, rel.output, SQLConf.get)
-  }
-
-  /** The cached batches of a persisted frame. Reaching them runs the
-    * frame's exchanges (their stages), not the batches themselves. */
-  def batches(df: DataFrame): RDD[CachedBatch] = relation(df).cacheBuilder.cachedColumnBuffers
-
-  private def relation(df: DataFrame): InMemoryRelation =
-    df.sparkSession.sharedState.cacheManager.lookupCachedData(castToImpl(df))
-      .getOrElse(throw new IllegalStateException("the frame is not persisted"))
-      .cachedRepresentation
 }
 
 /** One immutable, pinned part of a standing index: its frame, the row
   * count read by the action that materialized it, its partition count,
-  * and any small frames derived from it and pinned beside it (`side`).
+  * and the [[Pin]]s it owns — its rows' own, then those of any small frames
+  * derived from them and pinned beside them (`side`). An empty segment
+  * owns no pin.
   *
   * Segments are shared between index generations and reference-counted:
   * a new segment holds one reference, every index that lists it holds one,
-  * and the last [[release]] unpersists its frames. So an index extended
-  * into a new one can be released before or after the new one, in either
-  * order, without either losing its data. */
+  * and the last [[release]] releases its pins. So an index extended into a
+  * new one can be released before or after the new one, in either order,
+  * without either losing its data. */
 final class Segment private[operators] (
-    val frame: DataFrame, val rows: Long, val partitions: Int, val side: Seq[DataFrame]) {
+    val frame: DataFrame, val rows: Long, val partitions: Int, pins: Seq[Pin]) {
   private val refs = new AtomicInteger(1)
+
+  /** The small frames pinned beside the segment's rows. */
+  def side: Seq[DataFrame] = pins.drop(1).map(_.frame)
 
   def retain(): Segment = {
     require(refs.getAndIncrement() > 0, "segment already released")
@@ -115,12 +130,14 @@ final class Segment private[operators] (
   }
 
   def release(): Unit =
-    if (refs.decrementAndGet() == 0) (frame +: side).foreach(_.unpersist(false))
+    if (refs.decrementAndGet() == 0) pins.foreach(_.release())
 }
 
 /** A standing index: the [[Segment]]s it lists, holding one reference to
   * each. Every standing index type (BM25, IVF-PQ, MinHash, embedding,
-  * fuzzy) releases through this one [[release]]. */
+  * fuzzy) releases through this one [[release]]. A segment's pins are its
+  * own, so releasing one index never un-pins another, whatever plans
+  * their segments share. */
 trait StandingIndex {
   def segments: Vector[Segment]
 
@@ -136,10 +153,12 @@ trait StandingIndex {
 private[operators] object Segment {
 
   /** Pin `df` as one segment with no side frames. */
-  def pin(df: DataFrame): Segment = {
-    val (frame, rows) = Pinned.pinRows(df)
-    new Segment(frame, rows, Pinned.batches(frame).getNumPartitions, Nil)
-  }
+  def pin(df: DataFrame): Segment = { val (pin, rows) = Pin.counted(df); owning(pin, rows, Nil) }
+
+  /** The segment of the materialized pin `rows` holding `n` rows, with the
+    * `side` pins beside it. Takes over every pin. */
+  def owning(rows: Pin, n: Long, side: Seq[Pin]): Segment =
+    new Segment(rows.frame, n, rows.batches.getNumPartitions, rows +: side)
 
   /** The segment list of an index extended by `seg`: the old list (each
     * segment retained, so the old index stays valid) plus `seg`, compacted
@@ -190,15 +209,19 @@ private[operators] object IndexFiles {
     * any point leaves no marker, and [[open]] rejects the directory instead
     * of reading a torn or mixed-generation index. A save whose parts read
     * from `path` itself is refused before anything is deleted (Spark would
-    * refuse the overwrite only after the marker is gone). */
+    * refuse the overwrite only after the marker is gone). A pinned frame's
+    * plan is its pin's relation, so the check reads through each relation
+    * to the plan it caches. */
   def save(path: String, parts: Seq[(String, DataFrame)]): Unit = {
     val conf = parts.last._2.sparkSession.sparkContext.hadoopConfiguration
     val dir = new Path(path)
     val fs = dir.getFileSystem(conf)
     val root = fs.makeQualified(dir).toString
-    val reads = parts.flatMap(_._2.queryExecution.analyzed.collect {
-      case LogicalRelation(h: HadoopFsRelation, _, _, _, _) => h.location.rootPaths.map(_.toString)
-    }.flatten)
+    def paths(plan: LogicalPlan): Seq[String] = plan.collect {
+      case LogicalRelation(h: HadoopFsRelation, _, _, _, _) => h.location.rootPaths.map(_.toString).toSeq
+      case r: InMemoryRelation => paths(r.cacheBuilder.logicalPlan)
+    }.flatten
+    val reads = parts.flatMap(p => paths(p._2.queryExecution.analyzed))
     require(!reads.exists(r => r == root || r.startsWith(root + "/")),
       s"cannot save an index over $path: it is read from there - save it elsewhere")
     fs.delete(new Path(s"$path/${parts.last._1}"), true)

@@ -28,13 +28,7 @@ object Sequences {
     * totals — never data-sized after the first agg. */
   def transitionCounts(events: DataFrame, keyCol: String, stateCol: String,
       tsCol: String, idCol: String): DataFrame = {
-    val w = Window.partitionBy(col(keyCol)).orderBy(col(tsCol), col(idCol))
-    val pairs = events
-      .filter(col(keyCol).isNotNull && col(stateCol).isNotNull)
-      .withColumn("__to", lead(col(stateCol), 1).over(w))
-      .filter(col("__to").isNotNull)
-      .groupBy(col(stateCol).as("from_state"), col("__to").as("to_state"))
-      .agg(count(lit(1)).as("n_trans"))
+    val pairs = successorPairs(events, keyCol, stateCol, tsCol, idCol)
     val totals = pairs.groupBy(col("from_state"))
       .agg(sum(col("n_trans")).as("row_total"))
     pairs.join(totals, Seq("from_state"))
@@ -43,9 +37,9 @@ object Sequences {
           .cast(LongType).as("p_micro"))
   }
 
-  /** Raw (from, to) successor pairs per key — [[transitionCounts]] without
-    * the normalization, reused by the incremental fold. `tsCol` must be an
-    * integer column (pre-convert timestamps with `unix_micros`). */
+  /** Raw (from, to) successor pairs per key — [[transitionCounts]] before
+    * its normalization, and what the incremental fold counts (whose `tsCol`
+    * must be an integer column: pre-convert timestamps with `unix_micros`). */
   private def successorPairs(events: DataFrame, keyCol: String,
       stateCol: String, tsCol: String, idCol: String): DataFrame = {
     val w = Window.partitionBy(col(keyCol)).orderBy(col(tsCol), col(idCol))
@@ -187,16 +181,7 @@ object Sequences {
     val agg = df.filter(col(periodCol).isNotNull && col(valueCol).isNotNull)
       .groupBy((partCols :+ periodCol).map(col): _*)
       .agg(sum(col(valueCol).cast(LongType)).as("value"))
-    val w = Window.partitionBy(partCols.map(col): _*).orderBy(col(periodCol))
-    def growth(l: Int, out: String) = {
-      val prev = lag(col("value"), l).over(w)
-      when(prev.isNotNull && prev =!= 0,
-        round((col("value") - prev).cast("double") / prev.cast("double") * 1e6)
-          .cast(LongType)).as(out)
-    }
-    agg.select((partCols.map(col) :+ col(periodCol) :+ col("value") :+
-      growth(lagShort, "growth_short_micro") :+
-      growth(lagLong, "growth_long_micro")): _*)
+    withGrowth(agg, periodCol, partCols, lagShort, lagLong)
   }
 
   /** CALENDAR-exact [[periodGrowth]] at month grain (VERDICT r11 missing
@@ -234,6 +219,12 @@ object Sequences {
         expr("interval '1' month"))).as(periodCol)): _*)
     val dense = spine.join(agg, (partCols :+ periodCol), "left")
       .withColumn("value", coalesce(col("value"), lit(0L)))
+    withGrowth(dense, periodCol, partCols, lagShort, lagLong)
+  }
+
+  /** The period rows with their two lagged growths, in micro-units. */
+  private def withGrowth(periods: DataFrame, periodCol: String, partCols: Seq[String],
+      lagShort: Int, lagLong: Int): DataFrame = {
     val w = Window.partitionBy(partCols.map(col): _*).orderBy(col(periodCol))
     def growth(l: Int, out: String) = {
       val prev = lag(col("value"), l).over(w)
@@ -241,7 +232,7 @@ object Sequences {
         round((col("value") - prev).cast("double") / prev.cast("double") * 1e6)
           .cast(LongType)).as(out)
     }
-    dense.select((partCols.map(col) :+ col(periodCol) :+ col("value") :+
+    periods.select((partCols.map(col) :+ col(periodCol) :+ col("value") :+
       growth(lagShort, "growth_short_micro") :+
       growth(lagLong, "growth_long_micro")): _*)
   }

@@ -164,12 +164,16 @@ object Similarity {
       .withColumn("nn", qdot(col("nv"), col("nv")))
     val q = queries.select(col(idCol).as("query_id"), quantize(col(vecCol), scale).as("qv"))
       .withColumn("qn", qdot(col("qv"), col("qv")))
-    val scored = c.join(broadcast(q), col("query_id") =!= col("nbr_id"))
-      .withColumn("cosine",
-        cosineOf(qdot(col("qv"), col("nv")), col("qn"), col("nn")))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cosine").desc, col("nbr_id"))
-    scored.withColumn("rank", row_number().over(w).cast("long"))
+    topKByCosine(c.join(broadcast(q), col("query_id") =!= col("nbr_id")), "nn", k)
+  }
+
+  /** The `k` best neighbours of each query by exact cosine (ties to the
+    * lower neighbour id) of (query_id, qv, qn, nbr_id, nv, `norm`) pairs,
+    * as (query_id, nbr_id, cosine, rank). */
+  private def topKByCosine(pairs: DataFrame, norm: String, k: Int): DataFrame = {
+    val w = Window.partitionBy(col("query_id")).orderBy(col("cosine").desc, col("nbr_id"))
+    pairs.withColumn("cosine", cosineOf(qdot(col("qv"), col("nv")), col("qn"), col(norm)))
+      .withColumn("rank", row_number().over(w).cast("long"))
       .filter(col("rank") <= k)
       .select("query_id", "nbr_id", "cosine", "rank")
   }
@@ -210,14 +214,7 @@ object Similarity {
         val cand = cb.join(broadcast(qb), Seq("t", "bucket"))
           .filter(col("query_id") =!= col("nbr_id"))
           .select("query_id", "nbr_id").distinct()
-        val scored = cand.join(c, Seq("nbr_id")).join(broadcast(q), Seq("query_id"))
-          .withColumn("cosine",
-            cosineOf(qdot(col("qv"), col("nv")), col("qn"), col("nn")))
-        val w = Window.partitionBy(col("query_id"))
-          .orderBy(col("cosine").desc, col("nbr_id"))
-        scored.withColumn("rank", row_number().over(w).cast("long"))
-          .filter(col("rank") <= k)
-          .select("query_id", "nbr_id", "cosine", "rank")
+        topKByCosine(cand.join(c, Seq("nbr_id")).join(broadcast(q), Seq("query_id")), "nn", k)
           .localCheckpoint(true)
       }
     }
@@ -347,15 +344,8 @@ object Similarity {
           .withColumn("cell", explode(Kernels.ivfProbe(col("qv"), col("qn"), cents, probes)))
         // corpus-side assignment is the argmin projection over the pinned
         // cache — the old agg-exchange + join-back pair is gone (r15)
-        val scored = withCell(c, "nv", "vv", cents).join(broadcast(qAsg), Seq("cell"))
-          .filter(col("query_id") =!= col("nbr_id"))
-          .withColumn("cosine",
-            cosineOf(qdot(col("qv"), col("nv")), col("qn"), col("vv")))
-        val w = Window.partitionBy(col("query_id"))
-          .orderBy(col("cosine").desc, col("nbr_id"))
-        scored.withColumn("rank", row_number().over(w).cast("long"))
-          .filter(col("rank") <= k)
-          .select("query_id", "nbr_id", "cosine", "rank")
+        topKByCosine(withCell(c, "nv", "vv", cents).join(broadcast(qAsg), Seq("cell"))
+          .filter(col("query_id") =!= col("nbr_id")), "vv", k)
           .localCheckpoint(true)
       }
     }
@@ -889,16 +879,9 @@ object Similarity {
       threshold: Double, maxDf: Long): DataFrame = {
     require(maxDf > 0, "maxDf must be positive")
     require(threshold >= 0, "threshold must be non-negative")
-    // The term explode is the one CPU-heavy NARROW stage (regex shingling
-    // runs before any exchange, so it inherits the INPUT's parallelism) —
-    // a small corpus read as one parquet split would shingle on one core.
-    // Spread it only when the input has fewer splits than the cluster has
-    // slots; at 100 TB the scan already has thousands of splits and this
-    // is a no-op (never shuffle full text at scale for free).
-    val slots = docs.sparkSession.sparkContext.defaultParallelism
-    val spread = if (docs.rdd.getNumPartitions < slots) docs.repartition(slots) else docs
+    // the term explode is the one CPU-heavy narrow stage: spread a narrow input
     Pinned.scoped { pin =>
-      val tf = pin(spread.select(col(idCol).as("doc"), explode(termsCol).as("term"))
+      val tf = pin(Par.spread(docs).select(col(idCol).as("doc"), explode(termsCol).as("term"))
         .select(col("doc"), xxhash64(col("term")).as("h"))
         .groupBy("doc", "h").agg(count(lit(1)).as("tf")))
       // df gate: one extra hash-agg over the (already-shuffled) postings;

@@ -120,7 +120,7 @@ class DeterminismSpec extends SparkTestBase {
 
   test("stratified sample, quantile bins, percentile, mode: identical at 1 vs 7 partitions") {
     val d = (0L until 300L).map(i => (i, s"g${i % 4}", i % 23)).toDF("id", "g", "v")
-    def strat(p: Int) = rowSet(Ops.sampleNPerGroup(d.repartition(p), Seq("g"), "id", 9))
+    def strat(p: Int) = rowSet(Ops.sampleKPerGroup(d.repartition(p), Seq("g"), "id", 9))
     assert(strat(1) == strat(7) && strat(1).size == 36)
     def bins(p: Int) = rowSet(operators.Profile.equalFrequencyBins(d.repartition(p), "v", 5))
     assert(bins(1) == bins(7))

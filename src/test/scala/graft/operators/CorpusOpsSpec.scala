@@ -21,26 +21,26 @@ class CorpusOpsSpec extends SparkTestBase {
     assert(a2 == a)
   }
 
-  test("sampleNPerGroup: exactly min(n, |group|) rows, selection is a pure function of the data") {
+  test("sampleKPerGroup: exactly min(k, |group|) rows, selection is a pure function of the data") {
     val df = (0L until 300L).map(i => (i, s"g${i % 3}")).toDF("id", "g")
       .union(Seq((300L, "tiny")).toDF("id", "g"))
-    val out = Ops.sampleNPerGroup(df, Seq("g"), "id", 7)
+    val out = Ops.sampleKPerGroup(df, Seq("g"), "id", 7)
     val sizes = out.groupBy("g").count().collect().map(r => r.getString(0) -> r.getLong(1)).toMap
     assert(sizes == Map("g0" -> 7L, "g1" -> 7L, "g2" -> 7L, "tiny" -> 1L))
     // partitioning-independent: the same SET comes back on any layout
     val a = out.select("id").collect().map(_.getLong(0)).toSet
-    val b = Ops.sampleNPerGroup(df.repartition(11), Seq("g"), "id", 7)
+    val b = Ops.sampleKPerGroup(df.repartition(11), Seq("g"), "id", 7)
       .select("id").collect().map(_.getLong(0)).toSet
     assert(a == b)
-    // the selection is the n smallest idHash60 values of each group
+    // the selection is the k smallest idHash60 values of each group
     val firstG0 = df.filter($"g" === "g0")
       .withColumn("h", Ops.idHash60($"id"))
       .orderBy($"h", $"id").limit(7).select("id").collect().map(_.getLong(0)).toSet
     assert(a.intersect(firstG0) == firstG0)
-    intercept[IllegalArgumentException](Ops.sampleNPerGroup(df, Seq("g"), "id", 0))
-    intercept[IllegalArgumentException](Ops.sampleNPerGroup(df, Nil, "id", 5))
+    intercept[IllegalArgumentException](Ops.sampleKPerGroup(df, Seq("g"), "id", 0))
+    intercept[IllegalArgumentException](Ops.sampleKPerGroup(df, Nil, "id", 5))
     intercept[IllegalArgumentException](
-      Ops.sampleNPerGroup(df.withColumn("__graft_rn", lit(1)), Seq("g"), "id", 5))
+      Ops.sampleKPerGroup(df.withColumn("__graft_rn", lit(1)), Seq("g"), "id", 5))
   }
 
   test("sampleByHash: band edges round-to-nearest ties-away, matching SQL CAST") {

@@ -1481,15 +1481,7 @@ class DedupSimilaritySpec extends SparkTestBase {
     }(Dedup.embeddingNearDupPairsIndexed(_, 0.9))
   }
 
-  test("job budgets: a non-compacting IVF-PQ extend ≤ 2 jobs; hyperplanes 0") {
-    val ix = Similarity.ivfPqIndex(vecRows(0L until 40L), "vec_id", "embedding",
-      nCells = 4, m = 3, kCents = 4)
-    val batch = vecRows(40L until 44L).localCheckpoint(true)
-    var ext: Similarity.IvfPqIndex = null
-    val extendJobs = jobsRun { ext = Similarity.extendIvfPqIndex(ix, batch, "vec_id", "embedding") }
-    assert(ext.segments.size == 2)
-    assert(extendJobs <= 2, s"$extendJobs jobs")
-    ext.release(); ix.release()
+  test("job budget: hyperplanes runs no job") {
     val planeJobs = jobsRun {
       Similarity.hyperplanes(spark, nTables = 16, bits = 8, dim = 64, seed = 42L).collect()
     }
@@ -1853,27 +1845,14 @@ class DedupSimilaritySpec extends SparkTestBase {
     assert(pinned == start)
   }
 
-  test("job budgets: a one-file parquet pin ≤ 2 jobs; embeddingIndex ≤ 3; the ingest gate ≤ 3") {
+  test("job budget: a one-file parquet pin ≤ 2 jobs") {
     val dir = java.nio.file.Files.createTempDirectory("graft_budget").toString
     vecRows(0L until 400L).coalesce(1).write.parquet(s"$dir/corpus")
-    vecRows(390L until 454L).coalesce(1).write.parquet(s"$dir/batch")
     val corpus = spark.read.parquet(s"$dir/corpus")
     var seg: Segment = null
     val pinJobs = jobsRun { seg = Segment.pin(Par.spread(corpus)) }
     seg.release()
     assert(pinJobs <= 2, s"pin: $pinJobs jobs")
-    var ix: Dedup.EmbeddingIndex = null
-    val buildJobs = jobsRun { ix = Dedup.embeddingIndex(corpus, "vec_id", "embedding", threshold = 0.9) }
-    assert(buildJobs <= 3, s"embeddingIndex: $buildJobs jobs")
-    val batch = spark.read.parquet(s"$dir/batch")
-    var kept: DataFrame = null
-    val gateJobs = jobsRun {
-      kept = graft.streaming.Streams.dropEmbeddingNearDupsBatch(batch, "vec_id", "embedding", ix, 0.9)
-        .localCheckpoint(true)
-    }
-    ix.release()
-    assert(kept.count() < 64L) // vecRows repeats every 23 ids: most batch vectors are corpus copies
-    assert(gateJobs <= 3, s"dropEmbeddingNearDupsBatch: $gateJobs jobs")
   }
 
 }

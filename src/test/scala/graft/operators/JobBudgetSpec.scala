@@ -158,11 +158,13 @@ class JobBudgetSpec extends SparkTestBase {
       val (docs, m) = (f.docs, merges); () => Bpe.encodeWords(docs, "text", m).collect() },
     Row("Dedup.minhashLshPairsBetweenIndexed", 2, 2, ingest = true, plans = Seq(noPairJoin)) { f =>
       val (d, s) = (f.delta, f.minhash); () => Dedup.minhashLshPairsBetweenIndexed(d, s, 0.8) },
+    Row("Bpe.train", 3, 3) { f =>
+      val docs = f.docs; () => Bpe.train(docs, "text", 8) },
     Row("Dedup.connectedComponents, one partition, + collect", 4, 4) { f =>
       val (p, docs) = (f.pairs, f.docs)
       () => Dedup.connectedComponents(p, docs, "doc_id").filter(col("id") =!= col("component")).collect() },
     // standing-index builds
-    Row("Dedup.minhashIndex", 1, 1) { f =>
+    Row("Dedup.minhashIndex", 2, 1) { f =>
       val docs = f.docs; () => Dedup.minhashIndex(docs, "doc_id", "text") },
     Row("Dedup.embeddingIndex", 3, 2) { f =>
       val v = f.vecs; () => Dedup.embeddingIndex(v, "vec_id", "embedding", threshold = 0.9) },
@@ -173,7 +175,7 @@ class JobBudgetSpec extends SparkTestBase {
     Row("Joins.fuzzyIndex", 1, 1) { f =>
       val names = f.names; () => Joins.fuzzyIndex(names, "doc_id", "name", 1) },
     // searches
-    Row("Dedup.minhashLshPairsIndexed", 6, 4, plans = Seq(noPairJoin)) { f =>
+    Row("Dedup.minhashLshPairsIndexed", 5, 5, plans = Seq(noPairJoin)) { f =>
       val ix = f.minhash; () => Dedup.minhashLshPairsIndexed(ix, 0.8) },
     Row("Similarity.ivfPqTopKIndexed + collect", 4, 4) { f =>
       val (ix, q) = (f.ivfPq, f.queries)

@@ -301,15 +301,6 @@ class LmSearchGraphSpec extends SparkTestBase {
     }(Joins.fuzzyProbe(_, probe, "id", "s"))
   }
 
-  test("Bm25Index job budget: a non-compacting extend runs at most 5 Spark jobs") {
-    val ix = Search.bm25Index(segDocs(0L until 60L), "doc_id", "text")
-    var ext: Search.Bm25Index = null
-    val jobs = jobsRun { ext = Search.extendBm25Index(ix, segDocs(60L until 63L), "text") }
-    assert(ext.segments.size == 2)
-    assert(jobs <= 3, s"$jobs jobs")
-    ext.release(); ix.release()
-  }
-
   test("fuseRrf: exact nano sums, rank-based fusion, docs in both lists rise") {
     // list 1 ranks docs 1,2,3; list 2 ranks docs 3,4 — doc 3 is in both
     val l1 = Seq(("q", 1L, 1L), ("q", 2L, 2L), ("q", 3L, 3L))

@@ -7,24 +7,23 @@ import scala.jdk.CollectionConverters._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The pin discipline of [[Pinned]], checked on the operator sources: an
-  * operator pins through `Pinned.scoped` or a [[Segment]], both defined in
-  * `Segments.scala`, and never persists or unpersists a frame itself —
-  * except at the sites listed here, each with its reason. */
+  * operator pins through `Pinned.scoped`, a [[Segment]] or a [[Pin]], all
+  * defined in `Segments.scala`, and never persists, unpersists or caches a
+  * frame, builds or clears a cache relation, or reads the CacheManager
+  * itself — except at the sites listed here, each with its reason. */
 class PinDisciplineSpec extends AnyFunSuite {
 
   private val dir = Paths.get("src/main/scala/graft/operators")
 
-  /** The raw pin calls no operator may make outside `Segments.scala`. */
-  private val raw = Seq(".persist(", ".unpersist(", ".cache()", "Pinned.pin(", "pinRows(")
+  /** The raw pin and cache calls no operator may make outside
+    * `Segments.scala`. */
+  private val raw = Seq(".persist(", ".unpersist(", ".cache()", "Pinned.pin(", "pinRows(",
+    "InMemoryRelation(", "clearCache(", "cacheManager")
 
   /** (file, enclosing member) → why that member pins by hand. */
   private val allowed = Map(
     ("Dedup.scala", "foldComponents") ->
-      "its loop carries one pinned round RDD at a time, releasing the round before it",
-    ("Search.scala", "seal") ->
-      "one job builds a segment's two caches: its rows on the map side, its (token, df, cf) frame on the reduce side",
-    ("Dedup.scala", "loadComponentLabels") ->
-      "it returns a pinned frame that its caller owns and unpersists")
+      "its loop carries one pinned round RDD at a time, releasing the round before it; no frame plan can alias an RDD")
 
   /** Every raw pin call outside `Segments.scala`, as (file, enclosing
     * member, line number, line). The enclosing member is the nearest
